@@ -808,8 +808,8 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
     aggregate instead of a change-count join.
 
     Returns (node, cluster): one row per document that appears in any
-    pair. Singletons (no pair) are their own cluster by definition and
-    are not materialized.
+    pair of two non-NULL ids. Singletons (no pair) are their own
+    cluster by definition and are not materialized.
 
     method="star" dispatches to `connected_components_star` (same
     contract, O(log² n) rounds independent of diameter) — prefer it
@@ -839,12 +839,17 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
     # symmetrize with ONE in-row explode, not a unionAll of two selects:
     # the union duplicates the entire upstream pair plan (hashing +
     # candidate join run twice per materialization — measured on the
-    # image dedup path), while the generator reads each pair once
+    # image dedup path), while the generator reads each pair once.
+    # A pair with a NULL id is no edge: it is dropped here, once, so
+    # the local finish (where int(NaN) raises in union-find) and the
+    # distributed label loop see the same edge set — a node paired
+    # only with a NULL id is in neither output
     sym = (pairs.select(F.explode(F.array(
                F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
                F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
            .alias("__e"))
            .select("__e.src", "__e.dst")
+           .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
            .distinct().localCheckpoint(eager=False))
     from pyspark.sql import types as T
 
@@ -854,12 +859,9 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
         # branch costs one scalar aggregate over cached blocks. sym
         # holds BOTH orientations (~2x the oriented distinct pairs the
         # star path gates on), so the bound doubles to admit the same
-        # graphs; null-id rows — which the distributed joins silently
-        # tolerate — are dropped before the local finish (int(NaN)
-        # raises in union-find)
+        # graphs
         if sym.count() <= 2 * local_edges:
-            return _components_local(sym.where(
-                F.col("src").isNotNull() & F.col("dst").isNotNull()))
+            return _components_local(sym)
     # localCheckpoint, not persist: each round references `labels`
     # TWICE (neighbor join + left join), so without lineage truncation
     # the logical plan DOUBLES per round — exponential in rounds, and a

@@ -601,17 +601,20 @@ def r2_score(df: DataFrame, label_col: str = "label", prediction_col: str = "pre
     reference also single-passes via da.mean fusion,
     metrics/regression.py:151-175).
     """
-    y, p = F.col(label_col), F.col(prediction_col)
-    row = df.agg(
-        F.sum(F.pow(y - p, 2)).alias("ss_res"),
-        F.sum(F.pow(y, 2)).alias("ss_y2"),
-        F.sum(y).alias("s"),
-        F.count(y).alias("n"),
-    ).collect()[0]
-    ss_tot = row["ss_y2"] - row["s"] ** 2 / row["n"]
+    row = df.agg(*_r2_parts(F.col(label_col), F.col(prediction_col))
+                 ).collect()[0]
+    return _r2_finish(*row)
+
+
+def _r2_parts(y: Column, p: Column) -> list[Column]:
+    return [F.sum(F.pow(y - p, 2)), F.sum(F.pow(y, 2)), F.sum(y), F.count(y)]
+
+
+def _r2_finish(ss_res, ss_y2, s, n) -> float:
+    ss_tot = ss_y2 - s ** 2 / n
     if ss_tot == 0:
         return 0.0
-    return 1.0 - row["ss_res"] / ss_tot
+    return 1.0 - ss_res / ss_tot
 
 
 def log_loss(df: DataFrame, label_col: str = "label", prob_col: str | None = None,
@@ -643,10 +646,17 @@ class Scorer:
     greater-is-better and a ``needs_proba`` flag telling search/score code
     to route through ``predict_proba`` instead of ``predict``."""
 
-    def __init__(self, metric, greater_is_better: bool = True, needs_proba: bool = False):
+    def __init__(self, metric, greater_is_better: bool = True,
+                 needs_proba: bool = False, parts=None, finish=None):
         self.metric = metric
         self.sign = 1.0 if greater_is_better else -1.0
         self.needs_proba = needs_proba
+        # optional aggregate form of ``metric``: ``parts(y, p)`` gives
+        # aggregate Columns over (label, prediction), ``finish(*values)``
+        # the metric from their collected values (default: the single
+        # value). score_folds needs it to score many models in one pass
+        self.parts = parts
+        self.finish = finish or (lambda v: v)
 
     def __call__(self, df: DataFrame, *args, **kwargs) -> float:
         return self.sign * self.metric(df, *args, **kwargs)
@@ -664,6 +674,38 @@ def score_estimator(scorer, estimator, df: DataFrame, label_col: str = "label") 
         return scorer(pred, label_col=label_col, prediction_col="probability")
     pred = estimator.predict(df)
     return scorer(pred, label_col=label_col, prediction_col="prediction")
+
+
+def score_folds(scorer, models, df: DataFrame, fold_col: str,
+                label_col: str = "label"):
+    """Score many (estimator, fold) pairs of one fold-tagged frame in
+    ONE aggregate: pair ``(est, k)`` is scored on the rows of ``df``
+    whose ``fold_col`` equals ``k`` — the value score_estimator gives
+    on that filter, because every aggregate part skips the NULLs the
+    fold mask puts outside the fold. The estimators must predict with
+    plain column expressions (``predict``/``predict_proba`` taking an
+    ``output_col``). Returns the scores in order, or None when the
+    scorer has no aggregate form (``Scorer.parts``); the caller then
+    scores per model with score_estimator."""
+    if getattr(scorer, "parts", None) is None:
+        return None
+    exprs, widths = [], []
+    for j, (est, fold) in enumerate(models):
+        out = f"__score_pred{j}"
+        df = (est.predict_proba(df, output_col=out) if scorer.needs_proba
+              else est.predict(df, output_col=out))
+        held = F.col(fold_col) == F.lit(fold)
+        parts = scorer.parts(F.when(held, F.col(label_col)),
+                             F.when(held, F.col(out)))
+        exprs += parts
+        widths.append(len(parts))
+    row = list(df.agg(*[e.alias(f"v{i}") for i, e in enumerate(exprs)])
+               .collect()[0])
+    scores, at = [], 0
+    for w in widths:
+        scores.append(scorer.sign * scorer.finish(*row[at:at + w]))
+        at += w
+    return scores
 
 
 # Scorer-registry AUC default: the binned path. Exact rank-sum AUC
@@ -704,10 +746,13 @@ def _roc_auc_exact_from_proba(df: DataFrame, label_col: str = "label",
 
 
 SCORERS = {
-    "accuracy": Scorer(accuracy_score),
-    "r2": Scorer(r2_score),
-    "neg_mean_squared_error": Scorer(mean_squared_error, greater_is_better=False),
-    "neg_mean_absolute_error": Scorer(mean_absolute_error, greater_is_better=False),
+    "accuracy": Scorer(accuracy_score,
+                       parts=lambda y, p: [accuracy_expr(y, p)]),
+    "r2": Scorer(r2_score, parts=_r2_parts, finish=_r2_finish),
+    "neg_mean_squared_error": Scorer(mean_squared_error, greater_is_better=False,
+                                     parts=lambda y, p: [mse_expr(y, p)]),
+    "neg_mean_absolute_error": Scorer(mean_absolute_error, greater_is_better=False,
+                                      parts=lambda y, p: [mae_expr(y, p)]),
     "neg_log_loss": Scorer(log_loss, greater_is_better=False, needs_proba=True),
     # binned AUC (DEFAULT_AUC_BINS, ~O(1/4096) error) — the 100 TB
     # default; 'roc_auc_exact' is the rank-sum path when near-tie

@@ -18,7 +18,13 @@ Solver surface (reference glm.py:61-64,139-171): ``admm``,
 ``gradient_descent``, ``newton``, ``lbfgs``, ``proximal_grad``.
 ``auto``/``lbfgs`` delegate to MLlib (JVM treeAggregate); the other four
 run our distributed implementations in ``operators/solvers.py`` — same
-objective, same optimum, different communication pattern.
+objective, same optimum, different communication pattern. Inside a CV
+search (GridSearchCV & co) ``solver="auto"`` means something else for
+the candidates ``newton_batch_family`` admits: they are fitted by the
+batched Newton pass, one scan per iteration for every (candidate, fold)
+model, while a single ``fit`` (and the search's refit) runs MLlib
+L-BFGS. Both minimize the same strictly convex objective, so they reach
+the same optimum.
 """
 
 from __future__ import annotations
@@ -74,45 +80,138 @@ def _assembled_input(df: DataFrame, cols, label_col):
     return assembled, True
 
 
-def prepare_glm_cv_cache(df: DataFrame, cols, label_col) -> DataFrame:
-    """Pre-assemble the ``__features`` vector at the CV fold-cache
-    grain (see _reuse_assembled). Row-wise and parameter-independent,
-    so it belongs ABOVE the per-candidate fan-out: without it every
-    (candidate, fold) fit persists and materializes its own assembled
-    copy of the fold — k*n_candidates cached copies instead of one."""
-    keep = [c for c in df.columns if c != label_col]
-    return _assemble(
-        df.select(*keep, F.col(label_col).cast("double").alias(label_col)),
-        cols)
+def _solver_kwargs(est) -> dict:
+    from dask_ml_spark.operators.solvers import glm_solver_kwargs
 
-
-def _fit_custom(est, df, cols, label_col, family):
-    """Route non-lbfgs solver names to operators/solvers.py (reference
-    glm.py:139-171 delegates the same names to dask_glm)."""
-    from dask_ml_spark.operators.solvers import fit_glm
-
-    coef, intercept = fit_glm(
-        df, cols, label_col, family, est.solver,
+    return glm_solver_kwargs(
         getattr(est, "penalty", "l2"), est.C, est.fit_intercept,
-        est.max_iter, est.tol, est.solver_kwargs,
-    )
-    est.coef_ = coef
-    est.intercept_ = intercept
+        est.max_iter, est.tol, est.solver_kwargs)
+
+
+def _set_fitted(est, coef, intercept, cols, label_col):
+    est.coef_ = np.asarray(coef)
+    est.intercept_ = float(intercept)
+    if est._family == "logistic":
+        est.classes_ = np.array([0.0, 1.0])
     est.feature_columns_ = cols
     est.label_col_ = label_col
     return est
 
 
+def _fit_custom(est, df, cols, label_col):
+    """Route non-lbfgs solver names to operators/solvers.py (reference
+    glm.py:139-171 delegates the same names to dask_glm)."""
+    from dask_ml_spark.operators.solvers import fit_glm
+
+    coef, intercept = fit_glm(df, cols, label_col, est._family, est.solver,
+                              _solver_kwargs(est))
+    return _set_fitted(est, coef, intercept, cols, label_col)
+
+
+def newton_batch_family(est) -> str | None:
+    """The GLM family when ``est`` can join a CV search's batched Newton
+    pass (fit_newton_batch), else None — the one place that decides.
+
+    Eligible: a LogisticRegression, LinearRegression or
+    PoissonRegression with ``solver`` "auto" or "newton" whose
+    objective is strictly convex — an l2 penalty with finite C, or the
+    unpenalized gaussian family (ordinary least squares). For "auto"
+    the batched optimum must also be the one its own MLlib ``fit``
+    reaches, which holds for logistic and for OLS but not for a
+    penalized gaussian or poisson fit: MLlib scales the gaussian ridge
+    penalty by the label's std, and GLR penalizes standardized
+    coefficients. Everything else (those, explicit "lbfgs" or another
+    solver, l1/elastic-net, unpenalized logistic/poisson, non-GLM
+    estimators) is fitted on its own by its ``fit``."""
+    if not isinstance(est, _GLM) or est.solver not in ("auto", "newton"):
+        return None
+    kw = _solver_kwargs(est)
+    if kw["lamduh"] == 0.0:
+        ok = est._family == "gaussian"
+    else:
+        ok = kw["regularizer"] == "l2" and (
+            est.solver == "newton" or est._family == "logistic")
+    return est._family if ok else None
+
+
+def fit_newton_batch(ests, df: DataFrame, columns, label_col: str,
+                     fold_col: str | None = None, test_folds=None) -> None:
+    """Fit every estimator of ``ests`` (all admitted by
+    newton_batch_family, one family) together: one
+    ``solvers.newton_many`` call, so each Newton iteration is ONE scan
+    of ``df`` for the whole batch. With ``fold_col``, ``ests[i]`` trains
+    on the rows whose fold differs from ``test_folds[i]``. Sets each
+    estimator's fitted state in place. ``df`` should be cached — every
+    iteration rescans it."""
+    from dask_ml_spark.operators.solvers import newton_many
+
+    train = df.drop(fold_col) if fold_col is not None else df
+    for est in ests:
+        cols = est._validate_data(train, columns)
+    proj = df.select(
+        *[F.col(c).cast("double").alias(c) for c in cols],
+        F.col(label_col).cast("double").alias(label_col),
+        *([fold_col] if fold_col is not None else []))
+    betas = newton_many(proj, cols, label_col, ests[0]._family,
+                        [_solver_kwargs(est) for est in ests],
+                        fold_col, test_folds)
+    d = len(cols)
+    for est, beta in zip(ests, betas):
+        _set_fitted(est, beta[:d], beta[d] if len(beta) > d else 0.0,
+                    cols, label_col)
+
+
+class _GLM(BaseEstimator):
+    """What the three GLMs share: the family and the CV-cache hook."""
+
+    _family: str
+
+    def prepare_cv_cache(self, df, columns, label_col):
+        """GLM CV-cache preparation for an MLlib-delegating estimator:
+        spread the frame (ensure_min_partitions) and cast the label to
+        double, then pre-assemble ``__features`` at the fold-cache grain
+        (see _reuse_assembled) so the (candidate, fold) MLlib fits share
+        one cached assembly instead of persisting k*n_candidates private
+        ones. Candidates of the batched Newton pass read the raw
+        columns, so an estimator newton_batch_family admits skips the
+        assembly (the spread stays: the KFold fold column is computed
+        over this partitioning). Custom solvers read raw columns, no
+        prep."""
+        from dask_ml_spark.utils import ensure_min_partitions
+
+        if self.solver not in ("auto", "lbfgs") or columns is None:
+            return df
+        keep = [c for c in df.columns if c != label_col]
+        df = df.select(*keep, F.col(label_col).cast("double").alias(label_col))
+        if newton_batch_family(self) is not None:
+            return ensure_min_partitions(df)
+        return _assemble(df, list(columns))
+
+
 def _linear_expr(cols, coef, intercept):
-    e = F.lit(float(intercept))
+    """intercept + Σ col·w as ONE parsed SQL expression: the same
+    left-associative chain of double casts and double literals a
+    Column loop builds, for one py4j round trip instead of ~5 per
+    term (it is built per scored model in a CV search)."""
+    from dask_ml_spark.operators.pairwise import _qcol
+    from dask_ml_spark.utils import sql_scalar_lit
+
+    def lit(v):
+        v = float(v)
+        return (sql_scalar_lit(v) if np.isfinite(v)
+                else f"CAST('{v!r}' AS DOUBLE)")
+
+    terms = [lit(intercept)]
     for c, w in zip(cols, coef):
         if w != 0.0:  # L1-sparse models skip zero terms entirely
-            e = e + F.col(c).cast("double") * F.lit(float(w))
-    return e
+            terms.append(f"CAST({_qcol(c)} AS DOUBLE) * {lit(w)}")
+    return F.expr(" + ".join(terms))
 
 
-class LinearRegression(BaseEstimator, RegressorMixin):
+class LinearRegression(_GLM, RegressorMixin):
     """OLS / ridge / lasso (reference glm.py:225-268)."""
+
+    _family = "gaussian"
 
     def __init__(self, penalty: str = "l2", C: float = 1.0, fit_intercept: bool = True,
                  max_iter: int = 100, tol: float = 1e-6, solver: str = "auto",
@@ -125,20 +224,12 @@ class LinearRegression(BaseEstimator, RegressorMixin):
         self.solver = solver
         self.solver_kwargs = solver_kwargs
 
-    def prepare_cv_cache(self, df, columns, label_col):
-        """GLM CV-cache preparation: pre-assemble ``__features`` at the
-        fold-cache grain when this fit would delegate to MLlib (see
-        _reuse_assembled); custom solvers read raw columns, no prep."""
-        if self.solver not in ("auto", "lbfgs") or columns is None:
-            return df
-        return prepare_glm_cv_cache(df, list(columns), label_col)
-
     def fit(self, df: DataFrame, columns=None, label_col: str = "label") -> "LinearRegression":
         from pyspark.ml.regression import LinearRegression as MLlibLR
 
         cols = self._validate_data(df, columns)
         if self.solver not in ("auto", "lbfgs"):
-            return _fit_custom(self, df, cols, label_col, "gaussian")
+            return _fit_custom(self, df, cols, label_col)
         # persist across solver iterations (LBFGS/IRLS treeAggregate
         # rescans the input once per iteration) — unless the caller
         # already assembled at the CV fold-cache grain
@@ -159,18 +250,17 @@ class LinearRegression(BaseEstimator, RegressorMixin):
         ).fit(assembled)
         if owned:
             assembled.unpersist()
-        self.coef_ = np.asarray(m.coefficients.toArray())
-        self.intercept_ = float(m.intercept)
-        self.feature_columns_ = cols
-        self.label_col_ = label_col
-        return self
+        return _set_fitted(self, m.coefficients.toArray(), m.intercept,
+                           cols, label_col)
 
     def predict(self, df: DataFrame, output_col: str = "prediction") -> DataFrame:
         return df.withColumn(output_col, _linear_expr(self.feature_columns_, self.coef_, self.intercept_))
 
 
-class LogisticRegression(BaseEstimator, ClassifierMixin):
+class LogisticRegression(_GLM, ClassifierMixin):
     """Binary logistic regression (reference glm.py:270-330)."""
+
+    _family = "logistic"
 
     def __init__(self, penalty: str = "l2", C: float = 1.0, fit_intercept: bool = True,
                  max_iter: int = 100, tol: float = 1e-6, threshold: float = 0.5,
@@ -184,22 +274,12 @@ class LogisticRegression(BaseEstimator, ClassifierMixin):
         self.solver = solver
         self.solver_kwargs = solver_kwargs
 
-    def prepare_cv_cache(self, df, columns, label_col):
-        """GLM CV-cache preparation: pre-assemble ``__features`` at the
-        fold-cache grain when this fit would delegate to MLlib (see
-        _reuse_assembled); custom solvers read raw columns, no prep."""
-        if self.solver not in ("auto", "lbfgs") or columns is None:
-            return df
-        return prepare_glm_cv_cache(df, list(columns), label_col)
-
     def fit(self, df: DataFrame, columns=None, label_col: str = "label") -> "LogisticRegression":
         from pyspark.ml.classification import LogisticRegression as MLlibLogReg
 
         cols = self._validate_data(df, columns)
         if self.solver not in ("auto", "lbfgs"):
-            out = _fit_custom(self, df, cols, label_col, "logistic")
-            out.classes_ = np.array([0.0, 1.0])
-            return out
+            return _fit_custom(self, df, cols, label_col)
         # persist across solver iterations (LBFGS/IRLS treeAggregate
         # rescans the input once per iteration) — unless the caller
         # already assembled at the CV fold-cache grain
@@ -220,12 +300,8 @@ class LogisticRegression(BaseEstimator, ClassifierMixin):
         ).fit(assembled)
         if owned:
             assembled.unpersist()
-        self.coef_ = np.asarray(m.coefficients.toArray())
-        self.intercept_ = float(m.intercept)
-        self.classes_ = np.array([0.0, 1.0])
-        self.feature_columns_ = cols
-        self.label_col_ = label_col
-        return self
+        return _set_fitted(self, m.coefficients.toArray(), m.intercept,
+                           cols, label_col)
 
     def decision_function(self, df: DataFrame, output_col: str = "decision") -> DataFrame:
         return df.withColumn(output_col, _linear_expr(self.feature_columns_, self.coef_, self.intercept_))
@@ -240,9 +316,11 @@ class LogisticRegression(BaseEstimator, ClassifierMixin):
         return df.withColumn(output_col, (sigma > self.threshold).cast("double"))
 
 
-class PoissonRegression(BaseEstimator, RegressorMixin):
+class PoissonRegression(_GLM, RegressorMixin):
     """Poisson GLM with log link (reference glm.py:332-385) via MLlib
     GeneralizedLinearRegression (IRLS, distributed)."""
+
+    _family = "poisson"
 
     def __init__(self, C: float = 1.0, fit_intercept: bool = True,
                  max_iter: int = 25, tol: float = 1e-6, solver: str = "auto",
@@ -255,20 +333,12 @@ class PoissonRegression(BaseEstimator, RegressorMixin):
         self.solver_kwargs = solver_kwargs
         self.penalty = "l2"
 
-    def prepare_cv_cache(self, df, columns, label_col):
-        """GLM CV-cache preparation: pre-assemble ``__features`` at the
-        fold-cache grain when this fit would delegate to MLlib (see
-        _reuse_assembled); custom solvers read raw columns, no prep."""
-        if self.solver not in ("auto", "lbfgs") or columns is None:
-            return df
-        return prepare_glm_cv_cache(df, list(columns), label_col)
-
     def fit(self, df: DataFrame, columns=None, label_col: str = "label") -> "PoissonRegression":
         from pyspark.ml.regression import GeneralizedLinearRegression
 
         cols = self._validate_data(df, columns)
         if self.solver not in ("auto", "lbfgs"):
-            return _fit_custom(self, df, cols, label_col, "poisson")
+            return _fit_custom(self, df, cols, label_col)
         # persist across solver iterations (LBFGS/IRLS treeAggregate
         # rescans the input once per iteration) — unless the caller
         # already assembled at the CV fold-cache grain
@@ -282,11 +352,8 @@ class PoissonRegression(BaseEstimator, RegressorMixin):
         ).fit(assembled)
         if owned:
             assembled.unpersist()
-        self.coef_ = np.asarray(m.coefficients.toArray())
-        self.intercept_ = float(m.intercept)
-        self.feature_columns_ = cols
-        self.label_col_ = label_col
-        return self
+        return _set_fitted(self, m.coefficients.toArray(), m.intercept,
+                           cols, label_col)
 
     def predict(self, df: DataFrame, output_col: str = "prediction") -> DataFrame:
         return df.withColumn(

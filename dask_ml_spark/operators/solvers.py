@@ -8,7 +8,9 @@ pattern Spark-first:
 
 - Each *pass* is one ``mapInPandas`` over the persisted training frame:
   every partition emits ONE row of Arrow-encoded partials
-  ``(n, loss, grad[d], hess[d*d]?)``. The reduce is a driver sum over
+  ``(n, loss, grad[d], hess[d*d]?)`` — per fit, for a batch of fits:
+  ``newton_many`` fits every (candidate, fold) GLM of a CV grid with
+  one pass per iteration over the fold-tagged cache. The reduce is a driver sum over
   #partitions rows — the same shape as MLlib's ``treeAggregate`` (and
   O(P·d) / O(P·d²) doubles of traffic, a few MB for d ≤ ~500 even with
   thousands of partitions). For larger d, use ``solver="lbfgs"`` (MLlib,
@@ -86,72 +88,94 @@ def _family_funcs(family: str):
 
 
 # ---------------------------------------------------------------------------
-# One distributed pass: per-partition partial (n, loss, grad, hess)
+# One distributed pass: per-partition partials (n, loss, grad, hess) for
+# every fit of a batch
 # ---------------------------------------------------------------------------
 
-def _suffstats(df: DataFrame, cols, label_col: str, beta: np.ndarray,
-               family: str, fit_intercept: bool, want_grad: bool,
-               want_hess: bool):
-    """One scan of ``df``; returns (n, mean_loss, grad/n, hess/n).
+def _batch_suffstats(df: DataFrame, cols, label_col: str, betas: np.ndarray,
+                     family: str, want_grad: bool, want_hess: bool,
+                     fold_col: str | None = None, test_folds=None):
+    """One scan of ``df`` for F fits at once.
 
-    grad/hess are None unless requested. beta layout: [w_0..w_{d-1},
-    intercept?] — intercept last, mirroring the reference's
+    ``betas`` is (F, d+1), intercept last (0 for a fit without one).
+    Fit ``f`` reads every row whose ``fold_col`` differs from
+    ``test_folds[f]``; without ``fold_col`` every fit reads every row.
+    Each partition computes the (n, F) margins ``X @ Bᵀ`` once and
+    emits one row of per-fit partials. Returns (n[F], mean_loss[F],
+    grad[F, d+1]/n, hess[F, d+1, d+1]/n), grad/hess None unless
+    requested. The layout mirrors the reference's
     ``add_intercept`` appended column (linear_model/utils.py:41-43).
     """
     d = len(cols)
-    beta_b = np.asarray(beta, dtype=np.float64).copy()
+    p = d + 1
+    B = np.atleast_2d(np.asarray(betas, dtype=np.float64)).copy()
+    nfit = B.shape[0]
+    tf = (np.asarray(test_folds, dtype=np.int64).copy()
+          if fold_col is not None else None)
     loss_f, mu_f, w_f = _family_funcs(family)
-    schema = "n double, loss double, grad array<double>, hess array<double>"
+    schema = ("n array<double>, loss array<double>, grad array<double>, "
+              "hess array<double>")
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = 0
-        loss_tot = 0.0
-        g = np.zeros(d + 1) if want_grad else None
-        h = np.zeros((d + 1, d + 1)) if want_hess else None
+        n = np.zeros(nfit)
+        loss_tot = np.zeros(nfit)
+        g = np.zeros((p, nfit)) if want_grad else None
+        h = np.zeros((nfit, p, p)) if want_hess else None
         for pdf in it:
-            X = pdf[list(cols)].to_numpy(dtype=np.float64)
-            y = pdf[label_col].to_numpy(dtype=np.float64)
-            m = X @ beta_b[:d]
-            if fit_intercept:
-                m = m + beta_b[d]
-            n += X.shape[0]
-            loss_tot += float(loss_f(m, y).sum())
+            X = np.empty((len(pdf), p))
+            X[:, :d] = pdf[list(cols)].to_numpy(dtype=np.float64)
+            X[:, d] = 1.0
+            y = pdf[label_col].to_numpy(dtype=np.float64)[:, None]
+            m = X @ B.T
+            if tf is None:
+                t = np.ones((len(pdf), 1))
+            else:
+                t = (pdf[fold_col].to_numpy()[:, None] != tf[None, :]
+                     ).astype(np.float64)
+            n += t.sum(axis=0)
+            loss_tot += (loss_f(m, y) * t).sum(axis=0)
             if g is not None:
-                r = mu_f(m) - y
-                g[:d] += X.T @ r
-                g[d] += float(r.sum())
+                g += X.T @ ((mu_f(m) - y) * t)
             if h is not None:
-                w = w_f(m)
-                Xw = X * w[:, None]
-                h[:d, :d] += X.T @ Xw
-                h[:d, d] += Xw.sum(axis=0)
-                h[d, :d] = h[:d, d]
-                h[d, d] += float(w.sum())
+                w = w_f(m) * t
+                for f in range(nfit):
+                    h[f] += X.T @ (X * w[:, f, None])
         yield pd.DataFrame({
-            "n": [float(n)],
-            "loss": [loss_tot],
-            "grad": [g.ravel().tolist() if g is not None else None],
+            "n": [n.tolist()],
+            "loss": [loss_tot.tolist()],
+            "grad": [g.T.ravel().tolist() if g is not None else None],
             "hess": [h.ravel().tolist() if h is not None else None],
         })
 
     rows = df.mapInPandas(gen, schema=schema).collect()
-    n = sum(r["n"] for r in rows)
-    if n == 0:
+    n = np.sum([r["n"] for r in rows], axis=0) if rows else np.zeros(nfit)
+    if not (n > 0).all():
         raise ValueError("cannot fit on an empty DataFrame")
-    loss = sum(r["loss"] for r in rows) / n
+    loss = np.sum([r["loss"] for r in rows], axis=0) / n
     grad = hess = None
-    k = d + 1 if fit_intercept else d
     if want_grad:
-        grad = np.zeros(d + 1)
-        for r in rows:
-            grad += np.asarray(r["grad"])
-        grad = grad[:k] / n
+        grad = (np.sum([r["grad"] for r in rows], axis=0)
+                .reshape(nfit, p) / n[:, None])
     if want_hess:
-        hess = np.zeros((d + 1, d + 1))
-        for r in rows:
-            hess += np.asarray(r["hess"]).reshape(d + 1, d + 1)
-        hess = hess[:k, :k] / n
+        hess = (np.sum([r["hess"] for r in rows], axis=0)
+                .reshape(nfit, p, p) / n[:, None, None])
     return n, loss, grad, hess
+
+
+def _suffstats(df: DataFrame, cols, label_col: str, beta: np.ndarray,
+               family: str, fit_intercept: bool, want_grad: bool,
+               want_hess: bool):
+    """The one-fit, no-fold case of _batch_suffstats: returns
+    (n, mean_loss, grad/n, hess/n) over the fit's k = d(+1) coefficients."""
+    d = len(cols)
+    k = d + 1 if fit_intercept else d
+    b = np.zeros(d + 1)
+    b[:k] = beta
+    n, loss, grad, hess = _batch_suffstats(
+        df, cols, label_col, b[None, :], family, want_grad, want_hess)
+    return (float(n[0]), float(loss[0]),
+            grad[0, :k] if grad is not None else None,
+            hess[0, :k, :k] if hess is not None else None)
 
 
 def _loss_only(df, cols, label_col, beta, family, fit_intercept):
@@ -211,8 +235,7 @@ def gradient_descent(df, cols, label_col, family, fit_intercept=True,
     return beta
 
 
-def newton(df, cols, label_col, family, fit_intercept=True,
-           max_iter=50, tol=1e-8, lamduh=0.0, regularizer="l2", **_):
+def newton(df, cols, label_col, family, **kwargs):
     """Newton-Raphson / IRLS; smooth (L2) penalties supported exactly —
     grad += lam*w and hess += lam*I on the weight block, so the
     gaussian/ridge case is STILL one-step exact (the ridge normal
@@ -220,48 +243,92 @@ def newton(df, cols, label_col, family, fit_intercept=True,
     SQL-oracle-able. L1 is non-smooth and routes to proximal_grad/admm
     (raise here rather than silently ignoring it — dask_glm's newton is
     unregularized). One grad+hess pass per iteration; the (k x k) solve
-    is driver-side numpy.
+    is driver-side numpy. The one-fit case of newton_many."""
+    return newton_many(df, cols, label_col, family, [kwargs])[0]
 
-    The intercept starts at the link of the label mean (one JVM agg
-    pass) — from beta=0 the exp-link Hessian is tiny next to the
-    gradient and the first Poisson step overshoots by ~ln(mean(y)),
-    after which Newton crawls back ~1 unit per iteration; mean-link
-    init lands the first step near the optimum instead."""
+
+def _newton_spec(fit_intercept=True, max_iter=50, tol=1e-8, lamduh=0.0,
+                 regularizer="l2", **_):
     if lamduh > 0.0 and regularizer != "l2":
         raise ValueError(
             "newton supports only smooth (l2) penalties; use "
             "proximal_grad or admm for l1/elastic_net")
+    return fit_intercept, max_iter, tol, lamduh
+
+
+def newton_many(df, cols, label_col, family, fits, fold_col=None,
+                test_folds=None):
+    """Newton for a batch of fits, one pass over ``df`` per iteration
+    for the whole batch (see _batch_suffstats).
+
+    ``fits`` holds one dict of newton keywords per fit (fit_intercept,
+    max_iter, tol, lamduh, regularizer). With ``fold_col``, fit ``f``
+    trains on the rows whose fold differs from ``test_folds[f]`` — every
+    (candidate, fold) model of a CV grid in one scan. The driver keeps
+    each fit's penalty, solve and convergence test; a converged fit
+    leaves the batch. Returns one beta per fit (intercept last if
+    fitted).
+
+    The intercept starts at the link of the fit's label mean — from
+    beta=0 the exp-link Hessian is tiny next to the gradient and the
+    first Poisson step overshoots by ~ln(mean(y)), after which Newton
+    crawls back ~1 unit per iteration; mean-link init lands the first
+    step near the optimum instead. The first pass needs no beta: at
+    w=0 every margin of a fit is its intercept b0, so its gradient
+    ``mu(b0)·Σx - Σx·y`` and Hessian ``weight(b0)·Σx·xᵀ`` follow from
+    the moments a gaussian pass at beta=0 returns (``-Σx·y``, ``Σx·xᵀ``,
+    the last row giving the label mean and Σx). That one pass is both
+    the init and the first Newton step."""
+    specs = [_newton_spec(**f) for f in fits]
     d = len(cols)
-    k = d + 1 if fit_intercept else d
-    beta = np.zeros(k)
-    if fit_intercept and family in ("poisson", "logistic"):
-        mean_y = float(df.agg(F.avg(label_col)).first()[0])
-        if family == "poisson":
-            beta[k - 1] = np.log(max(mean_y, 1e-12))
-        else:
-            p = min(max(mean_y, 1e-9), 1.0 - 1e-9)
-            beta[k - 1] = np.log(p / (1.0 - p))
-    for _it in range(max_iter):
-        _, _, grad, hess = _suffstats(df, cols, label_col, beta, family,
-                                      fit_intercept, True, True)
-        if lamduh > 0.0:
-            grad = grad.copy()
-            grad[:d] += lamduh * beta[:d]
-            hess = hess + lamduh * np.diag(
-                np.concatenate([np.ones(d), np.zeros(k - d)]))
-        hess = hess + 1e-10 * np.eye(k)  # guard exact singularity
-        try:
-            delta = np.linalg.solve(hess, grad)
-        except np.linalg.LinAlgError:
-            delta = np.linalg.lstsq(hess, grad, rcond=None)[0]
-        beta = beta - delta
-        if family == "gaussian":
-            # quadratic objective, constant Hessian: the first step IS
-            # the normal-equation solution — skip the verification pass
-            break
-        if float(delta @ delta) < tol:
-            break
-    return beta
+    B = np.zeros((len(specs), d + 1))
+    tf = np.asarray(test_folds) if fold_col is not None else None
+    _, mu_f, w_f = _family_funcs(family)
+    iters = [0] * len(specs)
+    active = [f for f, s in enumerate(specs) if s[1] > 0]
+    first = True
+    while active:
+        _, _, G, H = _batch_suffstats(
+            df, cols, label_col, B[active], "gaussian" if first else family,
+            True, True, fold_col, tf[active] if tf is not None else None)
+        still = []
+        for j, f in enumerate(active):
+            fit_intercept, max_iter, tol, lamduh = specs[f]
+            k = d + 1 if fit_intercept else d
+            grad, hess = G[j, :k].copy(), H[j, :k, :k]
+            if first:
+                b0 = 0.0
+                if fit_intercept and family != "gaussian":
+                    mean_y = -G[j, d]
+                    if family == "poisson":
+                        b0 = np.log(max(mean_y, 1e-12))
+                    else:
+                        p = min(max(mean_y, 1e-9), 1.0 - 1e-9)
+                        b0 = np.log(p / (1.0 - p))
+                    B[f, d] = b0
+                m0 = np.array([b0])
+                grad = grad + float(mu_f(m0)[0]) * H[j, d, :k]
+                hess = float(w_f(m0)[0]) * hess
+            if lamduh > 0.0:
+                grad[:d] += lamduh * B[f, :d]
+                hess = hess + lamduh * np.diag(
+                    np.concatenate([np.ones(d), np.zeros(k - d)]))
+            hess = hess + 1e-10 * np.eye(k)  # guard exact singularity
+            try:
+                delta = np.linalg.solve(hess, grad)
+            except np.linalg.LinAlgError:
+                delta = np.linalg.lstsq(hess, grad, rcond=None)[0]
+            B[f, :k] -= delta
+            iters[f] += 1
+            # gaussian: quadratic objective, constant Hessian — the
+            # first step IS the normal-equation solution, so skip the
+            # verification pass
+            if (family != "gaussian" and float(delta @ delta) >= tol
+                    and iters[f] < max_iter):
+                still.append(f)
+        active = still
+        first = False
+    return [B[f, :d + 1 if s[0] else d].copy() for f, s in enumerate(specs)]
 
 
 def _prox(z, d, thresh, shrink):
@@ -409,10 +476,22 @@ SOLVERS = {
 }
 
 
+def glm_solver_kwargs(penalty, C, fit_intercept: bool, max_iter: int,
+                      tol: float, solver_kwargs=None) -> dict:
+    """The solver keywords of an estimator's (penalty, C, ...): C maps
+    to lamduh = 1/C, and no penalty or an infinite C to 0."""
+    lam = 0.0 if C in (None, float("inf")) or penalty in (None, "none") else 1.0 / C
+    regularizer = penalty if penalty in ("l1", "l2", "elastic_net") else "l2"
+    kwargs = dict(fit_intercept=fit_intercept, max_iter=max_iter, tol=tol,
+                  lamduh=lam, regularizer=regularizer)
+    kwargs.update(solver_kwargs or {})
+    return kwargs
+
+
 def fit_glm(df: DataFrame, cols, label_col: str, family: str, solver: str,
-            penalty, C, fit_intercept: bool, max_iter: int, tol: float,
-            solver_kwargs=None):
-    """Dispatch a custom solver; returns (coef ndarray, intercept float).
+            solver_kwargs: dict):
+    """Dispatch a custom solver with its keywords (glm_solver_kwargs);
+    returns (coef ndarray, intercept float).
 
     Persists the (projected) training frame for the duration — every
     solver makes >=1 pass per iteration over the same partitions.
@@ -423,11 +502,6 @@ def fit_glm(df: DataFrame, cols, label_col: str, family: str, solver: str,
         raise ValueError(
             "'solver' must be one of {} or 'lbfgs'/'auto'. Got '{}' instead".format(
                 sorted(SOLVERS), solver))
-    lam = 0.0 if C in (None, float("inf")) or penalty in (None, "none") else 1.0 / C
-    regularizer = penalty if penalty in ("l1", "l2", "elastic_net") else "l2"
-    kwargs = dict(fit_intercept=fit_intercept, max_iter=max_iter, tol=tol,
-                  lamduh=lam, regularizer=regularizer)
-    kwargs.update(solver_kwargs or {})
     proj = ensure_min_partitions(
         df.select(*[F.col(c).cast("double").alias(c) for c in cols],
                   F.col(label_col).cast("double").alias(label_col))
@@ -435,10 +509,11 @@ def fit_glm(df: DataFrame, cols, label_col: str, family: str, solver: str,
     try:
         # no explicit count(): the solver's first pass materializes the
         # cache — an upfront count would cost one extra full scan
-        beta = SOLVERS[solver](proj, cols, label_col, family, **kwargs)
+        beta = SOLVERS[solver](proj, cols, label_col, family,
+                                **solver_kwargs)
     finally:
         proj.unpersist()
     d = len(cols)
     coef = np.asarray(beta[:d])
-    intercept = float(beta[d]) if fit_intercept and len(beta) > d else 0.0
+    intercept = float(beta[d]) if len(beta) > d else 0.0
     return coef, intercept

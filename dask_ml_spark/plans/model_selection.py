@@ -11,11 +11,18 @@ partition-boundary artifacts; reference _split.py:92-200 is blockwise
 only because dask slicing is expensive). Folds are lazy column
 predicates over ONE cached DataFrame — materializing k folds would
 k× the storage; a `fold` column + filter reuses the same cache (the
-CVCache idea, methods.py:83-152, without copies). Search execution is
-a driver thread pool launching concurrent Spark jobs (FAIR-scheduler
-friendly), with fit-memoization by param-token so duplicate
-candidates are fitted once (reference `seen` dicts,
-_search.py:350-376).
+CVCache idea, methods.py:83-152, without copies). Search execution
+batches what it can: GLM candidates with a strictly convex objective
+(operators.linear_model.newton_batch_family) are fitted together by a
+Newton solver whose every iteration is ONE scan of the fold-tagged
+cache for all (candidate, fold) models, and scored together by one
+aggregate when the scorer has an aggregate form. Where the reference
+runs one task graph per (candidate, fold), this runs one job per
+iteration for the whole grid. Every other candidate (pipelines,
+non-GLM estimators, explicit lbfgs, l1) is fitted by a driver thread
+pool launching concurrent Spark jobs. Fits are memoized by
+param-token so duplicate candidates are fitted once (reference `seen`
+dicts, _search.py:350-376).
 """
 
 from __future__ import annotations
@@ -284,10 +291,19 @@ def _param_token(params: dict) -> str:
 
 
 class GridSearchCV(BaseEstimator):
-    """Exhaustive CV search, executed as concurrent Spark jobs from a
-    driver thread pool (the reference builds an explicit task graph,
-    _search.py:195-260; Spark's scheduler plays the role of the dask
-    scheduler — concurrent fits share the cached fold data)."""
+    """Exhaustive CV search over one cached, fold-tagged frame (the
+    reference builds an explicit task graph, _search.py:195-260).
+
+    GLM candidates that newton_batch_family admits (solver "auto" or
+    "newton", strictly convex objective) are fitted together: each
+    Newton iteration is one pass over the cache that updates every
+    (candidate, fold) model, and one aggregate scores them all when
+    the scorer has an aggregate form. ``solver="auto"`` thus means the
+    batched Newton pass inside the search and MLlib L-BFGS for the
+    refit; both reach the same optimum. The other candidates run as
+    concurrent Spark jobs from a driver thread pool of ``n_jobs``
+    (Spark's scheduler plays the role of the dask scheduler), which
+    also scores whatever the aggregate did not."""
 
     def __init__(self, estimator, param_grid, scoring=None, cv=None, refit: bool = True,
                  n_jobs: int = 4):
@@ -302,7 +318,9 @@ class GridSearchCV(BaseEstimator):
         return list(ParameterGrid(self.param_grid))
 
     def fit(self, df: DataFrame, columns=None, label_col: str = "label") -> "GridSearchCV":
-        from dask_ml_spark.functions.metrics import check_scoring, score_estimator
+        from dask_ml_spark.functions.metrics import (check_scoring,
+                                                     score_estimator,
+                                                     score_folds)
 
         cv = check_cv(self.cv)
         candidates = self._candidates()
@@ -324,6 +342,31 @@ class GridSearchCV(BaseEstimator):
                     if c in df.columns]
                 df = df.select(*keep)
 
+        seen: dict[str, int] = {}  # dedup identical candidates (reference `seen`)
+        unique: list[tuple[int, dict]] = []
+        for ci, params in enumerate(candidates):
+            tok = _param_token(params)
+            if tok in seen:
+                continue
+            seen[tok] = ci
+            unique.append((ci, params))
+
+        from dask_ml_spark.operators.compose import Pipeline as _Pipeline
+        from dask_ml_spark.operators.linear_model import (fit_newton_batch,
+                                                          newton_batch_family)
+
+        is_pipeline = (isinstance(self.estimator, _Pipeline)
+                       and len(self.estimator.steps) > 1)
+        models = {} if is_pipeline else {
+            ci: self.estimator.clone().set_params(**params)
+            for ci, params in unique}
+        # GLM candidates with a strictly convex objective are fitted
+        # together, by one Newton pass per iteration over the fold
+        # cache; the rest race as one fit each in the thread pool
+        batched = [ci for ci, m in models.items()
+                   if newton_batch_family(m) is not None]
+        pooled = [ci for ci in models if ci not in batched]
+
         # row-wise parameter-independent prep (e.g. GLM feature
         # assembly) runs ONCE here, above the (candidate, fold)
         # fan-out, so every fit shares the one cached prepared frame
@@ -333,19 +376,15 @@ class GridSearchCV(BaseEstimator):
         # right-size the cached folds up-front: fold filters preserve
         # the partitioning, so every downstream (candidate, fold) fit
         # sees the same layout and skips its own repartition shuffle.
-        # Sizing balances two forces: enough partitions that one fit
-        # parallelizes, FEW enough that n_jobs concurrent iterative
-        # fits don't each pay 32-task scheduling per LBFGS iteration
-        # (see right_size_cv_cache — bytes-floored, so big caches keep
-        # their partitions)
+        # Sizing divides the cores by the consumers that scan the
+        # cache at once (see right_size_cv_cache — bytes-floored, so
+        # big caches keep their partitions): the batched pass is one,
+        # and each racing pool fit is one more, up to n_jobs
         from dask_ml_spark.utils import right_size_cv_cache
 
-        # divide cores by the fits that actually RACE, not the
-        # configured ceiling: a 1-candidate 2-fold search with
-        # n_jobs=8 has 2 concurrent consumers, and shrinking its cache
-        # for 8 would leave most cores idle
+        n_racing = len(candidates) if is_pipeline else len(pooled)
         n_concurrent = max(1, min(
-            self.n_jobs, len(candidates) * getattr(cv, "n_splits", 1)))
+            self.n_jobs, n_racing * getattr(cv, "n_splits", 1)))
         with_fold = cv.fold_column(df) if isinstance(cv, KFold) else None
         if with_fold is not None:
             with_fold = right_size_cv_cache(
@@ -362,19 +401,8 @@ class GridSearchCV(BaseEstimator):
                       right_size_cv_cache(te, n_concurrent).persist())
                      for tr, te in cv.split(df)]
 
-        seen: dict[str, int] = {}  # dedup identical candidates (reference `seen`)
-        unique: list[tuple[int, dict]] = []
-        for ci, params in enumerate(candidates):
-            tok = _param_token(params)
-            if tok in seen:
-                continue
-            seen[tok] = ci
-            unique.append((ci, params))
-
-        from dask_ml_spark.operators.compose import Pipeline as _Pipeline
-
         results: dict[tuple, float] = {}
-        if isinstance(self.estimator, _Pipeline) and len(self.estimator.steps) > 1:
+        if is_pipeline:
             # pipeline-prefix sharing (reference _search.py:619-749):
             # candidates that only differ in final-stage params share ONE
             # prefix fit + transform per fold; the transformed folds are
@@ -446,27 +474,53 @@ class GridSearchCV(BaseEstimator):
                     for ci, fi, score in out:
                         results[(ci, fi)] = score
         else:
-            # persist the fold-train views when several candidates race
-            # over the same fold: an MLlib fit on an unpersisted input
-            # re-caches its instances INTERNALLY per fit (k*candidates
-            # materializations of the same rows); a cached view is
-            # materialized once and every candidate's solver skips its
-            # private copy
-            shared_folds = len(unique) > 1
+            # batched candidates: every (candidate, fold) model in one
+            # Newton pass per iteration over the fold cache (per fold
+            # when the cv has no fold column)
+            fitted: dict[tuple, object] = {}
+            if batched:
+                fitted = {(ci, fi): models[ci].clone()
+                          for ci in batched for fi in range(len(folds))}
+                if with_fold is not None:
+                    fit_newton_batch(list(fitted.values()), with_fold,
+                                     columns, label_col, fold_col="__fold",
+                                     test_folds=[fi for _, fi in fitted])
+                else:
+                    for fi, (train, _test) in enumerate(folds):
+                        fit_newton_batch(
+                            [fitted[(ci, fi)] for ci in batched], train,
+                            columns, label_col)
+            # persist the fold-train views when several pooled
+            # candidates race over the same fold: an MLlib fit on an
+            # unpersisted input re-caches its instances INTERNALLY per
+            # fit (k*candidates materializations of the same rows); a
+            # cached view is materialized once and every candidate's
+            # solver skips its private copy
+            shared_folds = len(pooled) > 1
             if shared_folds:
                 folds = [(tr.persist(), te) for tr, te in folds]
-            tasks = [
-                (ci, fi, params, train, test)
-                for ci, params in unique
-                for fi, (train, test) in enumerate(folds)
-            ]
+            if fitted and with_fold is not None:
+                # one aggregate scores every batched model on its
+                # held-out fold when the scorer has an aggregate form
+                scores = score_folds(scorer, [(m, fi) for (_, fi), m in
+                                              fitted.items()],
+                                     with_fold, "__fold", label_col)
+                if scores is not None:
+                    results.update(zip(fitted, scores))
 
             def _run(task):
-                ci, fi, params, train, test = task
-                model = self.estimator.clone().set_params(**params)
-                model.fit(train, columns=columns, label_col=label_col)
+                ci, fi = task
+                train, test = folds[fi]
+                model = fitted.get((ci, fi))
+                if model is None:
+                    model = models[ci].clone()
+                    model.fit(train, columns=columns, label_col=label_col)
                 return ci, fi, score_estimator(scorer, model, test, label_col)
 
+            # pooled fits race; every model not yet scored is scored
+            # through score_estimator
+            tasks = [(ci, fi) for ci, _ in unique for fi in range(len(folds))
+                     if (ci, fi) not in results]
             with ThreadPoolExecutor(max_workers=self.n_jobs) as pool:
                 for ci, fi, score in pool.map(_run, tasks):
                     results[(ci, fi)] = score

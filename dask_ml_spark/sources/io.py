@@ -9,6 +9,9 @@ thin conveniences the test harness and queries use.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,9 +28,27 @@ TESTDATA_TABLES = (
 # spark.read.parquet call (measured warm at sf0.1), paid 1-3x per query
 # build; a catalog/metastore would make it free, so the cache plays that
 # role for bare-path reads. Keyed on file identity so a regenerated
-# file re-infers.
-_SCHEMA_CACHE: dict = {}
-_NANOS_CONF_SET: set = set()
+# file re-infers; least-recently-used entries beyond _SCHEMA_CACHE_MAX
+# are dropped.
+_SCHEMA_CACHE: OrderedDict = OrderedDict()
+_SCHEMA_CACHE_MAX = 256
+_SCHEMA_LOCK = threading.Lock()
+# Sessions whose nanos conf is set. Weak, so an entry dies with its
+# session: keying on id(spark) let a new session that CPython placed at
+# a collected one's address skip the set.
+_NANOS_CONF_SET: weakref.WeakSet = weakref.WeakSet()
+
+
+def _ensure_nanos_conf(spark: SparkSession) -> None:
+    """Set ``spark.sql.legacy.parquet.nanosAsLong`` once per session:
+    the set is a py4j round trip, and load_table runs 1-3x per query."""
+    if spark in _NANOS_CONF_SET:
+        return
+    try:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    except Exception:
+        pass  # older/newer Spark without the conf: reads may still work
+    _NANOS_CONF_SET.add(spark)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -41,14 +62,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     # The conf is runtime-settable, and the session we receive may be one
     # we didn't build (external harness), so set it here rather than
-    # relying on session-builder defaults. Once per session: the set is
-    # a py4j round trip, and load_table runs 1-3x per catalog query.
-    if id(spark) not in _NANOS_CONF_SET:
-        try:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        except Exception:
-            pass  # older/newer Spark without the conf: reads may still work
-        _NANOS_CONF_SET.add(id(spark))
+    # relying on session-builder defaults.
+    _ensure_nanos_conf(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     key = None
     try:
@@ -56,13 +71,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         key = (path, st.st_size, st.st_mtime_ns)
     except OSError:
         pass  # non-local / directory layouts: infer every time
-    schema = _SCHEMA_CACHE.get(key) if key is not None else None
+    schema = None
+    if key is not None:
+        with _SCHEMA_LOCK:
+            schema = _SCHEMA_CACHE.get(key)
+            if schema is not None:
+                _SCHEMA_CACHE.move_to_end(key)
     if schema is not None:
         df = spark.read.schema(schema).parquet(path)
     else:
         df = spark.read.parquet(path)
         if key is not None:
-            _SCHEMA_CACHE[key] = df.schema
+            schema = df.schema
+            with _SCHEMA_LOCK:
+                _SCHEMA_CACHE[key] = schema
+                if len(_SCHEMA_CACHE) > _SCHEMA_CACHE_MAX:
+                    _SCHEMA_CACHE.popitem(last=False)
     return normalize_nanos_timestamps(df)
 
 

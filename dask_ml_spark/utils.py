@@ -49,14 +49,20 @@ def sql_scalar_lit(v) -> str:
         # spark.sql.parser.escapedStringLiterals=true neither \' nor ''
         # is unescaped (verified on 4.1), so a quote/backslash in data
         # would silently change value or break the parse — refuse loudly
-        # (lit_array falls back to per-element F.lit for this case)
-        if _legacy_string_literals():
+        # (lit_array falls back to per-element F.lit for this case).
+        # A string without either parses the same under both parsers
+        if _needs_escape(v) and _legacy_string_literals():
             raise ValueError(
-                "sql_scalar_lit(str) requires the default parser "
+                "sql_scalar_lit(str) of a string with a quote or "
+                "backslash requires the default parser "
                 "(spark.sql.parser.escapedStringLiterals=false); use "
-                "F.lit for string literals under the legacy conf")
+                "F.lit for such literals under the legacy conf")
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     raise TypeError(f"unsupported literal {v!r}")
+
+
+def _needs_escape(v) -> bool:
+    return isinstance(v, str) and ("'" in v or "\\" in v)
 
 
 def _legacy_string_literals() -> bool:
@@ -80,7 +86,7 @@ def lit_array(vals) -> F.Column:
     vals = list(vals)
     if not vals:
         return F.array()
-    if any(isinstance(v, str) for v in vals) and _legacy_string_literals():
+    if any(_needs_escape(v) for v in vals) and _legacy_string_literals():
         # the legacy parser decodes no escape style — pay the py4j
         # round trips rather than emit literals that could mis-parse
         return F.array(*[F.lit(v) for v in vals])
@@ -160,25 +166,29 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
         return df
     if min_parts is None:
         min_parts = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
-        plan = ""
-    if "Exchange" in plan:
-        # under AQE, probing df.rdd FINALIZES the plan: every query
-        # stage below the probe point (shuffle maps, broadcasts, cache
-        # materializations) runs as REAL jobs whose output is thrown
-        # away when the caller extends or persists the plan afterwards
-        # (measured: 1-2 discarded jobs per call on CV-fold-cache
-        # shapes). A frame behind an exchange is already
-        # shuffle-partitions wide — scale-governed, not a 1-3-split
-        # parquet scan — so skip both the probe and the repartition.
-        # (executedPlan() is pure planning, no jobs, and the
-        # QueryExecution is cached for the caller's eventual action.)
+    if _behind_exchange(df):
         return df
     if df.rdd.getNumPartitions() < min_parts:
         return df.repartition(min_parts)
     return df
+
+
+def _behind_exchange(df: DataFrame) -> bool:
+    """Whether ``df``'s plan has an exchange — then leave its
+    partitioning alone and do not probe ``df.rdd``. Under AQE, probing
+    df.rdd FINALIZES the plan: every query stage below the probe point
+    (shuffle maps, broadcasts, cache materializations) runs as REAL
+    jobs whose output is thrown away when the caller extends or
+    persists the plan afterwards (measured: 1-2 discarded jobs per call
+    on CV-fold-cache shapes). A frame behind an exchange is already
+    shuffle-partitions wide — scale-governed, not a 1-3-split parquet
+    scan. (executedPlan() is pure planning, no jobs, and the
+    QueryExecution is cached for the caller's eventual action.)"""
+    try:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    except Exception:
+        plan = ""
+    return "Exchange" in plan
 
 
 def right_size_cv_cache(df: DataFrame, n_jobs: int,
@@ -197,8 +207,11 @@ def right_size_cv_cache(df: DataFrame, n_jobs: int,
     pruning), so a cache whose estimated size needs more partitions
     keeps them; when statistics are unknown (post-shuffle plans report
     Long.Max) the frame is left alone apart from the usual
-    under-partitioning floor.
+    under-partitioning floor. A frame behind an exchange keeps its
+    partitioning (see _behind_exchange).
     """
+    if _behind_exchange(df):
+        return df
     sc = df.sparkSession.sparkContext
     per_fit = max(2, sc.defaultParallelism // max(1, n_jobs))
     try:

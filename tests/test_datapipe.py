@@ -402,6 +402,26 @@ def test_duplicate_clusters_null_ids_survive_local_finish(spark):
         assert got[node] == want
 
 
+def test_duplicate_clusters_null_ids_same_on_both_paths(spark):
+    """NULL-id pairs are dropped once, before the local/distributed
+    gate: the driver union-find finish and the distributed label loop
+    return the same rows, and node 7 — paired only with a NULL id —
+    is in neither."""
+    from dask_ml_spark.datapipe.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (None, 7), (10, 11), (12, None)],
+        "id_a long, id_b long")
+
+    def rows(local_edges):
+        cl = duplicate_clusters(pairs, local_edges=local_edges).collect()
+        return sorted((r["node"], r["cluster"]) for r in cl)
+
+    local, distributed = rows(1_000_000), rows(0)
+    assert local == distributed
+    assert local == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
+
+
 def test_dedup_keep_representatives(spark):
     import pandas as pd
 

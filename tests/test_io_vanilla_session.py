@@ -50,3 +50,51 @@ def test_load_events_ts_values_sane(spark):
     ev = load_table(spark, SF_DIR, "events")
     row = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     assert row["lo"].year >= 1990 and row["hi"].year <= 2100
+
+
+def test_nanos_conf_keyed_on_session_identity(monkeypatch):
+    """The once-per-session nanos conf is keyed on the session object,
+    not id(): CPython hands a new object the address of a collected
+    one, and an id-keyed set then skipped the new session's conf. The
+    schema cache stays bounded."""
+    import gc
+
+    from dask_ml_spark.sources import io
+
+    class FakeConf:
+        def __init__(self):
+            self.sets = []
+
+        def set(self, k, v):
+            self.sets.append((k, v))
+
+    class FakeSession:
+        def __init__(self):
+            self.conf = FakeConf()
+
+    for _ in range(20):
+        s = FakeSession()
+        io._ensure_nanos_conf(s)
+        io._ensure_nanos_conf(s)
+        assert s.conf.sets == [("spark.sql.legacy.parquet.nanosAsLong", "true")]
+        del s
+        gc.collect()
+
+    monkeypatch.setattr(io, "_SCHEMA_CACHE", type(io._SCHEMA_CACHE)())
+    monkeypatch.setattr(io, "_SCHEMA_CACHE_MAX", 1)
+
+    class Reader:
+        schema = "s"
+
+        def parquet(self, path):
+            return self
+
+    class ReadSession(FakeSession):
+        read = Reader()
+
+    monkeypatch.setattr(io, "normalize_nanos_timestamps", lambda df: df)
+    sess = ReadSession()
+    io.load_table(sess, SF_DIR, "nation")
+    io.load_table(sess, SF_DIR, "region")
+    assert len(io._SCHEMA_CACHE) == 1
+    assert next(iter(io._SCHEMA_CACHE))[0].endswith("region.parquet")

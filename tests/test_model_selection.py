@@ -483,3 +483,90 @@ def test_time_series_split_range_guard_on_constant_time(spark):
     with pytest.raises(ValueError, match="too narrow"):
         TimeSeriesSplit(n_splits=4, time_col="ts",
                         boundary="range").cuts(df2)
+
+
+def _fold_frame(spark, n=1500, seed=0):
+    import pandas as pd
+
+    rng = np.random.RandomState(seed)
+    X = rng.randn(n, 3) * [1.0, 2.0, 0.5] + [0.0, 1.0, 2.0]
+    logit = X @ [0.8, -0.3, 0.5] - 1.0
+    pdf = pd.DataFrame(X, columns=["a", "b", "c"])
+    pdf["label"] = (rng.rand(n) < 1 / (1 + np.exp(-logit))).astype(float)
+    pdf["__fold"] = rng.randint(0, 2, n)
+    return spark.createDataFrame(pdf).repartition(3).cache()
+
+
+def test_batched_newton_matches_per_fit_solvers(spark):
+    """Every (candidate, fold) model of one batched Newton pass equals
+    its own solvers.newton fit on the fold's train rows to 1e-8, and
+    agrees with MLlib's solver="auto" fit to 1e-3 (same objective, same
+    optimum). One aggregate then scores them all to the values
+    score_estimator gives per model."""
+    from dask_ml_spark.functions.metrics import (get_scorer, score_estimator,
+                                                 score_folds)
+    from dask_ml_spark.operators import solvers
+    from dask_ml_spark.operators.linear_model import (_solver_kwargs,
+                                                      fit_newton_batch)
+
+    df = _fold_frame(spark)
+    cols = ["a", "b", "c"]
+    grid = [(C, fi) for C in (0.1, 10.0) for fi in (0, 1)]
+    ests = [LogisticRegression(C=C, tol=1e-10, max_iter=50) for C, _ in grid]
+    fit_newton_batch(ests, df, cols, "label", fold_col="__fold",
+                     test_folds=[fi for _, fi in grid])
+    for est, (C, fi) in zip(ests, grid):
+        train = df.where(F.col("__fold") != fi)
+        beta = solvers.newton(train, cols, "label", "logistic",
+                              **_solver_kwargs(est))
+        np.testing.assert_allclose(est.coef_, beta[:3], atol=1e-8)
+        assert abs(est.intercept_ - beta[3]) < 1e-8
+        ml = LogisticRegression(C=C, tol=1e-10, max_iter=200).fit(
+            train, cols, "label")
+        np.testing.assert_allclose(est.coef_, ml.coef_, atol=1e-3)
+        assert abs(est.intercept_ - ml.intercept_) < 1e-3
+    for name in ("accuracy", "neg_mean_squared_error"):
+        scorer = get_scorer(name)
+        got = score_folds(scorer, [(e, fi) for e, (_, fi) in zip(ests, grid)],
+                          df, "__fold", "label")
+        want = [score_estimator(scorer, e, df.where(F.col("__fold") == fi),
+                                "label") for e, (_, fi) in zip(ests, grid)]
+        np.testing.assert_allclose(got, want, rtol=1e-12)
+    assert score_folds(get_scorer("roc_auc"), [(ests[0], 0)], df, "__fold",
+                       "label") is None
+
+
+def test_grid_search_batches_eligible_candidates_only(spark, monkeypatch):
+    """A grid mixing solver=["lbfgs", "newton"] runs both paths: the
+    newton candidates in one batched pass, the lbfgs one by its own
+    MLlib fit; cv_results_ is filled for every candidate, and a
+    duplicate candidate shares its fit."""
+    from dask_ml_spark.operators import linear_model
+
+    df = _fold_frame(spark, n=600, seed=1).drop("__fold")
+    batches, pooled = [], []
+    real_batch = linear_model.fit_newton_batch
+    real_fit = LogisticRegression.fit
+
+    def batch(ests, *a, **kw):
+        batches.append([(e.solver, e.C) for e in ests])
+        return real_batch(ests, *a, **kw)
+
+    def fit(self, *a, **kw):
+        pooled.append((self.solver, self.C))
+        return real_fit(self, *a, **kw)
+
+    monkeypatch.setattr(linear_model, "fit_newton_batch", batch)
+    monkeypatch.setattr(LogisticRegression, "fit", fit)
+    gs = GridSearchCV(
+        LogisticRegression(max_iter=20),
+        [{"solver": ["lbfgs", "newton"], "C": [1.0]},
+         {"solver": ["newton"], "C": [1.0, 0.1]}],
+        cv=KFold(n_splits=2, shuffle=True, random_state=0), refit=False)
+    gs.fit(df, ["a", "b", "c"])
+    assert len(batches) == 1
+    assert sorted(batches[0]) == sorted([("newton", 1.0), ("newton", 0.1)] * 2)
+    assert pooled == [("lbfgs", 1.0)] * 2
+    scores = gs.cv_results_["mean_test_score"]
+    assert len(scores) == 4 and np.isfinite(scores).all()
+    assert scores[1] == scores[2]  # the duplicate newton C=1.0

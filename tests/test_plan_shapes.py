@@ -624,3 +624,22 @@ def test_frequency_levels_checkpoint_pruned_only_for_triples(spark, monkeypatch)
     assert n_pairs == 2
     assert n_pairs_reused == 3
     assert n_triples == 4
+
+
+def test_grid_search_best_job_budget(spark, catalog):
+    """grid_search_best's job budget: its GLM grid is fitted by the
+    batched Newton pass (one job per iteration for all 6 (candidate,
+    fold) models) and scored by one aggregate. Per-(candidate, fold)
+    MLlib L-BFGS chains took 66 jobs; a regression back to them fails
+    here. Counted on a warm run (the parquet schema cache filled)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def run():
+        spark.catalog.clearCache()
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        catalog["grid_search_best"](spark, SF_DIR).write.mode(
+            "overwrite").format("noop").save()
+        return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+    run()
+    assert run() <= 12

@@ -342,3 +342,23 @@ def test_assert_scalable_accepts_library_pipelines(spark):
     scores = spark.createDataFrame(
         [("a", 1.0), ("b", 2.0), ("c", 3.0)], ["doc_id", "score"])
     assert_scalable(smooth_scores(edges, scores, iters=2))
+
+
+def test_sql_scalar_lit_legacy_parser_refuses_only_escapes(spark):
+    """Under spark.sql.parser.escapedStringLiterals=true a string with
+    no quote or backslash parses the same as under the default parser,
+    so it is accepted; one with a quote would mis-parse and is
+    refused."""
+    from pyspark.sql import functions as F
+
+    from dask_ml_spark.utils import sql_scalar_lit
+
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "true")
+    try:
+        lit = sql_scalar_lit("doc_42")
+        assert spark.range(1).select(F.expr(lit).alias("v")).first()["v"] == "doc_42"
+        with pytest.raises(ValueError, match="quote or backslash"):
+            sql_scalar_lit("it's")
+    finally:
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
+    assert sql_scalar_lit("it's") == "'it\\'s'"
