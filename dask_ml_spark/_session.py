@@ -49,6 +49,14 @@ _DEFAULTS = {
     # overflow/cast checks cost 2-7x on aggregate-heavy plans (measured on
     # from_json, sha2 dedup, and groupBy-agg queries at sf0.1). Pin it off.
     "spark.sql.ansi.enabled": "false",
+    # pyspark.daemon plus a guard that stops every Python task from
+    # re-reading the zip/jar directories on the worker's sys.path (~0.2 s
+    # of CPU per task before Python 3.13; see _pydaemon). Executors must
+    # import dask_ml_spark, as they already do for the package's pickled
+    # mapInPandas functions; if they cannot, the job fails with the obscure
+    # "EOFException occurred while reading the port number from
+    # dask_ml_spark._pydaemon's stdout".
+    "spark.python.daemon.module": "dask_ml_spark._pydaemon",
 }
 
 

@@ -56,13 +56,6 @@ def _exploded_shingles(df: DataFrame, text_col: str, id_col: str, n: int):
     )
 
 
-def shingles_expr(text_col, n: int = 3):
-    """Word n-gram shingles as an array<string> (distinct).  Prefer
-    shingles_from_tokens over a projected token column in hot paths —
-    see that docstring for why."""
-    return shingles_from_tokens(tokens_expr(text_col), n)
-
-
 def base_hash_expr(col):
     """60-bit integer hash from md5 — reproducible in duckdb via
     ('0x' || substr(md5(x),1,15))::BIGINT."""

@@ -22,13 +22,6 @@ from pyspark.sql import functions as F
 EPS = 1e-15
 
 
-def _w(col: Column, weight: Column | None) -> tuple[Column, Column]:
-    """Return (numerator, denominator) aggregates for a weighted mean."""
-    if weight is None:
-        return F.avg(col), None
-    return F.sum(weight * col), F.sum(weight)
-
-
 def _weighted_mean(col: Column, weight: Column | None) -> Column:
     if weight is None:
         return F.avg(col)

@@ -1756,6 +1756,8 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str,
     head = None
     if max_driver_rows and max_driver_rows > 0:
         g, head = _bounded_head(g, max_driver_rows)
+    else:
+        g = g.localCheckpoint(eager=False)
     if head is not None:
         rank_rows = {"a": [], "b": []}
         cums = {"a": 0.0, "b": 0.0}
@@ -1770,9 +1772,12 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str,
             for t in ("a", "b")}
     else:
         g = prefix_sum(g, "__v", "__c", "__before", group_col="__t")
+        # cut before the per-tag split: both rank frames read one
+        # materialized cumsum instead of each re-running its Python pass
         ranked = g.select(
             "__t", "__v",
-            (F.col("__before") + (F.col("__c") + 1.0) / 2.0).alias("__r"))
+            (F.col("__before") + (F.col("__c") + 1.0) / 2.0).alias("__r")
+        ).localCheckpoint(eager=False)
         rank_frames = {
             t: ranked.where(F.col("__t") == t)
                      .select(F.col("__v").alias(f"__{t}"),

@@ -23,15 +23,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_lit(a: Column, vec) -> Column:
-    """Dot product of an array column with a Python/numpy vector literal.
-
-    The literal is folded into the plan (effectively broadcast); for a
-    handful of query vectors this beats a join.
-    """
-    return dot(a, F.array(*[F.lit(float(v)) for v in vec]))
-
-
 def norm2(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
@@ -40,26 +31,3 @@ def norm2(a: Column) -> Column:
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm2(a) * norm2(b))
-
-
-def cosine_similarity_lit(a: Column, vec) -> Column:
-    import math
-
-    nv = math.sqrt(sum(float(v) * float(v) for v in vec))
-    return dot_lit(a, vec) / (norm2(a) * F.lit(nv))
-
-
-def euclidean_sq(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def scale_shift(a: Column, scale, shift) -> Column:
-    """Elementwise (a - shift) / scale with vector literals (scaler
-    transforms on assembled feature arrays)."""
-    sh = F.array(*[F.lit(float(v)) for v in shift])
-    sc = F.array(*[F.lit(float(v)) for v in scale])
-    return F.zip_with(F.zip_with(a, sh, lambda x, m: x - m), sc, lambda x, s: x / s)

@@ -220,14 +220,3 @@ class SGDClassifier:
 
     def score(self, X, y):
         return float((self.predict(X) == np.asarray(y, dtype="float64")).mean())
-
-
-class IdentityTransformer:
-    def get_params(self, deep=True):
-        return {}
-
-    def fit(self, X, y=None):
-        return self
-
-    def transform(self, X):
-        return np.asarray(X, dtype="float64")

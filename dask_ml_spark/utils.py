@@ -7,8 +7,6 @@ authoritative, so the equivalents here are thin.
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -116,30 +114,6 @@ def resolve_feature_columns(df: DataFrame, columns=None) -> list[str]:
     return list(columns)
 
 
-def vector_struct(cols: Sequence[str]):
-    """An array<double> expression packing feature columns (JVM-side)."""
-    return F.array(*[F.col(c).cast("double") for c in cols])
-
-
-def check_matching_columns(df_a: DataFrame, df_b: DataFrame, cols: Iterable[str]) -> None:
-    """Analog of check_matching_blocks (reference dask_ml/utils.py:248-279):
-    with a single DataFrame holding X and y, alignment is structural; this
-    only checks that two frames share the named columns."""
-    for c in cols:
-        if c not in df_a.columns or c not in df_b.columns:
-            raise ValueError(f"Column {c!r} missing from one of the frames")
-
-
-def infer_output_fields(model, n_features: int, method: str = "predict") -> np.dtype:
-    """Meta inference: run ``model.<method>`` on a 1-row dummy to learn the
-    output dtype/shape (reference dask_ml/wrappers.py:642-695). Used to
-    declare pandas-UDF return schemas."""
-    dummy = np.zeros((1, n_features), dtype="float64")
-    out = getattr(model, method)(dummy)
-    out = np.asarray(out)
-    return out.dtype, out.shape[1:] if out.ndim > 1 else ()
-
-
 def numpy_dtype_to_spark(dt: np.dtype) -> T.DataType:
     dt = np.dtype(dt)
     if dt.kind == "f":
@@ -229,16 +203,6 @@ def right_size_cv_cache(df: DataFrame, n_jobs: int,
     if target < current:
         return df.repartition(target)
     return ensure_min_partitions(df, target)
-
-
-def add_row_index(df: DataFrame, name: str = "__row_id__") -> DataFrame:
-    """Stable unique row id without a global sort.
-
-    monotonically_increasing_id is partition-local-monotonic which is all
-    the engine needs (join keys, fold assignment); a global contiguous
-    index would force a full pass + shuffle and does not scale.
-    """
-    return df.withColumn(name, F.monotonically_increasing_id())
 
 
 def zip_with_index(df: DataFrame, order_cols, id_col: str = "index",
