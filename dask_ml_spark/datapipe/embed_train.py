@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_ml_spark.datapipe.dedup import tokens_expr
-from dask_ml_spark.utils import ensure_min_partitions
+from dask_ml_spark.utils import cut, ensure_min_partitions
 
 
 def top_vocabulary(df: DataFrame, text_col: str = "text",
@@ -114,10 +114,7 @@ def ppmi_scores(cooc: DataFrame) -> DataFrame:
     # parquet scans and zero ReusedExchange). The cut is skipped when
     # the caller already checkpointed (the apriori/_frequency_levels
     # convention); the table is <= V^2 rows by construction.
-    from dask_ml_spark.datapipe.packing import _is_checkpoint_scan
-
-    if not _is_checkpoint_scan(cooc):
-        cooc = cooc.localCheckpoint(eager=False)
+    cooc = cut(cooc)
     # "__total", not "N": Spark resolves case-insensitively, so "N"
     # collides with the count column "n"
     total = cooc.agg(F.sum("n").alias("__total"))
@@ -143,10 +140,7 @@ def logdice_scores(cooc: DataFrame) -> DataFrame:
     ppmi_scores: two V-row marginal aggregates broadcast-joined back;
     rounded to 6 digits for engine-portable comparison."""
     # three references below — same lineage cut as ppmi_scores
-    from dask_ml_spark.datapipe.packing import _is_checkpoint_scan
-
-    if not _is_checkpoint_scan(cooc):
-        cooc = cooc.localCheckpoint(eager=False)
+    cooc = cut(cooc)
     m1 = cooc.groupBy("w1").agg(F.sum("n").alias("n1"))
     m2 = cooc.groupBy("w2").agg(F.sum("n").alias("n2"))
     log2 = math.log(2.0)

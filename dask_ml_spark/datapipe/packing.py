@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import cut
+
 PII_PATTERNS = {
     "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
     "phone": r"\+?[0-9][0-9()\- ]{7,}[0-9]",
@@ -51,17 +53,6 @@ def redact_pii(df: DataFrame, text_col: str = "text",
                       .alias(f"n_{name}"))
         redacted = F.regexp_replace(redacted, pat, f"[{name.upper()}]")
     return df.select(F.col(id_col), *counts, redacted.alias("redacted_text"))
-
-
-def _is_checkpoint_scan(df: DataFrame) -> bool:
-    """True when `df` is a bare scan of an already-materialized RDD
-    (localCheckpoint / createDataFrame output) — i.e. re-reading it is
-    cheap and deterministic, so prefix_sum must not checkpoint again."""
-    try:
-        return (df._jdf.queryExecution().analyzed()
-                .getClass().getSimpleName() == "LogicalRDD")
-    except Exception:
-        return False
 
 
 def prefix_sum(df: DataFrame, order_col: str, value_col,
@@ -103,7 +94,7 @@ def prefix_sum(df: DataFrame, order_col: str, value_col,
 
     Two r13-optimization notes (guide §1.4/§2.4/§4.1):
     - the input is localCheckpointed (unless it already IS a
-      materialized-RDD scan, e.g. via ``_bounded_head``): the range
+      materialized-RDD scan, e.g. via ``utils.bounded_head``): the range
       exchange SAMPLES its child to pick boundaries, so an expensive
       upstream plan (a full groupBy, a regex token count) would
       otherwise be computed twice — once for the sampler, once for the
@@ -135,8 +126,7 @@ def prefix_sum(df: DataFrame, order_col: str, value_col,
         out_cols = [out_col]
     if with_totals and group_col is not None:
         raise ValueError("with_totals is global-only")
-    if not _is_checkpoint_scan(df):
-        df = df.localCheckpoint(eager=False)
+    df = cut(df)
     # the range exchange below reshuffles anyway, so an up-front
     # ensure_min_partitions round-robin repartition (plus its mandatory
     # sortBeforeRepartition) was a whole wasted shuffle pass — only the

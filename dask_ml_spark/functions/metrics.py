@@ -38,10 +38,6 @@ def mse_expr(y_true: Column, y_pred: Column, weight: Column | None = None) -> Co
     return _weighted_mean(F.pow(y_pred - y_true, 2), weight)
 
 
-def rmse_expr(y_true: Column, y_pred: Column, weight: Column | None = None) -> Column:
-    return F.sqrt(mse_expr(y_true, y_pred, weight))
-
-
 def mae_expr(y_true: Column, y_pred: Column, weight: Column | None = None) -> Column:
     return _weighted_mean(F.abs(y_pred - y_true), weight)
 
@@ -546,6 +542,7 @@ def roc_auc_score(df: DataFrame, label_col: str = "label",
         return float(u / (n1 * n0))
 
     from dask_ml_spark.datapipe.packing import prefix_sum
+    from dask_ml_spark.utils import bounded_head
 
     g = (
         df.groupBy(F.col(score_col).cast("double").alias("__s"))
@@ -556,25 +553,19 @@ def roc_auc_score(df: DataFrame, label_col: str = "label",
     # bounded driver path (stats.py's kaplan/ks pattern): when the
     # distinct-score frame fits, cumsum driver-side — U is a sum of
     # integer products < 2^53, bit-identical to the prefix machine;
-    # the checkpoint lets the fallback reuse the materialized frame
-    if max_driver_rows and max_driver_rows > 0:
-        g = g.localCheckpoint(eager=False)
-        # Arrow probe, not a Row collect (the stats._bounded_head r13
-        # optimization): non-null doubles only, value-identical
-        head_pdf = g.limit(max_driver_rows + 1).toPandas()
-        head = (head_pdf.to_dict("records")
-                if len(head_pdf) <= max_driver_rows else None)
-        if head is not None:
-            head.sort(key=lambda r: r["__s"])
-            u = neg_below = n1 = n0 = 0.0
-            for r in head:
-                u += r["__p"] * (neg_below + 0.5 * r["__neg"])
-                neg_below += r["__neg"]
-                n1 += r["__p"]
-                n0 += r["__neg"]
-            if not n1 or not n0:
-                raise ValueError("roc_auc_score needs both classes present")
-            return float(u / (n1 * n0))
+    # the cut lets the fallback reuse the materialized frame
+    g, head = bounded_head(g, max_driver_rows)
+    if head is not None:
+        head.sort(key=lambda r: r["__s"])
+        u = neg_below = n1 = n0 = 0.0
+        for r in head:
+            u += r["__p"] * (neg_below + 0.5 * r["__neg"])
+            neg_below += r["__neg"]
+            n1 += r["__p"]
+            n0 += r["__neg"]
+        if not n1 or not n0:
+            raise ValueError("roc_auc_score needs both classes present")
+        return float(u / (n1 * n0))
     withcum = prefix_sum(g, "__s", "__neg", "__neg_below")
     row = withcum.agg(
         F.sum(F.col("__p") * (F.col("__neg_below") + 0.5 * F.col("__neg"))).alias("u"),

@@ -23,7 +23,7 @@ KS/changepoint/trend ≤K buckets, Spearman-binned ≤K² cells, bootstrap
 ≤B or ≤G·B replicate groups) with the statistic assembled driver-side
 from that bounded state; (2) one row per DISTINCT VALUE via a hash
 groupBy with map-side combine, then cumulative pieces over the small
-frame — driver-side below max_driver_rows (_bounded_head), else
+frame — driver-side below max_driver_rows (utils.bounded_head), else
 datapipe.packing.prefix_sum, the range-partitioned two-phase cumsum.
 No keyless Window.partitionBy() anywhere, so no single-task
 serialization of the full corpus.
@@ -66,7 +66,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dask_ml_spark.utils import ensure_min_partitions
+from dask_ml_spark.utils import bounded_head, ensure_min_partitions
 
 SQRT_TWO_PI = 2.5066282746310002  # sqrt(2*pi), literal-folded
 
@@ -181,26 +181,6 @@ def _ad_p_py(a2: float) -> float:
         cdf = math.exp(-math.exp(
             _ad_poly(a2, _AD_HI, float, lambda a, z: a * z)))
     return min(1.0, max(0.0, 1.0 - cdf))
-
-
-def _bounded_head(g: DataFrame, cap: int):
-    """The bounded driver-path probe shared by every distinct-value
-    cumulative (ks/mwu/kaplan/spearman/roc_auc): localCheckpoint FIRST
-    so a fallback to the distributed prefix machinery reuses the
-    materialized frame instead of re-running the groupBy (blocks
-    reclaimed by the ContextCleaner), then one limit(cap+1) collect.
-    Returns (checkpointed g, head rows if they fit else None)."""
-    g = g.localCheckpoint(eager=False)
-    # Arrow transfer instead of a Row collect (r13 optimization): the
-    # probe moves up to cap+1 rows to the driver, and the pickled-Row
-    # path pays ~10x Arrow's cost at the 65k cap. Values are plain
-    # non-null doubles by construction (every caller pre-filters
-    # NULL/NaN), so the dict records are value-identical to Rows and
-    # support the same r["col"] access.
-    head_pdf = g.limit(cap + 1).toPandas()
-    if len(head_pdf) > cap:
-        return g, None
-    return g, head_pdf.to_dict("records")
 
 
 def _normal_sf_py(z: float) -> float:
@@ -357,30 +337,29 @@ def ks_2sample(df: DataFrame, value_col: str, group_col: str,
     # bit-identical to the prefix-machine result, and two distributed
     # passes collapse into one small collect.
     g, _, _ = _two_group_counts(df, value_col, group_col, groups)
-    if max_driver_rows and max_driver_rows > 0:
-        g, head = _bounded_head(g, max_driver_rows)
-        if head is not None:
-            head.sort(key=lambda r: r["__v"])
-            n1 = sum(r["__c1"] for r in head)
-            n2 = sum(r["__c2"] for r in head)
-            if not n1 or not n2:
-                raise ValueError(
-                    "ks_2sample: a group matched no rows — check the "
-                    "group values (NULL groups are excluded)")
-            f1 = f2 = 0.0
-            d = 0.0
-            for r in head:
-                f1 += r["__c1"]
-                f2 += r["__c2"]
-                d = max(d, abs(f1 / n1 - f2 / n2))
-            lam_v = d * math.sqrt(n1 * n2 / (n1 + n2))
-            q = 2.0 * sum((-1) ** (k - 1) * math.exp(-2.0 * k * k
-                                                     * lam_v * lam_v)
-                          for k in range(1, _KS_TERMS + 1))
-            return df.sparkSession.createDataFrame([{
-                "n1": int(n1), "n2": int(n2), "d_stat": float(d),
-                "p_value": float(min(1.0, max(0.0, q))),
-            }]).select("n1", "n2", "d_stat", "p_value")
+    g, head = bounded_head(g, max_driver_rows)
+    if head is not None:
+        head.sort(key=lambda r: r["__v"])
+        n1 = sum(r["__c1"] for r in head)
+        n2 = sum(r["__c2"] for r in head)
+        if not n1 or not n2:
+            raise ValueError(
+                "ks_2sample: a group matched no rows — check the "
+                "group values (NULL groups are excluded)")
+        f1 = f2 = 0.0
+        d = 0.0
+        for r in head:
+            f1 += r["__c1"]
+            f2 += r["__c2"]
+            d = max(d, abs(f1 / n1 - f2 / n2))
+        lam_v = d * math.sqrt(n1 * n2 / (n1 + n2))
+        q = 2.0 * sum((-1) ** (k - 1) * math.exp(-2.0 * k * k
+                                                 * lam_v * lam_v)
+                      for k in range(1, _KS_TERMS + 1))
+        return df.sparkSession.createDataFrame([{
+            "n1": int(n1), "n2": int(n2), "d_stat": float(d),
+            "p_value": float(min(1.0, max(0.0, q))),
+        }]).select("n1", "n2", "d_stat", "p_value")
     # the prefix machine's subtotal collect already accumulated the
     # grand totals — reading them as literals saves the second cumsum
     # pass (and its Python boundary) a totals aggregate + cross join
@@ -446,49 +425,48 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
     # bounded driver path (kaplan_meier pattern): u / ties are sums of
     # integer products < 2^53, so the driver cumsum is bit-identical
     # to the prefix-machine result
-    if max_driver_rows and max_driver_rows > 0:
-        g, head = _bounded_head(g, max_driver_rows)
-        if head is not None:
-            head.sort(key=lambda r: r["__v"])
-            n1 = sum(r["__c1"] for r in head)
-            n2 = sum(r["__c2"] for r in head)
-            if not n1 or not n2:
-                raise ValueError(
-                    "mann_whitney_u: a group matched no rows — check "
-                    "the group values (NULL groups are excluded)")
-            # exact bignum integers: the doubled rank-sum u2 = Σ c1·
-            # (2·below2 + c2) and the tie term Σ t³ − t never round,
-            # so the driver path stays EXACT past the 2^53 threshold
-            # the float form crosses once a single tied value holds
-            # ~2.1M rows (the documented sf≥1 regime); below 2^53 the
-            # values are bit-identical to the distributed float path
-            # (integer doubles — parity-pinned)
-            b2 = 0
-            u2 = 0
-            ties = 0
-            for r in head:
-                c1, c2 = int(r["__c1"]), int(r["__c2"])
-                u2 += c1 * (2 * b2 + c2)
-                b2 += c2
-                tt = c1 + c2
-                ties += tt * tt * tt - tt
-            u = u2 / 2.0  # halving an exactly-converted double is exact
-            n = n1 + n2
-            mu = n1 * n2 / 2.0
-            var = (n1 * n2 / 12.0
-                   * ((n + 1.0) - ties / (n * (n - 1.0))))
-            if var <= 0.0:
-                z_v, p_v = 0.0, 1.0
-            else:
-                shift = max(0.0, abs(u - mu) - 0.5)
-                z_v = math.copysign(shift, u - mu) / math.sqrt(var)
-                p_v = min(1.0, 2.0 * _normal_sf_py(abs(z_v)))
-            return df.sparkSession.createDataFrame([{
-                "n1": int(n1), "n2": int(n2), "u_stat": float(u),
-                "z": float(z_v), "p_value": float(p_v),
-                "rank_biserial": float(2.0 * u / (n1 * n2) - 1.0),
-            }]).select("n1", "n2", "u_stat", "z", "p_value",
-                       "rank_biserial")
+    g, head = bounded_head(g, max_driver_rows)
+    if head is not None:
+        head.sort(key=lambda r: r["__v"])
+        n1 = sum(r["__c1"] for r in head)
+        n2 = sum(r["__c2"] for r in head)
+        if not n1 or not n2:
+            raise ValueError(
+                "mann_whitney_u: a group matched no rows — check "
+                "the group values (NULL groups are excluded)")
+        # exact bignum integers: the doubled rank-sum u2 = Σ c1·
+        # (2·below2 + c2) and the tie term Σ t³ − t never round,
+        # so the driver path stays EXACT past the 2^53 threshold
+        # the float form crosses once a single tied value holds
+        # ~2.1M rows (the documented sf≥1 regime); below 2^53 the
+        # values are bit-identical to the distributed float path
+        # (integer doubles — parity-pinned)
+        b2 = 0
+        u2 = 0
+        ties = 0
+        for r in head:
+            c1, c2 = int(r["__c1"]), int(r["__c2"])
+            u2 += c1 * (2 * b2 + c2)
+            b2 += c2
+            tt = c1 + c2
+            ties += tt * tt * tt - tt
+        u = u2 / 2.0  # halving an exactly-converted double is exact
+        n = n1 + n2
+        mu = n1 * n2 / 2.0
+        var = (n1 * n2 / 12.0
+               * ((n + 1.0) - ties / (n * (n - 1.0))))
+        if var <= 0.0:
+            z_v, p_v = 0.0, 1.0
+        else:
+            shift = max(0.0, abs(u - mu) - 0.5)
+            z_v = math.copysign(shift, u - mu) / math.sqrt(var)
+            p_v = min(1.0, 2.0 * _normal_sf_py(abs(z_v)))
+        return df.sparkSession.createDataFrame([{
+            "n1": int(n1), "n2": int(n2), "u_stat": float(u),
+            "z": float(z_v), "p_value": float(p_v),
+            "rank_biserial": float(2.0 * u / (n1 * n2) - 1.0),
+        }]).select("n1", "n2", "u_stat", "z", "p_value",
+                   "rank_biserial")
     g = prefix_sum(g, "__v", "__c2", "__b2")
     t = F.col("__c1") + F.col("__c2")
     agg = g.agg(
@@ -554,44 +532,43 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
     g = (kept.groupBy("__v")
          .agg(F.count(F.lit(1)).alias("__c"),
               F.sum("__pos").alias("__cp")))
-    if max_driver_rows and max_driver_rows > 0:
-        g, head = _bounded_head(g, max_driver_rows)
-        if head is not None:
-            if not head:
-                raise ValueError("wilcoxon_signed_rank: no nonzero "
-                                 "complete-case differences")
-            head.sort(key=lambda r: r["__v"])
-            # exact bignum doubled ranks: 2·rank = 2·cum_before + c + 1
-            cum = 0
-            w2 = 0
-            ties = 0
-            n = 0
-            for r in head:
-                c, cp = int(r["__c"]), int(r["__cp"])
-                w2 += cp * (2 * cum + c + 1)
-                cum += c
-                n += c
-                ties += c * c * c - c
-            # w2 is exact (Python bignum); this true-division rounds
-            # it to the nearest double, which is lossy once
-            # w2 > 2^53 — n ≳ 1e8 nonzero diffs (w2 ~ n²/2), the same
-            # documented boundary class as mann_whitney's distributed
-            # tie sums. z/p assembly is float either way, so results
-            # stay bit-comparable cross-engine.
-            w = w2 / 2.0
-            mu = n * (n + 1) / 4.0
-            var = (n * (n + 1.0) * (2.0 * n + 1.0)) / 24.0 \
-                - ties / 48.0
-            if var <= 0.0:
-                z_v, p_v = 0.0, 1.0
-            else:
-                shift = max(0.0, abs(w - mu) - 0.5)
-                z_v = math.copysign(shift, w - mu) / math.sqrt(var)
-                p_v = min(1.0, 2.0 * _normal_sf_py(abs(z_v)))
-            return df.sparkSession.createDataFrame([{
-                "n": int(n), "w_plus": float(w), "z": float(z_v),
-                "p_value": float(p_v),
-            }]).select("n", "w_plus", "z", "p_value")
+    g, head = bounded_head(g, max_driver_rows)
+    if head is not None:
+        if not head:
+            raise ValueError("wilcoxon_signed_rank: no nonzero "
+                             "complete-case differences")
+        head.sort(key=lambda r: r["__v"])
+        # exact bignum doubled ranks: 2·rank = 2·cum_before + c + 1
+        cum = 0
+        w2 = 0
+        ties = 0
+        n = 0
+        for r in head:
+            c, cp = int(r["__c"]), int(r["__cp"])
+            w2 += cp * (2 * cum + c + 1)
+            cum += c
+            n += c
+            ties += c * c * c - c
+        # w2 is exact (Python bignum); this true-division rounds
+        # it to the nearest double, which is lossy once
+        # w2 > 2^53 — n ≳ 1e8 nonzero diffs (w2 ~ n²/2), the same
+        # documented boundary class as mann_whitney's distributed
+        # tie sums. z/p assembly is float either way, so results
+        # stay bit-comparable cross-engine.
+        w = w2 / 2.0
+        mu = n * (n + 1) / 4.0
+        var = (n * (n + 1.0) * (2.0 * n + 1.0)) / 24.0 \
+            - ties / 48.0
+        if var <= 0.0:
+            z_v, p_v = 0.0, 1.0
+        else:
+            shift = max(0.0, abs(w - mu) - 0.5)
+            z_v = math.copysign(shift, w - mu) / math.sqrt(var)
+            p_v = min(1.0, 2.0 * _normal_sf_py(abs(z_v)))
+        return df.sparkSession.createDataFrame([{
+            "n": int(n), "w_plus": float(w), "z": float(z_v),
+            "p_value": float(p_v),
+        }]).select("n", "w_plus", "z", "p_value")
     g = prefix_sum(g, "__v", "__c", "__b")
     agg = g.agg(
         F.sum(F.col("__cp")
@@ -1753,11 +1730,7 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str,
          .select("__e.__t", "__e.__v")
          .groupBy("__t", "__v")
          .agg(F.count(F.lit(1)).cast("double").alias("__c")))
-    head = None
-    if max_driver_rows and max_driver_rows > 0:
-        g, head = _bounded_head(g, max_driver_rows)
-    else:
-        g = g.localCheckpoint(eager=False)
+    g, head = bounded_head(g, max_driver_rows)
     if head is not None:
         rank_rows = {"a": [], "b": []}
         cums = {"a": 0.0, "b": 0.0}
@@ -3089,29 +3062,28 @@ def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
               F.count(F.lit(1)).cast("double").alias("__n")))
     out_schema = ("duration double, n_risk long, n_events long, "
                   "n_censored long, survival double")
-    if max_driver_rows and max_driver_rows > 0:
-        g, head = _bounded_head(g, max_driver_rows)
-        if head is not None:
-            head.sort(key=lambda r: r["__t"])
-            ntot = sum(r["__n"] for r in head)
-            before = 0.0
-            cumln = 0.0
-            dead = False
-            rows = []
-            for r in head:
-                nr = ntot - before
-                factor = 1.0 - r["__d"] / nr
-                if factor <= 0.0:
-                    dead = True
-                else:
-                    cumln += math.log(factor)
-                rows.append((float(r["__t"]), int(nr), int(r["__d"]),
-                             int(r["__c"]),
-                             0.0 if dead else math.exp(cumln)))
-                before += r["__n"]
-            return df.sparkSession.createDataFrame(rows, out_schema)
-        # over the cap: fall through (one wasted bounded collect on a
-        # frame we now know is prefix-machine-sized — the rare case)
+    g, head = bounded_head(g, max_driver_rows)
+    if head is not None:
+        head.sort(key=lambda r: r["__t"])
+        ntot = sum(r["__n"] for r in head)
+        before = 0.0
+        cumln = 0.0
+        dead = False
+        rows = []
+        for r in head:
+            nr = ntot - before
+            factor = 1.0 - r["__d"] / nr
+            if factor <= 0.0:
+                dead = True
+            else:
+                cumln += math.log(factor)
+            rows.append((float(r["__t"]), int(nr), int(r["__d"]),
+                         int(r["__c"]),
+                         0.0 if dead else math.exp(cumln)))
+            before += r["__n"]
+        return df.sparkSession.createDataFrame(rows, out_schema)
+    # over the cap: fall through (one wasted bounded collect on a
+    # frame we now know is prefix-machine-sized — the rare case)
     # grand total from the prefix machine's own subtotal collect —
     # integer counts, so the literal is bit-identical to the old
     # F.sum-over-output aggregate it replaces, and the cumsum pass
@@ -3225,28 +3197,27 @@ def log_rank(df: DataFrame, duration_col: str, event_col: str,
         }]).select("n1", "n2", "observed1", "expected1", "z", "chi2",
                    "p_value")
 
-    if max_driver_rows and max_driver_rows > 0:
-        g, head = _bounded_head(g, max_driver_rows)
-        if head is not None:
-            head.sort(key=lambda r: r["__t"])
-            tot1 = sum(int(r["__n1"]) for r in head)
-            tot2 = sum(int(r["__n2"]) for r in head)
-            b1 = b2 = 0
-            o1 = e1 = v = 0.0
-            for r in head:
-                r1, r2 = tot1 - b1, tot2 - b2
-                nt = r1 + r2
-                dt = int(r["__d1"]) + int(r["__d2"])
-                if dt > 0 and nt > 0:
-                    w = float(nt) if weights == "wilcoxon" else 1.0
-                    o1 += w * int(r["__d1"])
-                    e1 += w * (dt * (r1 / nt))
-                    if nt >= 2:
-                        v += (w * w * dt * (r1 / nt) * (r2 / nt)
-                              * (nt - dt) / (nt - 1.0))
-                b1 += int(r["__n1"])
-                b2 += int(r["__n2"])
-            return _emit_row(df.sparkSession, tot1, tot2, o1, e1, v)
+    g, head = bounded_head(g, max_driver_rows)
+    if head is not None:
+        head.sort(key=lambda r: r["__t"])
+        tot1 = sum(int(r["__n1"]) for r in head)
+        tot2 = sum(int(r["__n2"]) for r in head)
+        b1 = b2 = 0
+        o1 = e1 = v = 0.0
+        for r in head:
+            r1, r2 = tot1 - b1, tot2 - b2
+            nt = r1 + r2
+            dt = int(r["__d1"]) + int(r["__d2"])
+            if dt > 0 and nt > 0:
+                w = float(nt) if weights == "wilcoxon" else 1.0
+                o1 += w * int(r["__d1"])
+                e1 += w * (dt * (r1 / nt))
+                if nt >= 2:
+                    v += (w * w * dt * (r1 / nt) * (r2 / nt)
+                          * (nt - dt) / (nt - 1.0))
+            b1 += int(r["__n1"])
+            b2 += int(r["__n2"])
+        return _emit_row(df.sparkSession, tot1, tot2, o1, e1, v)
     # distributed fallback: prefix the at-t counts, derive risk sets,
     # prefix the O/E/V terms in the same ascending-t order, and read
     # the totals off the max-t row (sum order stays deterministic)
@@ -3370,24 +3341,23 @@ def nelson_aalen(df: DataFrame, duration_col: str, event_col: str,
     out_schema = ("duration double, n_risk long, n_events long, "
                   "n_censored long, cum_hazard double, se double, "
                   "ci_lo double, ci_hi double")
-    if max_driver_rows and max_driver_rows > 0:
-        g, head = _bounded_head(g, max_driver_rows)
-        if head is not None:
-            head.sort(key=lambda r: r["__t"])
-            ntot = sum(r["__n"] for r in head)
-            before = 0.0
-            h = var = 0.0
-            rows = []
-            for r in head:
-                nr = ntot - before
-                h += r["__d"] / nr
-                var += r["__d"] / (nr * nr)
-                se = math.sqrt(var)
-                rows.append((float(r["__t"]), int(nr), int(r["__d"]),
-                             int(r["__c"]), h, se,
-                             max(0.0, h - z * se), h + z * se))
-                before += r["__n"]
-            return df.sparkSession.createDataFrame(rows, out_schema)
+    g, head = bounded_head(g, max_driver_rows)
+    if head is not None:
+        head.sort(key=lambda r: r["__t"])
+        ntot = sum(r["__n"] for r in head)
+        before = 0.0
+        h = var = 0.0
+        rows = []
+        for r in head:
+            nr = ntot - before
+            h += r["__d"] / nr
+            var += r["__d"] / (nr * nr)
+            se = math.sqrt(var)
+            rows.append((float(r["__t"]), int(nr), int(r["__d"]),
+                         int(r["__c"]), h, se,
+                         max(0.0, h - z * se), h + z * se))
+            before += r["__n"]
+        return df.sparkSession.createDataFrame(rows, out_schema)
     # totals via the prefix machine's subtotal collect (integer counts
     # — bit-identical; one cumsum pass, no cross join; r13 optimization)
     g, (ntot_t,) = prefix_sum(g, "__t", "__n", "__before",
@@ -3764,7 +3734,7 @@ def ansari_bradley(df: DataFrame, value_col: str, group_col: str,
     row: (n1, n2, w_stat, z, p_value).
     """
     g, g1, g2 = _two_group_counts(df, value_col, group_col, groups)
-    g, head = _bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g, max_driver_rows)
     if head is None:
         raise ValueError(
             f"ansari_bradley: more than {max_driver_rows} distinct "

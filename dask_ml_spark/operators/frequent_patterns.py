@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import cut
+
 
 def _pairs_hof(arr):
     """All (a < b) combinations of a sorted array, via slices — cost
@@ -71,13 +73,8 @@ def _guarded_arrays(items: DataFrame, basket_col: str, item_col: str,
 
 def _frequency_levels(df: DataFrame, basket_col: str, item_col: str,
                       min_count: int, max_len: int,
-                      max_basket_items: int, f2_reused: bool = False):
-    """(f1, f2, f3, n_baskets_df) support tables; f3 None if max_len<3.
-
-    ``f2_reused``: the caller will consume f2 more than once (e.g.
-    association_rules reads it in both rule directions) — checkpoint it
-    so the pair aggregate runs once. At max_len=3 the triple level
-    already forces this."""
+                      max_basket_items: int):
+    """(f1, f2, f3, n_baskets_df) support tables; f3 None if max_len<3."""
     if max_len not in (1, 2, 3):
         raise ValueError("max_len must be 1, 2, or 3")
     if min_count < 1:
@@ -122,14 +119,13 @@ def _frequency_levels(df: DataFrame, basket_col: str, item_col: str,
           .where(F.col("support") >= min_count))
     # f2 gets a cut only when something downstream reads it twice: the
     # triple level (member prune + output union) or association_rules
-    # (both rule directions — it passes f2_reused=True). A plain
+    # (both rule directions — it cuts f2 itself). A plain
     # frequent_itemsets(max_len=2) consumes f2 exactly once, and a cut
     # there pays a full materialization for zero reuse (the same
     # single-consumer rule applied to `pruned` above).
-    if max_len == 3 or f2_reused:
-        f2 = f2.localCheckpoint(eager=False)
     if max_len == 2:
         return f1, f2, None, n_baskets_df
+    f2 = f2.localCheckpoint(eager=False)
     # prune to F2 participants before the cubic explode (an actual
     # frequent triple has every sub-pair frequent, so its members all
     # appear in F2 — nothing is lost)
@@ -178,8 +174,8 @@ def association_rules(df: DataFrame, basket_col: str = "basket_id",
     consequent, support, antecedent_support, consequent_support,
     confidence, lift)."""
     f1, f2, _, baskets = _frequency_levels(
-        df, basket_col, item_col, min_count, 2, max_basket_items,
-        f2_reused=True)
+        df, basket_col, item_col, min_count, 2, max_basket_items)
+    f2 = cut(f2)  # read by both rule directions
     # basket count as a broadcast one-row cross join, not a blocking
     # .count() action: the count rides the same job as the rules plan
     # (one fewer full pass; the literal it replaced was the same double)

@@ -16,12 +16,6 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
 # (path, size, mtime_ns) -> inferred StructType. Schema METADATA only —
 # no rows, no results: every query still scans the parquet. Re-inferring
 # the schema costs a ~65 ms footer-read/analysis round trip per
@@ -119,16 +113,6 @@ def normalize_nanos_timestamps(df: DataFrame) -> DataFrame:
     return out
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> None:
-    """Register the testdata tables as temp views for spark.sql()."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def read_parquet(spark: SparkSession, path: str, columns=None) -> DataFrame:
     df = spark.read.parquet(path)
     return df.select(*columns) if columns else df
@@ -223,11 +207,3 @@ def read_binary_files(spark: SparkSession, path: str, glob: str | None = None,
     if max_bytes is not None:
         df = df.where(F.col("length") <= F.lit(int(max_bytes)))
     return df
-
-
-def read_text_lines(spark: SparkSession, path: str,
-                    whole_file: bool = False) -> DataFrame:
-    """Plain-text ingestion: one row per line (`value` string), or one
-    row per file with `wholetext` — the raw-corpus entry point ahead of
-    quality scoring / language ID / dedup."""
-    return spark.read.option("wholetext", whole_file).text(path)

@@ -1,8 +1,14 @@
-"""Schema/column utilities shared across operators.
+"""Schema/column utilities and the plan section shared across operators.
 
 The reference spends ~500 LoC defending against unknown chunk sizes and
 meta inference (dask_ml/utils.py:123-279); on Spark the schema is
 authoritative, so the equivalents here are thin.
+
+The plan section is the only code that reads a Spark plan (by node
+class, via ``_plan_nodes``) and owns the decisions made from it:
+spreading (``ensure_min_partitions``, ``right_size_cv_cache``), lineage
+cuts (``cut``), the bounded driver probe (``bounded_head``) and the
+plan lint (``assert_scalable``).
 """
 
 from __future__ import annotations
@@ -132,7 +138,7 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
     serializes expression-heavy operators (hashing, shingling, UDF
     inference) onto a few cores. At 100 TB inputs already carry
     thousands of partitions and this is a no-op — the check is
-    driver-side and costs nothing but a plan conversion.
+    driver-side and runs no job (see _num_partitions).
     """
     if df.isStreaming:
         # no static partition count to inspect; micro-batch sizing is
@@ -140,29 +146,89 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
         return df
     if min_parts is None:
         min_parts = df.sparkSession.sparkContext.defaultParallelism
-    if _behind_exchange(df):
-        return df
-    if df.rdd.getNumPartitions() < min_parts:
+    n = _num_partitions(df)
+    if n is not None and n < min_parts:
         return df.repartition(min_parts)
     return df
 
 
-def _behind_exchange(df: DataFrame) -> bool:
-    """Whether ``df``'s plan has an exchange — then leave its
-    partitioning alone and do not probe ``df.rdd``. Under AQE, probing
-    df.rdd FINALIZES the plan: every query stage below the probe point
-    (shuffle maps, broadcasts, cache materializations) runs as REAL
-    jobs whose output is thrown away when the caller extends or
-    persists the plan afterwards (measured: 1-2 discarded jobs per call
-    on CV-fold-cache shapes). A frame behind an exchange is already
-    shuffle-partitions wide — scale-governed, not a 1-3-split parquet
-    scan. (executedPlan() is pure planning, no jobs, and the
-    QueryExecution is cached for the caller's eventual action.)"""
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:
-        plan = ""
-    return "Exchange" in plan
+def _plan_nodes(df: DataFrame, prune: str | None = None):
+    """Yield ``(class name, node)`` over ``df``'s physical plan, depth
+    first, through AQE's ``initialPlan`` (``inputPlan`` has no exchanges
+    yet) and a cache's ``cachedPlan``; a ``prune`` node is yielded but
+    not entered. Planning only, no jobs."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        yield name, node
+        if name == prune:
+            continue
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.initialPlan())
+        elif name == "InMemoryTableScanExec":
+            stack.append(node.relation().cachedPlan())
+        else:
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
+
+
+def _num_partitions(df: DataFrame) -> int | None:
+    """``df``'s partition count without running a job; None leaves
+    ``df`` alone. Under AQE, probing ``df.rdd`` FINALIZES the plan:
+    every query stage below it (shuffle maps, broadcasts) runs as a job
+    whose output is thrown away (measured: 1-2 per call on CV-fold-cache
+    shapes). So a frame behind a shuffle (already shuffle-partitions
+    wide) gets None, and under broadcast joins the count is read off the
+    streamed side's file scan (None for any other shape); only a plan
+    with no exchange is probed."""
+    scans, names = [], set()
+    for name, node in _plan_nodes(df, prune="BroadcastExchangeExec"):
+        if name == "ShuffleExchangeExec":
+            return None
+        names.add(name)
+        if name == "FileSourceScanExec":
+            scans.append(node)
+    if "BroadcastExchangeExec" not in names:
+        return df.rdd.getNumPartitions()
+    if len(scans) != 1 or names & {"CoalesceExec", "UnionExec"}:
+        return None
+    return scans[0].inputRDD().getNumPartitions()
+
+
+def _is_materialized(df: DataFrame) -> bool:
+    """Whether ``df`` is a bare scan of a materialized RDD
+    (localCheckpoint / createDataFrame output)."""
+    return (df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            == "LogicalRDD")
+
+
+def cut(df: DataFrame) -> DataFrame:
+    """Lazy localCheckpoint of a caller's frame, unless it is already
+    materialized (a second cut would re-materialize for nothing)."""
+    return df if _is_materialized(df) else df.localCheckpoint(eager=False)
+
+
+def bounded_head(g: DataFrame, cap: int | None):
+    """The bounded driver probe of the distinct-value cumulatives
+    (stats' ks/mwu/kaplan/spearman/..., metrics.roc_auc_score): cut
+    ``g`` FIRST, so a fallback to prefix_sum reuses it instead of
+    re-running the groupBy, then one limit(cap+1) collect. Returns
+    (cut g, head records if they fit else None); a falsy or negative
+    cap skips the probe."""
+    g = cut(g)
+    if not cap or cap < 0:
+        return g, None
+    # Arrow transfer instead of a Row collect (r13 optimization): the
+    # probe moves up to cap+1 rows to the driver, and the pickled-Row
+    # path pays ~10x Arrow's cost at the 65k cap. Values are plain
+    # non-null doubles by construction (every caller pre-filters
+    # NULL/NaN), so the dict records are value-identical to Rows and
+    # support the same r["col"] access.
+    head_pdf = g.limit(cap + 1).toPandas()
+    if len(head_pdf) > cap:
+        return g, None
+    return g, head_pdf.to_dict("records")
 
 
 def right_size_cv_cache(df: DataFrame, n_jobs: int,
@@ -181,10 +247,11 @@ def right_size_cv_cache(df: DataFrame, n_jobs: int,
     pruning), so a cache whose estimated size needs more partitions
     keeps them; when statistics are unknown (post-shuffle plans report
     Long.Max) the frame is left alone apart from the usual
-    under-partitioning floor. A frame behind an exchange keeps its
-    partitioning (see _behind_exchange).
+    under-partitioning floor. A frame whose partition count is unknown
+    or shuffle-set keeps its partitioning (see _num_partitions).
     """
-    if _behind_exchange(df):
+    current = _num_partitions(df)
+    if current is None:
         return df
     sc = df.sparkSession.sparkContext
     per_fit = max(2, sc.defaultParallelism // max(1, n_jobs))
@@ -194,15 +261,12 @@ def right_size_cv_cache(df: DataFrame, n_jobs: int,
     except Exception:
         size = -1
     if size <= 0 or size > (1 << 42):  # unknown / absurd estimate
-        return ensure_min_partitions(df)
-    # deserialized cache is fatter than the scan estimate (vector
-    # boxing, java object headers) — budget 4x
-    by_bytes = (4 * size) // bytes_per_part + 1
-    target = max(per_fit, by_bytes)
-    current = df.rdd.getNumPartitions()
-    if target < current:
-        return df.repartition(target)
-    return ensure_min_partitions(df, target)
+        target = max(current, sc.defaultParallelism)
+    else:
+        # deserialized cache is fatter than the scan estimate (vector
+        # boxing, java object headers) — budget 4x
+        target = max(per_fit, (4 * size) // bytes_per_part + 1)
+    return df if target == current else df.repartition(target)
 
 
 def zip_with_index(df: DataFrame, order_cols, id_col: str = "index",
@@ -529,20 +593,19 @@ def assert_scalable(df: DataFrame, *, allow_cartesian: bool = False,
     Returns the DataFrame unchanged so it chains:
         assert_scalable(build_pipeline(...)).write.parquet(...)
     """
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    problems = []
-    if not allow_cartesian and "CartesianProduct" in plan:
-        problems.append("CartesianProduct (O(N*M) pair explosion)")
-    if not allow_row_python and "BatchEvalPython" in plan:
-        problems.append("BatchEvalPython (row-at-a-time Python UDF; "
-                        "use an Arrow pandas_udf)")
-    if not allow_broadcast_nested_loop:
-        for line in plan.splitlines():
-            if "BroadcastNestedLoopJoin" in line and ", Cross" not in line:
-                problems.append(
-                    "BroadcastNestedLoopJoin with a join condition "
-                    "(non-equi join; add an equi key or bucket the range)")
-                break
+    found = {name for name, node in _plan_nodes(df)
+             if name != "BroadcastNestedLoopJoinExec"
+             or node.condition().isDefined()}
+    problems = [msg for name, waived, msg in (
+        ("CartesianProductExec", allow_cartesian,
+         "CartesianProduct (O(N*M) pair explosion)"),
+        ("BatchEvalPythonExec", allow_row_python,
+         "BatchEvalPython (row-at-a-time Python UDF; use an Arrow "
+         "pandas_udf)"),
+        ("BroadcastNestedLoopJoinExec", allow_broadcast_nested_loop,
+         "BroadcastNestedLoopJoin with a join condition (non-equi join; "
+         "add an equi key or bucket the range)"),
+    ) if name in found and not waived]
     if problems:
         raise ScalabilityError(
             "plan contains scale-killer shapes: " + "; ".join(problems)

@@ -592,15 +592,16 @@ def test_frequency_levels_checkpoint_pruned_only_for_triples(spark, monkeypatch)
     there pays build-time planning plus a full materialization of the
     table for zero reuse. Same rule for f2 (r14): a plain
     frequent_itemsets(max_len=2) consumes f2 once (no cut); only
-    association_rules (f2_reused=True — both rule directions) or the
-    triple level justify cutting it. Pin the cut count per shape:
-    max_len=2 cuts exploded/f1 (2), +f2 when f2_reused (3), max_len=3
-    cuts exploded/f1/pruned/f2 (4)."""
+    association_rules (which cuts f2 itself — both rule directions) or
+    the triple level justify cutting it. Pin the cut count per shape:
+    max_len=2 cuts exploded/f1 (2), association_rules adds f2 (3),
+    max_len=3 cuts exploded/f1/pruned/f2 (4)."""
     # patch the concrete class: in Spark 4 pyspark.sql.DataFrame is the
     # abstract facade and instance lookups resolve on the classic class
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from dask_ml_spark.operators.frequent_patterns import _frequency_levels
+    from dask_ml_spark.operators.frequent_patterns import (
+        _frequency_levels, association_rules)
 
     df = spark.createDataFrame(
         [(1, "a"), (1, "b"), (1, "c"), (2, "a"), (2, "b"), (3, "a")],
@@ -616,7 +617,7 @@ def test_frequency_levels_checkpoint_pruned_only_for_triples(spark, monkeypatch)
     _frequency_levels(df, "basket_id", "item", 2, 2, 300)
     n_pairs = len(calls)
     calls.clear()
-    _frequency_levels(df, "basket_id", "item", 2, 2, 300, f2_reused=True)
+    association_rules(df, "basket_id", "item", 2)
     n_pairs_reused = len(calls)
     calls.clear()
     _frequency_levels(df, "basket_id", "item", 2, 3, 300)
@@ -658,3 +659,35 @@ def test_spearman_distributed_branch_cuts_ranks_once(spark):
     plan = dist._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 0
     assert dist.collect() == spearman_rho(li, "l_quantity", "l_discount").collect()
+
+
+def test_ensure_min_partitions_decides_without_jobs(spark):
+    """A broadcast join keeps its streamed side's partitioning, so a
+    few-split scan under one is still under-partitioned: it is spread,
+    and the decision reads the scan's split count off the plan instead
+    of probing df.rdd (which would run the broadcast as a discarded
+    job). A frame behind a shuffle is left as it is, also with no job."""
+    from pyspark.sql import functions as F
+
+    from dask_ml_spark.utils import ensure_min_partitions
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs_run_by(fn):
+        before = set(tracker.getJobIdsForGroup(None) or [])
+        out = fn()
+        return out, len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+    dp = spark.sparkContext.defaultParallelism
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    assert li.rdd.getNumPartitions() < dp
+    nation = spark.read.parquet(f"{SF_DIR}/nation.parquet")
+    joined = li.join(F.broadcast(nation), li.l_suppkey == nation.n_nationkey)
+    out, jobs = jobs_run_by(lambda: ensure_min_partitions(joined))
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() == dp
+
+    grouped = li.groupBy("l_suppkey").count()
+    out, jobs = jobs_run_by(lambda: ensure_min_partitions(grouped))
+    assert jobs == 0
+    assert out is grouped

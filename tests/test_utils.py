@@ -45,8 +45,50 @@ def test_assert_estimator_equal():
 def test_ensure_min_partitions_noop_when_enough(spark):
     df = spark.range(1000).repartition(64)
     assert ensure_min_partitions(df).rdd.getNumPartitions() == 64
+    wide = spark.range(0, 1000, 1, 64)  # 64 splits, no exchange
+    assert ensure_min_partitions(wide) is wide
     small = spark.range(10).coalesce(1)
     assert ensure_min_partitions(small).rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+
+
+def test_cut_is_idempotent(spark, monkeypatch):
+    # patch the concrete class: in Spark 4 pyspark.sql.DataFrame is the
+    # abstract facade and instance lookups resolve on the classic class
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from dask_ml_spark.utils import cut
+
+    calls = []
+    orig = DataFrame.localCheckpoint
+
+    def counting(self, eager=True):
+        calls.append(1)
+        return orig(self, eager=eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", counting)
+    x = spark.range(10).selectExpr("id * 2 AS v")
+    once = cut(x)
+    assert cut(once) is once
+    assert len(calls) == 1
+
+
+def test_plan_inspection_has_one_owner():
+    """Only utils.py reads Spark plans: the plan walker, the
+    materialized-frame check and the bounded probe live there, so no
+    other module re-derives them from plan text or class names."""
+    import pathlib
+
+    import dask_ml_spark
+
+    plan_calls = ("queryExecution()", "executedPlan()", "getSimpleName()")
+    retired = ("_is_checkpoint_scan", "_behind_exchange", "_bounded_head")
+    root = pathlib.Path(dask_ml_spark.__file__).parent
+    offenders = [f"{path.relative_to(root)}: {word}"
+                 for path in sorted(root.rglob("*.py"))
+                 for word in (retired if path == root / "utils.py"
+                              else plan_calls + retired)
+                 if word in path.read_text()]
+    assert offenders == []
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
