@@ -263,7 +263,7 @@ def mcnemar_test(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     p = 1 — the correct degenerate answer, not an error. Returns one
     row: (n, b_discordant, c_discordant, chi2, p_value).
     """
-    from dask_ml_spark.functions.stats import _normal_sf_py
+    from dask_ml_spark.functions.stats import normal_p2
 
     a = F.col(col_a).cast("boolean")
     b = F.col(col_b).cast("boolean")
@@ -281,7 +281,7 @@ def mcnemar_test(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         num = abs(bb - cc) - 1
         num = max(num, 0)
         chi2 = float(num * num) / float(bb + cc)
-        p = min(1.0, 2.0 * _normal_sf_py(math.sqrt(chi2)))
+        p = normal_p2(math.sqrt(chi2))
     return df.sparkSession.createDataFrame(
         [(int(row["n"]), bb, cc, float(chi2), float(p))],
         "n long, b_discordant long, c_discordant long, chi2 double, "

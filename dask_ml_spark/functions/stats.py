@@ -30,9 +30,11 @@ serialization of the full corpus.
 
 p-values use explicit literal-coefficient approximations (the
 asymptotic Kolmogorov series; Abramowitz & Stegun 26.2.17 for the
-normal CDF, |error| < 7.5e-8) written with identical operation order
-in the Spark expressions, the driver-side Python twins, and the SQL
-oracles, so all engines compute bit-comparable values. Exact
+normal CDF, |error| < 7.5e-8), each written ONCE as plain Python
+arithmetic: a float argument gives the driver-side value, and
+spark_sql/duckdb_sql render the same formula as SQL, so all engines
+share one operation order by construction (both get DOUBLE literals:
+DuckDB types a bare decimal literal as DECIMAL). Exact
 small-sample tails (even-dof χ²; the F and Student-t tails via the
 incomplete-beta continued fraction) are driver-side scalars behind
 the large-dof defaults.
@@ -66,9 +68,100 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dask_ml_spark.utils import bounded_head, ensure_min_partitions
+from dask_ml_spark.utils import (bounded_head, ensure_min_partitions,
+                                 sql_scalar_lit)
 
 SQRT_TWO_PI = 2.5066282746310002  # sqrt(2*pi), literal-folded
+
+
+class _Sql:
+    """SQL text a formula builds when called on it: every binary op is
+    parenthesized, so Python's evaluation order is the rendered order.
+    ``lit`` writes a float in the target dialect."""
+
+    __slots__ = ("text", "lit")
+
+    def __init__(self, text: str, lit):
+        self.text, self.lit = text, lit
+
+    def __bool__(self):
+        raise TypeError("branch on a SQL expression with _where")
+
+    def sql(self, v) -> str:
+        return v.text if isinstance(v, _Sql) else self.lit(v)
+
+    def _bin(self, op, a, b):
+        return _Sql(f"({self.sql(a)} {op} {self.sql(b)})", self.lit)
+
+    def __add__(self, o): return self._bin("+", self, o)
+    def __radd__(self, o): return self._bin("+", o, self)
+    def __sub__(self, o): return self._bin("-", self, o)
+    def __rsub__(self, o): return self._bin("-", o, self)
+    def __mul__(self, o): return self._bin("*", self, o)
+    def __rmul__(self, o): return self._bin("*", o, self)
+    def __truediv__(self, o): return self._bin("/", self, o)
+    def __rtruediv__(self, o): return self._bin("/", o, self)
+    def __lt__(self, o): return self._bin("<", self, o)
+    def __le__(self, o): return self._bin("<=", self, o)
+    def __gt__(self, o): return self._bin(">", self, o)
+    def __ge__(self, o): return self._bin(">=", self, o)
+
+    def __neg__(self):
+        return _Sql(f"(- {self.text})", self.lit)
+
+    def __abs__(self):
+        return _Sql(f"abs({self.text})", self.lit)
+
+
+def _duckdb_lit(v) -> str:
+    r = repr(float(v))
+    return r if "e" in r else r + "e0"
+
+
+def _render(formula, arg: str, lit, params) -> str:
+    if not arg.replace("_", "").isalnum():
+        arg = f"({arg})"
+    return formula(_Sql(arg, lit), *params).text
+
+
+def spark_sql(formula, arg: str, *params) -> str:
+    """``formula`` over the Spark SQL expression ``arg`` as Spark SQL
+    text, parsed by ONE ``F.expr`` (a Column built term by term costs a
+    py4j round trip per node). The text repeats ``arg`` at every use
+    (25× in ks_p), so bind a compound argument to a column first."""
+    return _render(formula, arg, lambda v: sql_scalar_lit(float(v)),
+                   params)
+
+
+def duckdb_sql(formula, arg: str, *params) -> str:
+    """``formula`` over the DuckDB expression ``arg``, as oracle SQL."""
+    return _render(formula, arg, _duckdb_lit, params)
+
+
+def _call(name, py):
+    def f(*args):
+        node = next((a for a in args if isinstance(a, _Sql)), None)
+        if node is None:
+            return py(*args)
+        return _Sql(f"{name}({', '.join(map(node.sql, args))})",
+                    node.lit)
+    return f
+
+
+_exp = _call("exp", math.exp)
+_sqrt = _call("sqrt", math.sqrt)
+_least = _call("least", min)
+_greatest = _call("greatest", max)
+
+
+def _where(cond, then, other):
+    """then() if cond else other(); the branches are thunks so Python
+    never evaluates the untaken one (e.g. sqrt of a negative)."""
+    if isinstance(cond, _Sql):
+        return _Sql(f"CASE WHEN {cond.text} THEN {cond.sql(then())} "
+                    f"ELSE {cond.sql(other())} END", cond.lit)
+    return then() if cond else other()
+
 
 # Abramowitz & Stegun 26.2.17 rational tail coefficients
 _AS_B = (0.319381530, -0.356563782, 1.781477937,
@@ -76,117 +169,10 @@ _AS_B = (0.319381530, -0.356563782, 1.781477937,
 _AS_K = 0.2316419
 
 
-def normal_sf_expr(z: Column) -> Column:
-    """P(Z > z) for z >= 0 — A&S 26.2.17 (|error| < 7.5e-8): the same
-    five-term polynomial in k = 1/(1 + 0.2316419 z), times the normal
-    density. Literal arithmetic only, so any SQL engine replays it."""
-    k = 1.0 / (1.0 + F.lit(_AS_K) * z)
-    poly = F.lit(0.0)
-    for i, b in enumerate(_AS_B):
-        p = k
-        for _ in range(i):
-            p = p * k
-        poly = poly + F.lit(b) * p
-    phi = F.exp(-(z * z) / 2.0) / F.lit(SQRT_TWO_PI)
-    return phi * poly
-
-
-def _normal_sf_sql(z: str) -> str:
-    """The identical A&S 26.2.17 text for a DuckDB oracle (z >= 0)."""
-    k = f"(1.0 / (1.0 + {_AS_K!r} * {z}))"
-    terms = []
-    for i, b in enumerate(_AS_B):
-        pw = " * ".join([k] * (i + 1))
-        terms.append(f"{b!r} * {pw}")
-    poly = "(0.0 + " + " + ".join(terms) + ")"
-    return f"(exp(-({z} * {z}) / 2.0) / {SQRT_TWO_PI!r} * {poly})"
-
-
-_KS_TERMS = 25  # e^(-2 k^2 λ^2) underflows far earlier for any λ of note
-
-
-def ks_p_expr(lam: Column) -> Column:
-    """Asymptotic Kolmogorov tail Q(λ) = 2 Σ_{k≥1} (−1)^{k−1} e^{−2k²λ²},
-    truncated at 25 terms (the k=25 term is e^{−1250·λ²} — below double
-    epsilon for any λ > 0.17) and clamped to [0, 1] (the series is only
-    asymptotically a probability)."""
-    s = F.lit(0.0)
-    for kk in range(1, _KS_TERMS + 1):
-        term = F.exp(F.lit(-2.0 * kk * kk) * lam * lam)
-        s = s + (term if kk % 2 == 1 else -term)
-    return F.least(F.lit(1.0), F.greatest(F.lit(0.0), 2.0 * s))
-
-
-def _ks_p_sql(lam: str) -> str:
-    terms = []
-    for kk in range(1, _KS_TERMS + 1):
-        sign = "+" if kk % 2 == 1 else "-"
-        terms.append(f"{sign} exp({-2.0 * kk * kk!r} * {lam} * {lam})")
-    return (f"least(1.0, greatest(0.0, 2.0 * (0.0 {' '.join(terms)})))")
-
-
-# Marsaglia & Marsaglia (2004), "Evaluating the Anderson-Darling
-# distribution": adinf(z) approximates the limiting CDF of A² for a
-# FULLY SPECIFIED null (case 0 — exactly the fixed-reference monitor
-# setting) to ~6-7 digits with two elementary literal-coefficient
-# branches. Elementary means every engine (Column expr, SQL oracle,
-# driver Python) replays it bit-comparably — the same property the
-# A&S normal form and the Kolmogorov series were chosen for.
-_AD_LO = (2.00012, 0.247105, -0.0649821, 0.0347962, -0.011672,
-          0.00168691)
-_AD_HI = (1.0776, -2.30695, 0.43424, -0.082433, 0.008056, -0.0003146)
-
-
-def _ad_poly(z, coefs, lit, mul):
-    # Horner from the highest coefficient, shared literal order
-    acc = lit(coefs[-1])
-    for c in reversed(coefs[:-1]):
-        acc = lit(c) + mul(acc, z)
-    return acc
-
-
-def ad_p_expr(a2: Column) -> Column:
-    """Upper tail P(A² > a2) = 1 − adinf(a2), Marsaglia 2004 form:
-    z < 2:  adinf = z^{−1/2}·e^{−1.2337141/z}·P_lo(z)
-    z ≥ 2:  adinf = exp(−exp(P_hi(z)))
-    clamped to [0, 1]; a2 ≤ 0 → p = 1."""
-    lo = (F.exp(F.lit(-1.2337141) / a2) / F.sqrt(a2)
-          * _ad_poly(a2, _AD_LO, F.lit, lambda a, z: a * z))
-    hi = F.exp(-F.exp(_ad_poly(a2, _AD_HI, F.lit, lambda a, z: a * z)))
-    cdf = F.when(a2 <= 0.0, F.lit(0.0)).when(a2 < 2.0, lo).otherwise(hi)
-    return F.least(F.lit(1.0), F.greatest(F.lit(0.0), 1.0 - cdf))
-
-
-def _ad_p_sql(a2: str) -> str:
-    def poly(coefs):
-        acc = repr(coefs[-1])
-        for c in reversed(coefs[:-1]):
-            acc = f"({c!r} + ({acc}) * {a2})"
-        return acc
-
-    lo = (f"(exp(-1.2337141 / {a2}) / sqrt({a2}) * {poly(_AD_LO)})")
-    hi = f"exp(-exp({poly(_AD_HI)}))"
-    return (f"least(1.0, greatest(0.0, 1.0 - "
-            f"CASE WHEN {a2} <= 0.0 THEN 0.0 "
-            f"WHEN {a2} < 2.0 THEN {lo} ELSE {hi} END))")
-
-
-def _ad_p_py(a2: float) -> float:
-    if a2 <= 0.0:
-        return 1.0
-    if a2 < 2.0:
-        cdf = (math.exp(-1.2337141 / a2) / math.sqrt(a2)
-               * _ad_poly(a2, _AD_LO, float, lambda a, z: a * z))
-    else:
-        cdf = math.exp(-math.exp(
-            _ad_poly(a2, _AD_HI, float, lambda a, z: a * z)))
-    return min(1.0, max(0.0, 1.0 - cdf))
-
-
-def _normal_sf_py(z: float) -> float:
-    """Driver-side twin of normal_sf_expr / _normal_sf_sql — the SAME
-    operation order (repeated multiply, 0.0+ accumulation), so driver
-    fast paths stay bit-comparable with the column and SQL forms."""
+def normal_sf(z):
+    """P(Z > z) for z >= 0 — A&S 26.2.17 (|error| < 7.5e-8): a
+    five-term polynomial in k = 1/(1 + 0.2316419 z) (repeated
+    multiply, 0.0+ accumulation), times the normal density."""
     k = 1.0 / (1.0 + _AS_K * z)
     poly = 0.0
     for i, b in enumerate(_AS_B):
@@ -194,8 +180,82 @@ def _normal_sf_py(z: float) -> float:
         for _ in range(i):
             p = p * k
         poly = poly + b * p
-    phi = math.exp(-(z * z) / 2.0) / SQRT_TWO_PI
+    phi = _exp(-(z * z) / 2.0) / SQRT_TWO_PI
     return phi * poly
+
+
+def normal_p2(z):
+    """Two-sided normal p: min(1, 2·normal_sf(|z|))."""
+    return _least(1.0, 2.0 * normal_sf(abs(z)))
+
+
+_KS_TERMS = 25  # e^(-2 k^2 λ^2) underflows far earlier for any λ of note
+
+
+def ks_p(lam):
+    """Asymptotic Kolmogorov tail Q(λ) = 2 Σ_{k≥1} (−1)^{k−1} e^{−2k²λ²},
+    truncated at 25 terms (the k=25 term is e^{−1250·λ²} — below double
+    epsilon for any λ > 0.17) and clamped to [0, 1] (the series is only
+    asymptotically a probability)."""
+    s = 0.0
+    for k in range(1, _KS_TERMS + 1):
+        term = _exp(-2.0 * k * k * lam * lam)
+        s = s + term if k % 2 == 1 else s - term
+    return _least(1.0, _greatest(0.0, 2.0 * s))
+
+
+# Marsaglia & Marsaglia (2004), "Evaluating the Anderson-Darling
+# distribution": adinf(z) approximates the limiting CDF of A² for a
+# FULLY SPECIFIED null (case 0 — exactly the fixed-reference monitor
+# setting) to ~6-7 digits with two elementary literal-coefficient
+# branches, so every engine replays it like the A&S normal form.
+_AD_LO = (2.00012, 0.247105, -0.0649821, 0.0347962, -0.011672,
+          0.00168691)
+_AD_HI = (1.0776, -2.30695, 0.43424, -0.082433, 0.008056, -0.0003146)
+
+
+def _horner(z, coefs):
+    acc = coefs[-1]
+    for c in reversed(coefs[:-1]):
+        acc = c + acc * z
+    return acc
+
+
+def ad_p(a2):
+    """Upper tail P(A² > a2) = 1 − adinf(a2), Marsaglia 2004 form:
+    z < 2:  adinf = z^{−1/2}·e^{−1.2337141/z}·P_lo(z)
+    z ≥ 2:  adinf = exp(−exp(P_hi(z)))
+    clamped to [0, 1]; a2 ≤ 0 → p = 1."""
+    def lo():
+        return (_exp(-1.2337141 / a2) / _sqrt(a2)
+                * _horner(a2, _AD_LO))
+
+    def hi():
+        return _exp(-_exp(_horner(a2, _AD_HI)))
+
+    cdf = _where(a2 <= 0.0, lambda: 0.0,
+                 lambda: _where(a2 < 2.0, lo, hi))
+    return _least(1.0, _greatest(0.0, 1.0 - cdf))
+
+
+# Poisson(1) inverse-CDF thresholds: F(k) = e^{-1} Σ_{j<=k} 1/j!; the
+# k=9 cap truncates 1.1e-8 of the mass.
+_POIS1_CDF = tuple(
+    math.exp(-1.0) * sum(1.0 / math.factorial(j) for j in range(k + 1))
+    for k in range(9))
+
+
+def pois1_weight(u):
+    """Poisson(1) draw from a uniform u in [0,1) via the inverse CDF,
+    branch-free: w = Σ_k [u ≥ F(k)] (the count of CDF thresholds below
+    u). The indicator renders as CAST((u >= c) AS DOUBLE), not CASE:
+    9 compare-adds keep B replicates inside whole-stage codegen where
+    B nested CASEs blew the generated-method budget."""
+    w = 0.0
+    for c in _POIS1_CDF:
+        w = w + (_Sql(f"CAST({(u >= c).text} AS DOUBLE)", u.lit)
+                 if isinstance(u, _Sql) else float(u >= c))
+    return w
 
 
 def _two_group_kept(df: DataFrame, value_col: str, group_col: str,
@@ -316,20 +376,7 @@ def ks_2sample(df: DataFrame, value_col: str, group_col: str,
                      F.sum(two).alias("__c2"))
                 .collect())
         rows.sort(key=lambda r: r["__b"])
-        f1 = f2 = 0.0
-        d = 0.0
-        for r in rows:
-            f1 += r["__c1"]
-            f2 += r["__c2"]
-            d = max(d, abs(f1 / n1 - f2 / n2))
-        lam_v = d * math.sqrt(n1 * n2 / (n1 + n2))
-        q = 2.0 * sum((-1) ** (k - 1) * math.exp(-2.0 * k * k
-                                                 * lam_v * lam_v)
-                      for k in range(1, _KS_TERMS + 1))
-        return df.sparkSession.createDataFrame([{
-            "n1": int(n1), "n2": int(n2), "d_stat": float(d),
-            "p_value": float(min(1.0, max(0.0, q))),
-        }]).select("n1", "n2", "d_stat", "p_value")
+        return _ks_driver_row(df.sparkSession, rows, n1, n2)
     # exact path: one distinct-value groupBy — the irreducible pass —
     # then the ECDF cumsums. A distinct-value frame that fits
     # max_driver_rows (bounded limit-collect, the kaplan_meier
@@ -346,20 +393,7 @@ def ks_2sample(df: DataFrame, value_col: str, group_col: str,
             raise ValueError(
                 "ks_2sample: a group matched no rows — check the "
                 "group values (NULL groups are excluded)")
-        f1 = f2 = 0.0
-        d = 0.0
-        for r in head:
-            f1 += r["__c1"]
-            f2 += r["__c2"]
-            d = max(d, abs(f1 / n1 - f2 / n2))
-        lam_v = d * math.sqrt(n1 * n2 / (n1 + n2))
-        q = 2.0 * sum((-1) ** (k - 1) * math.exp(-2.0 * k * k
-                                                 * lam_v * lam_v)
-                      for k in range(1, _KS_TERMS + 1))
-        return df.sparkSession.createDataFrame([{
-            "n1": int(n1), "n2": int(n2), "d_stat": float(d),
-            "p_value": float(min(1.0, max(0.0, q))),
-        }]).select("n1", "n2", "d_stat", "p_value")
+        return _ks_driver_row(df.sparkSession, head, n1, n2)
     # the prefix machine's subtotal collect already accumulated the
     # grand totals — reading them as literals saves the second cumsum
     # pass (and its Python boundary) a totals aggregate + cross join
@@ -372,9 +406,6 @@ def ks_2sample(df: DataFrame, value_col: str, group_col: str,
     agg = (g.agg(F.max(diff).alias("d_stat"))
            .withColumn("n1_d", F.lit(n1_t))
            .withColumn("n2_d", F.lit(n2_t)))
-    # bind λ to a column FIRST: inlining it would replicate the
-    # d·sqrt(...) subtree into each of the 25 series terms (the
-    # HOF-lambda lesson — bind once)
     lam = (F.col("d_stat")
            * F.sqrt(F.col("n1_d") * F.col("n2_d")
                     / (F.col("n1_d") + F.col("n2_d"))))
@@ -387,7 +418,23 @@ def ks_2sample(df: DataFrame, value_col: str, group_col: str,
                 F.col("n1_d").cast("long").alias("n1"),
                 F.col("n2_d").cast("long").alias("n2"),
                 grd(F.col("d_stat")).alias("d_stat"),
-                grd(ks_p_expr(F.col("__lam"))).alias("p_value")))
+                grd(F.expr(spark_sql(ks_p, "__lam"))).alias("p_value")))
+
+
+def _ks_driver_row(spark, rows, n1: float, n2: float) -> DataFrame:
+    """ks_2sample's driver fast path: D over (__c1, __c2) count rows
+    in ascending value order, p = ks_p(λ), as the 1-row result."""
+    f1 = f2 = 0.0
+    d = 0.0
+    for r in rows:
+        f1 += r["__c1"]
+        f2 += r["__c2"]
+        d = max(d, abs(f1 / n1 - f2 / n2))
+    lam = d * math.sqrt(n1 * n2 / (n1 + n2))
+    return spark.createDataFrame([{
+        "n1": int(n1), "n2": int(n2), "d_stat": float(d),
+        "p_value": float(ks_p(lam)),
+    }]).select("n1", "n2", "d_stat", "p_value")
 
 
 def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
@@ -460,7 +507,7 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
         else:
             shift = max(0.0, abs(u - mu) - 0.5)
             z_v = math.copysign(shift, u - mu) / math.sqrt(var)
-            p_v = min(1.0, 2.0 * _normal_sf_py(abs(z_v)))
+            p_v = normal_p2(z_v)
         return df.sparkSession.createDataFrame([{
             "n1": int(n1), "n2": int(n2), "u_stat": float(u),
             "z": float(z_v), "p_value": float(p_v),
@@ -485,8 +532,9 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
     shift = F.greatest(F.lit(0.0), F.abs(u - mu) - 0.5)
     z = F.when(var <= 0.0, F.lit(0.0)).otherwise(
         F.signum(u - mu) * shift / F.sqrt(var))
+    agg, z = agg.withColumn("__z", z), F.col("__z")
     p = F.when(var <= 0.0, F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0), 2.0 * normal_sf_expr(F.abs(z))))
+        F.expr(spark_sql(normal_p2, "__z")))
     def grd(c):
         return _nonempty_guard(n1, n2, c, "mann_whitney_u")
 
@@ -564,7 +612,7 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
         else:
             shift = max(0.0, abs(w - mu) - 0.5)
             z_v = math.copysign(shift, w - mu) / math.sqrt(var)
-            p_v = min(1.0, 2.0 * _normal_sf_py(abs(z_v)))
+            p_v = normal_p2(z_v)
         return df.sparkSession.createDataFrame([{
             "n": int(n), "w_plus": float(w), "z": float(z_v),
             "p_value": float(p_v),
@@ -585,8 +633,9 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
     shift = F.greatest(F.lit(0.0), F.abs(w - mu) - 0.5)
     z = F.when(var <= 0.0, F.lit(0.0)).otherwise(
         F.signum(w - mu) * shift / F.sqrt(var))
+    agg, z = agg.withColumn("__z", z), F.col("__z")
     p = F.when(var <= 0.0, F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0), 2.0 * normal_sf_expr(F.abs(z))))
+        F.expr(spark_sql(normal_p2, "__z")))
     guard = F.when(
         n.isNull() | (n < 1),
         F.raise_error(F.lit("wilcoxon_signed_rank: no nonzero "
@@ -691,9 +740,7 @@ def welch_ttest(df: DataFrame, value_col: str, group_col: str,
                grd(m1 - m2).alias("mean_diff"),
                grd(F.col("__t")).alias("t_stat"),
                grd(F.col("__dof")).alias("dof"),
-               grd(F.least(F.lit(1.0),
-                           2.0 * normal_sf_expr(F.abs(F.col("__t")))))
-               .alias("p_value")))
+               grd(F.expr(spark_sql(normal_p2, "__t"))).alias("p_value")))
     return out
 
 
@@ -738,14 +785,13 @@ def welch_ttest_by(df: DataFrame, value_col: str, group_col: str,
     def opt(c):
         return F.when(valid, c)
 
-    return agg.select(
+    return agg.withColumn("__t", t).select(
         *by,
         n1.cast("long").alias("n1"), n2.cast("long").alias("n2"),
         opt(m1 - m2).alias("mean_diff"),
-        opt(t).alias("t_stat"),
+        opt(F.col("__t")).alias("t_stat"),
         opt(dof).alias("dof"),
-        opt(F.least(F.lit(1.0), 2.0 * normal_sf_expr(F.abs(t))))
-        .alias("p_value"),
+        opt(F.expr(spark_sql(normal_p2, "__t"))).alias("p_value"),
         valid.alias("valid"))
 
 
@@ -889,7 +935,7 @@ def pairwise_welch(df: DataFrame, value_col: str, group_col: str,
                                          + (vb / nb) * (vb / nb)
                                          / (nb - 1.0))
                     p = (t_sf(abs(t), dof) if tail == "exact"
-                         else _normal_sf_py(abs(t)))
+                         else normal_sf(abs(t)))
                     rec.update(
                         mean_diff=float(ma - mb), t_stat=float(t),
                         dof=float(dof),
@@ -919,43 +965,25 @@ def pairwise_welch(df: DataFrame, value_col: str, group_col: str,
             "group_a", "group_b")
 
 
-# Poisson(1) inverse-CDF thresholds: F(k) = e^{-1} Σ_{j<=k} 1/j!.
-# Written out as literals so the SQL oracles replay the identical
-# ladder; the k=9 cap truncates 1.1e-8 of the mass.
-_POIS1_CDF = tuple(
-    math.exp(-1.0) * sum(1.0 / math.factorial(j) for j in range(k + 1))
-    for k in range(9))
-
-
-def _pois1_weight_expr(u: Column) -> Column:
-    """Poisson(1) draw from a uniform u in [0,1) via the inverse CDF,
-    branch-free: w = Σ_k [u ≥ F(k)] (the count of CDF thresholds below
-    u — identical to the CASE ladder, but 9 compare-adds keep B
-    replicates inside whole-stage codegen where B nested CASEs blew
-    the generated-method budget). Any SQL engine replays it."""
-    w = F.lit(0.0)
-    for k in range(9):
-        w = w + (u >= F.lit(_POIS1_CDF[k])).cast("double")
-    return w
-
-
-def _pois1_weight_sql(u: str) -> str:
-    return ("(" + " + ".join(
-        f"CASE WHEN {u} >= {_POIS1_CDF[k]!r} THEN 1.0 ELSE 0.0 END"
-        for k in range(9)) + ")")
-
-
-def _boot_consts_expr(n_boot: int):
-    """The replicate constants array (b, a = M^{b+1} mod P) as ONE
-    parsed SQL expression — the per-element F.lit/F.struct form paid
-    ~3·B py4j round trips per call (~1 s at B=50; the ANN
-    literal-table precedent). Values are < 2^31 so the unsuffixed SQL
-    literals type as INT exactly like F.lit did; M odd -> invertible."""
+def _replicates(sel: DataFrame, n_boot: int):
+    """``sel`` (keyed by the chain state ``__k0``) fanned out over the
+    replicate constants (b, a = M^{b+1} mod P), with each row's uniform
+    ``__u`` bound for the Poisson(1) weight w, which reads it 9 times.
+    Returns (frame, w). The constants array is ONE parsed SQL
+    expression — the per-element F.lit/F.struct form paid ~3·B py4j
+    round trips per call (~1 s at B=50; the ANN literal-table
+    precedent). Values are < 2^31 so the unsuffixed SQL literals type
+    as INT exactly like F.lit did; M odd -> invertible."""
     P = 1 << 31
     M = 2654435761
-    return F.expr("array(" + ", ".join(
+    arr = F.expr("array(" + ", ".join(
         f"named_struct('b', {b}, 'a', {pow(M, b + 1, P)})"
         for b in range(n_boot)) + ")")
+    u = (F.pmod((F.col("__k0") + 1 + F.col("c.b")) * F.col("c.a"),
+                F.lit(P))
+         .cast("double") / F.lit(float(P)))
+    return (sel.select("*", F.explode(arr).alias("c")).withColumn("__u", u),
+            F.expr(spark_sql(pois1_weight, "__u")))
 
 
 def bootstrap_ci(df: DataFrame, value_col: str, key_cols,
@@ -1013,7 +1041,6 @@ def bootstrap_ci(df: DataFrame, value_col: str, key_cols,
         raise ValueError("n_boot must be >= 2")
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     P = 1 << 31
-    M = 2654435761
     v = F.col(value_col).cast("double")
     kept = df.where(v.isNotNull() & ~F.isnan(v))
     # base chain over the row key ONCE (k in [0, P) — _hash_bucket_expr
@@ -1043,25 +1070,18 @@ def bootstrap_ci(df: DataFrame, value_col: str, key_cols,
     # whole-stage-codegen generator, measured faster than the broadcast
     # crossJoin it replaces (BroadcastNestedLoopJoin materializes B·n
     # JoinedRows)
-    arr = _boot_consts_expr(n_boot)
-    u = (F.pmod((F.col("__k0") + 1 + F.col("c.b")) * F.col("c.a"),
-                F.lit(P))
-         .cast("double") / F.lit(float(P)))
-    w = _pois1_weight_expr(u)
+    fanned, w = _replicates(sel, n_boot)
     # the plain sum/count ride in the same job: every b group sees all
     # rows, so (s, n) is identical in each — read it off the first
     if grid is not None:
-        val_cols = ["__vq"]
         wx_agg = F.sum(F.col("__vq") * w.cast("long")).alias("wx")
         sw_agg = F.sum(w.cast("long")).alias("sw")
         s_agg = F.sum("__vq").alias("s")
     else:
-        val_cols = ["__v"]
         wx_agg = F.sum(w * F.col("__v")).alias("wx")
         sw_agg = F.sum(w).alias("sw")
         s_agg = F.sum("__v").alias("s")
-    reps = (sel.select(*val_cols, "__k0", F.explode(arr).alias("c"))
-            .groupBy("c.b")
+    reps = (fanned.groupBy("c.b")
             .agg(wx_agg, sw_agg, s_agg,
                  F.count(F.lit(1)).alias("n"),
                  F.sum(F.col("__k0").isNull().cast("long"))
@@ -1130,7 +1150,6 @@ def bootstrap_ci_by(df: DataFrame, value_col: str, key_cols, by,
     by = [by] if isinstance(by, str) else list(by)
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     P = 1 << 31
-    M = 2654435761
     v = F.col(value_col).cast("double")
     kept = df.where(v.isNotNull() & ~F.isnan(v))
     for c in by:
@@ -1156,14 +1175,9 @@ def bootstrap_ci_by(df: DataFrame, value_col: str, key_cols, by,
     # same 1-partition-scan guard as bootstrap_ci: the B-way fan-out is
     # the whole compute and must not ride a single scan task
     sel = ensure_min_partitions(sel)
-    arr = _boot_consts_expr(n_boot)
-    u = (F.pmod((F.col("__k0") + 1 + F.col("c.b")) * F.col("c.a"),
-                F.lit(P))
-         .cast("double") / F.lit(float(P)))
-    w = _pois1_weight_expr(u)
+    fanned, w = _replicates(sel, n_boot)
     gcols = [f"__g{i}" for i in range(len(by))]
-    reps = (sel.select("*", F.explode(arr).alias("c"))
-            .groupBy(*gcols, F.col("c.b").alias("__b"))
+    reps = (fanned.groupBy(*gcols, F.col("c.b").alias("__b"))
             .agg(wx_of(w).alias("__wx"), sw_of(w).alias("__sw"),
                  s_agg, F.count(F.lit(1)).alias("__n"),
                  F.sum(F.col("__k0").isNull().cast("long"))
@@ -1230,8 +1244,9 @@ def prop_ztest(df: DataFrame, success, group_col: str,
     pp = (F.col("s1") + F.col("s2")) / (n1 + n2)
     var = pp * (1.0 - pp) * (1.0 / n1 + 1.0 / n2)
     z = F.when(var <= 0.0, F.lit(0.0)).otherwise((p1 - p2) / F.sqrt(var))
+    agg, z = agg.withColumn("__z", z), F.col("__z")
     p = F.when(var <= 0.0, F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0), 2.0 * normal_sf_expr(F.abs(z))))
+        F.expr(spark_sql(normal_p2, "__z")))
     def grd(c):
         return _nonempty_guard(n1, n2, c, "prop_ztest")
 
@@ -1442,7 +1457,7 @@ def changepoint_mean(df: DataFrame, value_col: str, order_col: str,
     _, sb, t, bn1, bn2, m1, m2 = best
     # split_value = the RIGHT edge of the split bucket
     split_value = lo + (sb + 1) * (width / bins)
-    p = min(1.0, (bins - 1) * (2.0 * _normal_sf_py(abs(t))))
+    p = min(1.0, (bins - 1) * (2.0 * normal_sf(abs(t))))
     return df.sparkSession.createDataFrame(
         [(float(split_value), float(t), float(p), int(bn1), int(bn2),
           float(m1), float(m2))],
@@ -1542,7 +1557,7 @@ def trend_test(df: DataFrame, value_col: str, order_col: str,
             z = (s + 1) / math.sqrt(var)
         else:
             z = 0.0
-        p = min(1.0, 2.0 * _normal_sf_py(abs(z)))
+        p = normal_p2(z)
     slopes.sort()
     cnt = len(slopes)
     s_lo, s_hi = slopes[(cnt - 1) // 2], slopes[cnt // 2]
@@ -1760,16 +1775,15 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str,
     agg = kept.agg(F.corr("__ra", "__rb").alias("rho_d"),
                    F.count(F.lit(1)).cast("double").alias("n_d"))
     n, rho = F.col("n_d"), F.col("rho_d")
-    z = F.abs(rho) * F.sqrt(n - 1.0)
     def grd(c):
         return _nonempty_guard(n - 1.0, n - 1.0, c, "spearman_rho",
                                msg="needs >= 2 complete-case rows")
 
-    return agg.select(
+    return agg.withColumn("__z", F.abs(rho) * F.sqrt(n - 1.0)).select(
         n.cast("long").alias("n"),
         grd(rho).alias("rho"),
         grd(F.when(rho.isNull(), F.lit(1.0)).otherwise(
-            F.least(F.lit(1.0), 2.0 * normal_sf_expr(z))))
+            F.expr(spark_sql(normal_p2, "__z"))))
         .alias("p_value"))
 
 
@@ -1871,7 +1885,7 @@ def spearman_rho_binned(df: DataFrame, col_a: str, col_b: str,
         raise ValueError("spearman_rho_binned: a column is constant "
                          "(or collapses to one bucket) — rho undefined")
     rho = float(num) / math.sqrt(float(d1) * float(d2))
-    p = min(1.0, 2.0 * _normal_sf_py(abs(rho) * math.sqrt(n - 1.0)))
+    p = normal_p2(abs(rho) * math.sqrt(n - 1.0))
     return df.sparkSession.createDataFrame(
         [(int(n), float(rho), float(p))],
         "n long, rho double, p_value double")
@@ -1937,7 +1951,7 @@ def kendall_tau_binned(df: DataFrame, col_a: str, col_b: str,
     n, tau, z = _kendall_cell_stats(
         [(r["__ba"], r["__bb"], r["__w"]) for r in cells], bins,
         "kendall_tau_binned")
-    p = min(1.0, 2.0 * _normal_sf_py(abs(z)))
+    p = normal_p2(z)
     return df.sparkSession.createDataFrame(
         [(int(n), float(tau), float(p))],
         "n long, tau double, p_value double")
@@ -2083,7 +2097,7 @@ def jonckheere_terpstra(df: DataFrame, value_col: str, group_col: str,
     n, tau, z = _kendall_cell_stats(
         [(r["__ba"], r["__bb"], r["__w"]) for r in cells],
         max(bins, len(order)), "jonckheere_terpstra")
-    p = min(1.0, 2.0 * _normal_sf_py(abs(z)))
+    p = normal_p2(z)
     return df.sparkSession.createDataFrame(
         [(int(n), len(order), float(tau), float(z), float(p))],
         "n long, k long, tau double, z double, p_value double")
@@ -2182,7 +2196,7 @@ def hoeffding_d(df: DataFrame, col_a: str, col_b: str,
     if x + _HOEFFD_MU <= 0.0:
         p = 1.0
     else:
-        p = min(1.0, _HOEFFD_C0 * 2.0 * _normal_sf_py(
+        p = min(1.0, _HOEFFD_C0 * 2.0 * normal_sf(
             math.sqrt((x + _HOEFFD_MU) / _HOEFFD_LAM1)))
     return df.sparkSession.createDataFrame(
         [(int(n), float(d), float(p))],
@@ -2584,7 +2598,7 @@ def partial_correlation(df: DataFrame, col_a: str, col_b: str,
                          "partialling — exact collinearity")
     t = r_p * math.sqrt(dof / (1.0 - r_p * r_p))
     p = min(1.0, 2.0 * (t_sf(abs(t), float(dof)) if tail == "exact"
-                        else _normal_sf_py(abs(t))))
+                        else normal_sf(abs(t))))
     return df.sparkSession.createDataFrame(
         [(n, g, float(r_p), float(t), int(dof), float(p))],
         "n long, g_controls long, r double, t_stat double, dof long, "
@@ -2849,26 +2863,30 @@ def corr_matrix(df: DataFrame, cols) -> DataFrame:
             .orderBy("col_a", "col_b"))
 
 
-def chi2_sf(x: float, dof: int) -> float:
+def chi2_sf(x, dof: int):
     """Upper-tail chi-square probability, scipy-free.
 
     Even dof uses the EXACT closed form
-    Q(x; 2m) = e^{−x/2} Σ_{j<m} (x/2)^j / j! (ascending-j sum, the
-    same term order the SQL oracles replay); odd dof uses the
+    Q(x; 2m) = e^{−x/2} Σ_{j<m} (x/2)^j / j! (ascending-j sum, each
+    term the previous one times (x/2)/j); odd dof uses the
     Wilson–Hilferty cube-root normal approximation (|error| ~1e-3 in
-    p — fine for gating, documented)."""
-    if x <= 0.0:
-        return 1.0
-    if dof % 2 == 0:
-        h = x / 2.0
-        term, s = 1.0, 1.0
-        for j in range(1, dof // 2):
-            term = term * h / j
-            s = s + term
-        return min(1.0, max(0.0, math.exp(-h) * s))
-    z = (((x / dof) ** (1.0 / 3.0)) - (1.0 - 2.0 / (9.0 * dof))) \
-        / math.sqrt(2.0 / (9.0 * dof))
-    return min(1.0, max(0.0, 0.5 * math.erfc(z / math.sqrt(2.0))))
+    p — fine for gating, documented), driver-side only: the SQL
+    renderings refuse odd dof."""
+    if dof % 2:
+        if isinstance(x, _Sql):
+            raise ValueError("SQL replay is provided for even dof only")
+        if x <= 0.0:
+            return 1.0
+        z = (((x / dof) ** (1.0 / 3.0)) - (1.0 - 2.0 / (9.0 * dof))) \
+            / math.sqrt(2.0 / (9.0 * dof))
+        return min(1.0, max(0.0, 0.5 * math.erfc(z / math.sqrt(2.0))))
+    h = x / 2.0
+    term, s = 1.0, 1.0
+    for j in range(1, dof // 2):
+        term = term * h / j
+        s = s + term
+    return _where(x <= 0.0, lambda: 1.0,
+                  lambda: _least(1.0, _greatest(0.0, _exp(-h) * s)))
 
 
 def _beta_cf(a: float, b: float, x: float) -> float:
@@ -2962,21 +2980,6 @@ def t_sf(x: float, dof: float) -> float:
         raise ValueError("t_sf needs dof > 0")
     ib = betainc_reg(dof / 2.0, 0.5, dof / (dof + x * x))
     return ib / 2.0 if x >= 0.0 else 1.0 - ib / 2.0
-
-
-def _chi2_sf_sql(x: str, dof: int) -> str:
-    """The even-dof closed form as SQL text (dof must be a build-time
-    literal — catalog fixed-point convention)."""
-    if dof % 2 != 0:
-        raise ValueError("SQL replay is provided for even dof only")
-    terms = ["1.0"]
-    denom = 1.0
-    for j in range(1, dof // 2):
-        denom *= j
-        pw = " * ".join([f"({x} / 2.0)"] * j)
-        terms.append(f"{pw} / {denom!r}")
-    series = " + ".join(terms)
-    return f"least(1.0, greatest(0.0, exp(-({x}) / 2.0) * ({series})))"
 
 
 def chi2_independence(df: DataFrame, col_a: str, col_b: str,
@@ -3187,7 +3190,7 @@ def log_rank(df: DataFrame, duration_col: str, event_col: str,
                 "values (NULL groups are excluded)")
         if v > 0.0:
             z_v = (o1 - e1) / math.sqrt(v)
-            p_v = min(1.0, 2.0 * _normal_sf_py(abs(z_v)))
+            p_v = normal_p2(z_v)
         else:
             z_v, p_v = 0.0, 1.0
         return spark.createDataFrame([{
@@ -3430,6 +3433,7 @@ def mood_median(df: DataFrame, value_col: str, group_col: str,
         return _nonempty_guard(n1, n2, c, "mood_median")
 
     return (agg.withColumn("__chi2", chi2)
+            .withColumn("__z", F.sqrt("__chi2"))
             .select(
                 n1.cast("long").alias("n1"),
                 n2.cast("long").alias("n2"),
@@ -3437,8 +3441,7 @@ def mood_median(df: DataFrame, value_col: str, group_col: str,
                 a1.cast("long").alias("above1"),
                 a2.cast("long").alias("above2"),
                 grd(F.col("__chi2")).alias("chi2"),
-                grd(F.least(F.lit(1.0), 2.0 * normal_sf_expr(
-                    F.sqrt(F.col("__chi2"))))).alias("p_value")))
+                grd(F.expr(spark_sql(normal_p2, "__z"))).alias("p_value")))
 
 
 def exponential_survival_fit(df: DataFrame, duration_col: str,
@@ -3520,7 +3523,7 @@ def jarque_bera(df: DataFrame, value_col: str) -> DataFrame:
     skew = m3 / m2 ** 1.5
     kurt = m4 / (m2 * m2)
     jb = n / 6.0 * (skew * skew + (kurt - 3.0) ** 2 / 4.0)
-    p = min(1.0, math.exp(-jb / 2.0))
+    p = chi2_sf(jb, 2)
     return df.sparkSession.createDataFrame(
         [(int(n), float(m), float(m2), float(skew), float(kurt),
           float(jb), float(p))],
@@ -3620,9 +3623,9 @@ _PPF_D = (7.784695709041462e-03, 3.224671290700398e-01,
 
 def normal_ppf(p: float) -> float:
     """Φ^{-1}(p), Acklam's two-region rational approximation refined
-    by ONE Halley step against the in-tree _normal_sf_py tail, so the
+    by ONE Halley step against the in-tree normal_sf tail, so the
     quantile and the tail are mutually consistent (the round-trip
-    normal_ppf(1 − _normal_sf_py(t)) = t is pinned to ~1e-7).
+    normal_ppf(1 − normal_sf(t)) = t is pinned to ~1e-7).
     Absolute accuracy is therefore bounded by the A&S tail itself
     (~1e-6 in the quantile near the tails) — exactly what a
     sample-size planner needs, deliberately NOT more precise than the
@@ -3650,8 +3653,8 @@ def normal_ppf(p: float) -> float:
               / ((((_PPF_D[0] * q + _PPF_D[1]) * q + _PPF_D[2]) * q
                   + _PPF_D[3]) * q + 1.0))
     # one Halley refinement against the engine's own normal tail
-    e = (1.0 - _normal_sf_py(x)) - p if x >= 0.0 \
-        else _normal_sf_py(-x) - p
+    e = (1.0 - normal_sf(x)) - p if x >= 0.0 \
+        else normal_sf(-x) - p
     u = e * math.sqrt(2.0 * math.pi) * math.exp(x * x / 2.0)
     return x - u / (1.0 + x * u / 2.0)
 
@@ -3765,7 +3768,7 @@ def ansari_bradley(df: DataFrame, value_col: str, group_col: str,
         z_v, p_v = 0.0, 1.0
     else:
         z_v = (w - e) / math.sqrt(var)
-        p_v = min(1.0, 2.0 * _normal_sf_py(abs(z_v)))
+        p_v = normal_p2(z_v)
     return df.sparkSession.createDataFrame([{
         "n1": n1, "n2": n2, "w_stat": float(w), "z": float(z_v),
         "p_value": float(p_v),

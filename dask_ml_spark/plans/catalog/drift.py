@@ -83,9 +83,9 @@ def q_embedding_drift_labels(spark, sf_dir):
 
 
 def _sql_embedding_drift_labels() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(t)")
+    p2 = duckdb_sql(normal_p2, "t")
     return f"""
 WITH k AS (
     SELECT t.i AS dim, embedding[t.i + 1]::DOUBLE AS v,
@@ -115,7 +115,7 @@ WITH k AS (
     FROM m
 ), p AS (
     SELECT dim, n1, n2, diff, t, valid,
-           CASE WHEN valid THEN least(1.0, 2.0 * {sf}) END AS p
+           CASE WHEN valid THEN {p2} END AS p
     FROM t
 ), fam AS (
     SELECT *, row_number() OVER (ORDER BY p) AS rn,
@@ -168,10 +168,10 @@ def q_ks_drift_daily(spark, sf_dir):
 
 
 def _sql_ks_drift_daily() -> str:
-    from dask_ml_spark.functions.stats import _ks_p_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, ks_p
 
     K = DRIFT_BINS
-    p = _ks_p_sql("(d * sqrt(n::DOUBLE))")
+    p = duckdb_sql(ks_p, "(d * sqrt(n::DOUBLE))")
     les = ",\n           ".join(
         f"sum(CASE WHEN bkt <= {k} THEN 1.0 ELSE 0.0 END) AS le{k}"
         for k in range(K - 1))
@@ -238,7 +238,7 @@ def q_addrift_daily(spark, sf_dir):
 
 
 def _sql_addrift_daily() -> str:
-    from dask_ml_spark.functions.stats import _ad_p_sql
+    from dask_ml_spark.functions.stats import ad_p, duckdb_sql
 
     K = DRIFT_BINS
     les = ",\n           ".join(
@@ -268,7 +268,7 @@ def _sql_addrift_daily() -> str:
                      / ({rc(k)} * (1.0 - {rc(k)})))
              ELSE 0.0 END"""
         for k in range(K - 1))
-    p = _ad_p_sql("a2")
+    p = duckdb_sql(ad_p, "a2")
     return f"""
 WITH kept AS (
     SELECT ts, value::DOUBLE AS v FROM events
@@ -476,9 +476,9 @@ def q_zdrift_daily(spark, sf_dir):
 
 
 def _sql_zdrift_daily() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     return f"""
 WITH kept AS (
     SELECT ts, value::DOUBLE AS v FROM events
@@ -509,7 +509,7 @@ WITH kept AS (
 SELECT strftime(day, '%Y-%m-%d') AS day, n::BIGINT AS n,
        floor(mean * 1e6 + 0.5) / 1e6 AS mean,
        floor(z * 1e6 + 0.5) / 1e6 AS z_mean,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value,
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value,
        floor(var_ratio * 1e6 + 0.5) / 1e6 AS var_ratio
 FROM z
 """
@@ -652,9 +652,9 @@ def q_corrdrift_monthly(spark, sf_dir):
 
 
 def _sql_corrdrift_monthly() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     w = 30 * 86400
     return f"""
 WITH kept AS (
@@ -683,7 +683,7 @@ SELECT strftime(ws, '%Y-%m-%d') AS win, n,
        floor(r * 1e6 + 0.5) / 1e6 AS corr,
        floor(z * 1e6 + 0.5) / 1e6 AS z,
        floor(CASE WHEN z IS NULL THEN NULL
-                  ELSE least(1.0, 2.0 * {sf}) END * 1e6 + 0.5) / 1e6
+                  ELSE {p2} END * 1e6 + 0.5) / 1e6
            AS p_value
 FROM z
 """
@@ -731,9 +731,9 @@ def _covdrift_sql(cols, w: int, kept_sql: str, ref_where: str) -> str:
     CTE definition chain whose LAST CTE is kept(ts, x0..x{d-1}), with
     x_i mapping to ``cols[i]``; ``ref_where`` selects the reference
     slice out of kept. ``w`` is the tumbling-window width in seconds."""
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     d = len(cols)
     pairs = [(i, j) for i in range(d) for j in range(i + 1, d)]
     ref_cols = ", ".join(
@@ -779,7 +779,7 @@ WITH {kept_sql}, ref AS MATERIALIZED (
 {branches}
 ), p AS (
     SELECT *, CASE WHEN z IS NOT NULL
-                   THEN least(1.0, 2.0 * {sf}) END AS p
+                   THEN {p2} END AS p
     FROM pairs
 ), fam AS (
     SELECT ws, p, row_number() OVER (PARTITION BY ws ORDER BY p) AS rn,

@@ -736,9 +736,9 @@ def q_mcnemar_quality_screens(spark, sf_dir):
 
 
 def _sql_mcnemar_quality_screens() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("sqrt(chi2)")
+    p2 = duckdb_sql(normal_p2, "sqrt(chi2)")
     return f"""
 WITH s AS (
     SELECT length(text) >= 300 AS a,
@@ -761,7 +761,7 @@ WITH s AS (
 SELECT n, bd AS b_discordant, cd AS c_discordant,
        floor(chi2 * 1e6 + 0.5) / 1e6 AS chi2,
        floor((CASE WHEN bd + cd = 0 THEN 1.0
-                   ELSE least(1.0, 2.0 * {sf}) END) * 1e6 + 0.5) / 1e6
+                   ELSE {p2} END) * 1e6 + 0.5) / 1e6
            AS p_value
 FROM st
 """
@@ -790,9 +790,9 @@ def q_cochrans_q_screens(spark, sf_dir):
 
 
 def _sql_cochrans_q_screens() -> str:
-    from dask_ml_spark.functions.stats import _chi2_sf_sql
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
 
-    p = _chi2_sf_sql("q", 2)
+    p = duckdb_sql(chi2_sf, "q", 2)
     return f"""
 WITH s AS (
     SELECT CASE WHEN length(text) >= 300 THEN 1 ELSE 0 END AS x0,

@@ -27,9 +27,9 @@ def q_ks_price_test(spark, sf_dir):
 
 
 def _sql_ks_price_test() -> str:
-    from dask_ml_spark.functions.stats import _ks_p_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, ks_p
 
-    p = _ks_p_sql("lam")
+    p = duckdb_sql(ks_p, "lam")
     return f"""
 WITH k AS (
     SELECT l_extendedprice::DOUBLE AS v, l_returnflag AS g
@@ -84,9 +84,9 @@ def q_ks_price_test_binned(spark, sf_dir):
 
 
 def _sql_ks_price_test_binned() -> str:
-    from dask_ml_spark.functions.stats import _ks_p_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, ks_p
 
-    p = _ks_p_sql("lam")
+    p = duckdb_sql(ks_p, "lam")
     return f"""
 WITH k AS (
     SELECT l_extendedprice::DOUBLE AS v, l_returnflag AS g
@@ -148,9 +148,9 @@ def q_mann_whitney_discount(spark, sf_dir):
 
 
 def _sql_mann_whitney_discount() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     return f"""
 WITH k AS (
     SELECT l_discount::DOUBLE AS v, l_returnflag AS g
@@ -187,7 +187,7 @@ WITH k AS (
 SELECT n1::BIGINT AS n1, n2::BIGINT AS n2, u AS u_stat,
        floor(z * 1e6 + 0.5) / 1e6 AS z,
        floor((CASE WHEN var <= 0.0 THEN 1.0
-                   ELSE least(1.0, 2.0 * {sf}) END) * 1e6 + 0.5) / 1e6
+                   ELSE {p2} END) * 1e6 + 0.5) / 1e6
            AS p_value,
        floor((2.0 * u / (n1 * n2) - 1.0) * 1e6 + 0.5) / 1e6
            AS rank_biserial
@@ -218,7 +218,7 @@ def q_benford_price(spark, sf_dir):
 def _sql_benford_price() -> str:
     import math as _m
 
-    from dask_ml_spark.functions.stats import _chi2_sf_sql
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
 
     ps = [_m.log10(1.0 + 1.0 / dd) for dd in range(1, 10)]
     digit_counts = ", ".join(
@@ -232,7 +232,7 @@ def _sql_benford_price() -> str:
     mad = " + ".join(
         f"abs(o{dd}::DOUBLE / n::DOUBLE - {ps[dd - 1]!r})"
         for dd in range(1, 10))
-    p = _chi2_sf_sql("chi2", 8)
+    p = duckdb_sql(chi2_sf, "chi2", 8)
     return f"""
 WITH k AS (
     SELECT CAST(floor(abs(l_extendedprice::DOUBLE) * 100.0 + 0.5)
@@ -293,9 +293,9 @@ def q_wilcoxon_user_value(spark, sf_dir):
 
 
 def _sql_wilcoxon_user_value() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     return f"""
 WITH e AS (
     SELECT user_id, event_type, value::DOUBLE AS v
@@ -347,7 +347,7 @@ WITH e AS (
 SELECT n::BIGINT AS n, w AS w_plus,
        floor(z * 1e6 + 0.5) / 1e6 AS z,
        floor((CASE WHEN var <= 0.0 THEN 1.0
-                   ELSE least(1.0, 2.0 * {sf}) END) * 1e6 + 0.5) / 1e6
+                   ELSE {p2} END) * 1e6 + 0.5) / 1e6
            AS p_value
 FROM z
 """
@@ -386,9 +386,9 @@ def q_friedman_user_event_value(spark, sf_dir):
 
 
 def _sql_friedman_user_event_value() -> str:
-    from dask_ml_spark.functions.stats import _chi2_sf_sql
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
 
-    p = _chi2_sf_sql("qc", 4)
+    p = duckdb_sql(chi2_sf, "qc", 4)
     return f"""
 WITH e AS (
     SELECT user_id, event_type, value::DOUBLE AS v
@@ -525,9 +525,9 @@ def q_chi2_independence_flags(spark, sf_dir):
 
 
 def _sql_chi2_independence_flags() -> str:
-    from dask_ml_spark.functions.stats import _chi2_sf_sql
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
 
-    p = _chi2_sf_sql("chi2", 2)
+    p = duckdb_sql(chi2_sf, "chi2", 2)
     return f"""
 WITH c AS (
     SELECT l_returnflag AS a, l_linestatus AS b, count(*)::DOUBLE AS o
@@ -579,9 +579,9 @@ def q_welch_ttest_price(spark, sf_dir):
 
 
 def _sql_welch_ttest_price() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(t)")
+    p2 = duckdb_sql(normal_p2, "t")
     return f"""
 WITH k AS (
     SELECT l_extendedprice::DOUBLE AS v,
@@ -610,7 +610,7 @@ SELECT n1::BIGINT AS n1, n2::BIGINT AS n2,
        floor(mean_diff * 1e6 + 0.5) / 1e6 AS mean_diff,
        floor(t * 1e6 + 0.5) / 1e6 AS t_stat,
        floor(dof / 1000.0 * 1e6 + 0.5) / 1e6 AS dof_k,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value
 FROM t
 """
 
@@ -641,9 +641,9 @@ def q_welch_bh_by_month(spark, sf_dir):
 
 
 def _sql_welch_bh_by_month() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(t)")
+    p2 = duckdb_sql(normal_p2, "t")
     return f"""
 WITH k AS (
     SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
@@ -673,7 +673,7 @@ WITH k AS (
     FROM m
 ), p AS (
     SELECT ship_month, n1, n2, t, valid,
-           CASE WHEN valid THEN least(1.0, 2.0 * {sf}) END AS p
+           CASE WHEN valid THEN {p2} END AS p
     FROM t
 ), fam AS (
     SELECT *, row_number() OVER (ORDER BY p) AS rn,
@@ -730,11 +730,11 @@ def q_bootstrap_price_ci(spark, sf_dir):
 
 
 def _sql_bootstrap_price_ci() -> str:
-    from dask_ml_spark.functions.stats import _pois1_weight_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, pois1_weight
 
     consts = ", ".join(f"({b}, {pow(BOOT_M, b + 1, BOOT_P)})"
                        for b in range(BOOT_B))
-    ladder = _pois1_weight_sql("u")
+    ladder = duckdb_sql(pois1_weight, "u")
     # nearest-rank (1-indexed): k_lo = ceil(0.05*50) = 3,
     # k_hi = ceil(0.95*50) = 48 — catalog fixed-point literals
     # grid=4 fixed point: vq = int64 1e-4 units; w is a small integer,
@@ -795,11 +795,11 @@ def q_bootstrap_ci_by_flag(spark, sf_dir):
 
 
 def _sql_bootstrap_ci_by_flag() -> str:
-    from dask_ml_spark.functions.stats import _pois1_weight_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, pois1_weight
 
     consts = ", ".join(f"({b}, {pow(BOOT_M, b + 1, BOOT_P)})"
                        for b in range(BOOT_B))
-    ladder = _pois1_weight_sql("u")
+    ladder = duckdb_sql(pois1_weight, "u")
     # nearest-rank per flag (1-indexed): k_lo = ceil(0.05*50) = 3,
     # k_hi = ceil(0.95*50) = 48 — the engine's ranks, as a window
     return f"""
@@ -859,9 +859,9 @@ def q_prop_ztest_discount(spark, sf_dir):
 
 
 def _sql_prop_ztest_discount() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     return f"""
 WITH k AS (
     SELECT CASE WHEN l_discount > 0.05 THEN 1.0 ELSE 0.0 END AS s,
@@ -886,7 +886,7 @@ SELECT n1::BIGINT AS n1, n2::BIGINT AS n2,
        floor(p2 * 1e6 + 0.5) / 1e6 AS p2,
        floor(z * 1e6 + 0.5) / 1e6 AS z,
        floor(CASE WHEN z = 0.0 THEN 1.0
-                  ELSE least(1.0, 2.0 * {sf}) END * 1e6 + 0.5) / 1e6
+                  ELSE {p2} END * 1e6 + 0.5) / 1e6
            AS p_value
 FROM z
 """
@@ -912,10 +912,10 @@ def q_anova_event_value(spark, sf_dir):
 
 
 def _sql_anova_event_value() -> str:
-    from dask_ml_spark.functions.stats import _chi2_sf_sql
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
 
     # events has 5 event types -> df_between = 4 (even): exact tail
-    tail = _chi2_sf_sql("4.0 * f", 4)
+    tail = duckdb_sql(chi2_sf, "4.0 * f", 4)
     return f"""
 WITH g AS (
     -- filter parity with anova_oneway: NaN values and NULL groups are
@@ -972,9 +972,9 @@ def q_pairwise_welch_events(spark, sf_dir):
 
 
 def _sql_pairwise_welch_events() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(t)")
+    p2 = duckdb_sql(normal_p2, "t")
     # every events group has >= 2 rows and positive variance at any
     # SF the oracle runs at, so the valid-filter parity is vacuous
     # here (the engine would exclude invalid pairs from m; there are
@@ -1001,7 +1001,7 @@ WITH g AS (
     FROM st a JOIN st b ON a.grp < b.grp
 ), pp AS (
     SELECT ga, gb, na, nb, diff, t, dof,
-           least(1.0, 2.0 * {sf}) AS p
+           {p2} AS p
     FROM pr
 ), rk AS (
     SELECT *, row_number() OVER (ORDER BY p, ga, gb) AS j,
@@ -1122,10 +1122,10 @@ def q_brown_forsythe_price(spark, sf_dir):
 
 
 def _sql_brown_forsythe_price() -> str:
-    from dask_ml_spark.functions.stats import _chi2_sf_sql
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
 
     # 3 return flags -> df_between = 2 (even): exact tail
-    tail = _chi2_sf_sql("2.0 * f", 2)
+    tail = duckdb_sql(chi2_sf, "2.0 * f", 2)
     return f"""
 WITH kept AS (
     -- filter parity with brown_forsythe/anova_oneway: NaN values and
@@ -1187,9 +1187,9 @@ def q_spearman_price_quantity_exact(spark, sf_dir):
 
 
 def _sql_spearman_price_quantity_exact() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("(abs(rho) * sqrt(n - 1.0))")
+    p2 = duckdb_sql(normal_p2, "(abs(rho) * sqrt(n - 1.0))")
     return f"""
 WITH k AS (
     SELECT l_extendedprice::DOUBLE AS a, l_quantity::DOUBLE AS b
@@ -1212,7 +1212,7 @@ WITH k AS (
 )
 SELECT n::BIGINT AS n,
        floor(rho * 1e6 + 0.5) / 1e6 AS rho,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value
 FROM c
 """
 
@@ -1244,10 +1244,10 @@ def q_spearman_price_quantity(spark, sf_dir):
 
 
 def _sql_spearman_price_quantity() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
     K = SPEARMAN_BINS
-    sf = _normal_sf_sql("(abs(rho) * sqrt(n - 1.0))")
+    p2 = duckdb_sql(normal_p2, "(abs(rho) * sqrt(n - 1.0))")
     # doubled tie-averaged bucket ranks (2·rank = 2·cum − c + 1 with an
     # INCLUSIVE cumsum) keep every sum integral; HUGEINT accumulation
     # replays the engine's Python-bignum driver arithmetic bit-for-bit
@@ -1302,7 +1302,7 @@ WITH k AS (
 )
 SELECT n::BIGINT AS n,
        floor(rho * 1e6 + 0.5) / 1e6 AS rho,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value
 FROM c
 """
 
@@ -1331,10 +1331,10 @@ def q_changepoint_event_value(spark, sf_dir):
 
 
 def _sql_changepoint_event_value() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_sf
 
     K = CP_BINS
-    sf = _normal_sf_sql("abs(t)")
+    sf = duckdb_sql(normal_sf, "abs(t)")
     return f"""
 WITH k AS (
     SELECT epoch(ts)::DOUBLE AS o, value::DOUBLE AS v
@@ -1413,10 +1413,10 @@ def q_trend_event_value(spark, sf_dir):
 
 
 def _sql_trend_event_value() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
     K = TREND_BINS
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     return f"""
 WITH k AS (
     SELECT epoch(ts)::DOUBLE AS o, value::DOUBLE AS v
@@ -1477,7 +1477,7 @@ SELECT (SELECT n_rows FROM bc) AS n,
        (SELECT s FROM sstat) AS s_stat,
        floor(z * 1e6 + 0.5) / 1e6 AS z,
        floor(CASE WHEN (SELECT var FROM vr) <= 0.0 THEN 1.0
-                  ELSE least(1.0, 2.0 * {sf}) END * 1e6 + 0.5) / 1e6
+                  ELSE {p2} END * 1e6 + 0.5) / 1e6
            AS p_value,
        floor((SELECT lo_s + (hi_s - lo_s) / 2.0 FROM med) * 86400.0
              * 1e6 + 0.5) / 1e6 AS sen_slope_per_day
@@ -1509,10 +1509,10 @@ def q_kendall_price_quantity(spark, sf_dir):
 
 
 def _sql_kendall_price_quantity() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
     K = KENDALL_BINS
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     return f"""
 WITH k AS (
     SELECT l_extendedprice::DOUBLE AS a, l_quantity::DOUBLE AS b
@@ -1592,7 +1592,7 @@ WITH k AS (
 )
 SELECT n::BIGINT AS n,
        floor(tau * 1e6 + 0.5) / 1e6 AS tau,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value
 FROM st
 """
 
@@ -1626,11 +1626,11 @@ def q_jonckheere_priority_price(spark, sf_dir):
 
 
 def _sql_jonckheere_priority_price() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
     K = JT_BINS
     kk = len(JT_ORDER)
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     case = "CASE " + " ".join(
         f"WHEN o_orderpriority = '{g}' THEN {i}"
         for i, g in enumerate(JT_ORDER)) + " END"
@@ -1706,7 +1706,7 @@ WITH k AS (
 SELECT n::BIGINT AS n, {kk}::BIGINT AS k,
        floor(tau * 1e6 + 0.5) / 1e6 AS tau,
        floor(z * 1e6 + 0.5) / 1e6 AS z,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value
 FROM st
 """
 
@@ -1733,9 +1733,9 @@ def q_kruskal_wallis_quantity(spark, sf_dir):
 
 
 def _sql_kruskal_wallis_quantity() -> str:
-    from dask_ml_spark.functions.stats import _chi2_sf_sql
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
 
-    p = _chi2_sf_sql("hc", 2)
+    p = duckdb_sql(chi2_sf, "hc", 2)
     return f"""
 WITH k AS (
     SELECT l_quantity::DOUBLE AS v, l_returnflag::VARCHAR AS g
@@ -1801,9 +1801,9 @@ def q_partial_corr_price_quantity(spark, sf_dir):
 
 
 def _sql_partial_corr_price_quantity() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(t)")
+    p2 = duckdb_sql(normal_p2, "t")
     return f"""
 WITH k AS (
     SELECT l_extendedprice::DOUBLE AS a, l_quantity::DOUBLE AS b,
@@ -1830,7 +1830,7 @@ SELECT n, 1::BIGINT AS g_controls,
        floor(r * 1e6 + 0.5) / 1e6 AS r,
        floor(t / 100.0 * 1e6 + 0.5) / 1e6 AS t_stat_c,
        dof::BIGINT AS dof,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value
 FROM t
 """
 
@@ -2134,10 +2134,10 @@ def q_hoeffding_price_quantity(spark, sf_dir):
 
 def _sql_hoeffding_price_quantity() -> str:
     from dask_ml_spark.functions.stats import (
-        _HOEFFD_C0, _HOEFFD_LAM1, _normal_sf_sql)
+        _HOEFFD_C0, _HOEFFD_LAM1, duckdb_sql, normal_sf)
 
     K = HOEFFD_BINS
-    sf = _normal_sf_sql("sqrt((x + 1.0/36.0) / {lam})".format(
+    sf = duckdb_sql(normal_sf, "sqrt((x + 1.0/36.0) / {lam})".format(
         lam=repr(_HOEFFD_LAM1)))
     return f"""
 WITH k AS (
@@ -2307,9 +2307,9 @@ def q_log_rank_gehan(spark, sf_dir):
 
 
 def _sql_log_rank_conversion(weighted: bool = False) -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     # Gehan weights: w_t = pooled risk-set size (1.0 for log-rank);
     # the engine multiplies w (and w^2 into vv) INSIDE each term in
     # the same order
@@ -2378,7 +2378,7 @@ SELECT n1, n2,
        floor(e1 * 1e6 + 0.5) / 1e6 AS expected1,
        floor(z * 1e6 + 0.5) / 1e6 AS z,
        floor(z * z * 1e6 + 0.5) / 1e6 AS chi2,
-       floor(CASE WHEN v > 0.0 THEN least(1.0, 2.0 * {sf})
+       floor(CASE WHEN v > 0.0 THEN {p2}
                   ELSE 1.0 END * 1e6 + 0.5) / 1e6 AS p_value
 FROM zz
 """
@@ -2541,9 +2541,9 @@ def q_mood_median_price(spark, sf_dir):
 
 
 def _sql_mood_median_price() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("sqrt(chi2)")
+    p2 = duckdb_sql(normal_p2, "sqrt(chi2)")
     return f"""
 WITH kept AS (
     SELECT l_extendedprice::DOUBLE AS v, l_returnflag AS g
@@ -2576,7 +2576,7 @@ SELECT n1::BIGINT AS n1, n2::BIGINT AS n2,
        floor(m * 1e6 + 0.5) / 1e6 AS grand_median,
        a1::BIGINT AS above1, a2::BIGINT AS above2,
        floor(chi2 * 1e6 + 0.5) / 1e6 AS chi2,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value
 FROM x
 """
 
@@ -2669,7 +2669,10 @@ def q_jarque_bera_value(spark, sf_dir):
                       r6(F.col("p_value")).alias("p_value"))
 
 
-SQL_JARQUE_BERA_VALUE = """
+def _sql_jarque_bera_value() -> str:
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
+
+    return f"""
 WITH k AS (
     SELECT value::DOUBLE AS v FROM events
     WHERE value IS NOT NULL AND NOT isnan(value::DOUBLE)
@@ -2702,7 +2705,7 @@ SELECT n::BIGINT AS n,
        floor(skew * 1e6 + 0.5) / 1e6 AS skewness,
        floor(kurt * 1e6 + 0.5) / 1e6 AS kurtosis,
        floor(jb * 1e6 + 0.5) / 1e6 AS jb,
-       floor(least(1.0, exp(-jb / 2.0)) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({duckdb_sql(chi2_sf, "jb", 2)} * 1e6 + 0.5) / 1e6 AS p_value
 FROM jb
 """
 
@@ -2726,9 +2729,9 @@ def q_welch_anova_event_value(spark, sf_dir):
 
 
 def _sql_welch_anova_event_value() -> str:
-    from dask_ml_spark.functions.stats import _chi2_sf_sql
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
 
-    p = _chi2_sf_sql("(4.0 * f)", 4)
+    p = duckdb_sql(chi2_sf, "(4.0 * f)", 4)
     return f"""
 WITH k AS (
     SELECT value::DOUBLE AS v, event_type AS g FROM events
@@ -2798,9 +2801,9 @@ def q_ansari_bradley_price(spark, sf_dir):
 
 
 def _sql_ansari_bradley_price() -> str:
-    from dask_ml_spark.functions.stats import _normal_sf_sql
+    from dask_ml_spark.functions.stats import duckdb_sql, normal_p2
 
-    sf = _normal_sf_sql("abs(z)")
+    p2 = duckdb_sql(normal_p2, "z")
     return f"""
 WITH kept AS (
     SELECT floor(l_extendedprice::DOUBLE / 16.0) AS v,
@@ -2866,7 +2869,7 @@ WITH kept AS (
 SELECT n1, n2,
        floor(w * 1e6 + 0.5) / 1e6 AS w_stat,
        floor(z * 1e6 + 0.5) / 1e6 AS z,
-       floor(least(1.0, 2.0 * {sf}) * 1e6 + 0.5) / 1e6 AS p_value
+       floor({p2} * 1e6 + 0.5) / 1e6 AS p_value
 FROM z
 """
 
@@ -2956,7 +2959,7 @@ def catalog_oracles():
         "exponential_fit_conversion": SQL_EXPONENTIAL_FIT_CONVERSION,
         "mood_median_price": _sql_mood_median_price(),
         "ansari_bradley_price": _sql_ansari_bradley_price(),
-        "jarque_bera_value": SQL_JARQUE_BERA_VALUE,
+        "jarque_bera_value": _sql_jarque_bera_value(),
         "welch_anova_event_value": _sql_welch_anova_event_value(),
         "log_rank_conversion": _sql_log_rank_conversion(),
         "log_rank_gehan": _sql_log_rank_conversion(weighted=True),

@@ -170,7 +170,7 @@ def ks_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
     conditional sums, the D/p arithmetic is a stateless projection.
     Returns (window_start, n, d_stat, p_value) per window.
     """
-    from dask_ml_spark.functions.stats import ks_p_expr
+    from dask_ml_spark.functions.stats import ks_p, spark_sql
 
     bins = int(ref["bins"])
     cum = list(ref["cum"])
@@ -189,13 +189,10 @@ def ks_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
               for k in range(bins - 1)]
     d = F.expr(t_sqls[0] if len(t_sqls) == 1
                else "GREATEST(" + ", ".join(t_sqls) + ")")
-    # bind D and λ to columns FIRST (the ks_2sample lesson): inlining
-    # the 31-term greatest into each of the 25 series terms would
-    # multiply the expression tree ~800x
     return _emit(agg.withColumn("__d", d)
                  .withColumn("__lam", F.col("__d") * F.sqrt(n)),
                  F.col("__d").alias("d_stat"),
-                 ks_p_expr(F.col("__lam")).alias("p_value"))
+                 F.expr(spark_sql(ks_p, "__lam")).alias("p_value"))
 
 
 def ad_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
@@ -221,7 +218,7 @@ def ad_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
     grid quadrature converges to the exact A² as K grows on smooth
     references (pytest-pinned against the continuous formula on
     uniform data); p = the Marsaglia 2004 elementary two-branch tail
-    (functions/stats.py::ad_p_expr — exact for the FIXED-reference
+    (functions/stats.py::ad_p — exact for the FIXED-reference
     case 0 null, which is precisely this monitor's setting).
 
     Same scale shape as ks_drift: ONE groupBy(window(ts)) of K−1
@@ -232,7 +229,7 @@ def ad_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
     (what the SQL oracle replays). Returns
     (window_start, n, a2, p_value) per window.
     """
-    from dask_ml_spark.functions.stats import ad_p_expr
+    from dask_ml_spark.functions.stats import ad_p, spark_sql
 
     bins = int(ref["bins"])
     cum = [float(c) for c in ref["cum"]]
@@ -259,7 +256,7 @@ def ad_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
     a2 = n * F.aggregate(terms, F.lit(0.0), lambda acc, x: acc + x)
     return _emit(agg.withColumn("__a2", a2),
                  F.col("__a2").alias("a2"),
-                 ad_p_expr(F.col("__a2")).alias("p_value"))
+                 F.expr(spark_sql(ad_p, "__a2")).alias("p_value"))
 
 
 def psi_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
@@ -413,7 +410,7 @@ def z_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
     (window_start, n, mean, z_mean, p_value, var_ratio) per window;
     a 1-row window reports NULL var_ratio.
     """
-    from dask_ml_spark.functions.stats import normal_sf_expr
+    from dask_ml_spark.functions.stats import normal_p2, spark_sql
 
     mu = float(ref["mean"])
     var0 = float(ref["var"])
@@ -428,9 +425,7 @@ def z_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
     return _emit(agg.withColumn("__m", mean).withColumn("__z", z),
                  F.col("__m").alias("mean"),
                  F.col("__z").alias("z_mean"),
-                 F.least(F.lit(1.0),
-                         2.0 * normal_sf_expr(F.abs(F.col("__z"))))
-                 .alias("p_value"),
+                 F.expr(spark_sql(normal_p2, "__z")).alias("p_value"),
                  (var_w / F.lit(var0)).alias("var_ratio"))
 
 
@@ -559,7 +554,7 @@ def corr_drift(df: DataFrame, col_a: str, col_b: str, ts_col: str,
     replays). Returns (window_start, n, corr, z, p_value); windows
     with n < 4 or a degenerate r report NULL z/p.
     """
-    from dask_ml_spark.functions.stats import normal_sf_expr
+    from dask_ml_spark.functions.stats import normal_p2, spark_sql
 
     r0 = float(ref["corr"])
     z0 = 0.5 * math.log((1.0 + r0) / (1.0 - r0))  # atanh, replayable
@@ -578,8 +573,7 @@ def corr_drift(df: DataFrame, col_a: str, col_b: str, ts_col: str,
                  r.alias("corr"),
                  F.col("__z").alias("z"),
                  F.when(F.col("__z").isNotNull(),
-                        F.least(F.lit(1.0), 2.0 * normal_sf_expr(
-                            F.abs(F.col("__z")))))
+                        F.expr(spark_sql(normal_p2, "__z")))
                  .alias("p_value"))
 
 
@@ -666,7 +660,7 @@ def cov_drift(df: DataFrame, cols, ts_col: str, ref: dict,
     statistics and valid=false, excluded from the BH family and the
     family scalars.
     """
-    from dask_ml_spark.functions.stats import normal_sf_expr
+    from dask_ml_spark.functions.stats import normal_p2, spark_sql
 
     cols = list(cols)
     if cols != list(ref["cols"]):
@@ -716,10 +710,9 @@ def cov_drift(df: DataFrame, cols, ts_col: str, ref: dict,
     agg = agg.withColumn(
         "__zsarr", _col_array_expr([f"__z{k}"
                                     for k in range(len(pairs))]))
-    agg = agg.withColumn("__psarr", F.transform(
-        F.col("__zsarr"),
-        lambda z: F.when(z.isNotNull(), F.least(
-            F.lit(1.0), 2.0 * normal_sf_expr(F.abs(z))))))
+    agg = agg.withColumn("__psarr", F.expr(
+        "transform(__zsarr, z -> CASE WHEN z IS NOT NULL THEN "
+        f"{spark_sql(normal_p2, 'z')} END)"))
     # the window's BH family: sorted valid p's, in-row (array_sort
     # drops nothing; F.filter drops the invalid pairs' NULLs first)
     agg = agg.withColumn(

@@ -331,7 +331,7 @@ def test_mcnemar_and_cochrans_q(spark):
     import numpy as np
 
     from dask_ml_spark.functions.metrics import cochrans_q, mcnemar_test
-    from dask_ml_spark.functions.stats import _normal_sf_py, chi2_sf
+    from dask_ml_spark.functions.stats import normal_sf, chi2_sf
 
     rows = ([(True, False)] * 15 + [(False, True)] * 5
             + [(True, True)] * 30 + [(False, False)] * 50)
@@ -340,7 +340,7 @@ def test_mcnemar_and_cochrans_q(spark):
     assert (got["b_discordant"], got["c_discordant"]) == (15, 5)
     assert abs(got["chi2"] - 81 / 20) < 1e-12
     assert abs(got["p_value"]
-               - min(1.0, 2.0 * _normal_sf_py(math.sqrt(81 / 20)))) \
+               - min(1.0, 2.0 * normal_sf(math.sqrt(81 / 20)))) \
         < 1e-12
     # no disagreements: chi2 = 0, p = 1 (not an error)
     agree = spark.createDataFrame([(True, True), (False, False)],

@@ -101,7 +101,7 @@ def test_wilcoxon_signed_rank_matches_replay(spark):
     pinned against an independent pandas average-rank replay with
     real ties AND zero differences (discarded, the classic
     convention)."""
-    from dask_ml_spark.functions.stats import (_normal_sf_py,
+    from dask_ml_spark.functions.stats import (normal_sf,
                                                wilcoxon_signed_rank)
 
     rng = np.random.RandomState(3)
@@ -122,7 +122,7 @@ def test_wilcoxon_signed_rank_matches_replay(spark):
     var = n * (n + 1.0) * (2.0 * n + 1.0) / 24.0 - ties / 48.0
     z_ref = math.copysign(max(0.0, abs(w_ref - mu) - 0.5),
                           w_ref - mu) / math.sqrt(var)
-    p_ref = min(1.0, 2.0 * _normal_sf_py(abs(z_ref)))
+    p_ref = min(1.0, 2.0 * normal_sf(abs(z_ref)))
     for mdr in (65536, 0):
         row = wilcoxon_signed_rank(df, "a", "b",
                                    max_driver_rows=mdr).collect()[0]
@@ -797,7 +797,7 @@ def test_kendall_tau_binned_matches_bruteforce(spark):
     """Integer-valued data where every distinct value owns a bucket:
     binned τ-b IS exact τ-b — pinned against an O(n²) pair count with
     the tie-corrected variance."""
-    from dask_ml_spark.functions.stats import (_normal_sf_py,
+    from dask_ml_spark.functions.stats import (normal_sf,
                                                kendall_tau_binned)
 
     rng = np.random.RandomState(5)
@@ -811,7 +811,7 @@ def test_kendall_tau_binned_matches_bruteforce(spark):
     assert got["n"] == 300
     assert abs(got["tau"] - tau) < 1e-12
     assert abs(got["p_value"]
-               - min(1.0, 2.0 * _normal_sf_py(abs(z)))) < 1e-12
+               - min(1.0, 2.0 * normal_sf(abs(z)))) < 1e-12
     # the association is strongly positive — sanity on sign/level
     assert got["tau"] > 0.5 and got["p_value"] < 1e-12
 
@@ -860,7 +860,7 @@ def test_jonckheere_matches_kendall_bruteforce(spark):
     (textbook equivalence) — pinned against the O(n²) brute-force
     pair count on integer values where binning is the identity; the
     reversed order must exactly negate z."""
-    from dask_ml_spark.functions.stats import (_normal_sf_py,
+    from dask_ml_spark.functions.stats import (normal_sf,
                                                jonckheere_terpstra)
 
     rng = np.random.RandomState(41)
@@ -880,7 +880,7 @@ def test_jonckheere_matches_kendall_bruteforce(spark):
     assert abs(got["tau"] - tau_ref) < 1e-12
     assert abs(got["z"] - z_ref) < 1e-12
     assert abs(got["p_value"]
-               - min(1.0, 2.0 * _normal_sf_py(abs(z_ref)))) < 1e-12
+               - min(1.0, 2.0 * normal_sf(abs(z_ref)))) < 1e-12
     assert got["z"] > 4  # the injected monotone trend is detected
     rev = jonckheere_terpstra(df, "v", "g",
                               order=["hi", "mid", "lo"],
@@ -923,7 +923,7 @@ def test_hoeffding_d_matches_bruteforce(spark):
     quarter-tie replay, p against the documented BKR tail formula."""
     from dask_ml_spark.functions.stats import (_HOEFFD_C0, _HOEFFD_LAM1,
                                                _HOEFFD_MU,
-                                               _normal_sf_py,
+                                               normal_sf,
                                                hoeffding_d)
 
     rng = np.random.RandomState(5)
@@ -937,7 +937,7 @@ def test_hoeffding_d_matches_bruteforce(spark):
     assert got["n"] == 300
     assert abs(got["d"] - d_ref) < 1e-12
     x = 300 * d_ref / 30.0
-    p_ref = min(1.0, _HOEFFD_C0 * 2.0 * _normal_sf_py(
+    p_ref = min(1.0, _HOEFFD_C0 * 2.0 * normal_sf(
         math.sqrt((x + _HOEFFD_MU) / _HOEFFD_LAM1)))
     assert abs(got["p_value"] - p_ref) < 1e-12
     assert got["d"] > 0.3 and got["p_value"] < 1e-10
@@ -1019,7 +1019,7 @@ def test_hoeffding_bkr_tail_constants():
     [1e-3, 0.1] band (it is asymptotically exact deeper)."""
     from dask_ml_spark.functions.stats import (_HOEFFD_C0, _HOEFFD_LAM1,
                                                _HOEFFD_MU,
-                                               _normal_sf_py)
+                                               normal_sf)
 
     assert abs(_HOEFFD_LAM1 - 1.0 / math.pi ** 4) < 1e-18
     assert _HOEFFD_MU == 1.0 / 36.0
@@ -1040,7 +1040,7 @@ def test_hoeffding_bkr_tail_constants():
         sims[s:s + 25000] = ((z2 - 1) * lam16).sum(axis=1)
     for x in (0.05, 0.1):
         emp = float((sims > x).mean())
-        app = min(1.0, _HOEFFD_C0 * 2.0 * _normal_sf_py(
+        app = min(1.0, _HOEFFD_C0 * 2.0 * normal_sf(
             math.sqrt((x + _HOEFFD_MU) / _HOEFFD_LAM1)))
         assert abs(app - emp) / emp < 0.30, (x, emp, app)
 
@@ -1150,7 +1150,7 @@ def test_t_sf_exact_tail():
     sf = 1/2 − x/(2√(2+x²)); plus the normal limit as ν → ∞."""
     import math
 
-    from dask_ml_spark.functions.stats import _normal_sf_py, t_sf
+    from dask_ml_spark.functions.stats import normal_sf, t_sf
 
     for x in (-3.0, -0.7, 0.0, 0.5, 1.0, 2.7, 10.0):
         want1 = 0.5 - math.atan(x) / math.pi
@@ -1165,7 +1165,7 @@ def test_t_sf_exact_tail():
         assert abs(t_sf(x, float(dof)) - p) < 5e-5, (x, dof)
     # normal limit: dof -> inf
     for x in (0.3, 1.0, 1.959964, 3.1):
-        assert abs(t_sf(x, 2_000_000.0) - _normal_sf_py(x)) < 1e-6, x
+        assert abs(t_sf(x, 2_000_000.0) - normal_sf(x)) < 1e-6, x
     # symmetry + bounds
     assert abs(t_sf(-1.3, 7.0) + t_sf(1.3, 7.0) - 1.0) < 1e-14
     assert t_sf(0.0, 5.0) == 0.5
@@ -1669,11 +1669,11 @@ def test_exact_tail_policy_thin_stratum():
     agree to 2e-3 in p (~3% relative at p ~ 0.05) and the gap only
     drops below the 1e-6 oracle hash grid at corpus dof ~1e6. These
     are the numbers the policy note promises."""
-    from dask_ml_spark.functions.stats import _normal_sf_py, t_sf
+    from dask_ml_spark.functions.stats import normal_sf, t_sf
 
     # the dof-10 divergence at a decision-relevant t (p ~ 0.05)
     t10 = 2.228  # t_{0.975, 10}
-    p_norm = 2.0 * _normal_sf_py(t10)
+    p_norm = 2.0 * normal_sf(t10)
     p_exact = 2.0 * t_sf(t10, 10.0)
     assert p_exact > p_norm
     assert 0.4 < (p_exact - p_norm) / p_exact < 0.55  # ~2x understated
@@ -1682,13 +1682,13 @@ def test_exact_tail_policy_thin_stratum():
 
     # the dof-200 agreement bound
     for t in (0.5, 1.0, 1.96, 2.6, 3.3):
-        assert abs(2.0 * t_sf(t, 200.0) - 2.0 * _normal_sf_py(t)) < 2e-3, t
+        assert abs(2.0 * t_sf(t, 200.0) - 2.0 * normal_sf(t)) < 2e-3, t
     # only near corpus dof ~1e6 does the gap cross the 1e-6 hash grid
     for t in (0.5, 1.96, 3.3):
         assert abs(2.0 * t_sf(t, 1_000_000.0)
-                   - 2.0 * _normal_sf_py(t)) < 1e-6, t
+                   - 2.0 * normal_sf(t)) < 1e-6, t
         assert abs(2.0 * t_sf(t, 2000.0)
-                   - 2.0 * _normal_sf_py(t)) > 1e-6, t
+                   - 2.0 * normal_sf(t)) > 1e-6, t
 
 
 def _log_rank_brute(rows):
@@ -1716,7 +1716,7 @@ def _log_rank_brute(rows):
 def test_log_rank_matches_bruteforce(spark):
     """Random ties + censoring, driver path vs the quadratic replay,
     plus the χ²₁ tail identity p = 2·Φ̄(|z|)."""
-    from dask_ml_spark.functions.stats import _normal_sf_py, log_rank
+    from dask_ml_spark.functions.stats import normal_sf, log_rank
 
     rng = np.random.RandomState(41)
     rows = [(float(rng.randint(0, 25)), int(rng.rand() < 0.7),
@@ -1731,7 +1731,7 @@ def test_log_rank_matches_bruteforce(spark):
     assert abs(r["z"] - z) < 1e-9
     assert abs(r["chi2"] - z * z) < 1e-9
     assert abs(r["p_value"]
-               - min(1.0, 2.0 * _normal_sf_py(abs(r["z"])))) < 1e-15
+               - min(1.0, 2.0 * normal_sf(abs(r["z"])))) < 1e-15
 
 
 def test_log_rank_distributed_fallback_parity(spark):
@@ -1866,7 +1866,7 @@ def test_mood_median_bruteforce(spark):
     moves the statistic by at most their count's worth."""
     import math
 
-    from dask_ml_spark.functions.stats import _normal_sf_py, mood_median
+    from dask_ml_spark.functions.stats import normal_sf, mood_median
 
     rng = np.random.RandomState(59)
     a = rng.normal(0.0, 1.0, 120)
@@ -1887,7 +1887,7 @@ def test_mood_median_bruteforce(spark):
     assert (r["above1"], r["above2"]) == (a1, a2)
     assert abs(r["chi2"] - chi2) < 1e-9
     assert abs(r["p_value"]
-               - min(1.0, 2.0 * _normal_sf_py(math.sqrt(chi2)))) < 1e-12
+               - min(1.0, 2.0 * normal_sf(math.sqrt(chi2)))) < 1e-12
     assert r["p_value"] < 0.01          # the shift is real
 
     sym = ([("a", float(x)) for x in a] + [("b", float(x)) for x in a])
@@ -2025,11 +2025,11 @@ def test_normal_ppf_and_power_planners():
     d=0.2 → 393/arm at 80% power; 0.8/90% → 33); mde inverts
     power_two_sample within rounding."""
     from dask_ml_spark.functions.stats import (
-        _normal_sf_py, minimum_detectable_effect, normal_ppf,
+        normal_sf, minimum_detectable_effect, normal_ppf,
         power_two_sample)
 
     for t in (0.1, 0.5, 1.0, 1.96, 2.6, 3.5, 5.0):
-        p = 1.0 - _normal_sf_py(t)
+        p = 1.0 - normal_sf(t)
         tol = 1e-7 if t <= 3.5 else 1e-6   # deep tail: A&S-limited
         assert abs(normal_ppf(p) - t) < tol, t
         assert abs(normal_ppf(1.0 - p) + t) < tol, t
@@ -2115,7 +2115,7 @@ def test_ansari_bradley_bruteforce(spark):
     guards."""
     import math
 
-    from dask_ml_spark.functions.stats import (_normal_sf_py,
+    from dask_ml_spark.functions.stats import (normal_sf,
                                                ansari_bradley)
 
     rng = np.random.RandomState(83)
@@ -2151,7 +2151,7 @@ def test_ansari_bradley_bruteforce(spark):
     assert abs(r["w_stat"] - w) < 1e-6
     assert abs(r["z"] - z) < 1e-9
     assert abs(r["p_value"]
-               - min(1.0, 2.0 * _normal_sf_py(abs(z)))) < 1e-12
+               - min(1.0, 2.0 * normal_sf(abs(z)))) < 1e-12
     # group a is the NARROW group: its values sit near the pooled
     # center where folded scores are HIGH → W above its expectation
     assert r["z"] > 3.0 and r["p_value"] < 0.01

@@ -681,7 +681,7 @@ def test_ad_drift_flags_and_replays(spark, drifted_dir, reference):
     unflagged, the shifted window fires hugely, and every window's A²
     matches an independent numpy replay of the grid quadrature plus
     the Marsaglia driver-twin tail."""
-    from dask_ml_spark.functions.stats import _ad_p_py
+    from dask_ml_spark.functions.stats import ad_p
     from dask_ml_spark.streaming.drift import ad_drift
 
     batch = spark.read.parquet(drifted_dir)
@@ -706,7 +706,7 @@ def test_ad_drift_flags_and_replays(spark, drifted_dir, reference):
         row = got[w.to_pydatetime()]
         assert row["n"] == n
         assert abs(row["a2"] - a2) < 1e-9
-        assert abs(row["p_value"] - _ad_p_py(row["a2"])) < 1e-12
+        assert abs(row["p_value"] - ad_p(row["a2"])) < 1e-12
     rows = sorted(got.values(), key=lambda r: r["window_start"])
     assert rows[0]["p_value"] > 0.05 and rows[1]["p_value"] > 0.05
     assert rows[2]["a2"] > 50 and rows[2]["p_value"] < 1e-6

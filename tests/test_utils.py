@@ -73,21 +73,30 @@ def test_cut_is_idempotent(spark, monkeypatch):
 
 
 def test_plan_inspection_has_one_owner():
-    """Only utils.py reads Spark plans: the plan walker, the
-    materialized-frame check and the bounded probe live there, so no
-    other module re-derives them from plan text or class names."""
+    """Each engine idiom has one owner file (None: no file may name
+    it). utils.py alone reads Spark plans: the plan walker, the
+    materialized-frame check and the bounded probe live there.
+    functions/stats.py alone writes the closed-form p-value tails, each
+    once, rendered per engine, so no module keeps a hand copy."""
     import pathlib
 
     import dask_ml_spark
 
-    plan_calls = ("queryExecution()", "executedPlan()", "getSimpleName()")
-    retired = ("_is_checkpoint_scan", "_behind_exchange", "_bounded_head")
+    owners = [
+        ("utils.py",
+         ("queryExecution()", "executedPlan()", "getSimpleName()")),
+        (None, ("_is_checkpoint_scan", "_behind_exchange", "_bounded_head")),
+        (None, ("normal_sf_expr", "_normal_sf_sql", "ks_p_expr",
+                "_ks_p_sql", "_ad_poly", "ad_p_expr", "_ad_p_sql",
+                "_pois1_weight_expr", "_pois1_weight_sql", "_chi2_sf_sql")),
+        ("functions/stats.py", ("0.2316419", "_KS_TERMS")),
+    ]
     root = pathlib.Path(dask_ml_spark.__file__).parent
-    offenders = [f"{path.relative_to(root)}: {word}"
-                 for path in sorted(root.rglob("*.py"))
-                 for word in (retired if path == root / "utils.py"
-                              else plan_calls + retired)
-                 if word in path.read_text()]
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel, text = path.relative_to(root).as_posix(), path.read_text()
+        offenders += [f"{rel}: {word}" for owner, words in owners
+                      if rel != owner for word in words if word in text]
     assert offenders == []
 
 
@@ -280,12 +289,65 @@ def test_prefix_sum_does_not_mutate_input_schema(spark):
     assert pdf["run"].tolist() == [float(i) for i in range(100)]  # exclusive cumsum
 
 
+def _tail_grid():
+    """DOUBLE inputs for the closed-form tails, with every branch edge:
+    ad_p at 0, just below 2 and at 2; each Poisson(1) threshold ±1 ulp;
+    chi2_sf's x <= 0 branch."""
+    import math
+
+    from dask_ml_spark.functions.stats import _POIS1_CDF
+
+    return ([-1.7, 0.0, 1e-3, 0.05, 0.3, 0.5, 1.0, 1.2345,
+             math.nextafter(2.0, 0.0), 2.0, 3.3, 7.5]
+            + [v for c in _POIS1_CDF
+               for v in (math.nextafter(c, 0.0), c, math.nextafter(c, 1.0))])
+
+
+def _tail_formulas():
+    from dask_ml_spark.functions import stats as S
+
+    return [(S.normal_sf, ()), (S.normal_p2, ()), (S.ks_p, ()),
+            (S.ad_p, ()), (S.chi2_sf, (2,)), (S.chi2_sf, (4,)),
+            (S.chi2_sf, (8,)), (S.pois1_weight, ())]
+
+
+def test_tail_formulas_render_bit_exact_in_duckdb():
+    """Each closed-form tail rendered as DuckDB SQL returns its Python
+    value bit for bit: DOUBLE literals (a bare 2.5066282746310002 types
+    as DECIMAL and casts to another double) and Python's operation
+    order, every binary op parenthesized."""
+    import duckdb
+
+    from dask_ml_spark.functions.stats import chi2_sf, duckdb_sql
+
+    xs = _tail_grid()
+    con = duckdb.connect()
+    bad = []
+    for f, params in _tail_formulas():
+        rows = con.execute(
+            f"SELECT x, {duckdb_sql(f, 'x', *params)} "
+            "FROM (SELECT unnest(?::DOUBLE[]) AS x)", [xs]).fetchall()
+        assert len(rows) == len(xs)
+        bad += [(f.__name__, params, x, got) for x, got in rows
+                if got != f(x, *params)]
+    assert bad == []
+    with pytest.raises(ValueError, match="even dof"):
+        duckdb_sql(chi2_sf, "x", 3)
+
+
 def test_hash_bucket_engine_portability(spark):
     """The Knuth bucket expression must equal its plain-Python
     rendering on arbitrary int64 keys — this arithmetic is the contract
     every deterministic-sampling oracle (hash_split, stratified/mixture
     sampling) relies on, so it must never silently overflow or wrap
-    differently in the JVM."""
+    differently in the JVM. The closed-form tails' Spark renderings
+    equal their Python forms to 1e-15 relative (the JVM's exp may differ
+    from libm's by an ulp or two)."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from dask_ml_spark.functions.stats import spark_sql
     from dask_ml_spark.plans.model_selection import _hash_bucket_expr
 
     M, P, NB, SALT = 2654435761, 1 << 31, 10_000, 7
@@ -296,6 +358,17 @@ def test_hash_bucket_engine_portability(spark):
     for k in keys:
         expect = (((SALT % P + k) % P) * M % P) % NB
         assert got[k] == expect, (k, got[k], expect)
+
+    xs = _tail_grid()
+    tails = _tail_formulas()
+    rows = spark.createDataFrame([(x,) for x in xs], "x double").select(
+        "x", *[F.expr(spark_sql(f, "x", *params)) for f, params in tails]
+    ).collect()
+    assert len(rows) == len(xs)
+    bad = [(f.__name__, params, r[0], r[i + 1]) for r in rows
+           for i, (f, params) in enumerate(tails)
+           if not math.isclose(r[i + 1], f(r[0], *params), rel_tol=1e-15)]
+    assert bad == []
 
 
 def test_estimator_save_load_roundtrip(spark, lineitem, tmp_path):
