@@ -1,7 +1,7 @@
 """SparkSession construction with scale-appropriate defaults.
 
 These configs are the ones that matter at 100 TB just as much as on
-local[32]: AQE for runtime re-planning (skew joins, partition
+a local[N] test box: AQE for runtime re-planning (skew joins, partition
 coalescing), Arrow for every Python<->JVM boundary, and a shuffle
 partition count that AQE can coalesce downward.
 """
@@ -68,10 +68,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster leave it unset and let spark-submit decide.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally, or to
+    the cores this process may run on when the variable is unset; on a
+    real cluster leave it unset and let spark-submit decide.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

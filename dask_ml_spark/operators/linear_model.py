@@ -135,12 +135,12 @@ def newton_batch_family(est) -> str | None:
 
 
 def fit_newton_batch(ests, df: DataFrame, columns, label_col: str,
-                     fold_col: str | None = None, test_folds=None) -> None:
+                     fold_col: str | None = None, train_mask=None) -> None:
     """Fit every estimator of ``ests`` (all admitted by
     newton_batch_family, one family) together: one
     ``solvers.newton_many`` call, so each Newton iteration is ONE scan
     of ``df`` for the whole batch. With ``fold_col``, ``ests[i]`` trains
-    on the rows whose fold differs from ``test_folds[i]``. Sets each
+    on the rows whose int tag ``t`` has ``train_mask[t, i]`` set. Sets each
     estimator's fitted state in place. ``df`` should be cached — every
     iteration rescans it."""
     from dask_ml_spark.operators.solvers import newton_many
@@ -154,7 +154,7 @@ def fit_newton_batch(ests, df: DataFrame, columns, label_col: str,
         *([fold_col] if fold_col is not None else []))
     betas = newton_many(proj, cols, label_col, ests[0]._family,
                         [_solver_kwargs(est) for est in ests],
-                        fold_col, test_folds)
+                        fold_col, train_mask)
     d = len(cols)
     for est, beta in zip(ests, betas):
         _set_fitted(est, beta[:d], beta[d] if len(beta) > d else 0.0,

@@ -94,12 +94,13 @@ def _family_funcs(family: str):
 
 def _batch_suffstats(df: DataFrame, cols, label_col: str, betas: np.ndarray,
                      family: str, want_grad: bool, want_hess: bool,
-                     fold_col: str | None = None, test_folds=None):
+                     fold_col: str | None = None, train_mask=None):
     """One scan of ``df`` for F fits at once.
 
     ``betas`` is (F, d+1), intercept last (0 for a fit without one).
-    Fit ``f`` reads every row whose ``fold_col`` differs from
-    ``test_folds[f]``; without ``fold_col`` every fit reads every row.
+    Fit ``f`` reads every row whose int ``fold_col`` tag ``t`` has
+    ``train_mask[t, f]`` set; without ``fold_col`` every fit reads every
+    row.
     Each partition computes the (n, F) margins ``X @ Bᵀ`` once and
     emits one row of per-fit partials. Returns (n[F], mean_loss[F],
     grad[F, d+1]/n, hess[F, d+1, d+1]/n), grad/hess None unless
@@ -110,8 +111,8 @@ def _batch_suffstats(df: DataFrame, cols, label_col: str, betas: np.ndarray,
     p = d + 1
     B = np.atleast_2d(np.asarray(betas, dtype=np.float64)).copy()
     nfit = B.shape[0]
-    tf = (np.asarray(test_folds, dtype=np.int64).copy()
-          if fold_col is not None else None)
+    M = (np.asarray(train_mask, dtype=np.float64).copy()
+         if fold_col is not None else None)
     loss_f, mu_f, w_f = _family_funcs(family)
     schema = ("n array<double>, loss array<double>, grad array<double>, "
               "hess array<double>")
@@ -127,11 +128,8 @@ def _batch_suffstats(df: DataFrame, cols, label_col: str, betas: np.ndarray,
             X[:, d] = 1.0
             y = pdf[label_col].to_numpy(dtype=np.float64)[:, None]
             m = X @ B.T
-            if tf is None:
-                t = np.ones((len(pdf), 1))
-            else:
-                t = (pdf[fold_col].to_numpy()[:, None] != tf[None, :]
-                     ).astype(np.float64)
+            t = (np.ones((len(pdf), 1)) if M is None
+                 else M[pdf[fold_col].to_numpy()])
             n += t.sum(axis=0)
             loss_tot += (loss_f(m, y) * t).sum(axis=0)
             if g is not None:
@@ -257,14 +255,14 @@ def _newton_spec(fit_intercept=True, max_iter=50, tol=1e-8, lamduh=0.0,
 
 
 def newton_many(df, cols, label_col, family, fits, fold_col=None,
-                test_folds=None):
+                train_mask=None):
     """Newton for a batch of fits, one pass over ``df`` per iteration
     for the whole batch (see _batch_suffstats).
 
     ``fits`` holds one dict of newton keywords per fit (fit_intercept,
     max_iter, tol, lamduh, regularizer). With ``fold_col``, fit ``f``
-    trains on the rows whose fold differs from ``test_folds[f]`` — every
-    (candidate, fold) model of a CV grid in one scan. The driver keeps
+    trains on the rows whose tag ``t`` has ``train_mask[t, f]`` set —
+    every (candidate, split) model of a CV grid in one scan. The driver keeps
     each fit's penalty, solve and convergence test; a converged fit
     leaves the batch. Returns one beta per fit (intercept last if
     fitted).
@@ -282,7 +280,7 @@ def newton_many(df, cols, label_col, family, fits, fold_col=None,
     specs = [_newton_spec(**f) for f in fits]
     d = len(cols)
     B = np.zeros((len(specs), d + 1))
-    tf = np.asarray(test_folds) if fold_col is not None else None
+    M = np.asarray(train_mask) if fold_col is not None else None
     _, mu_f, w_f = _family_funcs(family)
     iters = [0] * len(specs)
     active = [f for f, s in enumerate(specs) if s[1] > 0]
@@ -290,7 +288,7 @@ def newton_many(df, cols, label_col, family, fits, fold_col=None,
     while active:
         _, _, G, H = _batch_suffstats(
             df, cols, label_col, B[active], "gaussian" if first else family,
-            True, True, fold_col, tf[active] if tf is not None else None)
+            True, True, fold_col, M[:, active] if M is not None else None)
         still = []
         for j, f in enumerate(active):
             fit_intercept, max_iter, tol, lamduh = specs[f]

@@ -340,8 +340,9 @@ GROUP BY 1
 
 
 def q_grid_search_best(spark, sf_dir):
-    """GridSearchCV (reference _search.py:131-1728): cached KFold folds,
-    thread-pool fit of the (param, fold) grid. Seeded folds — rows-only."""
+    """GridSearchCV (reference _search.py:131-1728): one cached
+    fold-tagged frame, every (param, fold) model fitted by the batched
+    Newton pass and scored by one aggregate. Seeded folds — rows-only."""
     from dask_ml_spark.operators.linear_model import LogisticRegression
     from dask_ml_spark.operators.preprocessing import StandardScaler
     from dask_ml_spark.plans.model_selection import GridSearchCV, KFold
@@ -355,9 +356,9 @@ def q_grid_search_best(spark, sf_dir):
         LogisticRegression(max_iter=10, tol=1e-4),
         {"C": [0.1, 10.0]},
         cv=KFold(n_splits=3, shuffle=True, random_state=7),
-        # all 2x3 (param, fold) fits race concurrently — the reference's
-        # scheduler runs the whole (param, fold) graph at once.
-        # refit=False (r14): the query returns best_params_/best_score_/
+        # all 2x3 (param, fold) models share each Newton pass — the
+        # reference's scheduler runs the whole (param, fold) graph at
+        # once. refit=False (r14): the query returns best_params_/best_score_/
         # n_candidates only — all CV-table state; the default refit's
         # full-data MLlib fit (~10 LBFGS jobs) produced an estimator
         # nothing read (guide §1.2: don't compute what you throw away).
@@ -858,9 +859,10 @@ PIPE_GRID_C = [0.2, 2.0, 20.0]
 
 def q_pipeline_grid_search(spark, sf_dir):
     """GridSearchCV over a Pipeline with step__param candidates —
-    exercises prefix sharing (ONE scaler fit per fold, cached
-    transformed folds, final-stage candidates race over them;
-    reference _search.py:619-749) — and, since r7, every value is
+    exercises prefix sharing (ONE scaler fit per fold on its train
+    rows, the transformed folds stacked in one cached frame, every
+    final-stage (candidate, fold) model fitted by one batched Newton
+    pass; reference _search.py:619-749) — and, since r7, every value is
     oracle-verified: content-deterministic HashKFold folds + a
     StandardScaler prefix + one-step-exact newton ridge let the SQL
     replay fold hash, per-fold train mean/std, the scaled-space

@@ -11,22 +11,30 @@ partition-boundary artifacts; reference _split.py:92-200 is blockwise
 only because dask slicing is expensive). Folds are lazy column
 predicates over ONE cached DataFrame — materializing k folds would
 k× the storage; a `fold` column + filter reuses the same cache (the
-CVCache idea, methods.py:83-152, without copies). Search execution
-batches what it can: GLM candidates with a strictly convex objective
-(operators.linear_model.newton_batch_family) are fitted together by a
-Newton solver whose every iteration is ONE scan of the fold-tagged
-cache for all (candidate, fold) models, and scored together by one
+CVCache idea, methods.py:83-152, without copies).
+
+Search execution has one path. Candidates fall into prefix groups (one
+per distinct pipeline-prefix params; a plain estimator is one group
+with an empty prefix), and each group fits and scores over ONE cached
+frame whose int ``__fold`` tag says which split a row trains or is
+scored on: the KFold fold column itself when the prefix is empty, else
+the k splits stacked with their prefix fitted on train only (train_i
+tagged 2i, test_i tagged 2i+1). GLM candidates with a strictly convex
+objective (operators.linear_model.newton_batch_family) are fitted
+together by a Newton solver whose every iteration is ONE scan of that
+frame for all (candidate, split) models, and scored together by one
 aggregate when the scorer has an aggregate form. Where the reference
 runs one task graph per (candidate, fold), this runs one job per
-iteration for the whole grid. Every other candidate (pipelines,
-non-GLM estimators, explicit lbfgs, l1) is fitted by a driver thread
-pool launching concurrent Spark jobs. Fits are memoized by
-param-token so duplicate candidates are fitted once (reference `seen`
-dicts, _search.py:350-376).
+iteration for the whole grid. Every other (candidate, split) pair
+(non-GLM estimators, explicit lbfgs, l1) is fitted and scored by one
+driver thread pool. Fits are memoized by param-token so duplicate
+candidates are fitted once (reference `seen` dicts,
+_search.py:350-376).
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 from concurrent.futures import ThreadPoolExecutor
 
@@ -290,20 +298,40 @@ def _param_token(params: dict) -> str:
     return repr(normalize_token(params))
 
 
+def _stack_splits(splits, prefix, prefix_p: dict, columns,
+                  label_col: str) -> DataFrame:
+    """Every (train_i, test_i) split in one frame tagged by an int
+    ``__fold``: the ``prefix`` Pipeline (None for no prefix), set to
+    ``prefix_p``, is fitted on train_i only; prefix_i(train_i) is
+    tagged 2i and prefix_i(test_i) 2i+1."""
+    parts = []
+    for i, (train, test) in enumerate(splits):
+        if prefix is not None:
+            pre = prefix.clone().set_params(**prefix_p).fit(
+                train, columns, label_col)
+            train, test = pre.transform(train), pre.transform(test)
+        parts += [train.withColumn("__fold", F.lit(2 * i)),
+                  test.withColumn("__fold", F.lit(2 * i + 1))]
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
 class GridSearchCV(BaseEstimator):
-    """Exhaustive CV search over one cached, fold-tagged frame (the
-    reference builds an explicit task graph, _search.py:195-260).
+    """Exhaustive CV search over cached, split-tagged frames (the
+    reference builds an explicit task graph, _search.py:195-260): one
+    frame per pipeline-prefix group, whose prefix is fitted once per
+    split on that split's train rows.
 
     GLM candidates that newton_batch_family admits (solver "auto" or
     "newton", strictly convex objective) are fitted together: each
-    Newton iteration is one pass over the cache that updates every
-    (candidate, fold) model, and one aggregate scores them all when
-    the scorer has an aggregate form. ``solver="auto"`` thus means the
-    batched Newton pass inside the search and MLlib L-BFGS for the
-    refit; both reach the same optimum. The other candidates run as
-    concurrent Spark jobs from a driver thread pool of ``n_jobs``
-    (Spark's scheduler plays the role of the dask scheduler), which
-    also scores whatever the aggregate did not."""
+    Newton iteration is one pass over the group's frame that updates
+    every (candidate, split) model, and one aggregate scores them all
+    when the scorer has an aggregate form. ``solver="auto"`` thus
+    means the batched Newton pass inside the search and MLlib L-BFGS
+    for the refit; both reach the same optimum. The other (candidate,
+    split) pairs are fitted as concurrent Spark jobs from one driver
+    thread pool of ``n_jobs`` (Spark's scheduler plays the role of the
+    dask scheduler), which also scores whatever the aggregate did
+    not."""
 
     def __init__(self, estimator, param_grid, scoring=None, cv=None, refit: bool = True,
                  n_jobs: int = 4):
@@ -325,7 +353,6 @@ class GridSearchCV(BaseEstimator):
         cv = check_cv(self.cv)
         candidates = self._candidates()
         scorer = check_scoring(self.estimator, self.scoring)
-        from dask_ml_spark.utils import ensure_min_partitions
 
         if columns is not None:
             # prune the fold cache to the columns the fits/scorer touch:
@@ -354,186 +381,123 @@ class GridSearchCV(BaseEstimator):
         from dask_ml_spark.operators.compose import Pipeline as _Pipeline
         from dask_ml_spark.operators.linear_model import (fit_newton_batch,
                                                           newton_batch_family)
-
-        is_pipeline = (isinstance(self.estimator, _Pipeline)
-                       and len(self.estimator.steps) > 1)
-        models = {} if is_pipeline else {
-            ci: self.estimator.clone().set_params(**params)
-            for ci, params in unique}
-        # GLM candidates with a strictly convex objective are fitted
-        # together, by one Newton pass per iteration over the fold
-        # cache; the rest race as one fit each in the thread pool
-        batched = [ci for ci, m in models.items()
-                   if newton_batch_family(m) is not None]
-        pooled = [ci for ci in models if ci not in batched]
-
-        # row-wise parameter-independent prep (e.g. GLM feature
-        # assembly) runs ONCE here, above the (candidate, fold)
-        # fan-out, so every fit shares the one cached prepared frame
-        # instead of persisting+materializing its own copy
-        df = self.estimator.prepare_cv_cache(df, columns, label_col)
-
-        # right-size the cached folds up-front: fold filters preserve
-        # the partitioning, so every downstream (candidate, fold) fit
-        # sees the same layout and skips its own repartition shuffle.
-        # Sizing divides the cores by the consumers that scan the
-        # cache at once (see right_size_cv_cache — bytes-floored, so
-        # big caches keep their partitions): the batched pass is one,
-        # and each racing pool fit is one more, up to n_jobs
         from dask_ml_spark.utils import right_size_cv_cache
 
-        n_racing = len(candidates) if is_pipeline else len(pooled)
+        # prefix groups (reference _search.py:619-749): a multi-step
+        # pipeline's candidates that differ only in final-stage params
+        # share ONE prefix fit per split; any other estimator is one
+        # group with an empty prefix whose final stage is the estimator
+        prefix, final_name, final = None, None, self.estimator
+        if isinstance(final, _Pipeline) and len(final.steps) > 1:
+            prefix = _Pipeline(final.steps[:-1])
+            final_name, final = final.steps[-1]
+        groups: dict[str, tuple[dict, list]] = {}
+        for ci, params in unique:
+            prefix_p, final_p = {}, {}
+            for k, v in params.items():
+                step, sep, sub = k.partition("__")
+                if prefix is None or not sep:
+                    final_p[k] = v
+                elif step != final_name:
+                    prefix_p[k] = v
+                else:
+                    final_p[sub] = v
+            groups.setdefault(_param_token(prefix_p), (prefix_p, []))[1].append(
+                (ci, final.clone().set_params(**final_p)))
+        n_pooled = sum(newton_batch_family(m) is None
+                       for _, cands in groups.values() for _, m in cands)
+
+        # row-wise parameter-independent prep (e.g. GLM feature
+        # assembly) runs ONCE here, above the (candidate, split)
+        # fan-out, so every fit shares the one cached prepared frame
+        df = self.estimator.prepare_cv_cache(df, columns, label_col)
+
+        # right-size the cached frames up-front (see right_size_cv_cache
+        # — bytes-floored, so big caches keep their partitions): the
+        # batched pass is one consumer, each pooled fit one more, up
+        # to n_jobs
         n_concurrent = max(1, min(
-            self.n_jobs, n_racing * getattr(cv, "n_splits", 1)))
-        with_fold = cv.fold_column(df) if isinstance(cv, KFold) else None
-        if with_fold is not None:
-            with_fold = right_size_cv_cache(
-                with_fold, n_concurrent).persist()  # CVCache analog
-            folds = [
-                (with_fold.where(F.col("__fold") != i).drop("__fold"),
-                 with_fold.where(F.col("__fold") == i).drop("__fold"))
-                for i in range(cv.n_splits)
-            ]
+            self.n_jobs, n_pooled * getattr(cv, "n_splits", 1)))
+        tagged = None
+        if isinstance(cv, KFold):
+            # CVCache analog: one cached fold-tagged frame; the refit
+            # reads it too
+            tagged = right_size_cv_cache(cv.fold_column(df),
+                                         n_concurrent).persist()
+            df = tagged.drop("__fold")
+            splits = [(tagged.where(F.col("__fold") != i).drop("__fold"),
+                       tagged.where(F.col("__fold") == i).drop("__fold"))
+                      for i in range(cv.n_splits)]
         else:
-            # CVCache analog for the ShuffleSplit path too — otherwise
-            # every (candidate, fold) fit rescans the source
-            folds = [(right_size_cv_cache(tr, n_concurrent).persist(),
-                      right_size_cv_cache(te, n_concurrent).persist())
-                     for tr, te in cv.split(df)]
+            splits = list(cv.split(df))
+        n_splits = len(splits)
 
         results: dict[tuple, float] = {}
-        if is_pipeline:
-            # pipeline-prefix sharing (reference _search.py:619-749):
-            # candidates that only differ in final-stage params share ONE
-            # prefix fit + transform per fold; the transformed folds are
-            # cached while the final stages race over them.
-            final_name = self.estimator.steps[-1][0]
-            groups: dict[str, dict] = {}
-            for ci, params in unique:
-                prefix_p, final_p = {}, {}
-                for k, v in params.items():
-                    step, sep, sub = k.partition("__")
-                    if sep and step != final_name:
-                        prefix_p[k] = v
-                    else:
-                        final_p[sub if sep else k] = v
-                g = groups.setdefault(_param_token(prefix_p), {"prefix": prefix_p, "cands": []})
-                g["cands"].append((ci, final_p))
-
-            # combined concurrency stays bounded by n_jobs: the inner
-            # per-candidate pool only gets the slots the outer
-            # (group, fold) pool leaves unused (n_jobs^2 concurrent
-            # MLlib fits otherwise — review-caught)
-            n_outer = min(self.n_jobs,
-                          max(1, len(groups) * len(folds)))
-            inner_workers = max(1, self.n_jobs // n_outer)
-
-            def _run_group(task):
-                g, fi = task
-                train, test = folds[fi]
-                out = []
-                data_tr, data_te = train, test
-                fitted_prefix = []
-                for name, est in self.estimator.steps[:-1]:
-                    stage = est.clone()
-                    stage.set_params(**{
-                        k.partition("__")[2]: v for k, v in g["prefix"].items()
-                        if k.partition("__")[0] == name
-                    })
-                    stage.fit(data_tr, columns=columns)
-                    data_tr = stage.transform(data_tr)
-                    data_te = stage.transform(data_te)
-                    fitted_prefix.append((name, stage))
-                data_tr, data_te = data_tr.persist(), data_te.persist()
-                try:
-                    # final-stage candidates share the cached transformed
-                    # fold — race them concurrently instead of serially
-                    # (the fold-level outer pool alone leaves each fold's
-                    # candidate chain sequential)
-                    def _fit_final(cand):
-                        ci, final_p = cand
-                        fin = self.estimator.steps[-1][1].clone().set_params(**final_p)
-                        fin.fit(data_tr, columns=columns, label_col=label_col)
-                        return (ci, fi,
-                                score_estimator(scorer, fin, data_te, label_col))
-                    if len(g["cands"]) > 1 and inner_workers > 1:
-                        with ThreadPoolExecutor(
-                                max_workers=min(len(g["cands"]),
-                                                inner_workers)) as inner:
-                            out.extend(inner.map(_fit_final, g["cands"]))
-                    else:
-                        out.extend(_fit_final(c) for c in g["cands"])
-                finally:
-                    data_tr.unpersist()
-                    data_te.unpersist()
-                return out
-
-            tasks = [(g, fi) for g in groups.values() for fi in range(len(folds))]
-            with ThreadPoolExecutor(max_workers=self.n_jobs) as pool:
-                for out in pool.map(_run_group, tasks):
-                    for ci, fi, score in out:
-                        results[(ci, fi)] = score
-        else:
-            # batched candidates: every (candidate, fold) model in one
-            # Newton pass per iteration over the fold cache (per fold
-            # when the cv has no fold column)
-            fitted: dict[tuple, object] = {}
-            if batched:
-                fitted = {(ci, fi): models[ci].clone()
-                          for ci in batched for fi in range(len(folds))}
-                if with_fold is not None:
-                    fit_newton_batch(list(fitted.values()), with_fold,
-                                     columns, label_col, fold_col="__fold",
-                                     test_folds=[fi for _, fi in fitted])
+        with ThreadPoolExecutor(max_workers=self.n_jobs) as pool:
+            for prefix_p, cands in groups.values():
+                # each group fits and scores over ONE cached frame with
+                # an int __fold tag: split i trains on the tags in
+                # train_tags[i] and is scored on score_tags[i]
+                if tagged is not None and prefix is None:
+                    frame = tagged
+                    train_tags = [[t for t in range(n_splits) if t != i]
+                                  for i in range(n_splits)]
+                    score_tags = list(range(n_splits))
                 else:
-                    for fi, (train, _test) in enumerate(folds):
-                        fit_newton_batch(
-                            [fitted[(ci, fi)] for ci in batched], train,
-                            columns, label_col)
-            # persist the fold-train views when several pooled
-            # candidates race over the same fold: an MLlib fit on an
-            # unpersisted input re-caches its instances INTERNALLY per
-            # fit (k*candidates materializations of the same rows); a
-            # cached view is materialized once and every candidate's
-            # solver skips its private copy
-            shared_folds = len(pooled) > 1
-            if shared_folds:
-                folds = [(tr.persist(), te) for tr, te in folds]
-            if fitted and with_fold is not None:
-                # one aggregate scores every batched model on its
-                # held-out fold when the scorer has an aggregate form
-                scores = score_folds(scorer, [(m, fi) for (_, fi), m in
-                                              fitted.items()],
-                                     with_fold, "__fold", label_col)
-                if scores is not None:
-                    results.update(zip(fitted, scores))
+                    frame = right_size_cv_cache(_stack_splits(
+                        splits, prefix, prefix_p, columns, label_col),
+                        n_concurrent).persist()
+                    train_tags = [[2 * i] for i in range(n_splits)]
+                    score_tags = [2 * i + 1 for i in range(n_splits)]
+                try:
+                    # GLM candidates with a strictly convex objective:
+                    # every (candidate, split) model in one Newton pass
+                    # per iteration, scored by one aggregate when the
+                    # scorer has an aggregate form
+                    fitted = {(ci, i): m.clone() for ci, m in cands
+                              if newton_batch_family(m) is not None
+                              for i in range(n_splits)}
+                    if fitted:
+                        mask = np.zeros((max(score_tags) + 1, len(fitted)),
+                                        dtype=bool)
+                        for f, (_, i) in enumerate(fitted):
+                            mask[train_tags[i], f] = True
+                        fit_newton_batch(list(fitted.values()), frame,
+                                         columns, label_col,
+                                         fold_col="__fold", train_mask=mask)
+                        scores = score_folds(
+                            scorer, [(m, score_tags[i])
+                                     for (_, i), m in fitted.items()],
+                            frame, "__fold", label_col)
+                        if scores is not None:
+                            results.update(zip(fitted, scores))
 
-            def _run(task):
-                ci, fi = task
-                train, test = folds[fi]
-                model = fitted.get((ci, fi))
-                if model is None:
-                    model = models[ci].clone()
-                    model.fit(train, columns=columns, label_col=label_col)
-                return ci, fi, score_estimator(scorer, model, test, label_col)
+                    def _run(task):
+                        (ci, i), model = task
+                        if (ci, i) not in fitted:
+                            model = model.clone()
+                            model.fit(frame.where(F.col("__fold").isin(
+                                train_tags[i])).drop("__fold"),
+                                columns=columns, label_col=label_col)
+                        test = frame.where(F.col("__fold") == score_tags[i])
+                        return (ci, i), score_estimator(
+                            scorer, model, test.drop("__fold"), label_col)
 
-            # pooled fits race; every model not yet scored is scored
-            # through score_estimator
-            tasks = [(ci, fi) for ci, _ in unique for fi in range(len(folds))
-                     if (ci, fi) not in results]
-            with ThreadPoolExecutor(max_workers=self.n_jobs) as pool:
-                for ci, fi, score in pool.map(_run, tasks):
-                    results[(ci, fi)] = score
-            if shared_folds:
-                for tr, _te in folds:
-                    tr.unpersist()
+                    # every other (candidate, split) pair is fitted
+                    # (unless batched) and scored by the one pool
+                    results.update(pool.map(_run, [
+                        ((ci, i), fitted.get((ci, i), m))
+                        for ci, m in cands for i in range(n_splits)
+                        if (ci, i) not in results]))
+                finally:
+                    if frame is not tagged:
+                        frame.unpersist()
 
-        n_folds = len(folds)
         mean_scores, std_scores = [], []
         split_scores = []
         for ci, params in enumerate(candidates):
             src = seen[_param_token(params)]
-            ss = [results[(src, fi)] for fi in range(n_folds)]
+            ss = [results[(src, fi)] for fi in range(n_splits)]
             split_scores.append(ss)
             mean_scores.append(float(np.mean(ss)))
             std_scores.append(float(np.std(ss)))
@@ -547,7 +511,7 @@ class GridSearchCV(BaseEstimator):
             "std_test_score": np.asarray(std_scores),
             "rank_test_score": ranks.astype(int),
         }
-        for fi in range(n_folds):
+        for fi in range(n_splits):
             self.cv_results_[f"split{fi}_test_score"] = np.asarray(
                 [ss[fi] for ss in split_scores])
         for k in sorted({k for p in candidates for k in p}):
@@ -557,19 +521,13 @@ class GridSearchCV(BaseEstimator):
         self.best_score_ = mean_scores[self.best_index_]
         if self.refit:
             self.best_estimator_ = self.estimator.clone().set_params(**self.best_params_)
-            # refit on the union of the persisted folds — the same rows
-            # as df, already cached (and already prepared), so the
-            # refit skips a full rescan of the source plan
-            refit_df = (with_fold.drop("__fold")
-                        if with_fold is not None else df)
-            self.best_estimator_.fit(refit_df, columns=columns,
+            # with a fold column, df is the cached fold frame — the
+            # same rows, already prepared, so the refit skips a full
+            # rescan of the source plan
+            self.best_estimator_.fit(df, columns=columns,
                                      label_col=label_col)
-        if with_fold is not None:
-            with_fold.unpersist()
-        else:
-            for tr, te in folds:
-                tr.unpersist()
-                te.unpersist()
+        if tagged is not None:
+            tagged.unpersist()
         return self
 
     def predict(self, df: DataFrame, **kw) -> DataFrame:

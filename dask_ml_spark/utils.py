@@ -231,13 +231,17 @@ def bounded_head(g: DataFrame, cap: int | None):
     return g, head_pdf.to_dict("records")
 
 
-def right_size_cv_cache(df: DataFrame, n_jobs: int,
-                        bytes_per_part: int = 64 << 20) -> DataFrame:
+# in-memory bytes a CV cache partition may hold before right_size_cv_cache
+# keeps more partitions than the concurrent consumers need
+_CV_CACHE_BYTES_PER_PART = 64 << 20
+
+
+def right_size_cv_cache(df: DataFrame, n_jobs: int) -> DataFrame:
     """Partition a CV fold cache for CONCURRENT consumers.
 
     A cached fold feeding n_jobs concurrent (candidate, fold) fits only
     needs ~cores/n_jobs partitions per fit to saturate the machine —
-    the racing fits supply the rest of the parallelism, and every extra
+    the concurrent fits supply the rest of the parallelism, and every extra
     partition multiplies per-iteration scheduling cost across EVERY
     LBFGS/IRLS job of every fit (measured: a 600k-row cache at 8
     partitions runs a 6-way grid ~30% faster than at 32).
@@ -265,7 +269,7 @@ def right_size_cv_cache(df: DataFrame, n_jobs: int,
     else:
         # deserialized cache is fatter than the scan estimate (vector
         # boxing, java object headers) — budget 4x
-        target = max(per_fit, (4 * size) // bytes_per_part + 1)
+        target = max(per_fit, (4 * size) // _CV_CACHE_BYTES_PER_PART + 1)
     return df if target == current else df.repartition(target)
 
 

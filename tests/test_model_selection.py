@@ -98,13 +98,17 @@ def test_randomized_search(xy_classification):
     assert hasattr(rs, "best_estimator_")
 
 
-def test_grid_search_pipeline_prefix_sharing(spark):
+def test_grid_search_pipeline_prefix_sharing(spark, monkeypatch):
     """Pipeline candidates differing only in final-stage params share
-    one prefix fit per fold; results match fitting the pipeline per
-    candidate by hand."""
+    one prefix fit per fold, and their final stages are fitted by ONE
+    batched Newton pass (no per-candidate fit); every split score
+    matches a hand loop — scaler fitted on the fold's train view, one
+    newton fit, score_estimator on the transformed test view."""
     import numpy as np
     from pyspark.sql import functions as F
 
+    from dask_ml_spark.functions.metrics import check_scoring, score_estimator
+    from dask_ml_spark.operators import linear_model, solvers
     from dask_ml_spark.operators.compose import Pipeline
     from dask_ml_spark.operators.linear_model import LogisticRegression
     from dask_ml_spark.operators.preprocessing import StandardScaler
@@ -114,13 +118,38 @@ def test_grid_search_pipeline_prefix_sharing(spark):
 
     df = make_classification(400, 4, random_state=0, n_partitions=4, spark=spark)
     cols = [f"f{j}" for j in range(4)]
+    batches, fits = [], []
+    real_batch = linear_model.fit_newton_batch
+    real_fit = LogisticRegression.fit
+
+    def batch(ests, *a, **kw):
+        batches.append(sorted(e.C for e in ests))
+        return real_batch(ests, *a, **kw)
+
+    def fit(self, *a, **kw):
+        fits.append(self.C)
+        return real_fit(self, *a, **kw)
+
+    monkeypatch.setattr(linear_model, "fit_newton_batch", batch)
+    monkeypatch.setattr(LogisticRegression, "fit", fit)
     pipe = Pipeline([("scale", StandardScaler()), ("clf", LogisticRegression(max_iter=20))])
-    gs = GridSearchCV(pipe, {"clf__C": [0.01, 100.0]},
-                      cv=KFold(n_splits=2, shuffle=True, random_state=5))
+    cv = KFold(n_splits=2, shuffle=True, random_state=5)
+    gs = GridSearchCV(pipe, {"clf__C": [0.01, 100.0]}, cv=cv)
     gs.fit(df, cols, label_col="label")
+    assert batches == [[0.01, 0.01, 100.0, 100.0]]  # one prefix group
+    assert fits == [gs.best_params_["clf__C"]]  # the refit only
     assert set(gs.best_params_) == {"clf__C"}
     assert len(gs.cv_results_["mean_test_score"]) == 2
-    assert np.isfinite(gs.cv_results_["mean_test_score"]).all()
+    scorer = check_scoring(pipe)
+    for ci, C in enumerate((0.01, 100.0)):
+        for fi, (train, test) in enumerate(cv.split(df)):
+            scaler = StandardScaler().fit(train, cols)
+            est = LogisticRegression(C=C, max_iter=20)
+            beta = solvers.newton(scaler.transform(train), cols, "label",
+                                  "logistic", **linear_model._solver_kwargs(est))
+            linear_model._set_fitted(est, beta[:4], beta[4], cols, "label")
+            want = score_estimator(scorer, est, scaler.transform(test), "label")
+            assert abs(gs.cv_results_[f"split{fi}_test_score"][ci] - want) < 1e-9
     # refit best estimator works end-to-end with step__param routing
     pred = gs.predict(df)
     assert pred.where(F.col("prediction").isNotNull()).count() == 400
@@ -514,7 +543,7 @@ def test_batched_newton_matches_per_fit_solvers(spark):
     grid = [(C, fi) for C in (0.1, 10.0) for fi in (0, 1)]
     ests = [LogisticRegression(C=C, tol=1e-10, max_iter=50) for C, _ in grid]
     fit_newton_batch(ests, df, cols, "label", fold_col="__fold",
-                     test_folds=[fi for _, fi in grid])
+                     train_mask=[[t != fi for _, fi in grid] for t in (0, 1)])
     for est, (C, fi) in zip(ests, grid):
         train = df.where(F.col("__fold") != fi)
         beta = solvers.newton(train, cols, "label", "logistic",
@@ -570,3 +599,27 @@ def test_grid_search_batches_eligible_candidates_only(spark, monkeypatch):
     scores = gs.cv_results_["mean_test_score"]
     assert len(scores) == 4 and np.isfinite(scores).all()
     assert scores[1] == scores[2]  # the duplicate newton C=1.0
+
+
+def test_grid_search_shuffle_split_stacks_splits(spark):
+    """A cv without a fold column (ShuffleSplit) is fitted over the
+    stacked-splits frame: each batched (candidate, split) score equals
+    a newton fit on that split's train rows scored on its test rows."""
+    from dask_ml_spark.functions.metrics import get_scorer, score_estimator
+    from dask_ml_spark.operators import solvers
+    from dask_ml_spark.operators.linear_model import _set_fitted, _solver_kwargs
+
+    df = _fold_frame(spark, n=600, seed=2).drop("__fold")
+    cols = ["a", "b", "c"]
+    cv = ShuffleSplit(n_splits=3, test_size=0.3, random_state=0)
+    gs = GridSearchCV(LogisticRegression(max_iter=20), {"C": [0.1, 10.0]},
+                      cv=cv, refit=False)
+    gs.fit(df, cols)
+    for ci, C in enumerate((0.1, 10.0)):
+        for fi, (train, test) in enumerate(cv.split(df)):
+            est = LogisticRegression(C=C, max_iter=20)
+            beta = solvers.newton(train, cols, "label", "logistic",
+                                  **_solver_kwargs(est))
+            _set_fitted(est, beta[:3], beta[3], cols, "label")
+            want = score_estimator(get_scorer("accuracy"), est, test, "label")
+            assert abs(gs.cv_results_[f"split{fi}_test_score"][ci] - want) < 1e-9

@@ -477,3 +477,38 @@ def test_sql_scalar_lit_legacy_parser_refuses_only_escapes(spark):
     finally:
         spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     assert sql_scalar_lit("it's") == "'it\\'s'"
+
+
+def test_get_spark_master_defaults_to_host_cores(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the local master is sized by the cores
+    this process may run on; the variable still overrides it."""
+    import os
+
+    from dask_ml_spark import _session
+
+    class Recorder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            self.conf["master"] = master
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    monkeypatch.setattr(_session.SparkSession, "builder", Recorder())
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    cores = len(os.sched_getaffinity(0))
+    conf = _session.get_spark()
+    assert conf["master"] == f"local[{cores}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(cores)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _session.get_spark()["master"] == "local[3]"
