@@ -18,7 +18,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dask_ml_spark.utils import ensure_min_partitions
+from dask_ml_spark.utils import ensure_min_partitions, local_frame
 
 TOKEN_RE = "[a-z0-9_]{2,}"
 MERSENNE_P = 2_147_483_647  # 2^31 - 1
@@ -744,7 +744,7 @@ def _components_local(edges: DataFrame) -> DataFrame:
     spark = edges.sparkSession
     pdf = edges.toPandas()
     if len(pdf) == 0:
-        return spark.createDataFrame([], "node long, cluster long")
+        return local_frame(spark, [], "node long, cluster long")
     # compact ids -> dense indices for an array-backed DSU
     nodes = pd.unique(pd.concat([pdf["src"], pdf["dst"]], ignore_index=True))
     idx = {int(v): i for i, v in enumerate(nodes)}
@@ -767,11 +767,8 @@ def _components_local(edges: DataFrame) -> DataFrame:
         v = int(nodes[i])
         if r not in comp_min or v < comp_min[r]:
             comp_min[r] = v
-    out = pd.DataFrame({
-        "node": [int(v) for v in nodes],
-        "cluster": [comp_min[r] for r in roots],
-    })
-    return spark.createDataFrame(out, "node long, cluster long")
+    out = [(int(v), comp_min[r]) for v, r in zip(nodes, roots)]
+    return local_frame(spark, out, "node long, cluster long")
 
 
 def _xor_agg():

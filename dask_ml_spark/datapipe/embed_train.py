@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_ml_spark.datapipe.dedup import tokens_expr
-from dask_ml_spark.utils import cut, ensure_min_partitions
+from dask_ml_spark.utils import cut, ensure_min_partitions, local_frame
 
 
 def top_vocabulary(df: DataFrame, text_col: str = "text",
@@ -177,8 +177,8 @@ def _coo_matmul(coo: DataFrame, key_col: str, lookup_col: str,
     Words with no COO row get a zero row."""
     spark = coo.sparkSession
     l = W.shape[1]
-    sketch = spark.createDataFrame(
-        [(w, [float(x) for x in W[i]]) for i, w in enumerate(words)],
+    sketch = local_frame(
+        spark, [(w, [float(x) for x in W[i]]) for i, w in enumerate(words)],
         f"{lookup_col} string, __w array<double>")
     Y = np.zeros((len(words), l))
     for r in _coo_matvec_frame(coo, key_col, lookup_col, val_col,
@@ -252,7 +252,7 @@ def train_static_embeddings(df: DataFrame, text_col: str = "text",
     # rebuild the vocab frame from the already-collected words (no
     # second lineage execution)
     spark = df.sparkSession
-    vocab_df = spark.createDataFrame([(w,) for w in words], "word string")
+    vocab_df = local_frame(spark, [(w,) for w in words], "word string")
     ppmi = ppmi_scores(cooccurrence_counts(
         df, text_col, window, vocab=vocab_df))
     if solver == "auto":
@@ -276,6 +276,6 @@ def train_static_embeddings(df: DataFrame, text_col: str = "text",
         E = U[:, :k] * np.sqrt(S[:k])[None, :]
     norms = np.linalg.norm(E, axis=1, keepdims=True)
     E = E / np.maximum(norms, 1e-12)
-    return spark.createDataFrame(
-        [(w, [float(v) for v in E[i]]) for i, w in enumerate(words)],
+    return local_frame(
+        spark, [(w, [float(v) for v in E[i]]) for i, w in enumerate(words)],
         "word string, embedding array<double>")

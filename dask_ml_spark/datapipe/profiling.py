@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dask_ml_spark.utils import is_numeric_field
+from dask_ml_spark.utils import is_numeric_field, local_frame
 
 PROFILE_SCHEMA = (
     "column string, n_rows long, n_nulls long, null_frac double, "
@@ -101,7 +101,7 @@ def profile_table(df: DataFrame, columns=None, approx_distinct: bool = True,
             rec = rec + (abs(hll - nd) <= max(3.0 * rsd * nd, 2.0),)
         out.append(rec)
     schema = PROFILE_SCHEMA + (", hll_ok boolean" if check_hll else "")
-    return df.sparkSession.createDataFrame(out, schema)
+    return local_frame(df.sparkSession, out, schema)
 
 
 def corpus_manifest(df, group_cols=("source",), text_col: str = "text",
@@ -349,7 +349,8 @@ def concentration_profile(df: DataFrame, group_col: str,
             ent += -s * math.log(s)
     top1 = totals[-1] / float(tot)
     ent_norm = (ent / math.log(k)) if k > 1 else None
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(k), int(tot), float(gini), float(hhi), float(ent),
           None if ent_norm is None else float(ent_norm), float(top1))],
         "k long, total long, gini double, hhi double, entropy double, "

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_ml_spark.plans.model_selection import _hash_bucket_expr
+from dask_ml_spark.utils import local_frame
 
 
 def stratified_sample(df: DataFrame, strata_col: str, fractions,
@@ -390,6 +391,7 @@ def kcenter_sample(df: DataFrame, k: int, vec_col: str = "embedding",
         out.append((r, row[0],
                     math.floor(float(row[2]) * 1e6 + 0.5) / 1e6))
     spark = df.sparkSession
-    return spark.createDataFrame(
-        out, f"round int, {id_col} {df.schema[id_col].dataType.simpleString()},"
-             " dist double")
+    return local_frame(
+        spark, out,
+        f"round int, {id_col} {df.schema[id_col].dataType.simpleString()},"
+        " dist double")

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_ml_spark.functions.vector import cosine_similarity, dot, norm2
+from dask_ml_spark.utils import local_frame
 
 
 def _dlit(v) -> str:
@@ -414,8 +415,8 @@ class IVFIndex(_IndexPersistence):
             probed = sorted({int(b) for b in order.ravel()})
             indexed = df.where(F.col(bucket_col).isin(probed)) \
                         .withColumnRenamed(bucket_col, "bucket")
-            spark = df.sparkSession
-            q = spark.createDataFrame(
+            q = local_frame(
+                df.sparkSession,
                 [(r[0], [float(v) for v in r[1]], int(b))
                  for r, row in zip(qrows, order) for b in row],
                 schema=f"{query_id_col} {queries.schema[query_id_col].dataType.simpleString()}, "

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import local_frame
+
 
 def _mg_summaries(df: DataFrame, col: str, capacity: int) -> DataFrame:
     """One capacity-bounded Misra-Gries counter set per partition via
@@ -90,7 +92,7 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 20,
     bound = n_total / (capacity + 1)
     if len(top) == k and top[-1]["freq"] > bound:
         spark = df.sparkSession
-        return spark.createDataFrame(top, schema=exact.schema)
+        return local_frame(spark, top, schema=exact.schema)
     if require_sketch:
         raise RuntimeError(
             f"heavy_hitters certificate failed: k-th frequency "

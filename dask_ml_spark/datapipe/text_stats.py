@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dask_ml_spark.datapipe.dedup import tokens_expr
-from dask_ml_spark.utils import ensure_min_partitions
+from dask_ml_spark.utils import ensure_min_partitions, local_frame
 
 # Tiny per-language stopword lists for the n-gram/stopword-ratio
 # language heuristic. Deliberately short + ASCII so the same literals
@@ -458,7 +458,8 @@ def bm25_topk(df: DataFrame, queries: dict, k: int = 10,
           .groupBy(id_col, "dl", "term").agg(F.count("*").alias("tf"))
           .localCheckpoint(eager=False))
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(qid, t.lower()) for qid, ts in queries.items() for t in set(ts)],
         "query_id string, term string")
     idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)

@@ -19,6 +19,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import local_frame
+
 EPS = 1e-15
 
 
@@ -244,7 +246,8 @@ def cohens_kappa(df: DataFrame, col_a: str, col_b: str,
         raise ValueError("cohens_kappa: both columns are the same "
                          "constant — kappa is undefined (p_e = 1)")
     kappa = (po - pe) / (1.0 - pe)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(n), len(classes), float(po), float(pe), float(kappa))],
         "n long, k_classes long, po double, pe double, kappa double")
 
@@ -282,8 +285,8 @@ def mcnemar_test(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         num = max(num, 0)
         chi2 = float(num * num) / float(bb + cc)
         p = normal_p2(math.sqrt(chi2))
-    return df.sparkSession.createDataFrame(
-        [(int(row["n"]), bb, cc, float(chi2), float(p))],
+    return local_frame(
+        df.sparkSession, [(int(row["n"]), bb, cc, float(chi2), float(p))],
         "n long, b_discordant long, c_discordant long, chi2 double, "
         "p_value double")
 
@@ -338,8 +341,8 @@ def cochrans_q(df: DataFrame, value_cols) -> DataFrame:
     q = float(num) / (float(k) * float(denom))
     dof = k - 1
     p = chi2_sf(q, dof)
-    return df.sparkSession.createDataFrame(
-        [(int(k), n, float(q), int(dof), float(p))],
+    return local_frame(
+        df.sparkSession, [(int(k), n, float(q), int(dof), float(p))],
         "k long, n long, q_stat double, dof long, p_value double")
 
 
@@ -409,8 +412,8 @@ def expected_calibration_error(df: DataFrame, label_col: str = "label",
         gap = abs(float(r["__pos"]) / nb - r["__sp"] / nb)
         ece += (nb / n) * gap
         mce = max(mce, gap)
-    return df.sparkSession.createDataFrame(
-        [(int(n), int(n_bins), float(ece), float(mce))],
+    return local_frame(
+        df.sparkSession, [(int(n), int(n_bins), float(ece), float(mce))],
         "n long, n_bins long, ece double, mce double")
 
 
@@ -468,7 +471,8 @@ def brier_decomposition(df: DataFrame, label_col: str = "label",
         res += nb * (ybk - ybar) * (ybk - ybar)
         wbv += r["__spp"] - nb * pbar * pbar
         wbc += r["__spy"] - nb * pbar * ybk
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(n), int(n_bins), brier / n, rel / n, res / n,
           ybar * (1.0 - ybar), wbv / n, wbc / n)],
         "n long, n_bins long, brier double, reliability double, "

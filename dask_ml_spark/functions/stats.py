@@ -69,7 +69,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dask_ml_spark.utils import (bounded_head, ensure_min_partitions,
-                                 sql_scalar_lit)
+                                 local_frame, sql_scalar_lit)
 
 SQRT_TWO_PI = 2.5066282746310002  # sqrt(2*pi), literal-folded
 
@@ -431,10 +431,8 @@ def _ks_driver_row(spark, rows, n1: float, n2: float) -> DataFrame:
         f2 += r["__c2"]
         d = max(d, abs(f1 / n1 - f2 / n2))
     lam = d * math.sqrt(n1 * n2 / (n1 + n2))
-    return spark.createDataFrame([{
-        "n1": int(n1), "n2": int(n2), "d_stat": float(d),
-        "p_value": float(ks_p(lam)),
-    }]).select("n1", "n2", "d_stat", "p_value")
+    return local_frame(spark, [(int(n1), int(n2), float(d), float(ks_p(lam)))],
+                       "n1 long, n2 long, d_stat double, p_value double")
 
 
 def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
@@ -508,12 +506,12 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
             shift = max(0.0, abs(u - mu) - 0.5)
             z_v = math.copysign(shift, u - mu) / math.sqrt(var)
             p_v = normal_p2(z_v)
-        return df.sparkSession.createDataFrame([{
-            "n1": int(n1), "n2": int(n2), "u_stat": float(u),
-            "z": float(z_v), "p_value": float(p_v),
-            "rank_biserial": float(2.0 * u / (n1 * n2) - 1.0),
-        }]).select("n1", "n2", "u_stat", "z", "p_value",
-                   "rank_biserial")
+        return local_frame(
+            df.sparkSession,
+            [(int(n1), int(n2), float(u), float(z_v), float(p_v),
+              float(2.0 * u / (n1 * n2) - 1.0))],
+            "n1 long, n2 long, u_stat double, z double, p_value double, "
+            "rank_biserial double")
     g = prefix_sum(g, "__v", "__c2", "__b2")
     t = F.col("__c1") + F.col("__c2")
     agg = g.agg(
@@ -613,10 +611,9 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
             shift = max(0.0, abs(w - mu) - 0.5)
             z_v = math.copysign(shift, w - mu) / math.sqrt(var)
             p_v = normal_p2(z_v)
-        return df.sparkSession.createDataFrame([{
-            "n": int(n), "w_plus": float(w), "z": float(z_v),
-            "p_value": float(p_v),
-        }]).select("n", "w_plus", "z", "p_value")
+        return local_frame(
+            df.sparkSession, [(int(n), float(w), float(z_v), float(p_v))],
+            "n long, w_plus double, z double, p_value double")
     g = prefix_sum(g, "__v", "__c", "__b")
     agg = g.agg(
         F.sum(F.col("__cp")
@@ -728,7 +725,8 @@ def welch_ttest(df: DataFrame, value_col: str, group_col: str,
         ft = (fm1 - fm2) / math.sqrt(fse2)
         fdof = (fse2 * fse2) / ((fv1 / fn1) ** 2 / (fn1 - 1.0)
                                 + (fv2 / fn2) ** 2 / (fn2 - 1.0))
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [(int(fn1), int(fn2), float(fm1 - fm2), float(ft),
               float(fdof), float(min(1.0, 2.0 * t_sf(abs(ft), fdof))))],
             "n1 long, n2 long, mean_diff double, t_stat double, "
@@ -853,7 +851,7 @@ def benjamini_hochberg(df: DataFrame, p_col: str = "p_value",
         out_rows.append((float(r["__p"]), float(min(1.0, q))))
         seen -= r["__c"]
     spark = df.sparkSession
-    qmap = spark.createDataFrame(out_rows, "__p double, q_value double")
+    qmap = local_frame(spark, out_rows, "__p double, q_value double")
     joined = df.join(F.broadcast(qmap), pc.eqNullSafe(F.col("__p")),
                      "left").drop("__p")
     return joined.withColumn(
@@ -955,7 +953,8 @@ def pairwise_welch(df: DataFrame, value_col: str, group_col: str,
         suffix = q
         p["q_value"] = float(min(1.0, q))
         p["reject"] = p["q_value"] <= alpha
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(p["group_a"], p["group_b"], p["n_a"], p["n_b"],
           p["mean_diff"], p["t_stat"], p["dof"], p["p_value"],
           p["q_value"], p["reject"], p["valid"]) for p in pairs],
@@ -1115,7 +1114,8 @@ def bootstrap_ci(df: DataFrame, value_col: str, key_cols,
     bb = len(means)
     k_lo = max(1, math.ceil(alpha / 2.0 * bb))
     k_hi = min(bb, math.ceil((1.0 - alpha / 2.0) * bb))
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(row["n"]), float(mean),
           float(means[k_lo - 1]), float(means[k_hi - 1]), int(n_boot))],
         "n long, mean double, ci_lo double, ci_hi double, n_boot long")
@@ -1215,7 +1215,8 @@ def bootstrap_ci_by(df: DataFrame, value_col: str, key_cols, by,
         out.append((*gkey, n, float(mean), float(means[k_lo - 1]),
                     float(means[k_hi - 1]), int(n_boot), True))
     by_schema = ", ".join(f"{c} string" for c in by)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         out, f"{by_schema}, n long, mean double, ci_lo double, "
         "ci_hi double, n_boot long, valid boolean").orderBy(*by)
 
@@ -1316,7 +1317,8 @@ def anova_oneway(df: DataFrame, value_col: str, group_col: str,
     p = (f_sf(f_stat, float(dfb), float(dfw)) if tail == "exact"
          else chi2_sf(dfb * f_stat, dfb))
     eta2 = ss_between / (ss_between + ss_within)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(k, int(n), float(f_stat), dfb, dfw, float(p), float(eta2))],
         "k long, n long, f_stat double, df_between long, "
         "df_within long, p_value double, eta_squared double")
@@ -1458,7 +1460,8 @@ def changepoint_mean(df: DataFrame, value_col: str, order_col: str,
     # split_value = the RIGHT edge of the split bucket
     split_value = lo + (sb + 1) * (width / bins)
     p = min(1.0, (bins - 1) * (2.0 * normal_sf(abs(t))))
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(float(split_value), float(t), float(p), int(bn1), int(bn2),
           float(m1), float(m2))],
         "split_value double, t_stat double, p_value double, "
@@ -1562,7 +1565,8 @@ def trend_test(df: DataFrame, value_col: str, order_col: str,
     cnt = len(slopes)
     s_lo, s_hi = slopes[(cnt - 1) // 2], slopes[cnt // 2]
     sen = s_lo + (s_hi - s_lo) / 2.0  # the oracle replays this form
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(n_rows), b, int(s), float(z), float(p), float(sen))],
         "n long, n_buckets long, s_stat long, z double, "
         "p_value double, sen_slope double")
@@ -1659,8 +1663,8 @@ def isotonic_fit_binned(df: DataFrame, x_col: str, y_col: str,
         out.append((b, lo + b * unit, lo + (b + 1) * unit,
                     int(r["__n"]), float(sign * mean(idx, idx)),
                     float(sign * fit[idx])))
-    return df.sparkSession.createDataFrame(
-        out, "bucket long, x_lo double, x_hi double, n long, "
+    return local_frame(
+        df.sparkSession, out, "bucket long, x_lo double, x_hi double, n long, "
         "y_mean double, y_fit double").orderBy("bucket")
 
 
@@ -1755,8 +1759,8 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str,
             rank_rows[t].append((r["__v"], cums[t] + (r["__c"] + 1.0) / 2.0))
             cums[t] += r["__c"]
         rank_frames = {
-            t: F.broadcast(spark.createDataFrame(
-                rank_rows[t], f"__{t} double, __r{t} double"))
+            t: F.broadcast(local_frame(
+                spark, rank_rows[t], f"__{t} double, __r{t} double"))
             for t in ("a", "b")}
     else:
         g = prefix_sum(g, "__v", "__c", "__before", group_col="__t")
@@ -1886,8 +1890,8 @@ def spearman_rho_binned(df: DataFrame, col_a: str, col_b: str,
                          "(or collapses to one bucket) — rho undefined")
     rho = float(num) / math.sqrt(float(d1) * float(d2))
     p = normal_p2(abs(rho) * math.sqrt(n - 1.0))
-    return df.sparkSession.createDataFrame(
-        [(int(n), float(rho), float(p))],
+    return local_frame(
+        df.sparkSession, [(int(n), float(rho), float(p))],
         "n long, rho double, p_value double")
 
 
@@ -1952,8 +1956,8 @@ def kendall_tau_binned(df: DataFrame, col_a: str, col_b: str,
         [(r["__ba"], r["__bb"], r["__w"]) for r in cells], bins,
         "kendall_tau_binned")
     p = normal_p2(z)
-    return df.sparkSession.createDataFrame(
-        [(int(n), float(tau), float(p))],
+    return local_frame(
+        df.sparkSession, [(int(n), float(tau), float(p))],
         "n long, tau double, p_value double")
 
 
@@ -2098,7 +2102,8 @@ def jonckheere_terpstra(df: DataFrame, value_col: str, group_col: str,
         [(r["__ba"], r["__bb"], r["__w"]) for r in cells],
         max(bins, len(order)), "jonckheere_terpstra")
     p = normal_p2(z)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(n), len(order), float(tau), float(z), float(p))],
         "n long, k long, tau double, z double, p_value double")
 
@@ -2198,8 +2203,8 @@ def hoeffding_d(df: DataFrame, col_a: str, col_b: str,
     else:
         p = min(1.0, _HOEFFD_C0 * 2.0 * normal_sf(
             math.sqrt((x + _HOEFFD_MU) / _HOEFFD_LAM1)))
-    return df.sparkSession.createDataFrame(
-        [(int(n), float(d), float(p))],
+    return local_frame(
+        df.sparkSession, [(int(n), float(d), float(p))],
         "n long, d double, p_value double")
 
 
@@ -2334,7 +2339,8 @@ def kruskal_wallis(df: DataFrame, value_col: str, group_col: str,
     h_c = h / corr
     dof = k - 1
     p = chi2_sf(h_c, dof)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(k), int(n), float(h_c), int(dof), float(corr),
           float(p))],
         "k long, n long, h_stat double, dof long, "
@@ -2422,7 +2428,8 @@ def friedman_test(df: DataFrame, value_col: str, block_col: str,
     q_c = q / corr
     dof = k - 1
     p = chi2_sf(q_c, dof)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(k), int(b), float(q_c), int(dof), float(corr),
           float(p))],
         "k long, b long, q_stat double, dof long, "
@@ -2524,8 +2531,8 @@ def hodges_lehmann_shift(df: DataFrame, value_col: str,
             d_med = d
             break
     shift = d_med * unit
-    return df.sparkSession.createDataFrame(
-        [(int(n1), int(n2), float(shift))],
+    return local_frame(
+        df.sparkSession, [(int(n1), int(n2), float(shift))],
         "n1 long, n2 long, shift double")
 
 
@@ -2599,8 +2606,8 @@ def partial_correlation(df: DataFrame, col_a: str, col_b: str,
     t = r_p * math.sqrt(dof / (1.0 - r_p * r_p))
     p = min(1.0, 2.0 * (t_sf(abs(t), float(dof)) if tail == "exact"
                         else normal_sf(abs(t))))
-    return df.sparkSession.createDataFrame(
-        [(n, g, float(r_p), float(t), int(dof), float(p))],
+    return local_frame(
+        df.sparkSession, [(n, g, float(r_p), float(t), int(dof), float(p))],
         "n long, g_controls long, r double, t_stat double, dof long, "
         "p_value double")
 
@@ -2717,8 +2724,8 @@ def seasonal_decompose(df: DataFrame, value_col: str, order_col: str,
         # seasonal is periodic — report it wherever its position has
         # a mean, even at edges where trend is NULL
         out.append((int(b), int(ns[i]), x, t, s, resid))
-    return df.sparkSession.createDataFrame(
-        out, "bucket long, n long, x double, trend double, "
+    return local_frame(
+        df.sparkSession, out, "bucket long, n long, x double, trend double, "
         "seasonal double, resid double").orderBy("bucket")
 
 
@@ -2768,7 +2775,8 @@ def benford_test(df: DataFrame, value_col: str,
         chi2 += (o - e) * (o - e) / e
         mad += abs(o / float(n) - p)
     mad /= 9.0
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(n), float(chi2), float(chi2_sf(chi2, 8)), float(mad))],
         "n long, chi2 double, p_value double, mad double")
 
@@ -2831,11 +2839,10 @@ def mutual_information(df: DataFrame, col_a: str, col_b: str,
     hb = -sum((c / n) * math.log(c / n) for c in
               sorted(col_tot.values(), reverse=True))
     denom = math.sqrt(ha * hb)
-    return df.sparkSession.createDataFrame([{
-        "mi": float(mi),
-        "mi_normalized": float(mi / denom) if denom > 0 else 0.0,
-        "n": int(n),
-    }]).select("mi", "mi_normalized", "n")
+    return local_frame(
+        df.sparkSession,
+        [(float(mi), float(mi / denom) if denom > 0 else 0.0, int(n))],
+        "mi double, mi_normalized double, n long")
 
 
 def corr_matrix(df: DataFrame, cols) -> DataFrame:
@@ -3016,11 +3023,10 @@ def chi2_independence(df: DataFrame, col_a: str, col_b: str,
     # p-value saturates at corpus scale (everything is "significant"
     # at n=10^9); V stays interpretable
     vdenom = n * min(len(row_tot) - 1, len(col_tot) - 1)
-    return df.sparkSession.createDataFrame([{
-        "chi2": float(chi2), "dof": int(dof),
-        "p_value": float(chi2_sf(chi2, dof)),
-        "cramers_v": float(math.sqrt(chi2 / vdenom)),
-    }]).select("chi2", "dof", "p_value", "cramers_v")
+    return local_frame(
+        df.sparkSession, [(float(chi2), int(dof), float(chi2_sf(chi2, dof)),
+                           float(math.sqrt(chi2 / vdenom)))],
+        "chi2 double, dof long, p_value double, cramers_v double")
 
 
 def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
@@ -3084,7 +3090,7 @@ def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
                          int(r["__c"]),
                          0.0 if dead else math.exp(cumln)))
             before += r["__n"]
-        return df.sparkSession.createDataFrame(rows, out_schema)
+        return local_frame(df.sparkSession, rows, out_schema)
     # over the cap: fall through (one wasted bounded collect on a
     # frame we now know is prefix-machine-sized — the rare case)
     # grand total from the prefix machine's own subtotal collect —
@@ -3193,12 +3199,11 @@ def log_rank(df: DataFrame, duration_col: str, event_col: str,
             p_v = normal_p2(z_v)
         else:
             z_v, p_v = 0.0, 1.0
-        return spark.createDataFrame([{
-            "n1": int(n1t), "n2": int(n2t), "observed1": float(o1),
-            "expected1": float(e1), "z": float(z_v),
-            "chi2": float(z_v * z_v), "p_value": float(p_v),
-        }]).select("n1", "n2", "observed1", "expected1", "z", "chi2",
-                   "p_value")
+        return local_frame(
+            spark, [(int(n1t), int(n2t), float(o1), float(e1), float(z_v),
+                     float(z_v * z_v), float(p_v))],
+            "n1 long, n2 long, observed1 double, expected1 double, "
+            "z double, chi2 double, p_value double")
 
     g, head = bounded_head(g, max_driver_rows)
     if head is not None:
@@ -3360,7 +3365,7 @@ def nelson_aalen(df: DataFrame, duration_col: str, event_col: str,
                          int(r["__c"]), h, se,
                          max(0.0, h - z * se), h + z * se))
             before += r["__n"]
-        return df.sparkSession.createDataFrame(rows, out_schema)
+        return local_frame(df.sparkSession, rows, out_schema)
     # totals via the prefix machine's subtotal collect (integer counts
     # — bit-identical; one cumsum pass, no cross join; r13 optimization)
     g, (ntot_t,) = prefix_sum(g, "__t", "__n", "__before",
@@ -3524,7 +3529,8 @@ def jarque_bera(df: DataFrame, value_col: str) -> DataFrame:
     kurt = m4 / (m2 * m2)
     jb = n / 6.0 * (skew * skew + (kurt - 3.0) ** 2 / 4.0)
     p = chi2_sf(jb, 2)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(int(n), float(m), float(m2), float(skew), float(kurt),
           float(jb), float(p))],
         "n long, mean double, variance double, skewness double, "
@@ -3597,7 +3603,8 @@ def welch_anova(df: DataFrame, value_col: str, group_col: str,
         p = f_sf(f_star, float(dfb), dof2)
     else:
         p = chi2_sf(dfb * f_star, dfb)
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(k, int(n), float(f_star), dfb, float(dof2), float(p))],
         "k long, n long, f_stat double, df_between long, "
         "df_within_welch double, p_value double")
@@ -3769,7 +3776,6 @@ def ansari_bradley(df: DataFrame, value_col: str, group_col: str,
     else:
         z_v = (w - e) / math.sqrt(var)
         p_v = normal_p2(z_v)
-    return df.sparkSession.createDataFrame([{
-        "n1": n1, "n2": n2, "w_stat": float(w), "z": float(z_v),
-        "p_value": float(p_v),
-    }]).select("n1", "n2", "w_stat", "z", "p_value")
+    return local_frame(
+        df.sparkSession, [(n1, n2, float(w), float(z_v), float(p_v))],
+        "n1 long, n2 long, w_stat double, z double, p_value double")

@@ -141,17 +141,14 @@ class CountVectorizer(BaseEstimator, TransformerMixin):
         distributed ``vocabulary_frame_`` when fit_distributed was
         used (shuffle join on token — AQE broadcasts it when small),
         else broadcasts the driver-side dictionary."""
-        from dask_ml_spark.utils import ensure_min_partitions
+        from dask_ml_spark.utils import ensure_min_partitions, local_frame
 
         spark = df.sparkSession
         if getattr(self, "vocabulary_frame_", None) is not None:
             vocab_df = self.vocabulary_frame_.select("token", "token_id")
         else:
-            vocab_df = F.broadcast(
-                spark.createDataFrame(
-                    [(t, i) for t, i in self.vocabulary_.items()], ["token", "token_id"]
-                )
-            )
+            vocab_df = F.broadcast(local_frame(
+                spark, list(self.vocabulary_.items()), "token string, token_id long"))
         toks = tokenize(F.col(self.input_col), self.lowercase, self.token_pattern)
         # spread before the tokenize+explode+partial-agg: a small
         # parquet input scans as 1 partition, serializing the

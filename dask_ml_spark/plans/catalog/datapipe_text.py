@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from dask_ml_spark.datapipe import dedup as DD
 from dask_ml_spark.datapipe import text_stats as TS
+from dask_ml_spark.utils import local_frame
 from ._shared import (
     SQL_KNN_GRAPH_TOPK,
     TOKEN_RE_SQL,
@@ -832,8 +833,9 @@ def q_outlink_domain_profile(spark, sf_dir):
                 F.col("text"), F.lit(" see https://site"),
                 (F.col("doc_id") % 20).cast("string"),
                 F.lit(".example.com/page and https://cdn.shared.net/x"))))
-    block = docs.sparkSession.createDataFrame(
-        [("site3.example.com",), ("site7.example.com",)], ["domain"])
+    block = local_frame(
+        docs.sparkSession, [("site3.example.com",), ("site7.example.com",)],
+        "domain string")
     kept = filter_blocked_domains(docs, block)
     return (outlink_domains(kept)
             .groupBy("domain")
@@ -1103,8 +1105,8 @@ def q_bpe_merges(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     merges, _ = bpe_train(docs, n_merges=6)
-    return spark.createDataFrame(
-        [(i, l, r, c) for i, (l, r, c) in enumerate(merges)],
+    return local_frame(
+        spark, [(i, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "rank int, pair_left string, pair_right string, pair_count bigint")
 
 

@@ -7,6 +7,7 @@ documented in catalog/_shared.py.
 """
 from __future__ import annotations
 from pyspark.sql import functions as F
+from dask_ml_spark.utils import local_frame
 from ._shared import _t  # noqa: F401
 
 def q_quality_drift(spark, sf_dir):
@@ -22,7 +23,8 @@ def q_quality_drift(spark, sf_dir):
     d = distribution_drift(docs.where(F.col("lang") == "en"),
                            docs.where(F.col("lang") == "de"),
                            "n_chars", bins=16, lo=0.0, hi=2048.0)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(round(d["psi"], 6), round(d["kl"], 6), round(d["tvd"], 6),
           d["n_a"], d["n_b"])],
         "psi double, kl double, tvd double, n_a long, n_b long")

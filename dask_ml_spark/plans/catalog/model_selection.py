@@ -8,6 +8,7 @@ documented in catalog/_shared.py.
 from __future__ import annotations
 import math
 from pyspark.sql import functions as F
+from dask_ml_spark.utils import local_frame
 from ._shared import TOKEN_RE_SQL, _dsum, _t  # noqa: F401
 
 def q_hash_split_train_stats(spark, sf_dir):
@@ -75,11 +76,11 @@ def q_incremental_search_best(spark, sf_dir):
         deterministic_by=["l_orderkey", "l_linenumber",
                           "l_extendedprice", "l_discount"])
     sha.fit(li, ["l_extendedprice", "l_discount"], label_col="label")
-    return spark.createDataFrame([{
-        "best_alpha": float(sha.best_params_["alpha"]),
-        "best_score": math.floor(sha.best_score_ * 1e6 + 0.5) / 1e6,
-        "n_models": int(sha.n_models_),
-    }]).select("best_alpha", "best_score", "n_models")
+    return local_frame(
+        spark, [(float(sha.best_params_["alpha"]),
+                 math.floor(sha.best_score_ * 1e6 + 0.5) / 1e6,
+                 int(sha.n_models_))],
+        "best_alpha double, best_score double, n_models long")
 
 
 def q_chi2_scores(spark, sf_dir):
@@ -95,8 +96,8 @@ def q_chi2_scores(spark, sf_dir):
         "lang", F.col("n_chars").cast("double").alias("nchars"),
         F.size(tokens_expr(F.col("text"))).cast("double").alias("ntokens"))
     s = chi2(x, ["nchars", "ntokens"], "lang")
-    return spark.createDataFrame(
-        [(c, float(v)) for c, v in s.items()],
+    return local_frame(
+        spark, [(c, float(v)) for c, v in s.items()],
         "feature string, chi2 double")
 
 
@@ -204,8 +205,8 @@ def q_variance_threshold(spark, sf_dir):
     rows = [(c, round(float(v), 2) if c == "l_extendedprice" else float(v),
              int(keep)) for c, v, keep in
             zip(vt.columns_, vt.variances_, vt.support_)]
-    return spark.createDataFrame(
-        rows, "feature string, variance double, kept long")
+    return local_frame(
+        spark, rows, "feature string, variance double, kept long")
 
 
 SQL_VARIANCE_THRESHOLD = """
@@ -247,8 +248,8 @@ def q_select_kbest(spark, sf_dir):
         x, columns=[f"d{i}" for i in range(8)], label_col="label")
     rows = [(c, float(s), int(keep)) for c, s, keep in
             zip(kb.columns_, kb.scores_, kb.support_)]
-    return spark.createDataFrame(
-        rows, "feature string, f_stat double, selected long")
+    return local_frame(
+        spark, rows, "feature string, f_stat double, selected long")
 
 
 def _sql_select_kbest(dims: int = 8, k: int = 3) -> str:
@@ -288,7 +289,7 @@ def q_f_regression_scores(spark, sf_dir):
     scores = f_regression(li, ["l_quantity", "l_discount", "l_tax"],
                           "l_extendedprice")
     rows = [(c, float(v)) for c, v in scores.items()]
-    return spark.createDataFrame(rows, "feature string, f_stat double")
+    return local_frame(spark, rows, "feature string, f_stat double")
 
 
 SQL_F_REGRESSION_SCORES = """
@@ -368,11 +369,10 @@ def q_grid_search_best(spark, sf_dir):
         n_jobs=6,
     )
     gs.fit(scaled, cols, label_col="label")
-    return spark.createDataFrame([{
-        "best_C": float(gs.best_params_["C"]),
-        "best_score": float(gs.best_score_),
-        "n_candidates": int(len(gs.cv_results_["mean_test_score"])),
-    }])
+    return local_frame(
+        spark, [(float(gs.best_params_["C"]), float(gs.best_score_),
+                 len(gs.cv_results_["mean_test_score"]))],
+        "best_C double, best_score double, n_candidates long")
 
 
 RIDGE_GRID_C = [0.1, 10.0]
@@ -398,15 +398,12 @@ def q_ridge_grid_search(spark, sf_dir):
         cv=HashKFold(n_splits=3, key_cols=["l_orderkey", "l_linenumber"]),
         refit=False, n_jobs=6)
     gs.fit(li, ["l_quantity", "l_discount"], label_col="label")
-    rows = [
-        {"C": float(p["C"]), "mean_r2": round(float(s), 6)}
-        for p, s in zip(gs.cv_results_["params"],
-                        gs.cv_results_["mean_test_score"])
-    ]
-    best = max(r["mean_r2"] for r in rows)
-    for r in rows:
-        r["is_best"] = r["mean_r2"] == best
-    return spark.createDataFrame(rows).select("C", "mean_r2", "is_best")
+    rows = [(float(p["C"]), round(float(s), 6))
+            for p, s in zip(gs.cv_results_["params"],
+                            gs.cv_results_["mean_test_score"])]
+    best = max(r2 for _, r2 in rows)
+    return local_frame(spark, [(c, r2, r2 == best) for c, r2 in rows],
+                       "C double, mean_r2 double, is_best boolean")
 
 
 def _sql_ridge_grid_search() -> str:
@@ -489,11 +486,9 @@ def q_train_test_split_sizes(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     train, test = train_test_split(li, test_size=0.25, random_state=42)
     n_train, n_test = train.count(), test.count()
-    return spark.createDataFrame([{
-        "n_train": int(n_train),
-        "n_test": int(n_test),
-        "test_frac": float(n_test) / float(n_train + n_test),
-    }])
+    return local_frame(
+        spark, [(n_test, n_train, float(n_test) / float(n_train + n_test))],
+        "n_test long, n_train long, test_frac double")
 
 
 HB_ALPHAS = [1e6, 1e7, 3e7, 1e8, 3e8, 1e9, 3e9, 1e10, 3e10]
@@ -572,20 +567,14 @@ def q_hyperband_best(spark, sf_dir):
     hb.fit(li, ["l_extendedprice", "l_discount"], label_col="label")
     winner = next(s for s, sha in hb._bracket_searches
                   if sha.best_score_ == hb.best_score_)
-    rows = []
-    for (s, sha), meta in zip(hb._bracket_searches,
-                              hb.metadata_["brackets"]):
-        rows.append({
-            "bracket": int(s),
-            "n_models": int(meta["n_models"]),
-            "partial_fit_calls": int(meta["partial_fit_calls"]),
-            "best_alpha": float(sha.best_params_["alpha"]),
-            "best_score": math.floor(sha.best_score_ * 1e6 + 0.5) / 1e6,
-            "is_winner": bool(s == winner),
-        })
-    return spark.createDataFrame(rows).select(
-        "bracket", "n_models", "partial_fit_calls",
-        "best_alpha", "best_score", "is_winner")
+    rows = [(int(s), int(meta["n_models"]), int(meta["partial_fit_calls"]),
+             float(sha.best_params_["alpha"]),
+             math.floor(sha.best_score_ * 1e6 + 0.5) / 1e6, bool(s == winner))
+            for (s, sha), meta in zip(hb._bracket_searches,
+                                      hb.metadata_["brackets"])]
+    return local_frame(
+        spark, rows, "bracket long, n_models long, partial_fit_calls long, "
+        "best_alpha double, best_score double, is_winner boolean")
 
 
 def _sql_incremental_search_best() -> str:
@@ -883,15 +872,12 @@ def q_pipeline_grid_search(spark, sf_dir):
         cv=HashKFold(n_splits=3, key_cols=["l_orderkey", "l_linenumber"]),
         refit=False, n_jobs=6)
     gs.fit(li, ["l_quantity", "l_discount"], label_col="label")
-    rows = [
-        {"C": float(p["ridge__C"]), "mean_r2": round(float(s), 6)}
-        for p, s in zip(gs.cv_results_["params"],
-                        gs.cv_results_["mean_test_score"])
-    ]
-    best = max(r["mean_r2"] for r in rows)
-    for r in rows:
-        r["is_best"] = r["mean_r2"] == best
-    return spark.createDataFrame(rows).select("C", "mean_r2", "is_best")
+    rows = [(float(p["ridge__C"]), round(float(s), 6))
+            for p, s in zip(gs.cv_results_["params"],
+                            gs.cv_results_["mean_test_score"])]
+    best = max(r2 for _, r2 in rows)
+    return local_frame(spark, [(c, r2, r2 == best) for c, r2 in rows],
+                       "C double, mean_r2 double, is_best boolean")
 
 
 def _sql_pipeline_grid_search() -> str:

@@ -10,6 +10,7 @@ import math
 from pyspark.sql import functions as F
 from dask_ml_spark.datapipe import dedup as DD
 from dask_ml_spark.datapipe import text_stats as TS
+from dask_ml_spark.utils import local_frame
 from ._shared import LINEITEM_FEATS, TOKEN_RE_SQL, _dsum, _sql_lang_score, _t  # noqa: F401
 
 def _dsum_wide(col):
@@ -47,7 +48,9 @@ def q_standard_scaler_fit(spark, sf_dir):
         # var_price); the O(1)-magnitude variances stay raw
         v = float(sc.var_[i])
         row[f"var_{c}"] = round(v, 2) if c == "l_extendedprice" else v
-    return spark.createDataFrame([row]).select(*sorted(row))
+    cols = sorted(row)
+    return local_frame(spark, [tuple(row[c] for c in cols)],
+                       ", ".join(f"{c} double" for c in cols))
 
 
 SQL_STANDARD_SCALER_FIT = "SELECT " + ", ".join(
@@ -87,7 +90,9 @@ def q_minmax_scaler_fit(spark, sf_dir):
     for i, c in enumerate(LINEITEM_FEATS):
         row[f"min_{c}"] = float(sc.data_min_[i])
         row[f"max_{c}"] = float(sc.data_max_[i])
-    return spark.createDataFrame([row]).select(*sorted(row))
+    cols = sorted(row)
+    return local_frame(spark, [tuple(row[c] for c in cols)],
+                       ", ".join(f"{c} double" for c in cols))
 
 
 SQL_MINMAX_SCALER_FIT = "SELECT " + ", ".join(
@@ -100,12 +105,11 @@ def q_robust_scaler_fit(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem")
     sc = RobustScaler().fit(li, ["l_quantity", "l_extendedprice"])
-    return spark.createDataFrame([{
-        "center_l_quantity": float(sc.center_[0]),
-        "iqr_l_quantity": float(sc.scale_[0]),
-        "center_l_extendedprice": float(sc.center_[1]),
-        "iqr_l_extendedprice": float(sc.scale_[1]),
-    }]).select("center_l_quantity", "iqr_l_quantity", "center_l_extendedprice", "iqr_l_extendedprice")
+    return local_frame(
+        spark, [(float(sc.center_[0]), float(sc.scale_[0]),
+                 float(sc.center_[1]), float(sc.scale_[1]))],
+        "center_l_quantity double, iqr_l_quantity double, "
+        "center_l_extendedprice double, iqr_l_extendedprice double")
 
 
 SQL_ROBUST_SCALER_FIT = """
@@ -125,11 +129,12 @@ def q_simple_imputer_fit(spark, sf_dir):
     # exact=True: the DuckDB oracle is quantile_cont; the API default is
     # percentile_approx (matches reference approximate-quantile semantics)
     med_imp = SimpleImputer(strategy="median", exact=True).fit(li, ["l_quantity"])
-    return spark.createDataFrame([{
-        "mean_l_quantity": float(mean_imp.statistics_["l_quantity"]),
-        "mean_l_discount": float(mean_imp.statistics_["l_discount"]),
-        "median_l_quantity": float(med_imp.statistics_["l_quantity"]),
-    }]).select("mean_l_quantity", "mean_l_discount", "median_l_quantity")
+    return local_frame(
+        spark, [(float(mean_imp.statistics_["l_quantity"]),
+                 float(mean_imp.statistics_["l_discount"]),
+                 float(med_imp.statistics_["l_quantity"]))],
+        "mean_l_quantity double, mean_l_discount double, "
+        "median_l_quantity double")
 
 
 SQL_SIMPLE_IMPUTER_FIT = """
@@ -149,9 +154,9 @@ def q_label_encoder_fit(spark, sf_dir):
 
     o = _t(spark, sf_dir, "orders")
     le = LabelEncoder().fit(o, "o_orderpriority")
-    return spark.createDataFrame(
-        [(v, i) for i, v in enumerate(le.classes_.tolist())], ["label", "code"]
-    ).select(F.col("label"), F.col("code").cast("int").alias("code"))
+    return local_frame(
+        spark, [(v, i) for i, v in enumerate(le.classes_.tolist())],
+        "label string, code int")
 
 
 SQL_LABEL_ENCODER_FIT = """
@@ -293,26 +298,18 @@ def q_gaussian_nb_fit(spark, sf_dir):
     nb = GaussianNB(var_smoothing=0.0).fit(
         li, ["l_quantity", "l_extendedprice", "l_discount"], label_col="l_returnflag"
     )
-    rows = []
-    for ci, cls in enumerate(nb.classes_.tolist()):
-        rows.append({
-            "l_returnflag": cls,
-            "n": int(nb.class_count_[ci]),
-            "mean_quantity": float(nb.theta_[ci][0]),
-            "mean_price": float(nb.theta_[ci][1]),
-            "mean_discount": float(nb.theta_[ci][2]),
-            "var_quantity": float(nb.var_[ci][0]),
-            # extendedprice variance is ~4e8: cross-engine drift (~2e-7
-            # abs) sits within 4x of the rounded gate's 1e-6 granularity,
-            # so snap it to 2 decimals on both sides
-            "var_price": round(float(nb.var_[ci][1]), 2),
-            "var_discount": float(nb.var_[ci][2]),
-        })
-    return spark.createDataFrame(rows).select(
-        "l_returnflag", F.col("n").cast("long").alias("n"),
-        "mean_quantity", "mean_price", "mean_discount",
-        "var_quantity", "var_price", "var_discount",
-    )
+    # extendedprice variance is ~4e8: cross-engine drift (~2e-7 abs)
+    # sits within 4x of the rounded gate's 1e-6 granularity, so snap it
+    # to 2 decimals on both sides
+    rows = [(cls, int(nb.class_count_[ci]),
+             *(float(v) for v in nb.theta_[ci][:3]),
+             float(nb.var_[ci][0]), round(float(nb.var_[ci][1]), 2),
+             float(nb.var_[ci][2]))
+            for ci, cls in enumerate(nb.classes_.tolist())]
+    return local_frame(
+        spark, rows, "l_returnflag string, n long, mean_quantity double, "
+        "mean_price double, mean_discount double, var_quantity double, "
+        "var_price double, var_discount double")
 
 
 SQL_GAUSSIAN_NB_FIT = """
@@ -363,8 +360,8 @@ def q_ols_newton_fit(spark, sf_dir):
     )
     m = LinearRegression(penalty="none", solver="newton", max_iter=2).fit(
         li, ["x1", "x2"])
-    return spark.createDataFrame(
-        [(float(m.coef_[0]), float(m.coef_[1]), float(m.intercept_))],
+    return local_frame(
+        spark, [(float(m.coef_[0]), float(m.coef_[1]), float(m.intercept_))],
         "coef_x1 double, coef_x2 double, intercept double")
 
 
@@ -403,7 +400,8 @@ def q_logistic_newton_fit(spark, sf_dir):
     )
     m = LogisticRegression(penalty="none", solver="newton",
                            max_iter=25, tol=1e-14).fit(li, ["x"])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(float(m.coef_[0]), float(m.intercept_))], "coef_x double, intercept double")
 
 
@@ -430,7 +428,8 @@ def q_poisson_newton_fit(spark, sf_dir):
     )
     m = PoissonRegression(solver="newton", max_iter=25, tol=1e-14,
                           C=float("inf")).fit(li, ["x"])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(float(m.coef_[0]), float(m.intercept_))], "coef_x double, intercept double")
 
 
@@ -468,8 +467,8 @@ def q_incremental_pca_fit(spark, sf_dir):
     n = float(ipca.n_samples_seen_)
     row = ([round(float(v) * n, 2) for v in ipca.mean_]
            + [round(float(ipca.explained_variance_.sum()), 2), n])
-    return spark.createDataFrame(
-        [tuple(row)],
+    return local_frame(
+        spark, [tuple(row)],
         ", ".join(f"sum_{c} double" for c in cols) + ", total_var double, n double")
 
 
@@ -839,7 +838,7 @@ def q_mcc_return_rule(spark, sf_dir):
         (F.col("l_discount") >= 0.05).cast("double").alias("prediction"))
     mcc = matthews_corrcoef(labeled)
     r6v = math.floor(mcc * 1e6 + 0.5) / 1e6
-    return spark.createDataFrame([(float(r6v),)], "mcc double")
+    return local_frame(spark, [(float(r6v),)], "mcc double")
 
 
 def _sql_mcc_return_rule() -> str:
@@ -993,13 +992,11 @@ def q_quantile_transformer_fit(spark, sf_dir):
     # round 4: linear interpolation between 0.01-grid values at one-decimal
     # rank fractions yields exact multiples of 1e-3, so the 1e-4 grid is
     # tie-free while the engines' interpolation arithmetic differs ~1e-11
-    rows = [
-        {"idx": i,
-         "q_quantity": round(float(qt.quantiles_[i, 0]), 4),
-         "q_price": round(float(qt.quantiles_[i, 1]), 4)}
-        for i in range(qt.quantiles_.shape[0])
-    ]
-    return spark.createDataFrame(rows)
+    rows = [(i, round(float(qt.quantiles_[i, 1]), 4),
+             round(float(qt.quantiles_[i, 0]), 4))
+            for i in range(qt.quantiles_.shape[0])]
+    return local_frame(spark, rows,
+                       "idx long, q_price double, q_quantity double")
 
 
 SQL_QUANTILE_TRANSFORMER_FIT = """
@@ -1062,13 +1059,10 @@ def q_quantile_transformer_fit_approx(spark, sf_dir):
     qt = QuantileTransformer(n_quantiles=11, accuracy=250_000).fit(
         li, ["l_quantity", "l_extendedprice"]
     )
-    rows = [
-        {"idx": i,
-         "q_quantity": float(qt.quantiles_[i, 0]),
-         "q_price": float(qt.quantiles_[i, 1])}
-        for i in range(qt.quantiles_.shape[0])
-    ]
-    return spark.createDataFrame(rows)
+    rows = [(i, float(qt.quantiles_[i, 1]), float(qt.quantiles_[i, 0]))
+            for i in range(qt.quantiles_.shape[0])]
+    return local_frame(spark, rows,
+                       "idx long, q_price double, q_quantity double")
 
 
 def q_one_hot_encoder(spark, sf_dir):
@@ -1282,15 +1276,12 @@ def q_gmm_params(spark, sf_dir):
         init_variances=[[1.0] * 3] * 3,
     ).fit(scaled, KMEANS_COLS)
     r6 = lambda x: math.floor(float(x) * 1e6 + 0.5) / 1e6  # noqa: E731
-    rows = [
-        {"component": j,
-         "weight": r6(gm.weights_[j]),
-         **{f"mu{i}": r6(gm.means_[j][i]) for i in range(3)},
-         **{f"var{i}": r6(gm.covariances_[j][i]) for i in range(3)}}
-        for j in range(3)
-    ]
-    return spark.createDataFrame(rows).select(
-        "component", "weight", "mu0", "mu1", "mu2", "var0", "var1", "var2")
+    rows = [(j, r6(gm.weights_[j]), *(r6(v) for v in gm.means_[j][:3]),
+             *(r6(v) for v in gm.covariances_[j][:3]))
+            for j in range(3)]
+    return local_frame(
+        spark, rows, "component long, weight double, mu0 double, "
+        "mu1 double, mu2 double, var0 double, var1 double, var2 double")
 
 
 def sql_gmm_params() -> str:
@@ -1544,10 +1535,8 @@ def q_logistic_saturated_fit(spark, sf_dir):
         (F.col("l_returnflag") == "R").cast("double").alias("label"),
     )
     m = LogisticRegression(penalty="none", max_iter=200, tol=1e-12).fit(li, ["x"])
-    return spark.createDataFrame([{
-        "coef_x": float(m.coef_[0]),
-        "intercept": float(m.intercept_),
-    }]).select("coef_x", "intercept")
+    return local_frame(spark, [(float(m.coef_[0]), float(m.intercept_))],
+                       "coef_x double, intercept double")
 
 
 SQL_LOGISTIC_SATURATED_FIT = """
@@ -1928,12 +1917,11 @@ def q_truncated_svd_variance(spark, sf_dir):
         (F.col("l_extendedprice") / F.lit(100000.0)).alias("y"),
     )
     svd = TruncatedSVD(n_components=2).fit(li, ["x", "y"])
-    return spark.createDataFrame([{
-        "sv0": float(svd.singular_values_[0]),
-        "sv1": float(svd.singular_values_[1]),
-        "explained_var0": float(svd.explained_variance_[0]),
-        "explained_var1": float(svd.explained_variance_[1]),
-    }]).select("sv0", "sv1", "explained_var0", "explained_var1")
+    return local_frame(
+        spark, [(*(float(v) for v in svd.singular_values_[:2]),
+                 *(float(v) for v in svd.explained_variance_[:2]))],
+        "sv0 double, sv1 double, explained_var0 double, "
+        "explained_var1 double")
 
 
 # closed-form 2×2 eigensystem of the uncentered Gramian; explained
@@ -2479,11 +2467,9 @@ def q_poisson_regression_fit(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem").withColumn("label", F.col("l_quantity"))
     pr = PoissonRegression(max_iter=15).fit(li, ["l_discount", "l_tax"], label_col="label")
-    return spark.createDataFrame([{
-        "coef_discount": float(pr.coef_[0]),
-        "coef_tax": float(pr.coef_[1]),
-        "intercept": float(pr.intercept_),
-    }])
+    return local_frame(
+        spark, [(float(pr.coef_[0]), float(pr.coef_[1]), float(pr.intercept_))],
+        "coef_discount double, coef_tax double, intercept double")
 
 
 def q_calibration_curve(spark, sf_dir):
@@ -2541,10 +2527,11 @@ def q_precision_recall_f1(spark, sf_dir):
         (F.col("l_quantity") > 25).cast("double").alias("prediction"),
     )
     m = precision_recall_f1(li)
-    return spark.createDataFrame([{
-        "precision": m["precision"], "recall": m["recall"], "f1": m["f1"],
-        "tp": int(m["tp"]), "fp": int(m["fp"]), "fn": int(m["fn"]),
-    }]).select("precision", "recall", "f1", "tp", "fp", "fn")
+    return local_frame(
+        spark, [(m["precision"], m["recall"], m["f1"],
+                 int(m["tp"]), int(m["fp"]), int(m["fn"]))],
+        "precision double, recall double, f1 double, "
+        "tp long, fp long, fn long")
 
 
 SQL_PRECISION_RECALL_F1 = """
@@ -2579,7 +2566,7 @@ def q_roc_auc_eval(spark, sf_dir):
         (F.col("l_extendedprice") / (F.lit(1.0) + F.col("l_discount"))).alias("score"),
     )
     auc = roc_auc_score(li, "label", "score")
-    return spark.createDataFrame([{"auc": float(auc)}]).select("auc")
+    return local_frame(spark, [(float(auc),)], "auc double")
 
 
 SQL_ROC_AUC_EVAL = """
@@ -2616,7 +2603,7 @@ def q_roc_auc_binned(spark, sf_dir):
         (F.col("l_extendedprice") / (F.lit(1.0) + F.col("l_discount"))).alias("score"),
     )
     auc = roc_auc_score(li, "label", "score", bins=4096)
-    return spark.createDataFrame([{"auc": float(auc)}]).select(
+    return local_frame(spark, [(float(auc),)], "auc double").select(
         F.round(F.col("auc"), 9).alias("auc"))
 
 
@@ -2661,10 +2648,8 @@ def q_poisson_saturated_fit(spark, sf_dir):
     )
     pr = PoissonRegression(C=float("inf"), max_iter=100, tol=1e-12).fit(
         li, ["x"], label_col="label")
-    return spark.createDataFrame([{
-        "coef_x": float(pr.coef_[0]),
-        "intercept": float(pr.intercept_),
-    }]).select("coef_x", "intercept")
+    return local_frame(spark, [(float(pr.coef_[0]), float(pr.intercept_))],
+                       "coef_x double, intercept double")
 
 
 SQL_POISSON_SATURATED_FIT = """

@@ -384,11 +384,6 @@ class BaseIncrementalSearchCV(BaseEstimator):
         self.executor_fit_count_ = fit_accum.value
         return self
 
-    def _score(self, est, X, y):
-        if self.scoring is not None and callable(self.scoring):
-            return float(self.scoring(est, X, y))
-        return float(est.score(X, y))
-
     def _make_results(self, models, calls):
         rows = {
             "model_id": [], "params": [], "partial_fit_calls": [], "test_score": [],

@@ -373,6 +373,8 @@ def ewma_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
         z = (e - mu) / math.sqrt(vv)
         out.append((r["ws"], int(r["n"]), xbar, e, z,
                     abs(z) > level))
+    # not utils.local_frame: its Arrow path would read these collected
+    # naive datetimes in the session zone, not the process's local zone
     return df.sparkSession.createDataFrame(
         out, "window_start timestamp, n long, mean double, "
              "ewma double, z double, signal boolean")

@@ -8,7 +8,8 @@ The plan section is the only code that reads a Spark plan (by node
 class, via ``_plan_nodes``) and owns the decisions made from it:
 spreading (``ensure_min_partitions``, ``right_size_cv_cache``), lineage
 cuts (``cut``), the bounded driver probe (``bounded_head``) and the
-plan lint (``assert_scalable``).
+plan lint (``assert_scalable``). It also owns how a driver-computed
+result becomes a frame (``local_frame``).
 """
 
 from __future__ import annotations
@@ -197,10 +198,27 @@ def _num_partitions(df: DataFrame) -> int | None:
 
 
 def _is_materialized(df: DataFrame) -> bool:
-    """Whether ``df`` is a bare scan of a materialized RDD
-    (localCheckpoint / createDataFrame output)."""
+    """Whether ``df`` is a bare scan of materialized data: a
+    localCheckpoint's RDD or a ``local_frame``'s driver-side rows."""
     return (df._jdf.queryExecution().analyzed().getClass().getSimpleName()
-            == "LogicalRDD")
+            in ("LogicalRDD", "LocalRelation"))
+
+
+def local_frame(spark, rows, schema) -> DataFrame:
+    """The one way a driver-computed result (a fit summary, a test
+    statistic, a rank map) becomes a frame: ``rows`` (tuples) under
+    ``schema`` (DDL string or StructType) go through one Arrow table.
+    The plan is a ``LocalRelation``, so running it starts no Python
+    worker (a list of rows is pickled into a PythonRDD). Not through
+    pandas: its Arrow conversion turns NaN into NULL."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (T._parse_datatype_string(schema) if isinstance(schema, str)
+              else schema)
+    table = pa.Table.from_pylist([dict(zip(struct.names, r)) for r in rows],
+                                 schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)
 
 
 def cut(df: DataFrame) -> DataFrame:

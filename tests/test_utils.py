@@ -56,7 +56,7 @@ def test_cut_is_idempotent(spark, monkeypatch):
     # abstract facade and instance lookups resolve on the classic class
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from dask_ml_spark.utils import cut
+    from dask_ml_spark.utils import cut, local_frame
 
     calls = []
     orig = DataFrame.localCheckpoint
@@ -70,33 +70,63 @@ def test_cut_is_idempotent(spark, monkeypatch):
     once = cut(x)
     assert cut(once) is once
     assert len(calls) == 1
+    # a driver-built frame is already materialized: no checkpoint job
+    local = local_frame(spark, [(1.0,)], "v double")
+    assert cut(local) is local
+    assert len(calls) == 1
+
+
+@pytest.mark.parametrize("rows, ddl, want_rows", [
+    ([(float("nan"), 1.0), (None, 2.0)], "a double, b double", None),
+    ([], "a long, b double", None),
+    ([(1, 2)], "a double, b long", [(1.0, 2)]),
+    ([([1.0, float("nan")], "x", True), ([], None, None)],
+     "v array<double>, s string, f boolean", None),
+])
+def test_local_frame_matches_list_path(spark, rows, ddl, want_rows):
+    """local_frame equals createDataFrame from a list in schema and
+    values (NaN stays NaN, None becomes NULL), with a LocalRelation
+    plan. The list path rejects an int in a double column, so that
+    case is checked against the float row."""
+    from dask_ml_spark.utils import local_frame
+
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(want_rows or rows, ddl)
+    assert got.schema == want.schema
+    assert repr(got.collect()) == repr(want.collect())
+    assert (got._jdf.queryExecution().analyzed().getClass().getSimpleName()
+            == "LocalRelation")
 
 
 def test_plan_inspection_has_one_owner():
-    """Each engine idiom has one owner file (None: no file may name
+    """Each engine idiom has its owner files (none: no file may name
     it). utils.py alone reads Spark plans: the plan walker, the
-    materialized-frame check and the bounded probe live there.
-    functions/stats.py alone writes the closed-form p-value tails, each
-    once, rendered per engine, so no module keeps a hand copy."""
+    materialized-frame check and the bounded probe live there. It also
+    alone turns driver results into frames (``local_frame``);
+    streaming/drift.py is exempt, because the Arrow path would read its
+    naive datetimes in the session zone. functions/stats.py alone
+    writes the closed-form p-value tails, each once, rendered per
+    engine, so no module keeps a hand copy."""
     import pathlib
 
     import dask_ml_spark
 
     owners = [
-        ("utils.py",
+        (("utils.py",),
          ("queryExecution()", "executedPlan()", "getSimpleName()")),
-        (None, ("_is_checkpoint_scan", "_behind_exchange", "_bounded_head")),
-        (None, ("normal_sf_expr", "_normal_sf_sql", "ks_p_expr",
-                "_ks_p_sql", "_ad_poly", "ad_p_expr", "_ad_p_sql",
-                "_pois1_weight_expr", "_pois1_weight_sql", "_chi2_sf_sql")),
-        ("functions/stats.py", ("0.2316419", "_KS_TERMS")),
+        ((), ("_is_checkpoint_scan", "_behind_exchange", "_bounded_head")),
+        ((), ("normal_sf_expr", "_normal_sf_sql", "ks_p_expr",
+              "_ks_p_sql", "_ad_poly", "ad_p_expr", "_ad_p_sql",
+              "_pois1_weight_expr", "_pois1_weight_sql", "_chi2_sf_sql")),
+        (("functions/stats.py",), ("0.2316419", "_KS_TERMS")),
+        (("utils.py", "streaming/drift.py"), ("createDataFrame(",)),
     ]
     root = pathlib.Path(dask_ml_spark.__file__).parent
     offenders = []
     for path in sorted(root.rglob("*.py")):
         rel, text = path.relative_to(root).as_posix(), path.read_text()
         offenders += [f"{rel}: {word}" for owner, words in owners
-                      if rel != owner for word in words if word in text]
+                      if rel not in owner for word in words if word in text]
     assert offenders == []
 
 
