@@ -495,6 +495,30 @@ def f1_score(df: DataFrame, label_col: str = "label",
     return precision_recall_f1(df, label_col, prediction_col, pos_label)["f1"]
 
 
+def _u_term(p, neg_below, neg):
+    """One score's share of the rank-sum U: its positives outrank the
+    negatives below it and tie with half of those at it."""
+    return p * (neg_below + 0.5 * neg)
+
+
+def _auc(u, n_pos, n_neg) -> float:
+    if not n_pos or not n_neg:
+        raise ValueError("roc_auc_score needs both classes present")
+    return float(u / (n_pos * n_neg))
+
+
+def _auc_driver(rows) -> float:
+    """AUC from (__s, __p, __neg) count rows, accumulated in ascending
+    __s order."""
+    u = neg_below = n1 = n0 = 0.0
+    for r in sorted(rows, key=lambda r: r["__s"]):
+        u += _u_term(r["__p"], neg_below, r["__neg"])
+        neg_below += r["__neg"]
+        n1 += r["__p"]
+        n0 += r["__neg"]
+    return _auc(u, n1, n0)
+
+
 def roc_auc_score(df: DataFrame, label_col: str = "label",
                   score_col: str = "score", bins: int | None = None,
                   max_driver_rows: int = 65536) -> float:
@@ -517,68 +541,44 @@ def roc_auc_score(df: DataFrame, label_col: str = "label",
     score — |error| ≤ the pair mass within a bin, O(1/K) for smooth
     score distributions.
     """
+    from dask_ml_spark.datapipe.packing import prefix_sum
+    from dask_ml_spark.functions.stats import spark_sql
+    from dask_ml_spark.utils import bounded_head
+
     # null/NaN scores or labels carry no ranking information — drop them
     # up front (both paths; a null score would otherwise poison the
     # range partitioning / bucket sort)
-    sc = F.col(score_col).cast("double")
-    df = df.where(sc.isNotNull() & ~F.isnan(sc) & F.col(label_col).isNotNull())
+    s = F.col(score_col).cast("double")
+    df = df.where(s.isNotNull() & ~F.isnan(s) & F.col(label_col).isNotNull())
     if bins is not None:
-        s = F.col(score_col).cast("double")
         lohi = df.agg(F.min(s).alias("lo"), F.max(s).alias("hi")).collect()[0]
         lo, hi = float(lohi["lo"]), float(lohi["hi"])
         width = (hi - lo) or 1.0
-        bucket = F.least(F.lit(bins - 1),
-                         F.floor((s - F.lit(lo)) / F.lit(width) * F.lit(bins))).cast("int")
-        rows = (df.groupBy(bucket.alias("b"))
-                .agg(F.count("*").cast("double").alias("c"),
-                     F.sum((F.col(label_col) == 1).cast("double")).alias("p"))
-                .collect())
-        rows.sort(key=lambda r: r["b"])
-        u = neg_below = n1 = n0 = 0.0
-        for r in rows:
-            p, neg = r["p"], r["c"] - r["p"]
-            u += p * (neg_below + 0.5 * neg)
-            neg_below += neg
-            n1 += p
-            n0 += neg
-        if not n1 or not n0:
-            raise ValueError("roc_auc_score needs both classes present")
-        return float(u / (n1 * n0))
-
-    from dask_ml_spark.datapipe.packing import prefix_sum
-    from dask_ml_spark.utils import bounded_head
-
+        s = F.least(F.lit(bins - 1),
+                    F.floor((s - F.lit(lo)) / F.lit(width) * F.lit(bins))).cast("int")
     g = (
-        df.groupBy(F.col(score_col).cast("double").alias("__s"))
+        df.groupBy(s.alias("__s"))
         .agg(F.count("*").cast("double").alias("__c"),
              F.sum((F.col(label_col) == 1).cast("double")).alias("__p"))
         .withColumn("__neg", F.col("__c") - F.col("__p"))
     )
+    if bins is not None:
+        # at most K bucket rows: always the driver loop
+        return _auc_driver(g.collect())
     # bounded driver path (stats.py's kaplan/ks pattern): when the
     # distinct-score frame fits, cumsum driver-side — U is a sum of
     # integer products < 2^53, bit-identical to the prefix machine;
     # the cut lets the fallback reuse the materialized frame
     g, head = bounded_head(g, max_driver_rows)
     if head is not None:
-        head.sort(key=lambda r: r["__s"])
-        u = neg_below = n1 = n0 = 0.0
-        for r in head:
-            u += r["__p"] * (neg_below + 0.5 * r["__neg"])
-            neg_below += r["__neg"]
-            n1 += r["__p"]
-            n0 += r["__neg"]
-        if not n1 or not n0:
-            raise ValueError("roc_auc_score needs both classes present")
-        return float(u / (n1 * n0))
+        return _auc_driver(head)
     withcum = prefix_sum(g, "__s", "__neg", "__neg_below")
     row = withcum.agg(
-        F.sum(F.col("__p") * (F.col("__neg_below") + 0.5 * F.col("__neg"))).alias("u"),
+        F.sum(F.expr(spark_sql(_u_term, "__p", "__neg_below", "__neg"))).alias("u"),
         F.sum("__p").alias("n1"),
         F.sum("__neg").alias("n0"),
     ).collect()[0]
-    if not row["n1"] or not row["n0"]:
-        raise ValueError("roc_auc_score needs both classes present")
-    return float(row["u"] / (row["n1"] * row["n0"]))
+    return _auc(row["u"], row["n1"], row["n0"])
 
 
 def r2_score(df: DataFrame, label_col: str = "label", prediction_col: str = "prediction") -> float:

@@ -34,7 +34,11 @@ normal CDF, |error| < 7.5e-8), each written ONCE as plain Python
 arithmetic: a float argument gives the driver-side value, and
 spark_sql/duckdb_sql render the same formula as SQL, so all engines
 share one operation order by construction (both get DOUBLE literals:
-DuckDB types a bare decimal literal as DECIMAL). Exact
+DuckDB types a bare decimal literal as DECIMAL). Each dual-path
+test's per-row terms and final assembly (and Welch's t) are written
+once the same way: the driver fast path calls the formula on floats,
+the distributed path renders it with spark_sql; only the
+accumulation (driver loop or prefix_sum) and the guards differ. Exact
 small-sample tails (even-dof χ²; the F and Student-t tails via the
 incomplete-beta continued fraction) are driver-side scalars behind
 the large-dof defaults.
@@ -118,24 +122,26 @@ def _duckdb_lit(v) -> str:
     return r if "e" in r else r + "e0"
 
 
-def _render(formula, arg: str, lit, params) -> str:
-    if not arg.replace("_", "").isalnum():
-        arg = f"({arg})"
-    return formula(_Sql(arg, lit), *params).text
+def _render(formula, args, lit) -> str:
+    def arg(a):
+        if not isinstance(a, str):
+            return a
+        return _Sql(a if a.replace("_", "").isalnum() else f"({a})", lit)
+    return formula(*map(arg, args)).text
 
 
-def spark_sql(formula, arg: str, *params) -> str:
-    """``formula`` over the Spark SQL expression ``arg`` as Spark SQL
-    text, parsed by ONE ``F.expr`` (a Column built term by term costs a
-    py4j round trip per node). The text repeats ``arg`` at every use
-    (25× in ks_p), so bind a compound argument to a column first."""
-    return _render(formula, arg, lambda v: sql_scalar_lit(float(v)),
-                   params)
+def spark_sql(formula, *args) -> str:
+    """``formula`` as Spark SQL text, parsed by ONE ``F.expr`` (a
+    Column built term by term costs a py4j round trip per node). Each
+    ``str`` argument is a Spark SQL expression; any other value passes
+    through as a Python value. The text repeats an argument at every
+    use (25× in ks_p), so bind a compound argument to a column first."""
+    return _render(formula, args, lambda v: sql_scalar_lit(float(v)))
 
 
-def duckdb_sql(formula, arg: str, *params) -> str:
-    """``formula`` over the DuckDB expression ``arg``, as oracle SQL."""
-    return _render(formula, arg, _duckdb_lit, params)
+def duckdb_sql(formula, *args) -> str:
+    """``formula`` over DuckDB expressions, as oracle SQL."""
+    return _render(formula, args, _duckdb_lit)
 
 
 def _call(name, py):
@@ -152,6 +158,10 @@ _exp = _call("exp", math.exp)
 _sqrt = _call("sqrt", math.sqrt)
 _least = _call("least", min)
 _greatest = _call("greatest", max)
+_ln = _call("ln", math.log)
+# Java's Math.signum: ±0 and NaN map to themselves
+_signum = _call("signum", lambda x: (x if x == 0.0 or x != x
+                                     else math.copysign(1.0, x)))
 
 
 def _where(cond, then, other):
@@ -259,11 +269,11 @@ def pois1_weight(u):
 
 
 def _two_group_kept(df: DataFrame, value_col: str, group_col: str,
-                    groups) -> tuple[DataFrame, object, object]:
-    """The filtered two-sample frame — (__v double, __g) rows with
+                    groups, by=()) -> tuple[DataFrame, object, object]:
+    """The filtered two-sample frame — (__v double, __g, *by) rows with
     NULL/NaN values dropped and only the two groups kept (a narrow
     projection; downstream aggregates push both the filter and the
-    2-column ReadSchema to the scan). groups=(a, b) names the two
+    narrow ReadSchema to the scan). groups=(a, b) names the two
     samples; None infers them (a bounded 3-row collect that raises
     unless exactly two)."""
     if groups is None:
@@ -283,7 +293,7 @@ def _two_group_kept(df: DataFrame, value_col: str, group_col: str,
     v = F.col(value_col).cast("double")
     kept = (df.where(v.isNotNull() & ~F.isnan(v)
                      & F.col(group_col).isin([g1, g2]))
-            .select(v.alias("__v"), F.col(group_col).alias("__g")))
+            .select(v.alias("__v"), F.col(group_col).alias("__g"), *by))
     return kept, g1, g2
 
 
@@ -313,6 +323,16 @@ def _nonempty_guard(n1: Column, n2: Column, passthrough: Column,
         (n1 <= 0) | (n2 <= 0) | n1.isNull() | n2.isNull(),
         F.raise_error(F.lit(f"{what}: {msg}"))
     ).otherwise(passthrough)
+
+
+def _ks_gap(f1, f2, n1, n2):
+    """|F1 − F2| at one value, from the inclusive cumulative counts."""
+    return abs(f1 / n1 - f2 / n2)
+
+
+def _ks_lambda(d, n1, n2):
+    """The Kolmogorov tail's argument λ = D·√(n1·n2/(n1+n2))."""
+    return d * _sqrt(n1 * n2 / (n1 + n2))
 
 
 def ks_2sample(df: DataFrame, value_col: str, group_col: str,
@@ -401,14 +421,12 @@ def ks_2sample(df: DataFrame, value_col: str, group_col: str,
     # the value is bit-identical to the old F.sum over the output)
     g, (n1_t, n2_t) = prefix_sum(g, "__v", ["__c1", "__c2"],
                                  ["__b1", "__b2"], with_totals=True)
-    diff = F.abs((F.col("__b1") + F.col("__c1")) / F.lit(n1_t)
-                 - (F.col("__b2") + F.col("__c2")) / F.lit(n2_t))
+    diff = F.expr(spark_sql(_ks_gap, "__b1 + __c1", "__b2 + __c2",
+                            n1_t, n2_t))
     agg = (g.agg(F.max(diff).alias("d_stat"))
            .withColumn("n1_d", F.lit(n1_t))
            .withColumn("n2_d", F.lit(n2_t)))
-    lam = (F.col("d_stat")
-           * F.sqrt(F.col("n1_d") * F.col("n2_d")
-                    / (F.col("n1_d") + F.col("n2_d"))))
+    lam = F.expr(spark_sql(_ks_lambda, "d_stat", "n1_d", "n2_d"))
     def grd(c):
         return _nonempty_guard(F.col("n1_d"), F.col("n2_d"), c,
                                "ks_2sample")
@@ -429,10 +447,38 @@ def _ks_driver_row(spark, rows, n1: float, n2: float) -> DataFrame:
     for r in rows:
         f1 += r["__c1"]
         f2 += r["__c2"]
-        d = max(d, abs(f1 / n1 - f2 / n2))
-    lam = d * math.sqrt(n1 * n2 / (n1 + n2))
+        d = max(d, _ks_gap(f1, f2, n1, n2))
+    lam = _ks_lambda(d, n1, n2)
     return local_frame(spark, [(int(n1), int(n2), float(d), float(ks_p(lam)))],
                        "n1 long, n2 long, d_stat double, p_value double")
+
+
+def _rank_z(stat, moments, *aggs):
+    """Continuity-corrected normal z of a rank statistic whose null
+    (mean, variance) is ``moments(*aggs)``: |stat − mean| shrinks by
+    0.5 (not past zero); a variance ≤ 0 (all tied) gives z = 0."""
+    mu, var = moments(*aggs)
+    d = stat - mu
+    return _where(var <= 0.0, lambda: 0.0,
+                  lambda: (_signum(d) * _greatest(0.0, abs(d) - 0.5)
+                           / _sqrt(var)))
+
+
+def _rank_p(z, moments, *aggs):
+    """Two-sided normal p of _rank_z's z; a variance ≤ 0 gives 1."""
+    return _where(moments(*aggs)[1] <= 0.0, lambda: 1.0,
+                  lambda: normal_p2(z))
+
+
+def _mwu_moments(n1, n2, ties):
+    """U's null mean n1·n2/2 and tie-corrected variance."""
+    n = n1 + n2
+    return (n1 * n2 / 2.0,
+            n1 * n2 / 12.0 * ((n + 1.0) - ties / (n * (n - 1.0))))
+
+
+def _rank_biserial(u, n1, n2):
+    return 2.0 * u / (n1 * n2) - 1.0
 
 
 def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
@@ -496,20 +542,12 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
             tt = c1 + c2
             ties += tt * tt * tt - tt
         u = u2 / 2.0  # halving an exactly-converted double is exact
-        n = n1 + n2
-        mu = n1 * n2 / 2.0
-        var = (n1 * n2 / 12.0
-               * ((n + 1.0) - ties / (n * (n - 1.0))))
-        if var <= 0.0:
-            z_v, p_v = 0.0, 1.0
-        else:
-            shift = max(0.0, abs(u - mu) - 0.5)
-            z_v = math.copysign(shift, u - mu) / math.sqrt(var)
-            p_v = normal_p2(z_v)
+        z_v = _rank_z(u, _mwu_moments, n1, n2, ties)
         return local_frame(
             df.sparkSession,
-            [(int(n1), int(n2), float(u), float(z_v), float(p_v),
-              float(2.0 * u / (n1 * n2) - 1.0))],
+            [(int(n1), int(n2), float(u), float(z_v),
+              float(_rank_p(z_v, _mwu_moments, n1, n2, ties)),
+              float(_rank_biserial(u, n1, n2)))],
             "n1 long, n2 long, u_stat double, z double, p_value double, "
             "rank_biserial double")
     g = prefix_sum(g, "__v", "__c2", "__b2")
@@ -521,26 +559,26 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
         F.sum("__c2").alias("n2_d"),
         F.sum(t * t * t - t).alias("ties_d"))
     n1, n2 = F.col("n1_d"), F.col("n2_d")
-    n = n1 + n2
-    u = F.col("u_d")
-    mu = n1 * n2 / 2.0
-    var = (n1 * n2 / 12.0
-           * ((n + 1.0) - F.col("ties_d") / (n * (n - 1.0))))
-    # continuity correction shrinks |U - mu| by 0.5 (not past zero)
-    shift = F.greatest(F.lit(0.0), F.abs(u - mu) - 0.5)
-    z = F.when(var <= 0.0, F.lit(0.0)).otherwise(
-        F.signum(u - mu) * shift / F.sqrt(var))
-    agg, z = agg.withColumn("__z", z), F.col("__z")
-    p = F.when(var <= 0.0, F.lit(1.0)).otherwise(
-        F.expr(spark_sql(normal_p2, "__z")))
+    aggs = ("n1_d", "n2_d", "ties_d")
+    agg = agg.withColumn(
+        "__z", F.expr(spark_sql(_rank_z, "u_d", _mwu_moments, *aggs)))
+
     def grd(c):
         return _nonempty_guard(n1, n2, c, "mann_whitney_u")
 
     return agg.select(
         n1.cast("long").alias("n1"), n2.cast("long").alias("n2"),
-        grd(u).alias("u_stat"), grd(z).alias("z"),
-        grd(p).alias("p_value"),
-        grd(2.0 * u / (n1 * n2) - 1.0).alias("rank_biserial"))
+        grd(F.col("u_d")).alias("u_stat"), grd(F.col("__z")).alias("z"),
+        grd(F.expr(spark_sql(_rank_p, "__z", _mwu_moments, *aggs)))
+        .alias("p_value"),
+        grd(F.expr(spark_sql(_rank_biserial, "u_d", "n1_d", "n2_d")))
+        .alias("rank_biserial"))
+
+
+def _wsr_moments(n, ties):
+    """W⁺'s null mean n(n+1)/4 and tie-corrected variance."""
+    return (n * (n + 1.0) / 4.0,
+            (n * (n + 1.0) * (2.0 * n + 1.0)) / 24.0 - ties / 48.0)
 
 
 def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
@@ -602,15 +640,8 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
         # tie sums. z/p assembly is float either way, so results
         # stay bit-comparable cross-engine.
         w = w2 / 2.0
-        mu = n * (n + 1) / 4.0
-        var = (n * (n + 1.0) * (2.0 * n + 1.0)) / 24.0 \
-            - ties / 48.0
-        if var <= 0.0:
-            z_v, p_v = 0.0, 1.0
-        else:
-            shift = max(0.0, abs(w - mu) - 0.5)
-            z_v = math.copysign(shift, w - mu) / math.sqrt(var)
-            p_v = normal_p2(z_v)
+        z_v = _rank_z(w, _wsr_moments, n, ties)
+        p_v = _rank_p(z_v, _wsr_moments, n, ties)
         return local_frame(
             df.sparkSession, [(int(n), float(w), float(z_v), float(p_v))],
             "n long, w_plus double, z double, p_value double")
@@ -623,16 +654,9 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
         F.sum(F.col("__c") * F.col("__c") * F.col("__c")
               - F.col("__c")).alias("ties_d"))
     n = F.col("n_d")
-    w = F.col("w_d")
-    mu = n * (n + 1.0) / 4.0
-    var = (n * (n + 1.0) * (2.0 * n + 1.0)) / 24.0 \
-        - F.col("ties_d") / 48.0
-    shift = F.greatest(F.lit(0.0), F.abs(w - mu) - 0.5)
-    z = F.when(var <= 0.0, F.lit(0.0)).otherwise(
-        F.signum(w - mu) * shift / F.sqrt(var))
-    agg, z = agg.withColumn("__z", z), F.col("__z")
-    p = F.when(var <= 0.0, F.lit(1.0)).otherwise(
-        F.expr(spark_sql(normal_p2, "__z")))
+    agg = agg.withColumn("__z", F.expr(
+        spark_sql(_rank_z, "w_d", _wsr_moments, "n_d", "ties_d")))
+    p = F.expr(spark_sql(_rank_p, "__z", _wsr_moments, "n_d", "ties_d"))
     guard = F.when(
         n.isNull() | (n < 1),
         F.raise_error(F.lit("wilcoxon_signed_rank: no nonzero "
@@ -642,9 +666,46 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
     # of the loud error (the _nonempty_guard pruning rule)
     return agg.select(
         F.coalesce(guard.cast("long"), n.cast("long")).alias("n"),
-        F.coalesce(guard, w).alias("w_plus"),
-        F.coalesce(guard, z).alias("z"),
+        F.coalesce(guard, F.col("w_d")).alias("w_plus"),
+        F.coalesce(guard, F.col("__z")).alias("z"),
         F.coalesce(guard, p).alias("p_value"))
+
+
+def _welch(n1, s1, q1, n2, s2, q2):
+    """Welch's two-sample t from each group's (n, Σx, Σx²):
+    (mean_diff, se², t, dof), with the sample variances
+    (q − n·m²)/(n − 1) and the Welch–Satterthwaite dof. t and dof read
+    0 where se² ≤ 0: every caller reports that case, like a group
+    under 2 rows, as invalid."""
+    m1, m2 = s1 / n1, s2 / n2
+    v1 = (q1 - n1 * m1 * m1) / (n1 - 1.0)
+    v2 = (q2 - n2 * m2 * m2) / (n2 - 1.0)
+    se2 = v1 / n1 + v2 / n2
+    t = _where(se2 > 0.0, lambda: (m1 - m2) / _sqrt(se2), lambda: 0.0)
+    dof = _where(se2 > 0.0, lambda: (se2 * se2) / (
+        (v1 / n1) * (v1 / n1) / (n1 - 1.0)
+        + (v2 / n2) * (v2 / n2) / (n2 - 1.0)), lambda: 0.0)
+    return m1 - m2, se2, t, dof
+
+
+def _welch_sums(df: DataFrame, value_col: str, group_col: str, groups,
+                by=()) -> tuple[DataFrame, object, object]:
+    """The Welch family's one conditional-sum aggregate: each group's
+    (n, Σx, Σx²) as (n1_d, s1, q1, n2_d, s2, q2) per ``by`` stratum —
+    one global row for by=()."""
+    kept, g1, g2 = _two_group_kept(df, value_col, group_col, groups, by)
+    one = (F.col("__g") == g1).cast("double")
+    two = (F.col("__g") == g2).cast("double")
+    v = F.col("__v")
+    agg = kept.groupBy(*by).agg(
+        F.sum(one).alias("n1_d"), F.sum(two).alias("n2_d"),
+        F.sum(one * v).alias("s1"), F.sum(two * v).alias("s2"),
+        F.sum(one * v * v).alias("q1"), F.sum(two * v * v).alias("q2"))
+    return agg, g1, g2
+
+
+_ZERO_VAR = ("welch_ttest: zero variance in both groups — t is "
+             "undefined on constant samples")
 
 
 def welch_ttest(df: DataFrame, value_col: str, group_col: str,
@@ -665,81 +726,43 @@ def welch_ttest(df: DataFrame, value_col: str, group_col: str,
     """
     if tail not in ("normal", "exact"):
         raise ValueError("tail must be 'normal' or 'exact'")
-    v = F.col(value_col).cast("double")
-    if groups is None:
-        _, g1, g2 = _two_group_counts(df, value_col, group_col, None)
-    else:
-        g1, g2 = groups
-    kept = df.where(v.isNotNull() & ~F.isnan(v)
-                    & F.col(group_col).isin([g1, g2]))
-    one = (F.col(group_col) == g1).cast("double")
-    two = (F.col(group_col) == g2).cast("double")
-    agg = kept.agg(
-        F.sum(one).alias("n1_d"), F.sum(two).alias("n2_d"),
-        F.sum(one * v).alias("s1"), F.sum(two * v).alias("s2"),
-        F.sum(one * v * v).alias("q1"), F.sum(two * v * v).alias("q2"))
-    n1, n2 = F.col("n1_d"), F.col("n2_d")
-    m1, m2 = F.col("s1") / n1, F.col("s2") / n2
-    # sample variance from raw sums: (q - n m^2) / (n - 1)
-    v1 = (F.col("q1") - n1 * m1 * m1) / (n1 - 1.0)
-    v2 = (F.col("q2") - n2 * m2 * m2) / (n2 - 1.0)
-    se2 = v1 / n1 + v2 / n2
-    t = (m1 - m2) / F.sqrt(se2)
-    dof = (se2 * se2) / ((v1 / n1) * (v1 / n1) / (n1 - 1.0)
-                         + (v2 / n2) * (v2 / n2) / (n2 - 1.0))
+    out = welch_ttest_by(df, value_col, group_col, groups, ())
+    if tail == "exact":
+        # driver-side scalar swap, no plan change: the same single
+        # aggregate row, with the exact t tail applied in Python
+        row = out.collect()[0]
+        if not row["n1"] or not row["n2"]:
+            # behavior parity with the normal-tail _nonempty_guard
+            raise ValueError(
+                "welch_ttest: a group matched no rows — check the "
+                "group values (NULL groups are excluded)")
+        if row["n1"] < 2 or row["n2"] < 2:
+            raise ValueError("welch_ttest: each group needs >= 2 rows")
+        if not row["valid"]:
+            raise ValueError(_ZERO_VAR)
+        return local_frame(
+            df.sparkSession,
+            [(row["n1"], row["n2"], row["mean_diff"], row["t_stat"],
+              row["dof"],
+              float(min(1.0, 2.0 * t_sf(abs(row["t_stat"]),
+                                        row["dof"]))))],
+            "n1 long, n2 long, mean_diff double, t_stat double, "
+            "dof double, p_value double")
+    n1, n2 = F.col("n1"), F.col("n2")
+
     def grd(c):
         # both failure modes guarded on EVERY output column: < 2 rows
         # in a group (variance undefined) and zero pooled variance
         # (t undefined — constant values in both groups); the size
         # check wraps OUTERMOST so an undersized group reports itself,
         # not a NULL-variance artifact
-        zerovar = F.when(
-            (se2 <= 0.0) | se2.isNull(),
-            F.raise_error(F.lit(
-                "welch_ttest: zero variance in both groups — t is "
-                "undefined on constant samples"))
-        ).otherwise(c)
-        return _nonempty_guard(n1 - 1.0, n2 - 1.0, zerovar, "welch_ttest",
-                               msg="each group needs >= 2 rows")
+        zerovar = F.when(~F.col("valid"), F.raise_error(F.lit(_ZERO_VAR))
+                         ).otherwise(F.col(c))
+        return _nonempty_guard(n1 - 1, n2 - 1, zerovar, "welch_ttest",
+                               msg="each group needs >= 2 rows").alias(c)
 
-    if tail == "exact":
-        # driver-side scalar swap, no plan change: the same single
-        # aggregate row, with the exact t tail applied in Python
-        row = agg.collect()[0]
-        if row["n1_d"] is None or not row["n1_d"] or not row["n2_d"]:
-            # behavior parity with the normal-tail _nonempty_guard
-            raise ValueError(
-                "welch_ttest: a group matched no rows — check the "
-                "group values (NULL groups are excluded)")
-        fn1, fn2 = float(row["n1_d"]), float(row["n2_d"])
-        if fn1 < 2.0 or fn2 < 2.0:
-            raise ValueError("welch_ttest: each group needs >= 2 rows")
-        fm1, fm2 = row["s1"] / fn1, row["s2"] / fn2
-        fv1 = (row["q1"] - fn1 * fm1 * fm1) / (fn1 - 1.0)
-        fv2 = (row["q2"] - fn2 * fm2 * fm2) / (fn2 - 1.0)
-        fse2 = fv1 / fn1 + fv2 / fn2
-        if not fse2 > 0.0:
-            raise ValueError(
-                "welch_ttest: zero variance in both groups — t is "
-                "undefined on constant samples")
-        ft = (fm1 - fm2) / math.sqrt(fse2)
-        fdof = (fse2 * fse2) / ((fv1 / fn1) ** 2 / (fn1 - 1.0)
-                                + (fv2 / fn2) ** 2 / (fn2 - 1.0))
-        return local_frame(
-            df.sparkSession,
-            [(int(fn1), int(fn2), float(fm1 - fm2), float(ft),
-              float(fdof), float(min(1.0, 2.0 * t_sf(abs(ft), fdof))))],
-            "n1 long, n2 long, mean_diff double, t_stat double, "
-            "dof double, p_value double")
-    out = (agg.withColumn("__t", t)
-           .withColumn("__dof", dof)
-           .select(
-               n1.cast("long").alias("n1"), n2.cast("long").alias("n2"),
-               grd(m1 - m2).alias("mean_diff"),
-               grd(F.col("__t")).alias("t_stat"),
-               grd(F.col("__dof")).alias("dof"),
-               grd(F.expr(spark_sql(normal_p2, "__t"))).alias("p_value")))
-    return out
+    return out.select(n1, n2, *map(grd, ("mean_diff", "t_stat", "dof",
+                                         "p_value")))
 
 
 def welch_ttest_by(df: DataFrame, value_col: str, group_col: str,
@@ -761,34 +784,24 @@ def welch_ttest_by(df: DataFrame, value_col: str, group_col: str,
     (by..., n1, n2, mean_diff, t_stat, dof, p_value, valid).
     """
     by = [by] if isinstance(by, str) else list(by)
-    g1, g2 = groups
-    v = F.col(value_col).cast("double")
-    kept = df.where(v.isNotNull() & ~F.isnan(v)
-                    & F.col(group_col).isin([g1, g2]))
-    one = (F.col(group_col) == g1).cast("double")
-    two = (F.col(group_col) == g2).cast("double")
-    agg = kept.groupBy(*by).agg(
-        F.sum(one).alias("n1_d"), F.sum(two).alias("n2_d"),
-        F.sum(one * v).alias("s1"), F.sum(two * v).alias("s2"),
-        F.sum(one * v * v).alias("q1"), F.sum(two * v * v).alias("q2"))
-    n1, n2 = F.col("n1_d"), F.col("n2_d")
-    m1, m2 = F.col("s1") / n1, F.col("s2") / n2
-    v1 = (F.col("q1") - n1 * m1 * m1) / (n1 - 1.0)
-    v2 = (F.col("q2") - n2 * m2 * m2) / (n2 - 1.0)
-    se2 = v1 / n1 + v2 / n2
-    t = (m1 - m2) / F.sqrt(se2)
-    dof = (se2 * se2) / ((v1 / n1) * (v1 / n1) / (n1 - 1.0)
-                         + (v2 / n2) * (v2 / n2) / (n2 - 1.0))
+    agg, _, _ = _welch_sums(df, value_col, group_col, groups, by)
+    # (mean_diff, se², t, dof): one F.expr per output of _welch
+    agg = agg.select("*", *(
+        F.expr(spark_sql(lambda *a, i=i: _welch(*a)[i],
+                         "n1_d", "s1", "q1", "n2_d", "s2", "q2")).alias(c)
+        for i, c in enumerate(("__diff", "__se2", "__t", "__dof"))))
+    n1, n2, se2 = F.col("n1_d"), F.col("n2_d"), F.col("__se2")
     valid = (n1 >= 2.0) & (n2 >= 2.0) & se2.isNotNull() & (se2 > 0.0)
+
     def opt(c):
         return F.when(valid, c)
 
-    return agg.withColumn("__t", t).select(
+    return agg.select(
         *by,
         n1.cast("long").alias("n1"), n2.cast("long").alias("n2"),
-        opt(m1 - m2).alias("mean_diff"),
+        opt(F.col("__diff")).alias("mean_diff"),
         opt(F.col("__t")).alias("t_stat"),
-        opt(dof).alias("dof"),
+        opt(F.col("__dof")).alias("dof"),
         opt(F.expr(spark_sql(normal_p2, "__t"))).alias("p_value"),
         valid.alias("valid"))
 
@@ -908,34 +921,23 @@ def pairwise_welch(df: DataFrame, value_col: str, group_col: str,
     rows.sort(key=lambda r: r["__g"])
     if len(rows) < 2:
         raise ValueError("pairwise_welch needs >= 2 groups")
-    stats = []
-    for r in rows:
-        n = r["__n"]
-        m = r["__s"] / n
-        var = ((r["__q"] - n * m * m) / (n - 1.0)) if n >= 2.0 else None
-        stats.append((r["__g"], n, m, var))
     pairs = []
-    for i in range(len(stats)):
-        for j in range(i + 1, len(stats)):
-            ga, na, ma, va = stats[i]
-            gb, nb, mb, vb = stats[j]
-            rec = {"group_a": ga, "group_b": gb,
+    for i, a in enumerate(rows):
+        for b in rows[i + 1:]:
+            na, nb = a["__n"], b["__n"]
+            rec = {"group_a": a["__g"], "group_b": b["__g"],
                    "n_a": int(na), "n_b": int(nb),
                    "mean_diff": None, "t_stat": None, "dof": None,
                    "p_value": None, "q_value": None, "reject": None,
                    "valid": False}
-            if va is not None and vb is not None:
-                se2 = va / na + vb / nb
+            if na >= 2.0 and nb >= 2.0:
+                diff, se2, t, dof = _welch(na, a["__s"], a["__q"],
+                                           nb, b["__s"], b["__q"])
                 if se2 > 0.0:
-                    t = (ma - mb) / math.sqrt(se2)
-                    dof = (se2 * se2) / ((va / na) * (va / na)
-                                         / (na - 1.0)
-                                         + (vb / nb) * (vb / nb)
-                                         / (nb - 1.0))
                     p = (t_sf(abs(t), dof) if tail == "exact"
                          else normal_sf(abs(t)))
                     rec.update(
-                        mean_diff=float(ma - mb), t_stat=float(t),
+                        mean_diff=float(diff), t_stat=float(t),
                         dof=float(dof),
                         p_value=float(min(1.0, 2.0 * p)),
                         valid=True)
@@ -2476,7 +2478,7 @@ def hodges_lehmann_shift(df: DataFrame, value_col: str,
     v = F.col(value_col).cast("double")
     if groups is None:
         # the welch/mann_whitney group-inference convention
-        _, g1, g2 = _two_group_counts(df, value_col, group_col, None)
+        _, g1, g2 = _two_group_kept(df, value_col, group_col, None)
     else:
         g1, g2 = groups
     kept = (df.where(v.isNotNull() & ~F.isnan(v)
@@ -3029,6 +3031,19 @@ def chi2_independence(df: DataFrame, col_a: str, col_b: str,
         "chi2 double, dof long, p_value double, cramers_v double")
 
 
+def _km_factor(d, n_risk):
+    """One duration's product-limit factor 1 − d/n_risk as (log
+    factor, zero flag): a factor ≤ 0 (everyone at risk dies) adds 0 to
+    the log sum and 1 to the zero count."""
+    f = 1.0 - d / n_risk
+    return (_where(f > 0.0, lambda: _ln(f), lambda: 0.0),
+            _where(f <= 0.0, lambda: 1.0, lambda: 0.0))
+
+
+def _km_survival(zeros, cum_ln):
+    return _where(zeros > 0.0, lambda: 0.0, lambda: _exp(cum_ln))
+
+
 def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
                  max_driver_rows: int = 65536) -> DataFrame:
     """Kaplan–Meier product-limit survival curve, distributed.
@@ -3075,20 +3090,15 @@ def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
     if head is not None:
         head.sort(key=lambda r: r["__t"])
         ntot = sum(r["__n"] for r in head)
-        before = 0.0
-        cumln = 0.0
-        dead = False
+        before = cumln = zeros = 0.0
         rows = []
         for r in head:
             nr = ntot - before
-            factor = 1.0 - r["__d"] / nr
-            if factor <= 0.0:
-                dead = True
-            else:
-                cumln += math.log(factor)
+            lnf, zf = _km_factor(r["__d"], nr)
+            cumln += lnf
+            zeros += zf
             rows.append((float(r["__t"]), int(nr), int(r["__d"]),
-                         int(r["__c"]),
-                         0.0 if dead else math.exp(cumln)))
+                         int(r["__c"]), _km_survival(zeros, cumln)))
             before += r["__n"]
         return local_frame(df.sparkSession, rows, out_schema)
     # over the cap: fall through (one wasted bounded collect on a
@@ -3099,24 +3109,34 @@ def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
     # runs once instead of twice (r13 optimization)
     g, (ntot_t,) = prefix_sum(g, "__t", "__n", "__before",
                               with_totals=True)
-    j = g
-    n_risk = F.lit(ntot_t) - F.col("__before")
-    factor = 1.0 - F.col("__d") / n_risk
-    j = j.select(
-        "__t", "__d", "__c", n_risk.alias("__nr"),
-        F.when(factor > 0.0, F.log(factor)).otherwise(F.lit(0.0))
-        .alias("__lnf"),
-        (factor <= 0.0).cast("double").alias("__zf"))
+    j = g.select("__t", "__d", "__c",
+                 (F.lit(ntot_t) - F.col("__before")).alias("__nr"))
+    j = j.select("*", *(
+        F.expr(spark_sql(lambda *a, i=i: _km_factor(*a)[i],
+                         "__d", "__nr")).alias(c)
+        for i, c in enumerate(("__lnf", "__zf"))))
     j = prefix_sum(j, "__t", ["__lnf", "__zf"], ["__cumln", "__cumzf"])
-    survival = F.when(
-        F.col("__cumzf") + F.col("__zf") > 0.0, F.lit(0.0)
-    ).otherwise(F.exp(F.col("__cumln") + F.col("__lnf")))
+    survival = F.expr(spark_sql(_km_survival, "__cumzf + __zf",
+                                "__cumln + __lnf"))
     return j.select(
         F.col("__t").alias("duration"),
         F.col("__nr").cast("long").alias("n_risk"),
         F.col("__d").cast("long").alias("n_events"),
         F.col("__c").cast("long").alias("n_censored"),
         survival.alias("survival"))
+
+
+def _log_rank_terms(d1, d2, r1, r2, wilcoxon):
+    """One duration's (O₁, E₁, V) terms from the at-t event counts d
+    and risk-set sizes r: w·d₁, w·d·n₁/n and the hypergeometric
+    w²·d·(n₁/n)(n₂/n)(n − d)/(n − 1), with w = n under Gehan weights.
+    A duration without events adds zeros, and V skips n < 2."""
+    nt, dt = r1 + r2, d1 + d2
+    w = nt if wilcoxon else 1.0
+    return (w * d1, w * (dt * (r1 / nt)),
+            _where(nt >= 2.0, lambda: (w * w * dt * (r1 / nt) * (r2 / nt)
+                                       * (nt - dt) / (nt - 1.0)),
+                   lambda: 0.0))
 
 
 def log_rank(df: DataFrame, duration_col: str, event_col: str,
@@ -3163,20 +3183,7 @@ def log_rank(df: DataFrame, duration_col: str, event_col: str,
 
     if weights not in ("logrank", "wilcoxon"):
         raise ValueError("weights must be 'logrank' or 'wilcoxon'")
-    if groups is None:
-        # filter NULLs BEFORE limit(3): a NULL inside the first three
-        # distinct rows would otherwise mask a real third group
-        distinct = [r[0] for r in
-                    (df.select(group_col)
-                     .where(F.col(group_col).isNotNull())
-                     .distinct().orderBy(group_col).limit(3).collect())]
-        if len(distinct) != 2:
-            raise ValueError(
-                "log_rank: group_col must have exactly 2 non-null "
-                "groups, or pass groups=(a, b)")
-        g1, g2 = distinct
-    else:
-        g1, g2 = groups
+    _, g1, g2 = _two_group_kept(df, duration_col, group_col, groups)
     ev = F.col(event_col).cast("double")
     kept = df.where(F.col(duration_col).isNotNull()
                     & F.col(event_col).isNotNull()
@@ -3213,16 +3220,12 @@ def log_rank(df: DataFrame, duration_col: str, event_col: str,
         b1 = b2 = 0
         o1 = e1 = v = 0.0
         for r in head:
-            r1, r2 = tot1 - b1, tot2 - b2
-            nt = r1 + r2
-            dt = int(r["__d1"]) + int(r["__d2"])
-            if dt > 0 and nt > 0:
-                w = float(nt) if weights == "wilcoxon" else 1.0
-                o1 += w * int(r["__d1"])
-                e1 += w * (dt * (r1 / nt))
-                if nt >= 2:
-                    v += (w * w * dt * (r1 / nt) * (r2 / nt)
-                          * (nt - dt) / (nt - 1.0))
+            o, e, vt = _log_rank_terms(
+                r["__d1"], r["__d2"], float(tot1 - b1), float(tot2 - b2),
+                weights == "wilcoxon")
+            o1 += o
+            e1 += e
+            v += vt
             b1 += int(r["__n1"])
             b2 += int(r["__n2"])
         return _emit_row(df.sparkSession, tot1, tot2, o1, e1, v)
@@ -3234,23 +3237,14 @@ def log_rank(df: DataFrame, duration_col: str, event_col: str,
     # cross join; r13 optimization)
     g, (t1_t, t2_t) = prefix_sum(g, "__t", ["__n1", "__n2"],
                                  ["__b1", "__b2"], with_totals=True)
-    j = g
-    r1 = F.lit(t1_t) - F.col("__b1")
-    r2 = F.lit(t2_t) - F.col("__b2")
-    nt = r1 + r2
-    dt = F.col("__d1") + F.col("__d2")
-    has = (dt > 0.0) & (nt > 0.0)
-    w = nt if weights == "wilcoxon" else F.lit(1.0)
-    j = j.select(
-        "__t",
-        F.when(has, w * F.col("__d1")).otherwise(F.lit(0.0))
-        .alias("__o"),
-        F.when(has, w * (dt * (r1 / nt))).otherwise(F.lit(0.0))
-        .alias("__e"),
-        F.when(has & (nt >= 2.0),
-               w * w * dt * (r1 / nt) * (r2 / nt) * (nt - dt)
-               / (nt - 1.0))
-        .otherwise(F.lit(0.0)).alias("__v"))
+    j = g.select("__t", "__d1", "__d2",
+                 (F.lit(t1_t) - F.col("__b1")).alias("__r1"),
+                 (F.lit(t2_t) - F.col("__b2")).alias("__r2"))
+    j = j.select("__t", *(
+        F.expr(spark_sql(lambda *a, i=i: _log_rank_terms(*a)[i],
+                         "__d1", "__d2", "__r1", "__r2",
+                         weights == "wilcoxon")).alias(c)
+        for i, c in enumerate(("__o", "__e", "__v"))))
     j = prefix_sum(j, "__t", ["__o", "__e", "__v"],
                    ["__co", "__ce", "__cv"])
     last = (j.orderBy(F.col("__t").desc()).limit(1)
@@ -3282,19 +3276,7 @@ def cohens_d(df: DataFrame, value_col: str, group_col: str,
     second job). Returns one row:
     (n1, n2, mean_diff, pooled_sd, d, hedges_g).
     """
-    v = F.col(value_col).cast("double")
-    if groups is None:
-        _, g1, g2 = _two_group_counts(df, value_col, group_col, None)
-    else:
-        g1, g2 = groups
-    kept = df.where(v.isNotNull() & ~F.isnan(v)
-                    & F.col(group_col).isin([g1, g2]))
-    one = (F.col(group_col) == g1).cast("double")
-    two = (F.col(group_col) == g2).cast("double")
-    agg = kept.agg(
-        F.sum(one).alias("n1_d"), F.sum(two).alias("n2_d"),
-        F.sum(one * v).alias("s1"), F.sum(two * v).alias("s2"),
-        F.sum(one * v * v).alias("q1"), F.sum(two * v * v).alias("q2"))
+    agg, _, _ = _welch_sums(df, value_col, group_col, groups)
     n1, n2 = F.col("n1_d"), F.col("n2_d")
     m1, m2 = F.col("s1") / n1, F.col("s2") / n2
     v1 = (F.col("q1") - n1 * m1 * m1) / (n1 - 1.0)
@@ -3314,6 +3296,19 @@ def cohens_d(df: DataFrame, value_col: str, group_col: str,
         grd(sp).alias("pooled_sd"),
         grd(d).alias("d"),
         grd(d * j).alias("hedges_g"))
+
+
+def _na_terms(d, n_risk):
+    """One duration's hazard increment d/n_risk and its Poisson
+    variance term d/n_risk²."""
+    return d / n_risk, d / (n_risk * n_risk)
+
+
+def _na_band(h, var, z):
+    """(se, ci_lo, ci_hi) of the cumulative hazard h: se = √var and the
+    linear ±z·se interval, clamped at 0."""
+    se = _sqrt(var)
+    return se, _greatest(0.0, h - z * se), h + z * se
 
 
 def nelson_aalen(df: DataFrame, duration_col: str, event_col: str,
@@ -3358,34 +3353,34 @@ def nelson_aalen(df: DataFrame, duration_col: str, event_col: str,
         rows = []
         for r in head:
             nr = ntot - before
-            h += r["__d"] / nr
-            var += r["__d"] / (nr * nr)
-            se = math.sqrt(var)
+            ht, vt = _na_terms(r["__d"], nr)
+            h += ht
+            var += vt
             rows.append((float(r["__t"]), int(nr), int(r["__d"]),
-                         int(r["__c"]), h, se,
-                         max(0.0, h - z * se), h + z * se))
+                         int(r["__c"]), h, *_na_band(h, var, z)))
             before += r["__n"]
         return local_frame(df.sparkSession, rows, out_schema)
     # totals via the prefix machine's subtotal collect (integer counts
     # — bit-identical; one cumsum pass, no cross join; r13 optimization)
     g, (ntot_t,) = prefix_sum(g, "__t", "__n", "__before",
                               with_totals=True)
-    j = g
-    nr = F.lit(ntot_t) - F.col("__before")
-    j = j.select("__t", "__d", "__c", nr.alias("__nr"),
-                 (F.col("__d") / nr).alias("__ht"),
-                 (F.col("__d") / (nr * nr)).alias("__vt"))
+    j = g.select("__t", "__d", "__c",
+                 (F.lit(ntot_t) - F.col("__before")).alias("__nr"))
+    j = j.select("*", *(
+        F.expr(spark_sql(lambda *a, i=i: _na_terms(*a)[i],
+                         "__d", "__nr")).alias(c)
+        for i, c in enumerate(("__ht", "__vt"))))
     j = prefix_sum(j, "__t", ["__ht", "__vt"], ["__bh", "__bv"])
     h = F.col("__bh") + F.col("__ht")
-    se = F.sqrt(F.col("__bv") + F.col("__vt"))
     return j.select(
         F.col("__t").alias("duration"),
         F.col("__nr").cast("long").alias("n_risk"),
         F.col("__d").cast("long").alias("n_events"),
         F.col("__c").cast("long").alias("n_censored"),
-        h.alias("cum_hazard"), se.alias("se"),
-        F.greatest(F.lit(0.0), h - F.lit(z) * se).alias("ci_lo"),
-        (h + F.lit(z) * se).alias("ci_hi"))
+        h.alias("cum_hazard"), *(
+            F.expr(spark_sql(lambda *a, i=i: _na_band(*a)[i],
+                             "__bh + __ht", "__bv + __vt", z)).alias(c)
+            for i, c in enumerate(("se", "ci_lo", "ci_hi"))))
 
 
 def mood_median(df: DataFrame, value_col: str, group_col: str,
@@ -3411,7 +3406,7 @@ def mood_median(df: DataFrame, value_col: str, group_col: str,
     """
     v = F.col(value_col).cast("double")
     if groups is None:
-        _, g1, g2 = _two_group_counts(df, value_col, group_col, None)
+        _, g1, g2 = _two_group_kept(df, value_col, group_col, None)
     else:
         g1, g2 = groups
     kept = df.where(v.isNotNull() & ~F.isnan(v)

@@ -117,7 +117,7 @@ class BaseIncrementalSearchCV(BaseEstimator):
     def __init__(self, estimator, parameters, n_initial_parameters: int = 10,
                  test_size: float = 0.15, patience: int | bool = False, tol: float = 1e-3,
                  max_iter: int = 100, random_state: int | None = None, scoring=None,
-                 n_jobs: int = 8, deterministic_by=None):
+                 deterministic_by=None):
         self.estimator = estimator
         self.parameters = parameters
         self.n_initial_parameters = n_initial_parameters
@@ -127,7 +127,6 @@ class BaseIncrementalSearchCV(BaseEstimator):
         self.max_iter = max_iter
         self.random_state = random_state
         self.scoring = scoring
-        self.n_jobs = n_jobs
         # deterministic_by=[key cols] switches every seeded choice to a
         # content-deterministic one: Knuth-hash train/test split,
         # key-sorted contiguous batches, CYCLIC batch order, and

@@ -1179,7 +1179,7 @@ def test_welch_exact_tail(spark):
     2·t_sf(|t|, dof), and on thin strata the exact p is LARGER than
     the normal limit (t has fatter tails)."""
     from dask_ml_spark.functions.stats import (pairwise_welch, t_sf,
-                                               welch_ttest)
+                                               welch_ttest, welch_ttest_by)
 
     rng = np.random.RandomState(29)
     rows = [(g, float(rng.normal(mu, sd)))
@@ -1197,6 +1197,17 @@ def test_welch_exact_tail(spark):
                - min(1.0, 2.0 * t_sf(abs(ex["t_stat"]), ex["dof"]))) \
         < 1e-15
     assert ex["p_value"] > nrm["p_value"]  # fatter tails at dof ~ 12
+    # the Welch family shares one formula: pairwise_welch's (a, b) pair
+    # and a single-stratum welch_ttest_by give welch_ttest's statistics
+    # (separate aggregates, so the float merge order may differ)
+    pw = [r for r in pairwise_welch(df, "v", "g").collect()
+          if (r["group_a"], r["group_b"]) == ("a", "b")]
+    by = welch_ttest_by(df.withColumn("s", F.lit(1)), "v", "g",
+                        ("a", "b"), "s").collect()
+    assert len(pw) == len(by) == 1
+    for c in ("mean_diff", "t_stat", "dof"):
+        assert abs(pw[0][c] - nrm[c]) < 1e-12, (c, pw[0][c], nrm[c])
+        assert abs(by[0][c] - nrm[c]) < 1e-12, (c, by[0][c], nrm[c])
     with pytest.raises(ValueError, match="tail"):
         welch_ttest(df, "v", "g", tail="bogus")
     # empty groups: the exact tail raises the same clean error as the
@@ -1447,7 +1458,10 @@ def test_kaplan_meier_driver_and_distributed_paths_agree(spark):
 def test_ks_mwu_driver_and_distributed_paths_agree(spark):
     """The bounded driver path (default) and the prefix-machine
     fallback must produce identical statistics — counts are integer
-    doubles, so D/U/ties are exact on both sides."""
+    doubles, so D/U/ties are exact on both sides. roc_auc_score's U
+    is the same accumulation over (score, label) counts."""
+    from dask_ml_spark.functions.metrics import roc_auc_score
+
     rng = np.random.RandomState(13)
     df = _mk(spark, rng.randint(0, 25, 200).astype(float),
              rng.randint(0, 25, 180).astype(float) + 0.5 * 0)
@@ -1457,6 +1471,11 @@ def test_ks_mwu_driver_and_distributed_paths_agree(spark):
         for c in fast.asDict():
             a, b = fast[c], slow[c]
             assert (a == b or abs(a - b) < 1e-12), (fn.__name__, c, a, b)
+    scored = df.select((F.col("g") == "a").cast("double").alias("label"),
+                       F.col("x").alias("score"))
+    fast = roc_auc_score(scored)
+    slow = roc_auc_score(scored, max_driver_rows=0)
+    assert abs(fast - slow) < 1e-12, (fast, slow)
 
 
 def test_spearman_driver_and_distributed_paths_agree(spark):

@@ -106,7 +106,9 @@ def test_plan_inspection_has_one_owner():
     streaming/drift.py is exempt, because the Arrow path would read its
     naive datetimes in the session zone. functions/stats.py alone
     writes the closed-form p-value tails, each once, rendered per
-    engine, so no module keeps a hand copy."""
+    engine, so no module keeps a hand copy. No module calls
+    ``F.signum(``: the rank tests' sign is ``_signum`` inside their
+    written-once z formula."""
     import pathlib
 
     import dask_ml_spark
@@ -119,6 +121,7 @@ def test_plan_inspection_has_one_owner():
               "_ks_p_sql", "_ad_poly", "ad_p_expr", "_ad_p_sql",
               "_pois1_weight_expr", "_pois1_weight_sql", "_chi2_sf_sql")),
         (("functions/stats.py",), ("0.2316419", "_KS_TERMS")),
+        ((), ("F.signum(",)),
         (("utils.py", "streaming/drift.py"), ("createDataFrame(",)),
     ]
     root = pathlib.Path(dask_ml_spark.__file__).parent
@@ -399,6 +402,78 @@ def test_hash_bucket_engine_portability(spark):
            for i, (f, params) in enumerate(tails)
            if not math.isclose(r[i + 1], f(r[0], *params), rel_tol=1e-15)]
     assert bad == []
+
+    # the test statistics' formulas, over several argument columns:
+    # each output's Spark rendering equals its Python value, zeros
+    # with their sign
+    bad = []
+    for f, grid in _statistic_formulas():
+        k = len(grid[0])
+        cols = [f"a{j}" for j in range(k)]
+        outs = len(f(*grid[0]))
+        df = spark.createDataFrame(
+            grid, ", ".join(f"{c} double" for c in cols))
+        got = df.select(*[
+            F.expr(spark_sql(lambda *a, i=i: f(*a)[i], *cols))
+            for i in range(outs)]).collect()
+        for args, r in zip(grid, got):
+            want = f(*args)
+            bad += [(f.__name__, args, i, r[i], want[i])
+                    for i in range(outs)
+                    if not (math.isclose(r[i], want[i], rel_tol=1e-15)
+                            and math.copysign(1.0, r[i])
+                            == math.copysign(1.0, want[i]))]
+    assert bad == []
+
+
+def _statistic_formulas():
+    """(formula returning a tuple, argument rows) for each test
+    statistic written once in functions/stats.py and metrics.py. The
+    rows cover a variance <= 0 (all tied, constant groups), stat == mu
+    at +0 and -0 and inside the 0.5 continuity shift, a zero count,
+    and n = 2."""
+    from dask_ml_spark.functions import metrics as M
+    from dask_ml_spark.functions import stats as S
+
+    def rank_normal(stat, mu, var):
+        z = S._rank_z(stat, lambda m, v: (m, v), mu, var)
+        return z, S._rank_p(z, lambda m, v: (m, v), mu, var)
+
+    def log_rank(wilcoxon):
+        def terms(d1, d2, r1, r2):
+            return S._log_rank_terms(d1, d2, r1, r2, wilcoxon)
+        return terms
+
+    def one(f):
+        def g(*a):
+            return (f(*a),)
+        g.__name__ = f.__name__
+        return g
+
+    return [
+        (rank_normal, [(0.0, 0.0, 1.0), (-0.0, 0.0, 1.0), (0.3, 0.0, 2.0),
+                       (-0.3, 0.0, 2.0), (5.0, 1.0, 4.0), (-5.0, 1.0, 4.0),
+                       (1.0, 2.0, 0.0), (1.0, 2.0, -1.0)]),
+        (S._mwu_moments, [(3.0, 4.0, 0.0), (2.0, 2.0, 60.0),
+                          (0.0, 3.0, 24.0), (1.0, 1.0, 0.0)]),
+        (S._wsr_moments, [(2.0, 0.0), (2.0, 6.0), (5.0, 6.0), (0.0, 0.0)]),
+        (one(S._rank_biserial), [(3.0, 2.0, 4.0), (0.0, 1.0, 1.0)]),
+        (one(S._ks_gap), [(0.0, 0.0, 1.0, 1.0), (3.0, 1.0, 5.0, 2.0),
+                          (5.0, 2.0, 5.0, 2.0)]),
+        (one(S._ks_lambda), [(0.3, 5.0, 7.0), (0.0, 2.0, 2.0)]),
+        (S._welch, [(2.0, 3.0, 5.0, 3.0, 6.0, 14.0),
+                    (2.0, 2.0, 2.0, 2.0, 2.0, 2.0),
+                    (3.0, 6.0, 13.5, 4.0, 2.0, 3.0)]),
+        (S._km_factor, [(0.0, 5.0), (2.0, 5.0), (3.0, 3.0)]),
+        (one(S._km_survival), [(0.0, -0.5), (1.0, -0.5), (0.0, 0.0)]),
+        (log_rank(False), [(1.0, 0.0, 3.0, 2.0), (0.0, 0.0, 3.0, 2.0),
+                           (1.0, 0.0, 1.0, 0.0), (1.0, 1.0, 1.0, 1.0)]),
+        (log_rank(True), [(1.0, 0.0, 3.0, 2.0), (0.0, 0.0, 3.0, 2.0),
+                          (2.0, 1.0, 4.0, 3.0)]),
+        (S._na_terms, [(0.0, 4.0), (2.0, 5.0)]),
+        (S._na_band, [(0.1, 0.04, 1.96), (0.0, 0.0, 1.96)]),
+        (one(M._u_term), [(2.0, 3.0, 1.0), (0.0, 4.0, 2.0)]),
+    ]
 
 
 def test_estimator_save_load_roundtrip(spark, lineitem, tmp_path):
