@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dask_ml_spark.utils import is_numeric_field, local_frame
+from dask_ml_spark.utils import collect_capped, is_numeric_field, local_frame
 
 PROFILE_SCHEMA = (
     "column string, n_rows long, n_nulls long, null_frac double, "
@@ -323,12 +323,10 @@ def concentration_profile(df: DataFrame, group_col: str,
         kept = kept.where(wraw.isNotNull() & ~F.isnan(wraw)
                           & (wraw >= 0))
         agg = F.sum(F.floor(wraw).cast("long")).alias("__w")
-    rows = (kept.groupBy(g.cast("string").alias("__g")).agg(agg)
-            .limit(max_groups + 1).collect())
-    if len(rows) > max_groups:
-        raise ValueError(
-            f"concentration_profile: more than max_groups="
-            f"{max_groups} groups — bucket the column first")
+    rows = collect_capped(
+        kept.groupBy(g.cast("string").alias("__g")).agg(agg), max_groups,
+        f"concentration_profile: more than max_groups="
+        f"{max_groups} groups — bucket the column first")
     if not rows:
         raise ValueError("concentration_profile: no non-null groups")
     # ascending totals, ties by label: deterministic and value-neutral

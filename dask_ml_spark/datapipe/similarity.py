@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dask_ml_spark.functions.vector import cosine_similarity, dot, norm2
-from dask_ml_spark.utils import local_frame
+from dask_ml_spark.utils import collect_capped, local_frame
 
 
 def _dlit(v) -> str:
@@ -400,14 +400,12 @@ class IVFIndex(_IndexPersistence):
         distributed (and forgoes the scan prune)."""
         if bucket_col in df.columns:
             cap = 100_000
-            qrows = (queries.select(query_id_col, self.vec_col)
-                     .limit(cap + 1).collect())
-            if len(qrows) > cap:
-                raise ValueError(
-                    f"IVFIndex.search precoded path collects queries "
-                    f"driver-side; got > {cap} rows. Chunk the query "
-                    "table, or drop the bucket column to use the "
-                    "distributed inline path.")
+            qrows = collect_capped(
+                queries.select(query_id_col, self.vec_col), cap,
+                f"IVFIndex.search precoded path collects queries "
+                f"driver-side; got > {cap} rows. Chunk the query "
+                "table, or drop the bucket column to use the "
+                "distributed inline path.")
             qvecs = np.asarray([list(r[1]) for r in qrows], dtype="float64")
             d = _sqdist_matrix(qvecs, np.asarray(self.centroids_,
                                                  dtype="float64"))

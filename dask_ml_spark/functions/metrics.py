@@ -19,7 +19,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dask_ml_spark.utils import local_frame
+from dask_ml_spark.utils import bounded_head, collect_capped, local_frame
 
 EPS = 1e-15
 
@@ -221,14 +221,13 @@ def cohens_kappa(df: DataFrame, col_a: str, col_b: str,
     """
     a = F.col(col_a).cast("string")
     b = F.col(col_b).cast("string")
-    rows = (df.where(a.isNotNull() & b.isNotNull())
-            .groupBy(a.alias("__a"), b.alias("__b"))
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .limit(max_cells + 1).collect())
-    if len(rows) > max_cells:
-        raise ValueError(
-            f"cohens_kappa: more than max_cells={max_cells} label "
-            "pairs — bucket the columns first")
+    rows = collect_capped(
+        df.where(a.isNotNull() & b.isNotNull())
+        .groupBy(a.alias("__a"), b.alias("__b"))
+        .agg(F.count(F.lit(1)).alias("__n")),
+        max_cells,
+        f"cohens_kappa: more than max_cells={max_cells} label "
+        "pairs — bucket the columns first")
     if not rows:
         raise ValueError("cohens_kappa: no complete-case rows")
     n = sum(int(r["__n"]) for r in rows)
@@ -520,8 +519,7 @@ def _auc_driver(rows) -> float:
 
 
 def roc_auc_score(df: DataFrame, label_col: str = "label",
-                  score_col: str = "score", bins: int | None = None,
-                  max_driver_rows: int = 65536) -> float:
+                  score_col: str = "score", bins: int | None = None) -> float:
     """Distributed ROC-AUC (beyond-reference — dask-ml ships no AUC;
     quality-classifier gating needs one).
 
@@ -543,7 +541,6 @@ def roc_auc_score(df: DataFrame, label_col: str = "label",
     """
     from dask_ml_spark.datapipe.packing import prefix_sum
     from dask_ml_spark.functions.stats import spark_sql
-    from dask_ml_spark.utils import bounded_head
 
     # null/NaN scores or labels carry no ranking information — drop them
     # up front (both paths; a null score would otherwise poison the
@@ -569,7 +566,7 @@ def roc_auc_score(df: DataFrame, label_col: str = "label",
     # distinct-score frame fits, cumsum driver-side — U is a sum of
     # integer products < 2^53, bit-identical to the prefix machine;
     # the cut lets the fallback reuse the materialized frame
-    g, head = bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g)
     if head is not None:
         return _auc_driver(head)
     withcum = prefix_sum(g, "__s", "__neg", "__neg_below")

@@ -23,8 +23,11 @@ KS/changepoint/trend ≤K buckets, Spearman-binned ≤K² cells, bootstrap
 ≤B or ≤G·B replicate groups) with the statistic assembled driver-side
 from that bounded state; (2) one row per DISTINCT VALUE via a hash
 groupBy with map-side combine, then cumulative pieces over the small
-frame — driver-side below max_driver_rows (utils.bounded_head), else
-datapipe.packing.prefix_sum, the range-partitioned two-phase cumsum.
+frame — driver-side below the one driver-row cap
+utils.MAX_DRIVER_ROWS (utils.bounded_head; set it to 0 to force every
+dual path distributed), else datapipe.packing.prefix_sum, the
+range-partitioned two-phase cumsum. Loud caps (max_groups, max_cells,
+...) collect through utils.collect_capped.
 No keyless Window.partitionBy() anywhere, so no single-task
 serialization of the full corpus.
 
@@ -72,8 +75,9 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from dask_ml_spark.utils import (bounded_head, ensure_min_partitions,
-                                 local_frame, sql_scalar_lit)
+from dask_ml_spark.utils import (bounded_head, collect_capped,
+                                 ensure_min_partitions, local_frame,
+                                 sql_scalar_lit)
 
 SQRT_TWO_PI = 2.5066282746310002  # sqrt(2*pi), literal-folded
 
@@ -336,8 +340,7 @@ def _ks_lambda(d, n1, n2):
 
 
 def ks_2sample(df: DataFrame, value_col: str, group_col: str,
-               groups=None, bins: int | None = None,
-               max_driver_rows: int = 65536) -> DataFrame:
+               groups=None, bins: int | None = None) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov test, distributed.
 
     D = max_x |F1(x) − F2(x)| over the pooled distinct values
@@ -399,12 +402,12 @@ def ks_2sample(df: DataFrame, value_col: str, group_col: str,
         return _ks_driver_row(df.sparkSession, rows, n1, n2)
     # exact path: one distinct-value groupBy — the irreducible pass —
     # then the ECDF cumsums. A distinct-value frame that fits
-    # max_driver_rows (bounded limit-collect, the kaplan_meier
+    # MAX_DRIVER_ROWS (bounded limit-collect, the kaplan_meier
     # pattern) cumsums driver-side: counts are integers, so D is
     # bit-identical to the prefix-machine result, and two distributed
     # passes collapse into one small collect.
     g, _, _ = _two_group_counts(df, value_col, group_col, groups)
-    g, head = bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g)
     if head is not None:
         head.sort(key=lambda r: r["__v"])
         n1 = sum(r["__c1"] for r in head)
@@ -482,7 +485,7 @@ def _rank_biserial(u, n1, n2):
 
 
 def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
-                   groups=None, max_driver_rows: int = 65536) -> DataFrame:
+                   groups=None) -> DataFrame:
     """Two-sample Mann–Whitney U (Wilcoxon rank-sum), distributed.
 
     U (for the first group) via the tie-averaged rank-sum identity
@@ -495,7 +498,7 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
 
     Precision: both engines evaluate the identical operation order, so
     u/z/p stay bit-comparable at any scale. The DRIVER fast path (the
-    common case — distinct values under max_driver_rows) accumulates
+    common case — distinct values under MAX_DRIVER_ROWS) accumulates
     u and the tie term Σ(t³−t) in exact bignum integers, so it never
     rounds: it is exact even past the 2^53 threshold the float form
     crosses once a single tied value holds ~2.1M rows (plausible at
@@ -516,7 +519,7 @@ def mann_whitney_u(df: DataFrame, value_col: str, group_col: str,
     # bounded driver path (kaplan_meier pattern): u / ties are sums of
     # integer products < 2^53, so the driver cumsum is bit-identical
     # to the prefix-machine result
-    g, head = bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g)
     if head is not None:
         head.sort(key=lambda r: r["__v"])
         n1 = sum(r["__c1"] for r in head)
@@ -581,8 +584,7 @@ def _wsr_moments(n, ties):
             (n * (n + 1.0) * (2.0 * n + 1.0)) / 24.0 - ties / 48.0)
 
 
-def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
-                         max_driver_rows: int = 65536) -> DataFrame:
+def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Wilcoxon signed-rank test for PAIRED samples — the within-pair
     companion of mann_whitney_u ("did each unit's A differ from ITS
     OWN B?"), the nonparametric paired t-test. d = a − b per
@@ -593,7 +595,7 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
 
     Shape: the mann_whitney machinery on the |d| axis — ONE
     groupBy(|d|) with a conditional positive count, then the bounded
-    driver path (distinct |d| under max_driver_rows: exact bignum
+    driver path (distinct |d| under MAX_DRIVER_ROWS: exact bignum
     doubled-rank sums, never rounds) or the distributed prefix-sum
     fallback. z is tie-corrected (σ² = n(n+1)(2n+1)/24 − Σ(t³−t)/48)
     and continuity-corrected (±0.5 toward μ = n(n+1)/4); p two-sided
@@ -616,7 +618,7 @@ def wilcoxon_signed_rank(df: DataFrame, col_a: str, col_b: str,
     g = (kept.groupBy("__v")
          .agg(F.count(F.lit(1)).alias("__c"),
               F.sum("__pos").alias("__cp")))
-    g, head = bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g)
     if head is not None:
         if not head:
             raise ValueError("wilcoxon_signed_rank: no nonzero "
@@ -842,12 +844,11 @@ def benjamini_hochberg(df: DataFrame, p_col: str = "p_value",
     fam = (df.where(pc.isNotNull() & ~F.isnan(pc))
            .groupBy(pc.alias("__p"))
            .agg(F.count(F.lit(1)).alias("__c")))
-    rows = fam.limit(max_tests + 1).collect()
-    if len(rows) > max_tests:
-        raise ValueError(
-            f"benjamini_hochberg: family exceeds max_tests={max_tests} "
-            "distinct p-values — a family that size wants a "
-            "storey/empirical-null method, not BH")
+    rows = collect_capped(
+        fam, max_tests,
+        f"benjamini_hochberg: family exceeds max_tests={max_tests} "
+        "distinct p-values — a family that size wants a "
+        "storey/empirical-null method, not BH")
     if not rows:
         raise ValueError("benjamini_hochberg: no non-null p-values")
     rows.sort(key=lambda r: r["__p"])
@@ -906,18 +907,16 @@ def pairwise_welch(df: DataFrame, value_col: str, group_col: str,
     if tail not in ("normal", "exact"):
         raise ValueError("tail must be 'normal' or 'exact'")
     v = F.col(value_col).cast("double")
-    rows = (df.where(v.isNotNull() & ~F.isnan(v)
-                     & F.col(group_col).isNotNull())
-            .groupBy(F.col(group_col).cast("string").alias("__g"))
-            .agg(F.count(F.lit(1)).cast("double").alias("__n"),
-                 F.sum(v).alias("__s"),
-                 F.sum(v * v).alias("__q"))
-            .limit(max_groups + 1)
-            .collect())
-    if len(rows) > max_groups:
-        raise ValueError(
-            f"pairwise_welch: more than max_groups={max_groups} groups "
-            "— a pairwise sweep that size wants bucketing first")
+    rows = collect_capped(
+        df.where(v.isNotNull() & ~F.isnan(v)
+                 & F.col(group_col).isNotNull())
+        .groupBy(F.col(group_col).cast("string").alias("__g"))
+        .agg(F.count(F.lit(1)).cast("double").alias("__n"),
+             F.sum(v).alias("__s"),
+             F.sum(v * v).alias("__q")),
+        max_groups,
+        f"pairwise_welch: more than max_groups={max_groups} groups "
+        "— a pairwise sweep that size wants bucketing first")
     rows.sort(key=lambda r: r["__g"])
     if len(rows) < 2:
         raise ValueError("pairwise_welch needs >= 2 groups")
@@ -1184,11 +1183,10 @@ def bootstrap_ci_by(df: DataFrame, value_col: str, key_cols, by,
                  s_agg, F.count(F.lit(1)).alias("__n"),
                  F.sum(F.col("__k0").isNull().cast("long"))
                  .alias("__nullk")))
-    rep_rows = reps.limit(max_groups * n_boot + 1).collect()
-    if len(rep_rows) > max_groups * n_boot:
-        raise ValueError(
-            f"bootstrap_ci_by: more than max_groups={max_groups} "
-            "groups — bucket or top-K the by-columns first")
+    rep_rows = collect_capped(
+        reps, max_groups * n_boot,
+        f"bootstrap_ci_by: more than max_groups={max_groups} "
+        "groups — bucket or top-K the by-columns first")
     if any(r["__nullk"] for r in rep_rows):
         raise ValueError(
             f"bootstrap_ci_by: key_cols={key_cols} contain NULLs — "
@@ -1285,18 +1283,16 @@ def anova_oneway(df: DataFrame, value_col: str, group_col: str,
     if tail not in ("chi2", "exact"):
         raise ValueError("tail must be 'chi2' or 'exact'")
     v = F.col(value_col).cast("double")
-    rows = (df.where(v.isNotNull() & ~F.isnan(v)
-                     & F.col(group_col).isNotNull())
-            .groupBy(group_col)
-            .agg(F.count(F.lit(1)).cast("double").alias("__n"),
-                 F.sum(v).alias("__s"),
-                 F.sum(v * v).alias("__q"))
-            .limit(max_groups + 1)  # bounded driver state, max_cells style
-            .collect())
-    if len(rows) > max_groups:
-        raise ValueError(
-            f"anova_oneway: more than max_groups={max_groups} groups — "
-            "a family that size wants bucketing first")
+    rows = collect_capped(
+        df.where(v.isNotNull() & ~F.isnan(v)
+                 & F.col(group_col).isNotNull())
+        .groupBy(group_col)
+        .agg(F.count(F.lit(1)).cast("double").alias("__n"),
+             F.sum(v).alias("__s"),
+             F.sum(v * v).alias("__q")),
+        max_groups,
+        f"anova_oneway: more than max_groups={max_groups} groups — "
+        "a family that size wants bucketing first")
     # sorted group order: the driver-side sums are content-deterministic
     rows.sort(key=lambda r: str(r[group_col]))
     k = len(rows)
@@ -1705,8 +1701,7 @@ def brown_forsythe(df: DataFrame, value_col: str, group_col: str,
     return anova_oneway(joined, "__z", "__grp", tail=tail)
 
 
-def spearman_rho(df: DataFrame, col_a: str, col_b: str,
-                 max_driver_rows: int = 65536) -> DataFrame:
+def spearman_rho(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """EXACT Spearman rank correlation, distributed with tie-averaged
     ranks: per column rank(v) = (# below) + (count+1)/2 over the
     distinct values, joined back to the complete-case rows, then ONE
@@ -1725,8 +1720,8 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str,
     paid the full bounded-probe + prefix-machinery job chain): one
     in-row explode tags every value ('a'|'b'), one distinct-count
     aggregate covers both columns, one bounded limit-collect probes
-    the combined cardinality. Under ``max_driver_rows`` the cumsums
-    run driver-side per tag and the maps join back as explicit
+    the combined cardinality. Under ``utils.MAX_DRIVER_ROWS`` the
+    cumsums run driver-side per tag and the maps join back as explicit
     BROADCASTs (counts are integers, so the driver cumsum is
     bit-identical to the distributed one); above it, ONE grouped
     two-phase prefix pass (group_col = the tag) ranks both columns in
@@ -1751,7 +1746,7 @@ def spearman_rho(df: DataFrame, col_a: str, col_b: str,
          .select("__e.__t", "__e.__v")
          .groupBy("__t", "__v")
          .agg(F.count(F.lit(1)).cast("double").alias("__c")))
-    g, head = bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g)
     if head is not None:
         rank_rows = {"a": [], "b": []}
         cums = {"a": 0.0, "b": 0.0}
@@ -1825,7 +1820,7 @@ def spearman_rho_binned(df: DataFrame, col_a: str, col_b: str,
         raise ValueError("bins must be >= 2")
     if bins > 1024:
         # K² cells is the driver state: 1024² ≈ 1M rows is the ceiling
-        # of 'bounded' (the max_driver_rows precedent); the O(1/K) bias
+        # of 'bounded' (the MAX_DRIVER_ROWS precedent); the O(1/K) bias
         # at K=1024 is already below any decision threshold
         raise ValueError("bins > 1024 — the ≤K² driver cell state "
                          "stops being bounded; use spearman_rho")
@@ -2293,11 +2288,10 @@ def kruskal_wallis(df: DataFrame, value_col: str, group_col: str,
              .groupBy(v.alias("__v"),
                       g.cast("string").alias("__g"))
              .agg(F.count(F.lit(1)).alias("__c")))
-    rows = cells.limit(max_cells + 1).collect()
-    if len(rows) > max_cells:
-        raise ValueError(
-            f"kruskal_wallis: more than max_cells={max_cells} "
-            "(value, group) cells — bin the value column first")
+    rows = collect_capped(
+        cells, max_cells,
+        f"kruskal_wallis: more than max_cells={max_cells} "
+        "(value, group) cells — bin the value column first")
     if not rows:
         raise ValueError("kruskal_wallis: no complete-case rows")
     # global tie-averaged ranks over the value marginals, doubled to
@@ -2381,12 +2375,10 @@ def friedman_test(df: DataFrame, value_col: str, block_col: str,
              .groupBy(blk.alias("__b"),
                       trt.cast("string").alias("__t"))
              .agg(F.avg(v).alias("__v")))
-    tre = (cells.select("__t").distinct()
-           .limit(max_treatments + 1).collect())
-    if len(tre) > max_treatments:
-        raise ValueError(
-            f"friedman_test: more than max_treatments={max_treatments} "
-            "treatments — the in-row rank is O(k²) per block")
+    tre = collect_capped(
+        cells.select("__t").distinct(), max_treatments,
+        f"friedman_test: more than max_treatments={max_treatments} "
+        "treatments — the in-row rank is O(k²) per block")
     k = len(tre)
     if k < 2:
         raise ValueError("friedman_test needs >= 2 treatments")
@@ -2650,16 +2642,15 @@ def seasonal_decompose(df: DataFrame, value_col: str, order_col: str,
         raise ValueError("step must be > 0")
     o = F.col(order_col).cast("double")
     v = F.col(value_col).cast("double")
-    rows = (df.where(o.isNotNull() & ~F.isnan(o)
-                     & v.isNotNull() & ~F.isnan(v))
-            .groupBy(F.floor(o / F.lit(step)).cast("long").alias("__b"))
-            .agg(F.count(F.lit(1)).alias("__n"),
-                 F.avg(v).alias("__x"))
-            .limit(max_buckets + 1).collect())
-    if len(rows) > max_buckets:
-        raise ValueError(
-            f"seasonal_decompose: more than max_buckets={max_buckets} "
-            "buckets — raise step")
+    rows = collect_capped(
+        df.where(o.isNotNull() & ~F.isnan(o)
+                 & v.isNotNull() & ~F.isnan(v))
+        .groupBy(F.floor(o / F.lit(step)).cast("long").alias("__b"))
+        .agg(F.count(F.lit(1)).alias("__n"),
+             F.avg(v).alias("__x")),
+        max_buckets,
+        f"seasonal_decompose: more than max_buckets={max_buckets} "
+        "buckets — raise step")
     if len(rows) < 2 * period:
         raise ValueError("seasonal_decompose needs >= 2 full periods "
                          "of buckets")
@@ -2797,11 +2788,10 @@ def _contingency_rows(df: DataFrame, col_a: str, col_b: str,
              .groupBy(a.cast("string").alias("__a"),
                       b.cast("string").alias("__b"))
              .agg(F.count(F.lit(1)).cast("double").alias("__o")))
-    rows = cells.limit(max_cells + 1).collect()
-    if len(rows) > max_cells:
-        raise ValueError(
-            f"{what}: contingency exceeds max_cells={max_cells}; "
-            "bucket the columns first")
+    rows = collect_capped(
+        cells, max_cells,
+        f"{what}: contingency exceeds max_cells={max_cells}; "
+        "bucket the columns first")
     rows.sort(key=lambda r: (r["__a"], r["__b"]))
     row_tot: dict = {}
     col_tot: dict = {}
@@ -3044,8 +3034,8 @@ def _km_survival(zeros, cum_ln):
     return _where(zeros > 0.0, lambda: 0.0, lambda: _exp(cum_ln))
 
 
-def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
-                 max_driver_rows: int = 65536) -> DataFrame:
+def kaplan_meier(df: DataFrame, duration_col: str,
+                 event_col: str) -> DataFrame:
     """Kaplan–Meier product-limit survival curve, distributed.
 
     One output row per distinct duration t:
@@ -3063,14 +3053,14 @@ def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
     and zero-flag prefix sums) run over the distinct-duration frame,
     which for day/bucket-granularity durations is tiny (hundreds of
     rows) — so, the ks_2sample(bins=K) pattern: when that frame fits
-    ``max_driver_rows`` (checked with a bounded limit-collect, no extra
-    count job) the cumsums run driver-side in sorted order, replacing
-    two distributed prefix machines (each a range shuffle + checkpoint
-    + subtotal job) with one small collect. Truly continuous durations
-    blow the cap and fall through to the fully distributed TWO chained
-    prefix passes — n_risk first (the log factors need it), then the
-    log-factor and zero-flag cumsums batched into one multi-column
-    pass. Both paths compute the identical ascending-t arithmetic.
+    ``utils.MAX_DRIVER_ROWS`` (checked with a bounded limit-collect, no
+    extra count job) the cumsums run driver-side in sorted order,
+    replacing two distributed prefix machines (each a range shuffle +
+    checkpoint + subtotal job) with one small collect. Truly continuous
+    durations blow the cap and fall through to the fully distributed
+    TWO chained prefix passes — n_risk first (the log factors need
+    it), then the log-factor and zero-flag cumsums batched into one
+    multi-column pass. Both paths compute the identical ascending-t arithmetic.
     """
     from dask_ml_spark.datapipe.packing import prefix_sum
 
@@ -3086,7 +3076,7 @@ def kaplan_meier(df: DataFrame, duration_col: str, event_col: str,
               F.count(F.lit(1)).cast("double").alias("__n")))
     out_schema = ("duration double, n_risk long, n_events long, "
                   "n_censored long, survival double")
-    g, head = bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g)
     if head is not None:
         head.sort(key=lambda r: r["__t"])
         ntot = sum(r["__n"] for r in head)
@@ -3141,7 +3131,6 @@ def _log_rank_terms(d1, d2, r1, r2, wilcoxon):
 
 def log_rank(df: DataFrame, duration_col: str, event_col: str,
              group_col: str, groups=None,
-             max_driver_rows: int = 65536,
              weights: str = "logrank") -> DataFrame:
     """Two-group log-rank (Mantel–Cox) test — the survival-family
     hypothesis test next to kaplan_meier: do two cohorts share a
@@ -3162,7 +3151,7 @@ def log_rank(df: DataFrame, duration_col: str, event_col: str,
     raw rows with per-group at-t and event-at-t conditional counts —
     the irreducible pass; the risk-set suffix counts and the O/E/V
     sums then run over the distinct-duration frame, driver-side in
-    ascending-t order when it fits ``max_driver_rows`` (bounded
+    ascending-t order when it fits ``utils.MAX_DRIVER_ROWS`` (bounded
     limit-collect, integer counts → the float term sums are
     bit-reproducible and SQL-replayable), else via the two-phase
     prefix machine with the totals read off the LAST cumulative row
@@ -3212,7 +3201,7 @@ def log_rank(df: DataFrame, duration_col: str, event_col: str,
             "n1 long, n2 long, observed1 double, expected1 double, "
             "z double, chi2 double, p_value double")
 
-    g, head = bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g)
     if head is not None:
         head.sort(key=lambda r: r["__t"])
         tot1 = sum(int(r["__n1"]) for r in head)
@@ -3312,7 +3301,6 @@ def _na_band(h, var, z):
 
 
 def nelson_aalen(df: DataFrame, duration_col: str, event_col: str,
-                 max_driver_rows: int = 65536,
                  z: float = 1.96) -> DataFrame:
     """Nelson–Aalen cumulative-hazard estimator — kaplan_meier's
     additive twin: H(t) = Σ_{t' ≤ t} d(t')/n_risk(t'). Where the KM
@@ -3327,8 +3315,8 @@ def nelson_aalen(df: DataFrame, duration_col: str, event_col: str,
 
     Shape: identical to kaplan_meier (the shared survival skeleton) —
     ONE groupBy(duration), driver-side ascending-t cumsums under
-    ``max_driver_rows``, else the two-phase prefix machine computing
-    the same arithmetic. Returns one row per distinct duration:
+    ``utils.MAX_DRIVER_ROWS``, else the two-phase prefix machine
+    computing the same arithmetic. Returns one row per distinct duration:
     (duration, n_risk, n_events, n_censored, cum_hazard, se,
     ci_lo, ci_hi).
     """
@@ -3344,7 +3332,7 @@ def nelson_aalen(df: DataFrame, duration_col: str, event_col: str,
     out_schema = ("duration double, n_risk long, n_events long, "
                   "n_censored long, cum_hazard double, se double, "
                   "ci_lo double, ci_hi double")
-    g, head = bounded_head(g, max_driver_rows)
+    g, head = bounded_head(g)
     if head is not None:
         head.sort(key=lambda r: r["__t"])
         ntot = sum(r["__n"] for r in head)
@@ -3557,18 +3545,16 @@ def welch_anova(df: DataFrame, value_col: str, group_col: str,
     if tail not in ("chi2", "exact"):
         raise ValueError("tail must be 'chi2' or 'exact'")
     v = F.col(value_col).cast("double")
-    rows = (df.where(v.isNotNull() & ~F.isnan(v)
-                     & F.col(group_col).isNotNull())
-            .groupBy(group_col)
-            .agg(F.count(F.lit(1)).cast("double").alias("__n"),
-                 F.sum(v).alias("__s"),
-                 F.sum(v * v).alias("__q"))
-            .limit(max_groups + 1)
-            .collect())
-    if len(rows) > max_groups:
-        raise ValueError(
-            f"welch_anova: more than max_groups={max_groups} groups — "
-            "a family that size wants bucketing first")
+    rows = collect_capped(
+        df.where(v.isNotNull() & ~F.isnan(v)
+                 & F.col(group_col).isNotNull())
+        .groupBy(group_col)
+        .agg(F.count(F.lit(1)).cast("double").alias("__n"),
+             F.sum(v).alias("__s"),
+             F.sum(v * v).alias("__q")),
+        max_groups,
+        f"welch_anova: more than max_groups={max_groups} groups — "
+        "a family that size wants bucketing first")
     rows.sort(key=lambda r: str(r[group_col]))
     k = len(rows)
     if k < 2:

@@ -44,6 +44,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dask_ml_spark.utils import collect_capped
+
 
 def reference_histogram(df: DataFrame, value_col: str,
                         bins: int = 32) -> dict:
@@ -355,12 +357,11 @@ def ewma_drift(df: DataFrame, value_col: str, ts_col: str, ref: dict,
     v, kept = _numeric_kept(df, value_col)
     agg = _window_agg(kept, ts_col, window, None,
                       [F.sum(v).alias("__s")])
-    rows = (agg.select(F.col("__w.start").alias("ws"), "n", "__s")
-            .limit(max_windows + 1).collect())
-    if len(rows) > max_windows:
-        raise ValueError(
-            f"ewma_drift: more than max_windows={max_windows} windows "
-            "— widen the window or shard the time range")
+    rows = collect_capped(
+        agg.select(F.col("__w.start").alias("ws"), "n", "__s"),
+        max_windows,
+        f"ewma_drift: more than max_windows={max_windows} windows "
+        "— widen the window or shard the time range")
     rows.sort(key=lambda r: r["ws"])
     out = []
     e = mu
@@ -439,13 +440,12 @@ def reference_categories(df: DataFrame, cat_col: str,
     conditional-sum order is content-deterministic. Returns
     {"cats": [sorted category strings], "counts": [...], "n"}."""
     c = F.col(cat_col).cast("string")
-    rows = (df.where(c.isNotNull()).groupBy(c.alias("__c"))
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .limit(max_categories + 1).collect())
-    if len(rows) > max_categories:
-        raise ValueError(
-            f"reference_categories: more than {max_categories} "
-            "distinct categories — bucket or top-K the column first")
+    rows = collect_capped(
+        df.where(c.isNotNull()).groupBy(c.alias("__c"))
+        .agg(F.count(F.lit(1)).alias("__n")),
+        max_categories,
+        f"reference_categories: more than {max_categories} "
+        "distinct categories — bucket or top-K the column first")
     if not rows:
         raise ValueError("reference_categories: no non-null categories")
     rows.sort(key=lambda r: r["__c"])

@@ -7,9 +7,10 @@ authoritative, so the equivalents here are thin.
 The plan section is the only code that reads a Spark plan (by node
 class, via ``_plan_nodes``) and owns the decisions made from it:
 spreading (``ensure_min_partitions``, ``right_size_cv_cache``), lineage
-cuts (``cut``), the bounded driver probe (``bounded_head``) and the
-plan lint (``assert_scalable``). It also owns how a driver-computed
-result becomes a frame (``local_frame``).
+cuts (``cut``), bounded driver state (``MAX_DRIVER_ROWS``,
+``bounded_head``, ``collect_capped``) and the plan lint
+(``assert_scalable``). It also owns how a driver-computed result
+becomes a frame (``local_frame``).
 """
 
 from __future__ import annotations
@@ -227,14 +228,22 @@ def cut(df: DataFrame) -> DataFrame:
     return df if _is_materialized(df) else df.localCheckpoint(eager=False)
 
 
-def bounded_head(g: DataFrame, cap: int | None):
-    """The bounded driver probe of the distinct-value cumulatives
-    (stats' ks/mwu/kaplan/spearman/..., metrics.roc_auc_score): cut
+# The one driver-row cap of the dual-path operators (stats' ks/mwu/
+# wilcoxon/spearman/kaplan/log_rank/nelson_aalen, metrics.roc_auc_score):
+# a distinct-value frame up to this size is accumulated on the driver,
+# a larger one stays distributed. 0 forces every dual path distributed.
+MAX_DRIVER_ROWS = 65536
+
+
+def bounded_head(g: DataFrame, cap: int | None = None):
+    """The bounded driver probe of the distinct-value cumulatives: cut
     ``g`` FIRST, so a fallback to prefix_sum reuses it instead of
-    re-running the groupBy, then one limit(cap+1) collect. Returns
-    (cut g, head records if they fit else None); a falsy or negative
-    cap skips the probe."""
+    re-running the groupBy, then one limit(cap+1) collect. ``cap``
+    defaults to ``MAX_DRIVER_ROWS``, read at call time. Returns (cut g,
+    head records if they fit else None); a falsy or negative cap skips
+    the probe."""
     g = cut(g)
+    cap = MAX_DRIVER_ROWS if cap is None else cap
     if not cap or cap < 0:
         return g, None
     # Arrow transfer instead of a Row collect (r13 optimization): the
@@ -247,6 +256,17 @@ def bounded_head(g: DataFrame, cap: int | None):
     if len(head_pdf) > cap:
         return g, None
     return g, head_pdf.to_dict("records")
+
+
+def collect_capped(df: DataFrame, cap: int, message: str) -> list:
+    """The bounded driver collect of an operator with a loud cap
+    (``max_groups``, ``max_cells``, ...): one ``limit(cap + 1)``
+    collect, and ``ValueError(message)`` if more than ``cap`` rows
+    come back. Returns the rows."""
+    rows = df.limit(cap + 1).collect()
+    if len(rows) > cap:
+        raise ValueError(message)
+    return rows
 
 
 # in-memory bytes a CV cache partition may hold before right_size_cv_cache
@@ -558,14 +578,15 @@ def salted_join(left: DataFrame, right: DataFrame, on: str, n_salt: int = 16,
             total = counts.agg(F.sum("__c")).collect()[0][0] or 0
             hot_threshold = max(total // max(sp, 1), 1000)
         hot = counts.where(F.col("__c") > hot_threshold)
-        rows = hot.select(on).limit(max_hot_keys + 1).collect()
-        counts.unpersist()
-        if len(rows) > max_hot_keys:
-            raise ValueError(
+        try:
+            rows = collect_capped(
+                hot.select(on), max_hot_keys,
                 f"more than max_hot_keys={max_hot_keys} keys exceed "
                 f"hot_threshold={hot_threshold}; use AQE skew-join "
                 "(spark.sql.adaptive.skewJoin.enabled) instead of an "
                 "explicit hot list this long")
+        finally:
+            counts.unpersist()
         hot_list = [r[0] for r in rows]
     elif isinstance(hot_keys, str):
         raise ValueError(f"hot_keys must be 'auto', 'all', or a list, "
@@ -585,6 +606,23 @@ def salted_join(left: DataFrame, right: DataFrame, on: str, n_salt: int = 16,
             .join(right.where(~is_hot), on, how))
     hot = _salted(left.where(is_hot), right.where(is_hot))
     return hot.unionByName(cold)
+
+
+# single-child plan nodes that never emit more rows than they read (the
+# codegen ones wrap a broadcast side when AQE is off)
+_ROW_BOUNDED = ("BroadcastExchangeExec", "FilterExec",
+                "WholeStageCodegenExec", "InputAdapter")
+
+
+def _broadcasts_scalar(bnlj) -> bool:
+    """Whether a BroadcastNestedLoopJoin's build side is an aggregate
+    with no grouping keys (at most one row) under row-bounded nodes."""
+    node = (bnlj.right() if "Right" in bnlj.buildSide().toString()
+            else bnlj.left())
+    while (name := node.getClass().getSimpleName()) in _ROW_BOUNDED:
+        node = node.child()
+    return (name.endswith("AggregateExec")
+            and node.groupingExpressions().isEmpty())
 
 
 class ScalabilityError(RuntimeError):
@@ -610,14 +648,18 @@ def assert_scalable(df: DataFrame, *, allow_cartesian: bool = False,
       range. A condition-free Cross BNLJ is NOT flagged: Spark only
       plans it when one side fits the broadcast threshold, which is
       the scalar-aggregate crossJoin pattern (1-row stats broadcasts)
-      this library itself uses — bounded by construction.
+      this library itself uses — bounded by construction. Nor is a
+      conditioned BNLJ that broadcasts a keyless aggregate: that is
+      the same pattern with its filter pushed into the join
+      (``crossJoin(F.broadcast(agg)).where(col > scalar)``).
 
     Returns the DataFrame unchanged so it chains:
         assert_scalable(build_pipeline(...)).write.parquet(...)
     """
     found = {name for name, node in _plan_nodes(df)
              if name != "BroadcastNestedLoopJoinExec"
-             or node.condition().isDefined()}
+             or (node.condition().isDefined()
+                 and not _broadcasts_scalar(node))}
     problems = [msg for name, waived, msg in (
         ("CartesianProductExec", allow_cartesian,
          "CartesianProduct (O(N*M) pair explosion)"),

@@ -3,7 +3,10 @@ entry on Spark and its oracle_sql() on DuckDB at sf0.01; compare row
 count, column names, and an order-insensitive value comparison
 (rows sorted, floats rounded).
 
-Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+Usage: python scripts/check_oracle.py [--distributed] [sf_dir] [query ...]
+
+--distributed sets utils.MAX_DRIVER_ROWS = 0 before any query is built,
+so every dual-path operator takes its distributed path (the parity run).
 """
 
 from __future__ import annotations
@@ -18,6 +21,9 @@ import pandas as pd
 
 sys.path.insert(0, "/root/repo")
 
+DISTRIBUTED = "--distributed" in sys.argv
+if DISTRIBUTED:
+    sys.argv.remove("--distributed")
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 
@@ -37,7 +43,10 @@ def canon(pdf: pd.DataFrame, ndigits: int = 6) -> pd.DataFrame:
 
 def main():
     import __spark_entry__ as E
-    from dask_ml_spark import get_spark
+    from dask_ml_spark import get_spark, utils
+
+    if DISTRIBUTED:
+        utils.MAX_DRIVER_ROWS = 0
 
     spark = get_spark(app_name="oracle-check", shuffle_partitions=16,
                       extra_conf={"spark.ui.enabled": "false"})

@@ -650,16 +650,19 @@ def test_grid_search_best_job_budget(spark, catalog, name, budget):
     assert run() <= budget
 
 
-def test_spearman_distributed_branch_cuts_ranks_once(spark):
-    """spearman_rho's distributed branch (max_driver_rows=0) cuts the
+def test_spearman_distributed_branch_cuts_ranks_once(spark, monkeypatch):
+    """spearman_rho's distributed branch (MAX_DRIVER_ROWS=0) cuts the
     ranked cumsum before splitting it per column: the final plan reads
     the materialized ranks, so prefix_sum's Python cumsum pass
     (MapInPandas) does not run once per rank frame. Values match the
     driver path."""
+    from dask_ml_spark import utils
     from dask_ml_spark.functions.stats import spearman_rho
 
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    dist = spearman_rho(li, "l_quantity", "l_discount", max_driver_rows=0)
+    with monkeypatch.context() as m:
+        m.setattr(utils, "MAX_DRIVER_ROWS", 0)
+        dist = spearman_rho(li, "l_quantity", "l_discount")
     plan = dist._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 0
     assert dist.collect() == spearman_rho(li, "l_quantity", "l_discount").collect()

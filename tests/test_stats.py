@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from dask_ml_spark import utils
 from dask_ml_spark.functions.stats import kaplan_meier, ks_2sample, mann_whitney_u
 
 
@@ -96,7 +97,7 @@ def test_mann_whitney_matches_bruteforce(spark):
     assert row2["rank_biserial"] == 0.0
 
 
-def test_wilcoxon_signed_rank_matches_replay(spark):
+def test_wilcoxon_signed_rank_matches_replay(spark, monkeypatch):
     """Both execution paths (bounded driver / distributed prefix)
     pinned against an independent pandas average-rank replay with
     real ties AND zero differences (discarded, the classic
@@ -124,8 +125,9 @@ def test_wilcoxon_signed_rank_matches_replay(spark):
                           w_ref - mu) / math.sqrt(var)
     p_ref = min(1.0, 2.0 * normal_sf(abs(z_ref)))
     for mdr in (65536, 0):
-        row = wilcoxon_signed_rank(df, "a", "b",
-                                   max_driver_rows=mdr).collect()[0]
+        with monkeypatch.context() as m:
+            m.setattr(utils, "MAX_DRIVER_ROWS", mdr)
+            row = wilcoxon_signed_rank(df, "a", "b").collect()[0]
         assert row["n"] == n, mdr
         assert abs(row["w_plus"] - w_ref) < 1e-9, mdr
         assert abs(row["z"] - z_ref) < 1e-12, mdr
@@ -1435,9 +1437,9 @@ def test_spearman_rho_matches_pandas(spark):
     assert abs(out2["rho"]) < 0.15 and out2["p_value"] > 0.01
 
 
-def test_kaplan_meier_driver_and_distributed_paths_agree(spark):
+def test_kaplan_meier_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The bounded driver path (default) and the prefix-machine
-    fallback (max_driver_rows exceeded) must produce identical curves
+    fallback (MAX_DRIVER_ROWS exceeded) must produce identical curves
     — same ascending-t arithmetic on both sides."""
     rng = np.random.RandomState(7)
     t = rng.randint(1, 40, 500).astype(float)
@@ -1445,9 +1447,10 @@ def test_kaplan_meier_driver_and_distributed_paths_agree(spark):
     df = spark.createDataFrame([(float(a), int(b)) for a, b in zip(t, e)],
                                ["t", "e"])
     fast = {r["duration"]: r for r in kaplan_meier(df, "t", "e").collect()}
-    slow = {r["duration"]: r
-            for r in kaplan_meier(df, "t", "e", max_driver_rows=5)
-            .collect()}
+    with monkeypatch.context() as m:
+        m.setattr(utils, "MAX_DRIVER_ROWS", 5)
+        slow = {r["duration"]: r
+                for r in kaplan_meier(df, "t", "e").collect()}
     assert set(fast) == set(slow)
     for k in fast:
         for c in ("n_risk", "n_events", "n_censored"):
@@ -1455,7 +1458,7 @@ def test_kaplan_meier_driver_and_distributed_paths_agree(spark):
         assert abs(fast[k]["survival"] - slow[k]["survival"]) < 1e-12
 
 
-def test_ks_mwu_driver_and_distributed_paths_agree(spark):
+def test_ks_mwu_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The bounded driver path (default) and the prefix-machine
     fallback must produce identical statistics — counts are integer
     doubles, so D/U/ties are exact on both sides. roc_auc_score's U
@@ -1467,18 +1470,22 @@ def test_ks_mwu_driver_and_distributed_paths_agree(spark):
              rng.randint(0, 25, 180).astype(float) + 0.5 * 0)
     for fn in (ks_2sample, mann_whitney_u):
         fast = fn(df, "x", "g").collect()[0]
-        slow = fn(df, "x", "g", max_driver_rows=3).collect()[0]
+        with monkeypatch.context() as m:
+            m.setattr(utils, "MAX_DRIVER_ROWS", 3)
+            slow = fn(df, "x", "g").collect()[0]
         for c in fast.asDict():
             a, b = fast[c], slow[c]
             assert (a == b or abs(a - b) < 1e-12), (fn.__name__, c, a, b)
     scored = df.select((F.col("g") == "a").cast("double").alias("label"),
                        F.col("x").alias("score"))
     fast = roc_auc_score(scored)
-    slow = roc_auc_score(scored, max_driver_rows=0)
+    with monkeypatch.context() as m:
+        m.setattr(utils, "MAX_DRIVER_ROWS", 0)
+        slow = roc_auc_score(scored)
     assert abs(fast - slow) < 1e-12, (fast, slow)
 
 
-def test_spearman_driver_and_distributed_paths_agree(spark):
+def test_spearman_driver_and_distributed_paths_agree(spark, monkeypatch):
     from dask_ml_spark.functions.stats import spearman_rho
 
     rng = np.random.RandomState(21)
@@ -1487,20 +1494,22 @@ def test_spearman_driver_and_distributed_paths_agree(spark):
     df = spark.createDataFrame(
         [(float(x), float(y)) for x, y in zip(a, b)], ["a", "b"])
     fast = spearman_rho(df, "a", "b").collect()[0]
-    slow = spearman_rho(df, "a", "b", max_driver_rows=4).collect()[0]
+    with monkeypatch.context() as m:
+        m.setattr(utils, "MAX_DRIVER_ROWS", 4)
+        slow = spearman_rho(df, "a", "b").collect()[0]
     assert fast["n"] == slow["n"]
     assert abs(fast["rho"] - slow["rho"]) < 1e-12
     assert abs(fast["p_value"] - slow["p_value"]) < 1e-12
 
 
-def test_stats_plans_have_no_global_window(spark):
+def test_stats_plans_have_no_global_window(spark, monkeypatch):
     """The scale contract: no keyless Window (single-task sort) — the
     cumulative pieces run through the two-phase prefix sum
-    (max_driver_rows=0 pins the distributed path)."""
+    (MAX_DRIVER_ROWS=0 pins the distributed path)."""
     rng = np.random.RandomState(1)
     df = _mk(spark, rng.rand(50), rng.rand(60))
-    for out in (ks_2sample(df, "x", "g", max_driver_rows=0),
-                mann_whitney_u(df, "x", "g", max_driver_rows=0)):
+    monkeypatch.setattr(utils, "MAX_DRIVER_ROWS", 0)
+    for out in (ks_2sample(df, "x", "g"), mann_whitney_u(df, "x", "g")):
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in plan
 
@@ -1753,8 +1762,8 @@ def test_log_rank_matches_bruteforce(spark):
                - min(1.0, 2.0 * normal_sf(abs(r["z"])))) < 1e-15
 
 
-def test_log_rank_distributed_fallback_parity(spark):
-    """max_driver_rows=0 forces the prefix-machine path; totals must
+def test_log_rank_distributed_fallback_parity(spark, monkeypatch):
+    """MAX_DRIVER_ROWS=0 forces the prefix-machine path; totals must
     match the driver path to float reproduction."""
     from dask_ml_spark.functions.stats import log_rank
 
@@ -1763,7 +1772,8 @@ def test_log_rank_distributed_fallback_parity(spark):
              "x" if rng.rand() < 0.5 else "y") for _ in range(500)]
     df = spark.createDataFrame(rows, ["dur", "ev", "g"])
     a = log_rank(df, "dur", "ev", "g").collect()[0]
-    b = log_rank(df, "dur", "ev", "g", max_driver_rows=0).collect()[0]
+    monkeypatch.setattr(utils, "MAX_DRIVER_ROWS", 0)
+    b = log_rank(df, "dur", "ev", "g").collect()[0]
     assert (a["n1"], a["n2"]) == (b["n1"], b["n2"])
     for c in ("observed1", "expected1", "z", "chi2", "p_value"):
         assert abs(a[c] - b[c]) < 1e-12, c
@@ -1835,7 +1845,7 @@ def test_cohens_d_bruteforce(spark):
         cohens_d(df, "v", "g", groups=("zz", "ww")).collect()
 
 
-def test_nelson_aalen_bruteforce_and_km_link(spark):
+def test_nelson_aalen_bruteforce_and_km_link(spark, monkeypatch):
     """Quadratic replay of H, Var, CI on tied+censored data; the
     distributed prefix path matches the driver path; and the
     exp(−H) ≥ KM identity (Fleming–Harrington dominates the
@@ -1865,8 +1875,10 @@ def test_nelson_aalen_bruteforce_and_km_link(spark):
         assert abs(r["ci_lo"] - max(0.0, h - 1.96 * r["se"])) < 1e-12
         assert abs(r["ci_hi"] - (h + 1.96 * r["se"])) < 1e-12
 
-    dist = {r["duration"]: r for r in
-            nelson_aalen(df, "dur", "ev", max_driver_rows=0).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(utils, "MAX_DRIVER_ROWS", 0)
+        dist = {r["duration"]: r for r in
+                nelson_aalen(df, "dur", "ev").collect()}
     assert set(dist) == set(got)
     for t, r in got.items():
         for c in ("n_risk", "n_events", "cum_hazard", "se"):
@@ -2070,7 +2082,7 @@ def test_normal_ppf_and_power_planners():
         minimum_detectable_effect(1)
 
 
-def test_log_rank_gehan_weights(spark):
+def test_log_rank_gehan_weights(spark, monkeypatch):
     """weights='wilcoxon' replays the n_t-weighted O/E/V quadratically
     (both paths), reduces to the unweighted test on weight-free data
     only in the trivial sense, and catches an EARLY-only difference
@@ -2104,8 +2116,9 @@ def test_log_rank_gehan_weights(spark):
     assert abs(r["observed1"] - o1) < 1e-9
     assert abs(r["expected1"] - e1) < 1e-9
     assert abs(r["z"] - z) < 1e-9
-    rd = log_rank(df, "dur", "ev", "g", weights="wilcoxon",
-                  max_driver_rows=0).collect()[0]
+    with monkeypatch.context() as m:
+        m.setattr(utils, "MAX_DRIVER_ROWS", 0)
+        rd = log_rank(df, "dur", "ev", "g", weights="wilcoxon").collect()[0]
     for c in ("observed1", "expected1", "z", "chi2", "p_value"):
         assert abs(rd[c] - r[c]) < 1e-9, c
 

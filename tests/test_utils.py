@@ -108,8 +108,11 @@ def test_plan_inspection_has_one_owner():
     writes the closed-form p-value tails, each once, rendered per
     engine, so no module keeps a hand copy. No module calls
     ``F.signum(``: the rank tests' sign is ``_signum`` inside their
-    written-once z formula."""
+    written-once z formula. A bounded driver collect goes through
+    ``bounded_head`` or ``collect_capped``: no module but utils.py
+    hand-rolls a ``limit(<cap> + 1)`` probe (a pattern, not a word)."""
     import pathlib
+    import re
 
     import dask_ml_spark
 
@@ -123,14 +126,31 @@ def test_plan_inspection_has_one_owner():
         (("functions/stats.py",), ("0.2316419", "_KS_TERMS")),
         ((), ("F.signum(",)),
         (("utils.py", "streaming/drift.py"), ("createDataFrame(",)),
+        (("utils.py",), (re.compile(r"limit\([^()]*\+ *1\)"),)),
     ]
     root = pathlib.Path(dask_ml_spark.__file__).parent
     offenders = []
     for path in sorted(root.rglob("*.py")):
         rel, text = path.relative_to(root).as_posix(), path.read_text()
         offenders += [f"{rel}: {word}" for owner, words in owners
-                      if rel not in owner for word in words if word in text]
+                      if rel not in owner for word in words
+                      if (word.search(text) if isinstance(word, re.Pattern)
+                          else word in text)]
     assert offenders == []
+
+
+def test_collect_capped_boundary(spark):
+    """Exactly ``cap`` rows come back as rows; ``cap + 1`` raises the
+    caller's message verbatim."""
+    import pytest
+
+    from dask_ml_spark.utils import collect_capped
+
+    msg = "f: more than max_x=3 things (a) [b] — bin first"
+    assert [r.id for r in collect_capped(spark.range(3), 3, msg)] == [0, 1, 2]
+    with pytest.raises(ValueError) as err:
+        collect_capped(spark.range(4), 3, msg)
+    assert str(err.value) == msg
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -541,10 +561,17 @@ def test_assert_scalable_flags_and_waives(spark):
     fast = pandas_udf(_fast, "long")
     assert_scalable(a.select(fast("id")))
 
-    # non-equi join flagged
+    # non-equi join flagged, also against a grouped (unbounded) aggregate
     noneq = a.join(b, a.id < b.id2)
     with _pytest.raises(ScalabilityError, match="BroadcastNestedLoopJoin"):
         assert_scalable(noneq)
+    grouped = F.broadcast(b.groupBy("id2").count())
+    with _pytest.raises(ScalabilityError, match="BroadcastNestedLoopJoin"):
+        assert_scalable(a.join(grouped, a.id < grouped.id2))
+    # the 1-row scalar broadcast whose filter Spark pushes into the BNLJ
+    # condition (idle_customers, important_parts) is bounded and passes
+    avg = F.broadcast(b.agg(F.avg("id2").alias("m")))
+    assert_scalable(a.crossJoin(avg).where(F.col("id") > F.col("m")))
 
 
 def test_assert_scalable_accepts_library_pipelines(spark):
