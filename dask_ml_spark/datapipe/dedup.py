@@ -17,7 +17,9 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from dask_ml_spark import utils
 from dask_ml_spark.utils import ensure_min_partitions, local_frame
 
 TOKEN_RE = "[a-z0-9_]{2,}"
@@ -664,72 +666,97 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relink.unionAll(keep).distinct()
 
 
-def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
-                              id_b: str = "id_b", max_iter: int = 30,
-                              local_edges: int = 1_000_000) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    contraction (Kiveris et al. 2014) — same (node, cluster) contract
-    as `duplicate_clusters`, but O(log² n) rounds REGARDLESS of
-    component diameter, versus O(diameter) for min-label propagation.
-    This is the escalation path when dup groups stop being near-cliques
-    (adversarial chains: doc A ~ B ~ C ~ ... each within threshold).
+def _edge_signature(edges: DataFrame) -> tuple:
+    """(edge count, XOR of edge hashes): the loop's convergence
+    certificate, order-insensitive and overflow-free, in one scalar
+    aggregate. The count is also what the driver-finish gate reads."""
+    sig = edges.agg(F.count("*").alias("n"),
+                    F.coalesce(_xor_agg(), F.lit(0)).alias("h")).first()
+    return sig["n"], sig["h"]
 
-    Convergence certificate: (edge count, XOR of edge hashes) — both
-    order-insensitive and overflow-free, two scalar aggregates per
-    round. At convergence the edge set is a union of stars centered at
-    each component's minimum id, so the final map is the edge list
-    itself plus a (root, root) row per center.
 
-    Hybrid finish (the standard local phase of parallel CC, cf.
-    FastSV-style hybrids): the per-round signature aggregate already
-    measures the surviving edge count, so once it drops to
-    <= local_edges (default 1M edges ≈ 16 MB of longs) the remaining
+def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
+                       id_b: str = "id_b", max_iter: int = 50) -> DataFrame:
+    """Connected components over a near-duplicate pair list: every
+    document gets a cluster id = the MIN document id reachable through
+    pair edges. Pairs say "these two are dups"; clusters are what a
+    curation pipeline acts on ("keep one representative per group").
+
+    Returns (node long, cluster long): one row per document that
+    appears in an edge. An edge is a pair of two distinct non-NULL ids:
+    a pair with a NULL id is dropped, and a self-pair (a, a) is no edge
+    (a document paired only with itself is a singleton). Singletons
+    are their own cluster by definition and are not materialized. Both
+    id columns must be integral (byte/short/int/long), else ValueError.
+
+    Alternating large-star/small-star contraction (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond"): O(log² n)
+    rounds REGARDLESS of component diameter, so long chains (doc A ~ B
+    ~ C ~ ..., DBSCAN density chains) cost no more rounds than LSH's
+    near-cliques. Each round's ``_edge_signature`` (edge count, XOR of
+    edge hashes) is the convergence certificate: at convergence the
+    edge set is a union of stars centered at each component's minimum
+    id, so the map is the edge list itself plus a (root, root) row per
+    center. No stable signature within ``max_iter`` rounds raises
+    RuntimeError instead of returning a half-contracted map.
+
+    Driver finish (the standard local phase of parallel CC, cf.
+    FastSV-style hybrids): once the signature counts at most
+    ``utils.MAX_DRIVER_EDGES`` edges (read at call time), the remaining
     graph is collected in ONE Arrow batch and finished with driver-side
-    union-find — each distributed round on a contracted graph costs a
-    fixed ~5 shuffle-stage launches regardless of size, so finishing a
-    tiny tail distributedly is pure scheduling overhead (measured 5x
-    on a 94k-edge graph). At corpus scale the loop still does the real
-    contraction work; the collect stays bounded by the documented
-    constant. local_edges=0 disables the local phase (pure
-    distributed, e.g. for tests of the loop itself).
+    union-find. Each distributed round costs a fixed ~5 shuffle-stage
+    launches regardless of size, so contracting a small tail
+    distributedly is pure scheduling overhead (measured 5x on a
+    94k-edge graph). At corpus scale the loop does the real contraction
+    work and the collect stays bounded by the constant; 0 forces the
+    distributed loop to the end.
     """
+    for c in (id_a, id_b):
+        dt = pairs.schema[c].dataType
+        if not isinstance(dt, T.IntegralType):
+            raise ValueError(
+                f"duplicate_clusters: id column {c!r} is {dt.simpleString()}; "
+                "ids must be integral (byte/short/int/long)")
     # localCheckpoint (not persist): each round's plan nests two
     # joins + three exchanges on top of the last, so lineage grows
-    # exponentially across O(log² n) rounds — truncating it per round
-    # is what keeps the optimizer's work O(1) per round. LAZY
-    # (eager=False): the signature aggregate right below is the first
-    # action anyway, so it materializes the checkpoint in the SAME job
-    # — an eager checkpoint would run one extra job per round (measured
-    # ~2x the job count on small fixed inputs where scheduling, not
-    # data, is the cost). Fault-tolerance note: checkpoint blocks are
-    # unreplicated and lineage is truncated, so losing an executor
-    # mid-loop fails the job instead of recomputing the partition — on
-    # a real cluster swap in checkpoint() to a reliable store if
-    # executor loss during the loop must be survivable.
+    # exponentially across rounds — truncating it per round is what
+    # keeps the optimizer's work O(1) per round, and a library
+    # persist() would leak its CacheManager entry for the session
+    # (checkpoint blocks are ContextCleaner-reclaimed once dropped).
+    # LAZY (eager=False): the signature aggregate right below is the
+    # first action anyway, so it materializes the checkpoint in the
+    # SAME job — an eager checkpoint would run one extra job per round
+    # (measured ~2x the job count on small fixed inputs where
+    # scheduling, not data, is the cost). Fault-tolerance note:
+    # checkpoint blocks are unreplicated and lineage is truncated, so
+    # losing an executor mid-loop fails the job instead of recomputing
+    # the partition — on a real cluster swap in checkpoint() to a
+    # reliable store if executor loss during the loop must be
+    # survivable. `src != dst` also drops the NULL-id pairs.
     edges = (pairs.select(F.col(id_a).cast("long").alias("src"),
                           F.col(id_b).cast("long").alias("dst"))
              .where(F.col("src") != F.col("dst"))
              .distinct().localCheckpoint(eager=False))
-    sig = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(_xor_agg(), F.lit(0)).alias("h")).first()
-    for _ in range(max_iter):
-        if sig["n"] <= local_edges:
-            return _components_local(edges)
+    sig = _edge_signature(edges)
+    rounds = 0
+    while sig[0] > utils.MAX_DRIVER_EDGES:
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"duplicate_clusters did not converge in max_iter={max_iter} "
+                f"rounds ({sig[0]} edges left); raise max_iter")
+        rounds += 1
         new_edges = _small_star(_large_star(edges)).localCheckpoint(
             eager=False)
-        new_sig = new_edges.agg(
-            F.count("*").alias("n"),
-            F.coalesce(_xor_agg(), F.lit(0)).alias("h")).first()
+        new_sig = _edge_signature(new_edges)
         edges.unpersist()
         edges = new_edges
-        if (new_sig["n"], new_sig["h"]) == (sig["n"], sig["h"]):
-            break
+        if new_sig == sig:
+            roots = edges.select(F.col("dst").alias("node")).distinct()
+            return (edges.select(F.col("src").alias("node"),
+                                 F.col("dst").alias("cluster"))
+                    .unionAll(roots.select("node", F.col("node").alias("cluster"))))
         sig = new_sig
-    roots = edges.select(F.col("dst").alias("node")).distinct()
-    out = (edges.select(F.col("src").alias("node"), F.col("dst").alias("cluster"))
-           .unionAll(roots.select("node", F.col("node").alias("cluster"))))
-    return out
+    return _components_local(edges)
 
 
 def _components_local(edges: DataFrame) -> DataFrame:
@@ -737,7 +764,7 @@ def _components_local(edges: DataFrame) -> DataFrame:
     ONE Arrow toPandas (the repo's bounded-collect idiom — never
     toLocalIterator), path-halving DSU, roots resolved to the MIN
     member id so labels match the distributed rendering exactly.
-    Output contract matches connected_components_star: (node, cluster)
+    Output contract matches duplicate_clusters: (node, cluster)
     for every node that appears in any edge."""
     import pandas as pd
 
@@ -779,120 +806,13 @@ def _xor_agg():
         return F.expr("bit_xor(xxhash64(src, dst))")
 
 
-def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
-                       id_b: str = "id_b", max_iter: int = 50,
-                       method: str = "label",
-                       local_edges: int = 1_000_000) -> DataFrame:
-    """Connected components over a near-duplicate pair list: every
-    document gets a cluster id = the MIN document id reachable through
-    pair edges. Pairs say "these two are dups"; clusters are what a
-    curation pipeline acts on ("keep one representative per group").
-
-    Min-label propagation: per round, every node takes the minimum of
-    its own label and its neighbors' labels — one join + one aggregate
-    per round, converging in O(component diameter) rounds (LSH dup
-    groups are near-cliques, so 2-4 rounds in practice; the round cap
-    guards adversarial chains — escalate to large-star/small-star
-    [Kiveris 2014] if diameters ever grow). Labels only decrease, so
-    the label SUM is a convergence certificate that costs one scalar
-    aggregate instead of a change-count join.
-
-    Returns (node, cluster): one row per document that appears in any
-    pair of two non-NULL ids. Singletons (no pair) are their own
-    cluster by definition and are not materialized.
-
-    method="star" dispatches to `connected_components_star` (same
-    contract, O(log² n) rounds independent of diameter) — prefer it
-    when components may be long chains rather than near-cliques.
-
-    Hybrid finish (same rationale and constant as
-    `connected_components_star.local_edges`): each label round costs a
-    fixed ~4 shuffle-stage job launches regardless of edge count, so a
-    pair set the FIRST aggregate measures at <= ``local_edges`` edges
-    (~16 MB of longs) is collected in one Arrow batch and finished with
-    driver-side union-find instead — identical min-member labels, one
-    job instead of O(diameter) rounds. At corpus scale the measured
-    count exceeds the bound and the distributed loop does the real
-    work. ``local_edges=0`` disables the local phase (pure distributed,
-    for tests of the loop itself).
-    """
-    if method == "star":
-        return connected_components_star(pairs, id_a, id_b, max_iter,
-                                         local_edges=local_edges)
-    if method != "label":
-        raise ValueError(f"method must be 'label' or 'star', got {method!r}")
-    # lazy localCheckpoint, not persist: sym is referenced every round,
-    # and a library persist() leaks its CacheManager entry for the
-    # session (checkpoint blocks are ContextCleaner-reclaimed once
-    # dropped). Edge tables are candidate-pair scale — far below
-    # corpus scale; lazy so it materializes with round 1's job.
-    # symmetrize with ONE in-row explode, not a unionAll of two selects:
-    # the union duplicates the entire upstream pair plan (hashing +
-    # candidate join run twice per materialization — measured on the
-    # image dedup path), while the generator reads each pair once.
-    # A pair with a NULL id is no edge: it is dropped here, once, so
-    # the local finish (where int(NaN) raises in union-find) and the
-    # distributed label loop see the same edge set — a node paired
-    # only with a NULL id is in neither output
-    sym = (pairs.select(F.explode(F.array(
-               F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-               F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))))
-           .alias("__e"))
-           .select("__e.src", "__e.dst")
-           .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-           .distinct().localCheckpoint(eager=False))
-    from pyspark.sql import types as T
-
-    if local_edges and isinstance(sym.schema["src"].dataType, T.LongType):
-        # the count doubles as the checkpoint materialization the first
-        # label round was going to pay anyway, so taking the measured
-        # branch costs one scalar aggregate over cached blocks. sym
-        # holds BOTH orientations (~2x the oriented distinct pairs the
-        # star path gates on), so the bound doubles to admit the same
-        # graphs
-        if sym.count() <= 2 * local_edges:
-            return _components_local(sym)
-    # localCheckpoint, not persist: each round references `labels`
-    # TWICE (neighbor join + left join), so without lineage truncation
-    # the logical plan DOUBLES per round — exponential in rounds, and a
-    # diameter-10 component already OOMs the driver on plan strings.
-    # Truncation keeps optimizer work O(1) per round; caching comes
-    # with it. LAZY: the label-sum aggregate below is the first action
-    # and materializes the checkpoint in the same job (an eager
-    # checkpoint would double the per-round job count). Same
-    # fault-tolerance trade as connected_components_star: executor
-    # loss mid-loop fails the job — use checkpoint() to reliable
-    # storage on a real cluster if that must be survivable.
-    labels = (sym.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint(eager=False))
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(max_iter):
-        neigh = (sym.join(labels, sym.src == labels.node)
-                 .groupBy(F.col("dst").alias("node"))
-                 .agg(F.min("label").alias("nmin")))
-        new_labels = (labels.join(neigh, "node", "left")
-                      .select("node", F.least("label", F.coalesce("nmin", "label"))
-                              .alias("label"))
-                      .localCheckpoint(eager=False))
-        new_sum = new_labels.agg(F.sum("label")).first()[0]
-        labels.unpersist()
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels.select("node", F.col("label").alias("cluster"))
-
-
 def dedup_keep_representatives(docs: DataFrame, pairs: DataFrame,
                                id_col: str = "doc_id",
-                               id_a: str = "id_a", id_b: str = "id_b",
-                               method: str = "label") -> DataFrame:
+                               id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """The actionable dedup: drop every clustered document except the
     min-id representative; untouched documents pass through. One
-    left-anti join against the (small) drop list. method picks the
-    component engine ("label" / "star" — see duplicate_clusters)."""
-    clusters = duplicate_clusters(pairs, id_a, id_b, method=method)
+    left-anti join against the (small) drop list."""
+    clusters = duplicate_clusters(pairs, id_a, id_b)
     drop = clusters.where(F.col("node") != F.col("cluster")).select(
         F.col("node").alias(id_col))
     return docs.join(drop, id_col, "left_anti")

@@ -294,8 +294,9 @@ class DBSCAN(BaseEstimator):
     join is LINEAR in N with a 3^d constant. Neighbor counts, the
     core set, and border assignment are one aggregate + one ranked
     join over those pairs; core connectivity reuses the shared
-    min-label/star-contraction components machinery
-    (datapipe.dedup.duplicate_clusters).
+    star-contraction components engine
+    (datapipe.dedup.duplicate_clusters), whose round count does not
+    grow with the length of DBSCAN's density chains.
 
     Scale contract: LOW-dimensional tabular data (d <= ~4 — the
     adjacent-cell fan-out is 3^d; raises above 6). Dense hot cells
@@ -305,20 +306,15 @@ class DBSCAN(BaseEstimator):
     DBSCAN's own usability contract). For high-dimensional embedding
     clustering use KMeans / SemDeDup instead."""
 
-    def __init__(self, eps: float = 0.5, min_pts: int = 5,
-                 components: str = "star"):
-        # star contraction by default: DBSCAN components are
-        # density CHAINS, not near-cliques, so min-label propagation's
-        # O(diameter) rounds lose to star's O(log^2 n) (measured ~2x
-        # on the bridged-blob fixture)
+    def __init__(self, eps: float = 0.5, min_pts: int = 5):
         self.eps = eps
         self.min_pts = min_pts
-        self.components = components
 
     def fit_predict(self, df: DataFrame, columns=None,
                     id_col: str = "doc_id") -> DataFrame:
         """(id, cluster) for every input row; noise rows get −1
-        (ids are assumed non-negative, the repo-wide id convention)."""
+        (ids must be integral and are assumed non-negative, the
+        repo-wide id convention)."""
         from dask_ml_spark.datapipe.dedup import duplicate_clusters
 
         cols = self._validate_data(df, columns)
@@ -351,7 +347,7 @@ class DBSCAN(BaseEstimator):
                       .join(core, "__id")
                       .select(F.col("__id").alias("id_a"),
                               F.col("__qid").alias("id_b")))
-        comp = duplicate_clusters(core_edges, method=self.components)
+        comp = duplicate_clusters(core_edges)
         core_lbl = (core.join(comp, core["__id"] == comp["node"], "left")
                     .select("__id",
                             F.coalesce(F.col("cluster"), F.col("__id"))

@@ -66,18 +66,22 @@ def _reuse_assembled(df: DataFrame, cols, label_col, out="__features"):
     return df if assembled_names == list(cols) else None
 
 
-def _assembled_input(df: DataFrame, cols, label_col):
-    """(assembled_frame, owned): reuse a caller-assembled CV-cache
-    frame when present, else assemble + persist a private copy (the
-    solver's treeAggregate rescans the input once per iteration).
-    ``owned`` tells the fit whether to unpersist afterwards."""
+def _fit_assembled(estimator, df: DataFrame, cols, label_col):
+    """Fit an MLlib ``estimator`` on ``__features``: reuse a
+    caller-assembled CV-cache frame when present, else assemble +
+    persist a private copy (the solver's treeAggregate rescans the
+    input once per iteration) and unpersist it in ``finally``, so a
+    fit that raises leaves no CacheManager entry behind."""
     pre = _reuse_assembled(df, cols, label_col)
     if pre is not None:
-        return pre, False
+        return estimator.fit(pre)
     assembled = _assemble(
         df.select(*cols, F.col(label_col).cast("double").alias(label_col)),
         cols).persist()
-    return assembled, True
+    try:
+        return estimator.fit(assembled)
+    finally:
+        assembled.unpersist()
 
 
 def _solver_kwargs(est) -> dict:
@@ -230,16 +234,12 @@ class LinearRegression(_GLM, RegressorMixin):
         cols = self._validate_data(df, columns)
         if self.solver not in ("auto", "lbfgs"):
             return _fit_custom(self, df, cols, label_col)
-        # persist across solver iterations (LBFGS/IRLS treeAggregate
-        # rescans the input once per iteration) — unless the caller
-        # already assembled at the CV fold-cache grain
-        assembled, owned = _assembled_input(df, cols, label_col)
         reg = 0.0 if self.C in (None, float("inf")) else 1.0 / self.C
         if self.penalty is None or self.penalty == "none":
             reg, elastic = 0.0, 0.0
         else:
             elastic = 1.0 if self.penalty == "l1" else 0.0
-        m = MLlibLR(
+        m = _fit_assembled(MLlibLR(
             featuresCol="__features", labelCol=label_col,
             regParam=reg, elasticNetParam=elastic,
             # the reference (dask_glm) penalizes raw-space coefficients;
@@ -247,9 +247,7 @@ class LinearRegression(_GLM, RegressorMixin):
             # regularized optimum and break cross-solver agreement
             standardization=False,
             fitIntercept=self.fit_intercept, maxIter=self.max_iter, tol=self.tol,
-        ).fit(assembled)
-        if owned:
-            assembled.unpersist()
+        ), df, cols, label_col)
         return _set_fitted(self, m.coefficients.toArray(), m.intercept,
                            cols, label_col)
 
@@ -280,16 +278,12 @@ class LogisticRegression(_GLM, ClassifierMixin):
         cols = self._validate_data(df, columns)
         if self.solver not in ("auto", "lbfgs"):
             return _fit_custom(self, df, cols, label_col)
-        # persist across solver iterations (LBFGS/IRLS treeAggregate
-        # rescans the input once per iteration) — unless the caller
-        # already assembled at the CV fold-cache grain
-        assembled, owned = _assembled_input(df, cols, label_col)
         reg = 0.0 if self.C in (None, float("inf")) else 1.0 / self.C
         if self.penalty is None or self.penalty == "none":
             reg, elastic = 0.0, 0.0
         else:
             elastic = 1.0 if self.penalty == "l1" else 0.0
-        m = MLlibLogReg(
+        m = _fit_assembled(MLlibLogReg(
             featuresCol="__features", labelCol=label_col,
             regParam=reg, elasticNetParam=elastic,
             # the reference (dask_glm) penalizes raw-space coefficients;
@@ -297,9 +291,7 @@ class LogisticRegression(_GLM, ClassifierMixin):
             # regularized optimum and break cross-solver agreement
             standardization=False,
             fitIntercept=self.fit_intercept, maxIter=self.max_iter, tol=self.tol,
-        ).fit(assembled)
-        if owned:
-            assembled.unpersist()
+        ), df, cols, label_col)
         return _set_fitted(self, m.coefficients.toArray(), m.intercept,
                            cols, label_col)
 
@@ -339,19 +331,13 @@ class PoissonRegression(_GLM, RegressorMixin):
         cols = self._validate_data(df, columns)
         if self.solver not in ("auto", "lbfgs"):
             return _fit_custom(self, df, cols, label_col)
-        # persist across solver iterations (LBFGS/IRLS treeAggregate
-        # rescans the input once per iteration) — unless the caller
-        # already assembled at the CV fold-cache grain
-        assembled, owned = _assembled_input(df, cols, label_col)
         reg = 0.0 if self.C in (None, float("inf")) else 1.0 / self.C
-        m = GeneralizedLinearRegression(
+        m = _fit_assembled(GeneralizedLinearRegression(
             featuresCol="__features", labelCol=label_col,
             family="poisson", link="log",
             regParam=reg, fitIntercept=self.fit_intercept,
             maxIter=self.max_iter, tol=self.tol,
-        ).fit(assembled)
-        if owned:
-            assembled.unpersist()
+        ), df, cols, label_col)
         return _set_fitted(self, m.coefficients.toArray(), m.intercept,
                            cols, label_col)
 

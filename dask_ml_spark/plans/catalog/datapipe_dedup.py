@@ -12,8 +12,9 @@ from ._shared import SQL_KNN_GRAPH_TOPK, TOKEN_RE_SQL, _sql_shingles, _t  # noqa
 
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTERS (datapipe/dedup.py::duplicate_clusters):
-    connected components by min-label propagation over the minhash-LSH
-    pair list — the actionable form of dedup (one representative per
+    connected components by star contraction (finished by driver
+    union-find under utils.MAX_DRIVER_EDGES) over the minhash-LSH pair
+    list — the actionable form of dedup (one representative per
     group). Oracle: DuckDB recursive CTE computing min-reachable-id
     over the same (oracle-checked) pair SQL."""
     from dask_ml_spark.datapipe import dedup as DD

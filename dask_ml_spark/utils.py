@@ -8,7 +8,7 @@ The plan section is the only code that reads a Spark plan (by node
 class, via ``_plan_nodes``) and owns the decisions made from it:
 spreading (``ensure_min_partitions``, ``right_size_cv_cache``), lineage
 cuts (``cut``), bounded driver state (``MAX_DRIVER_ROWS``,
-``bounded_head``, ``collect_capped``) and the plan lint
+``MAX_DRIVER_EDGES``, ``bounded_head``, ``collect_capped``) and the plan lint
 (``assert_scalable``). It also owns how a driver-computed result
 becomes a frame (``local_frame``).
 """
@@ -233,6 +233,11 @@ def cut(df: DataFrame) -> DataFrame:
 # a distinct-value frame up to this size is accumulated on the driver,
 # a larger one stays distributed. 0 forces every dual path distributed.
 MAX_DRIVER_ROWS = 65536
+
+# The driver-finish cap of dedup.duplicate_clusters: once the star loop's
+# signature counts at most this many edges (~16 MB of long pairs), the
+# rest is finished by driver union-find. 0 forces the distributed loop.
+MAX_DRIVER_EDGES = 1_000_000
 
 
 def bounded_head(g: DataFrame, cap: int | None = None):

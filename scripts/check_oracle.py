@@ -5,8 +5,9 @@ count, column names, and an order-insensitive value comparison
 
 Usage: python scripts/check_oracle.py [--distributed] [sf_dir] [query ...]
 
---distributed sets utils.MAX_DRIVER_ROWS = 0 before any query is built,
-so every dual-path operator takes its distributed path (the parity run).
+--distributed sets utils.MAX_DRIVER_ROWS = 0 and utils.MAX_DRIVER_EDGES = 0
+before any query is built, so every dual-path operator and the
+connected-components loop take their distributed paths (the parity run).
 """
 
 from __future__ import annotations
@@ -47,6 +48,7 @@ def main():
 
     if DISTRIBUTED:
         utils.MAX_DRIVER_ROWS = 0
+        utils.MAX_DRIVER_EDGES = 0
 
     spark = get_spark(app_name="oracle-check", shuffle_partitions=16,
                       extra_conf={"spark.ui.enabled": "false"})

@@ -402,24 +402,40 @@ def test_duplicate_clusters_null_ids_survive_local_finish(spark):
         assert got[node] == want
 
 
-def test_duplicate_clusters_null_ids_same_on_both_paths(spark):
+def test_duplicate_clusters_null_ids_same_on_both_paths(spark, monkeypatch):
     """NULL-id pairs are dropped once, before the local/distributed
-    gate: the driver union-find finish and the distributed label loop
+    gate: the driver union-find finish and the distributed star loop
     return the same rows, and node 7 — paired only with a NULL id —
     is in neither."""
+    from dask_ml_spark import utils
     from dask_ml_spark.datapipe.dedup import duplicate_clusters
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (None, 7), (10, 11), (12, None)],
         "id_a long, id_b long")
 
-    def rows(local_edges):
-        cl = duplicate_clusters(pairs, local_edges=local_edges).collect()
+    def rows(cap):
+        with monkeypatch.context() as m:
+            m.setattr(utils, "MAX_DRIVER_EDGES", cap)
+            cl = duplicate_clusters(pairs).collect()
         return sorted((r["node"], r["cluster"]) for r in cl)
 
     local, distributed = rows(1_000_000), rows(0)
     assert local == distributed
     assert local == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)]
+
+
+def test_duplicate_clusters_rejects_non_integral_ids(spark):
+    """String ids would cast to NULL and silently vanish from the edge
+    set; the engine refuses any non-integral id column by name."""
+    from dask_ml_spark.datapipe.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame([("a", "b"), ("b", "c")], "id_a string, id_b string")
+    with pytest.raises(ValueError, match="'id_a'"):
+        duplicate_clusters(pairs)
+    pairs = spark.createDataFrame([(1, 2.0)], "id_a int, id_b double")
+    with pytest.raises(ValueError, match="'id_b'"):
+        duplicate_clusters(pairs)
 
 
 def test_dedup_keep_representatives(spark):
@@ -680,24 +696,27 @@ def test_semantic_dedup_target_pairs_per_item(embeddings):
         D.semantic_dedup_pairs(embeddings, quantizer="pq")
 
 
-def test_connected_components_star_chain_and_equivalence(spark):
+def test_connected_components_star_chain_and_equivalence(spark, monkeypatch):
     """Star contraction resolves a 60-node chain (diameter 59) in
-    O(log²) rounds and agrees exactly with min-label propagation on a
-    random multi-component graph."""
-    import pandas as pd
+    O(log²) rounds, raises instead of returning a half-contracted map
+    when max_iter runs out, and agrees exactly with the driver
+    union-find on a random multi-component graph."""
+    from dask_ml_spark import utils
 
     chain = spark.createDataFrame(
         pd.DataFrame({"id_a": range(59), "id_b": range(1, 60)}))
-    # local_edges=0 pins the DISTRIBUTED star loop itself (the default
-    # hybrid would finish this tiny graph driver-side)
-    out = D.connected_components_star(
-        chain, max_iter=10, local_edges=0).toPandas()
-    assert set(out.cluster) == {0}
-    assert set(out.node) == set(range(60))
-    # the hybrid local finish agrees exactly with the loop
-    hyb = D.connected_components_star(chain, max_iter=10).toPandas()
+    # the default cap finishes this tiny graph driver-side
+    hyb = D.duplicate_clusters(chain, max_iter=10).toPandas()
     assert (dict(zip(hyb.node, hyb.cluster))
             == {int(n): 0 for n in range(60)})
+    # cap 0 pins the DISTRIBUTED star loop itself
+    monkeypatch.setattr(utils, "MAX_DRIVER_EDGES", 0)
+    out = D.duplicate_clusters(chain, max_iter=10).toPandas()
+    assert set(out.cluster) == {0}
+    assert set(out.node) == set(range(60))
+    assert len(out) == 60
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        D.duplicate_clusters(chain, max_iter=1)
 
     rng = np.random.RandomState(11)
     edges = pd.DataFrame({
@@ -706,19 +725,12 @@ def test_connected_components_star_chain_and_equivalence(spark):
     })
     edges = edges[edges.id_a != edges.id_b]
     pairs = spark.createDataFrame(edges)
-    star = D.connected_components_star(pairs, local_edges=0).toPandas()
-    label = D.duplicate_clusters(pairs, method="label").toPandas()
-    assert (dict(zip(star.node, star.cluster))
-            == dict(zip(label.node, label.cluster)))
-    # dispatch through the shared API
-    via = D.duplicate_clusters(pairs, method="star").toPandas()
-    assert dict(zip(via.node, via.cluster)) == dict(zip(star.node, star.cluster))
-    # the label-method hybrid local finish (r13 opt) agrees exactly
-    # with the distributed label-propagation loop it short-circuits
-    loop = D.duplicate_clusters(pairs, method="label",
-                                local_edges=0).toPandas()
+    loop = D.duplicate_clusters(pairs).toPandas()  # still at cap 0
+    ref = D._components_local(pairs.select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst"))).toPandas()
+    assert len(loop) == len(ref)
     assert (dict(zip(loop.node, loop.cluster))
-            == dict(zip(label.node, label.cluster)))
+            == dict(zip(ref.node, ref.cluster)))
 
 
 def test_quantize_embeddings_roundtrip_and_recall(embeddings):

@@ -49,6 +49,30 @@ def test_poisson_regression(spark):
     assert (pred["prediction"] > 0).all()  # log link ⇒ positive rates
 
 
+def test_glm_fit_releases_private_persist_on_error(spark, monkeypatch):
+    """A GLM whose MLlib fit raises still unpersists its private
+    ``__features`` persist: the CacheManager is empty afterwards."""
+    from pyspark.ml.classification import LogisticRegression as MLlibLogReg
+    from pyspark.ml.regression import GeneralizedLinearRegression
+    from pyspark.ml.regression import LinearRegression as MLlibLR
+
+    def boom(self, dataset):
+        raise RuntimeError("fit failed")
+
+    df = spark.range(8).select(*[(F.col("id") * (j + 1)).cast("double").alias(c)
+                                 for j, c in enumerate(FEATS)],
+                               (F.col("id") % 2).alias("label"))
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    for est, mllib in ((LinearRegression(), MLlibLR),
+                       (LogisticRegression(), MLlibLogReg),
+                       (PoissonRegression(), GeneralizedLinearRegression)):
+        monkeypatch.setattr(mllib, "_fit", boom)
+        spark.catalog.clearCache()
+        with pytest.raises(RuntimeError, match="fit failed"):
+            est.fit(df, FEATS)
+        assert cm.isEmpty()
+
+
 def test_gaussian_nb(xy_classification):
     feats = [f"f{j}" for j in range(20)]
     nb = GaussianNB().fit(xy_classification, feats)

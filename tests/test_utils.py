@@ -110,7 +110,10 @@ def test_plan_inspection_has_one_owner():
     ``F.signum(``: the rank tests' sign is ``_signum`` inside their
     written-once z formula. A bounded driver collect goes through
     ``bounded_head`` or ``collect_capped``: no module but utils.py
-    hand-rolls a ``limit(<cap> + 1)`` probe (a pattern, not a word)."""
+    hand-rolls a ``limit(<cap> + 1)`` probe (a pattern, not a word).
+    Connected components have one engine, ``dedup.duplicate_clusters``,
+    gated by ``MAX_DRIVER_EDGES``: the retired second engine and its
+    per-call gate stay gone."""
     import pathlib
     import re
 
@@ -127,6 +130,7 @@ def test_plan_inspection_has_one_owner():
         ((), ("F.signum(",)),
         (("utils.py", "streaming/drift.py"), ("createDataFrame(",)),
         (("utils.py",), (re.compile(r"limit\([^()]*\+ *1\)"),)),
+        ((), ("connected_components_star", "local_edges")),
     ]
     root = pathlib.Path(dask_ml_spark.__file__).parent
     offenders = []
